@@ -4,7 +4,7 @@ capabilities of the reference ``BigDataScholar/FlinkECUserBehaviorAnalysis``
 
 - batch semantics on the DataFrame/SQL API (Catalyst plans everything);
 - streaming twins on Structured Streaming (watermarks + windowed aggs +
-  ``transformWithStateInPandas`` for the stateful/timer operators);
+  ``applyInPandasWithState`` for the stateful/timer operators);
 - large-scale training-data-pipeline extensions (dedup, similarity
   search, text analysis, multimodal plumbing) as first-class operators.
 

@@ -283,26 +283,22 @@ def run_bounded(
 ) -> list:
     """Execute a streaming plan to completion on its bounded source
     (``availableNow`` trigger) and return collected rows (memory sink)
-    or [] when *foreach_batch* handles its own output."""
+    or [] when *foreach_batch* handles its own output.  A replay still
+    running after *timeout* seconds is stopped and raises
+    ``TimeoutError``: its output so far would be a silent partial."""
+    writer = out.writeStream.outputMode(output_mode).trigger(availableNow=True)
     if foreach_batch is not None:
-        q = (
-            out.writeStream.outputMode(output_mode)
-            .foreachBatch(foreach_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout)
+        _await_bounded(writer.foreachBatch(foreach_batch).start(), timeout)
         return []
     name = f"mem_{abs(hash(out.schema.json())) % 10**8}_{id(out)}"
-    q = (
-        out.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout)
+    _await_bounded(writer.format("memory").queryName(name).start(), timeout)
     return out.sparkSession.sql(f"SELECT * FROM {name}").collect()
+
+
+def _await_bounded(q, timeout: int) -> None:
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise TimeoutError(f"bounded replay {q.name or q.id} did not finish in {timeout}s")
 
 
 _BOUNDED_SEQ = [0]
@@ -332,12 +328,7 @@ def run_bounded_df(
         .trigger(availableNow=True)
         .start()
     )
-    # a timed-out replay would hand back a silently PARTIAL table — fail
-    # loudly instead (run_bounded's test callers tolerate it; a driver
-    # correctness row must not)
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(f"bounded replay {name} did not finish in {timeout}s")
+    _await_bounded(q, timeout)
     return out.sparkSession.table(name)
 
 

@@ -19,9 +19,13 @@ from pyspark.sql import functions as F
 
 
 def read_store(spark, target_dir: str) -> DataFrame | None:
-    if not os.path.exists(target_dir) or not os.listdir(target_dir):
-        return None
-    return spark.read.parquet(target_dir)
+    """The store as a DataFrame, or None while it holds no data file (a
+    missing directory, or one an empty batch left with only its commit
+    markers)."""
+    for _, _, files in os.walk(target_dir):
+        if any(not f.startswith(("_", ".")) for f in files):
+            return spark.read.parquet(target_dir)
+    return None
 
 
 def foreach_batch_upsert(
@@ -72,12 +76,12 @@ def foreach_batch_partitioned_upsert(
     ``foreach_batch_upsert``, which rewrites the whole directory per
     batch).  This is the streaming → data-lake landing pattern; at
     100 TB the per-batch write cost is proportional to the CHANGED
-    partitions only."""
+    partitions only.  An empty batch is written too: it replaces no
+    partition, and checking for emptiness first would run the batch's
+    stateful plan a second time."""
     from ..io import write_partitioned
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         write_partitioned(batch_df, target_dir, list(partition_cols))
 
     return process

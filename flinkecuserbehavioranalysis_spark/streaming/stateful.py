@@ -7,18 +7,35 @@ role of Flink's ``ValueState``/``ListState`` and the timeout conf plays
 the timers:
 
 - **login-fail** (LoginFailTwo.scala:60-91): state = last event per
-  user; a fail arriving ≤ gap after a stored fail emits a warning;
-  success clears — identical to the reference's one-slot ListState.
+  user (kept in the user's hash bucket); a fail arriving ≤ gap after a
+  stored fail emits a warning; success clears — identical to the
+  reference's one-slot ListState.
 - **order timeout** (OrderTimeout.scala:58-143): state = (create_ts,
   pay_ts); emit on the pairing event, or on event-time timeout at
   create_ts + deadline (``GroupStateTimeout.EventTimeTimeout`` — fired
   by watermark advance, exactly Flink's event-time timer discipline).
 
-Rows inside a micro-batch are buffered to ONE frame per key and sorted
-by (ts, tiebreak) before state transitions (``_group_chunks``) — Flink
-gets this ordering from per-key FIFO delivery; Spark's shuffle delivers
-a group as arbitrarily-ordered Arrow slices, so per-slice sorting alone
-breaks once a group straddles a slice boundary (round-8 sf1 finding).
+Rows inside a micro-batch are buffered to ONE frame per group and
+sorted before state transitions — Flink gets this ordering from per-key
+FIFO delivery; Spark's shuffle delivers a group as arbitrarily-ordered
+Arrow slices, so per-slice sorting alone breaks once a group straddles
+a slice boundary (found at sf1).
+
+Group = key for the kernels with timers or list state (``_group_chunks``
+sorts by (ts, tiebreak)).  The one-slot NoTimeout kernels — login-fail,
+value-spike, type transitions, last-touch — group by a hash BUCKET of
+the key instead, ``pmod(xxhash64(key), KEY_BUCKETS)`` with
+``KEY_BUCKETS = 64`` (``_bucketed_one_slot`` sorts by (key, ts,
+tiebreak)): Spark's per-group transport, not the kernel, was the floor
+of a one-call-per-user kernel, so a micro-batch now makes at most 64
+Python calls per kernel, each vectorized over all keys in its bucket.
+A bucket's state is parallel arrays sorted by key (``keys`` plus one
+array per slot field), so ``numRowsTotal`` counts occupied buckets and
+the arrays hold one entry per key seen.  This is a state-schema change:
+a checkpoint written by the former per-key layout is refused by Spark's
+state-schema check and the query must restart from a new checkpoint.
+Each micro-batch rewrites every touched bucket's arrays, which is cheap
+while a bucket holds thousands of keys, not millions.
 
 Hot-path discipline: every operator here extracts the pandas frame's
 columns to numpy arrays ONCE per batch (``.astype('int64')`` epoch-ns →
@@ -38,7 +55,7 @@ watermark advance.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
 from typing import Any
 
 import numpy as np
@@ -47,6 +64,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DataType,
     DoubleType,
     IntegerType,
     LongType,
@@ -66,8 +86,10 @@ def _floor_s(x) -> int:
     truncates toward zero, which diverges from the batch floor contract
     (functions/scalar.floor_long) on pre-1970 sub-second rows — every
     kernel's epoch EMISSION routes through here (gap comparisons stay at
-    full double precision, matching the batch kernels)."""
-    return int(np.floor(x))
+    full double precision, matching the batch kernels).  An array floors
+    element-wise to int64."""
+    f = np.floor(x)
+    return f.astype(np.int64) if isinstance(f, np.ndarray) else int(f)
 
 
 def _tag(pred: F.Column) -> F.Column:
@@ -107,6 +129,167 @@ def _group_chunks(pdfs: Iterator[pd.DataFrame], sort_cols: list) -> Iterator[pd.
     yield pdf.sort_values(cols) if cols else pdf
 
 
+#: Hash buckets of the one-slot kernels' key: state is grouped by
+#: ``pmod(xxhash64(key), KEY_BUCKETS)``, so a micro-batch makes at most
+#: this many Python calls per kernel, whatever the key cardinality.
+#: Login kernel alone on a 4-core host, 2k events of 5k users per
+#: micro-batch, steady ``addBatch`` median: one call per user ~3.0 s;
+#: 16 buckets 0.80-0.91 s, 64 buckets 0.81-0.93 s, 256 buckets
+#: 1.16-1.19 s.  64 spreads over more shuffle partitions than 16 at
+#: equal cost, and keeps bucket arrays short (~80 keys at 5k users).
+KEY_BUCKETS = 64
+
+
+def _placeholder(dtype: np.dtype) -> np.ndarray:
+    """The slot value meaning "no row": NaN, None or False.  Every
+    bucketed kernel's predicate is false against it."""
+    fill = None if dtype.kind == "O" else np.nan if dtype.kind == "f" else 0
+    return np.full(1, fill, dtype=dtype)
+
+
+def _bucketed_one_slot(
+    events: DataFrame,
+    key_col: str,
+    ts_col: str,
+    tiebreak_col: str | None,
+    cols: Sequence[str],
+    slot: dict[str, DataType],
+    values: Callable[[pd.DataFrame], dict[str, np.ndarray]],
+    emit: Callable[..., pd.DataFrame | None],
+    out_schema: StructType,
+    watermark: str,
+    carry: Callable[[pd.DataFrame], np.ndarray] | None = None,
+) -> DataFrame:
+    """Run a one-slot NoTimeout kernel vectorized over hash buckets of
+    its key instead of one Python call per key.
+
+    Each kernel keeps ONE slot of state per key (e.g. login: the last
+    event's fail flag and ts).  Spark groups by the key's bucket; the
+    bucket's state is parallel arrays sorted by key — ``keys`` plus one
+    array per *slot* field.  A NULL key is a key of its own, stored as a
+    trailing ``None`` in ``keys``.  Per call this helper:
+
+    1. sorts the bucket's rows by (key, ts, tiebreak) — NaT last, as the
+       per-key sort did;
+    2. gives each row its predecessor's slot values: the latest earlier
+       *carried* row of the same key (all rows carry unless *carry*
+       masks some out, e.g. last-touch's purchases);
+    3. seeds each key's first rows from the stored arrays
+       (``searchsorted`` on ``keys``), or with the placeholder (NaN /
+       None / False) for a key never seen;
+    4. writes back each key's last carried row, merged into the sorted
+       arrays; a key seen with no carried row yet stores the
+       placeholder, so state holds every key seen, as the per-key
+       operator did.
+
+    ``values(rows)`` maps the sorted rows to the row's own slot values;
+    ``emit(rows, key, cur, prev)`` returns the kernel's output rows
+    (``key`` is a nullable Int64 array aligned with *rows*) and must
+    treat a placeholder ``prev`` as "no predecessor".  The key must be
+    integral; the NULL flag travels as its own column so keys beyond
+    2^53 survive pandas' NULL-widening to float."""
+    key_type = events.schema[key_col].dataType
+    if not isinstance(key_type, (IntegerType, LongType)):
+        raise TypeError(f"bucketed kernels need an integral key, {key_col} is {key_type}")
+    tb = [tiebreak_col] if tiebreak_col and tiebreak_col in events.columns else []
+    data = list(dict.fromkeys([ts_col, *tb, *cols]))
+    state_schema = StructType(
+        [StructField("keys", ArrayType(LongType()))]
+        + [StructField(name, ArrayType(t)) for name, t in slot.items()]
+    )
+
+    def fn(
+        _bucket: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        frames = list(pdfs)
+        if not frames:
+            return
+        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+        # sort by (key, ts, tiebreak); key segments start at `starts`
+        ts = pdf[ts_col]
+        order = np.lexsort(
+            [pdf[c].to_numpy() for c in reversed(tb)]
+            + [
+                ts.to_numpy().view("int64"),
+                ts.isna().to_numpy(),
+                pdf["__key"].to_numpy(),
+                pdf["__key_null"].to_numpy(),
+            ]
+        )
+        rows = pdf.take(order).reset_index(drop=True)
+        key = rows["__key"].to_numpy().astype(np.int64)
+        key_null = rows["__key_null"].to_numpy()
+        n = len(rows)
+        head = np.ones(n, dtype=bool)
+        head[1:] = (key[1:] != key[:-1]) | (key_null[1:] != key_null[:-1])
+        starts = np.flatnonzero(head)
+        seg = np.cumsum(head) - 1
+
+        # find each key segment's stored slot (NULL key: the trailing one)
+        stored = state.get if state.exists else ([],) * (1 + len(slot))
+        null_slot = bool(stored[0]) and stored[0][-1] is None
+        st_keys = np.array(stored[0][:-1] if null_slot else stored[0], dtype=np.int64)
+        m = len(stored[0])
+        s_key, s_null = key[starts], key_null[starts]
+        pos = np.searchsorted(st_keys, s_key)
+        found = np.zeros(len(starts), dtype=bool)
+        inside = pos < len(st_keys)
+        found[inside] = st_keys[pos[inside]] == s_key[inside]
+        found &= ~s_null
+        pos[s_null] = len(st_keys)
+        found[s_null] = null_slot
+
+        # each row's predecessor: the latest earlier carried row of its
+        # key, else the stored slot, else the placeholder (index n + m)
+        cur = values(rows)
+        carried = np.ones(n, dtype=bool) if carry is None else carry(rows)
+        last_c = np.maximum.accumulate(np.where(carried, np.arange(n), -1))
+        pred = np.concatenate(([-1], last_c[:-1]))
+        in_key = pred >= starts[seg]
+        src = np.where(in_key, pred, np.where(found[seg], n + pos[seg], n + m))
+        st_vals = {
+            name: np.asarray(stored[i + 1], dtype=cur[name].dtype) for i, name in enumerate(slot)
+        }
+        prev = {
+            name: np.concatenate((cur[name], st_vals[name], _placeholder(cur[name].dtype)))[src]
+            for name in slot
+        }
+
+        # write back each key's last carried row, keys kept sorted
+        last = last_c[np.concatenate((starts[1:], [n])) - 1]
+        has_c = last >= starts
+        upd, new = has_c & found, ~found & ~s_null
+        null_new = s_null & ~found
+        keys = np.concatenate((st_keys, s_key[new]))
+        by_key = np.argsort(keys, kind="stable")
+        out_state = [keys[by_key].tolist() + [None] * (null_slot or bool(null_new.any()))]
+        for name in slot:
+            # a key seen without a carried row stores the placeholder
+            seg_val = np.concatenate((cur[name], _placeholder(cur[name].dtype)))[
+                np.where(has_c, last, n)
+            ]
+            v = st_vals[name].copy()
+            v[pos[upd]] = seg_val[upd]
+            merged = np.concatenate((v[: len(st_keys)], seg_val[new]))[by_key]
+            tail = v[len(st_keys) :] if null_slot else seg_val[null_new]
+            out_state.append(merged.tolist() + tail.tolist())
+        state.update(tuple(out_state))
+
+        out = emit(rows, pd.arrays.IntegerArray(key, key_null), cur, prev)
+        if out is not None and len(out):
+            yield out
+
+    bucketed = events.withWatermark(ts_col, watermark).select(
+        F.pmod(F.xxhash64(F.col(key_col)), F.lit(KEY_BUCKETS)).alias("__bucket"),
+        F.coalesce(F.col(key_col), F.lit(0)).alias("__key"),
+        F.col(key_col).isNull().alias("__key_null"),
+        *data,
+    )
+    return bucketed.groupBy("__bucket").applyInPandasWithState(
+        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    )
+
+
 LOGIN_WARNING_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -115,10 +298,6 @@ LOGIN_WARNING_SCHEMA = StructType(
         StructField("warning_msg", StringType()),
     ]
 )
-_LOGIN_STATE = StructType(
-    [StructField("last_type", StringType()), StructField("last_ts", DoubleType())]
-)
-
 ORDER_RESULT_SCHEMA = StructType(
     [
         StructField("order_id", LongType()),
@@ -139,43 +318,30 @@ def streaming_login_fail(
     watermark: str = "0 seconds",
 ) -> DataFrame:
     """Streaming twin of ``operators.patterns.consecutive_fail_alerts``.
-    Input columns: user_id, event_type, ts (+ event_id tiebreak)."""
+    Input columns: user_id, event_type, ts (+ event_id tiebreak).  The
+    slot is the user's last event: (is it a fail, its ts)."""
+    msg = "login fail 2 times in a short time"
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        last_type, last_ts = state.get if state.exists else (None, None)
-        out: list[tuple[int, int, int, str]] = []
-        for pdf in _group_chunks(pdfs, ["ts", "event_id"]):
-            tss = _epoch_s(pdf["ts"])
-            is_fail = (pdf["event_type"] == fail_value).to_numpy()
-            # batch-interior pairs vectorize: previous row is a fail and
-            # the gap is short; the batch boundary uses carried state
-            prev_fail = np.concatenate(([last_type == fail_value], is_fail[:-1]))
-            prev_ts = np.concatenate(
-                ([last_ts if last_ts is not None else np.nan], tss[:-1])
-            )
-            hit = is_fail & prev_fail & (tss - prev_ts < max_gap_seconds)
-            out.extend(
-                (int(user_id), _floor_s(prev_ts[i]), _floor_s(tss[i]), "login fail 2 times in a short time")
-                for i in np.flatnonzero(hit)
-            )
-            if len(tss):
-                last_type = fail_value if is_fail[-1] else "success"
-                last_ts = float(tss[-1])
-        state.update((last_type, last_ts))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "first_fail_ts", "last_fail_ts", "warning_msg"]
-            )
+    def values(rows: pd.DataFrame) -> dict[str, np.ndarray]:
+        return {"fail": (rows["event_type"] == fail_value).to_numpy(), "ts": _epoch_s(rows["ts"])}
 
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn, LOGIN_WARNING_SCHEMA, _LOGIN_STATE, "append", GroupStateTimeout.NoTimeout
+    def emit(rows, key, cur, prev):
+        hit = cur["fail"] & prev["fail"] & (cur["ts"] - prev["ts"] < max_gap_seconds)
+        if not hit.any():
+            return None
+        return pd.DataFrame(
+            {
+                "user_id": key[hit],
+                "first_fail_ts": _floor_s(prev["ts"][hit]),
+                "last_fail_ts": _floor_s(cur["ts"][hit]),
+                "warning_msg": msg,
+            }
         )
+
+    return _bucketed_one_slot(
+        events, "user_id", "ts", "event_id", ["event_type"],
+        {"fail": BooleanType(), "ts": DoubleType()},
+        values, emit, LOGIN_WARNING_SCHEMA, watermark,
     )
 
 
@@ -303,70 +469,6 @@ def streaming_order_timeout(
         .groupBy("order_id")
         .applyInPandasWithState(
             fn, ORDER_RESULT_SCHEMA, _ORDER_STATE, "append", GroupStateTimeout.EventTimeTimeout
-        )
-    )
-
-
-def streaming_login_fail_tws(
-    events: DataFrame,
-    fail_value: str = "error",
-    max_gap_seconds: float = 3600.0,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """``transformWithStateInPandas`` twin of ``streaming_login_fail`` —
-    the successor stateful API (typed per-key state handles instead of a
-    single state tuple; the long-term home for F1-F5-style operators).
-    Same semantics: one-slot last-event state per user, warning when two
-    fails land within *max_gap_seconds*.
-
-    Runtime dependency: TWS's state-server wire protocol imports
-    ``google.protobuf`` in the Python driver worker; environments
-    without it must use ``streaming_login_fail`` (identical results,
-    applyInPandasWithState transport)."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class LoginFail(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last", _LOGIN_STATE)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            (user_id,) = key
-            stored = self._last.get() if self._last.exists() else None
-            last_type, last_ts = stored if stored is not None else (None, None)
-            out: list[tuple[int, int, int, str]] = []
-            for pdf in _group_chunks(rows, ["ts", "event_id"]):
-                tss = _epoch_s(pdf["ts"])
-                is_fail = (pdf["event_type"] == fail_value).to_numpy()
-                prev_fail = np.concatenate(([last_type == fail_value], is_fail[:-1]))
-                prev_ts = np.concatenate(
-                    ([last_ts if last_ts is not None else np.nan], tss[:-1])
-                )
-                hit = is_fail & prev_fail & (tss - prev_ts < max_gap_seconds)
-                out.extend(
-                    (int(user_id), _floor_s(prev_ts[i]), _floor_s(tss[i]),
-                     "login fail 2 times in a short time")
-                    for i in np.flatnonzero(hit)
-                )
-                if len(tss):
-                    last_type = fail_value if is_fail[-1] else "success"
-                    last_ts = float(tss[-1])
-            self._last.update((last_type, last_ts))
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["user_id", "first_fail_ts", "last_fail_ts", "warning_msg"]
-                )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=LoginFail(),
-            outputStructType=LOGIN_WARNING_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
         )
     )
 
@@ -1162,10 +1264,6 @@ VALUE_SPIKE_SCHEMA = StructType(
         StructField("spike_value", DoubleType()),
     ]
 )
-_VALUE_SPIKE_STATE = StructType(
-    [StructField("last_ts", DoubleType()), StructField("last_value", DoubleType())]
-)
-
 
 def streaming_value_spike(
     events: DataFrame,
@@ -1180,39 +1278,28 @@ def streaming_value_spike(
     """Streaming twin of ``pattern_value_spike`` — the IterativeCondition
     pair (next value ≥ factor × previous within gap) needs exactly ONE
     (ts, value) pair of state per key."""
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        last_ts, last_value = state.get if state.exists else (None, None)
-        out: list[tuple[int, int, int, float, float]] = []
-        for pdf in _group_chunks(pdfs, sort_cols):
-            tss = _epoch_s(pdf[ts_col])
-            vals = pdf[value_col].to_numpy().astype(float)
-            for i in range(len(tss)):
-                ts, v = float(tss[i]), float(vals[i])
-                if (
-                    last_ts is not None
-                    and v >= factor * last_value
-                    and ts - last_ts <= max_gap_seconds
-                ):
-                    out.append((int(k), _floor_s(last_ts), _floor_s(ts), last_value, v))
-                last_ts, last_value = ts, v
-        state.update((last_ts, last_value))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["key", "prev_ts", "spike_ts", "prev_value", "spike_value"],
-            )
+    def values(rows: pd.DataFrame) -> dict[str, np.ndarray]:
+        return {"ts": _epoch_s(rows[ts_col]), "value": rows[value_col].to_numpy().astype(float)}
 
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn, VALUE_SPIKE_SCHEMA, _VALUE_SPIKE_STATE, "append", GroupStateTimeout.NoTimeout
+    def emit(rows, key, cur, prev):
+        hit = (cur["value"] >= factor * prev["value"]) & (cur["ts"] - prev["ts"] <= max_gap_seconds)
+        if not hit.any():
+            return None
+        return pd.DataFrame(
+            {
+                "key": key[hit],
+                "prev_ts": _floor_s(prev["ts"][hit]),
+                "spike_ts": _floor_s(cur["ts"][hit]),
+                "prev_value": prev["value"][hit],
+                "spike_value": cur["value"][hit],
+            }
         )
+
+    return _bucketed_one_slot(
+        events, key_col, ts_col, tiebreak_col, [value_col],
+        {"ts": DoubleType(), "value": DoubleType()},
+        values, emit, VALUE_SPIKE_SCHEMA, watermark,
     )
 
 
@@ -1223,7 +1310,6 @@ TRANSITION_SCHEMA = StructType(
         StructField("n", LongType()),
     ]
 )
-_TRANSITION_STATE = StructType([StructField("last_type", StringType())])
 
 
 def streaming_type_transitions(
@@ -1239,33 +1325,23 @@ def streaming_type_transitions(
     (the previous event type).  Downstream, a plain streaming
     aggregation sums the counts — kept separate so the emitted
     transition stream composes with any sink/window."""
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (last_type,) = state.get if state.exists else (None,)
-        pairs: dict[tuple[str, str], int] = {}
-        for pdf in _group_chunks(pdfs, sort_cols):
-            types = pdf[type_col].tolist()
-            for t in types:
-                if last_type is not None:
-                    k2 = (last_type, t)
-                    pairs[k2] = pairs.get(k2, 0) + 1
-                last_type = t
-        state.update((last_type,))
-        if pairs:
-            yield pd.DataFrame(
-                [(a, b, n) for (a, b), n in pairs.items()],
-                columns=["prev_type", "next_type", "n"],
-            )
+    def values(rows: pd.DataFrame) -> dict[str, np.ndarray]:
+        return {"type": rows[type_col].to_numpy(dtype=object)}
 
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn, TRANSITION_SCHEMA, _TRANSITION_STATE, "append", GroupStateTimeout.NoTimeout
-        )
+    def emit(rows, key, cur, prev):
+        # a NULL previous type starts no transition; a NULL next type
+        # is a transition target like any other
+        hit = pd.notna(prev["type"])
+        if not hit.any():
+            return None
+        pairs = pd.DataFrame({"prev_type": prev["type"][hit], "next_type": cur["type"][hit]})
+        return pairs.groupby(["prev_type", "next_type"], dropna=False, sort=False).size().reset_index(name="n")
+
+    return _bucketed_one_slot(
+        events, key_col, ts_col, tiebreak_col, [type_col],
+        {"type": StringType()},
+        values, emit, TRANSITION_SCHEMA, watermark,
     )
 
 
@@ -1276,9 +1352,6 @@ LAST_TOUCH_SCHEMA = StructType(
         StructField("touch_type", StringType()),
         StructField("value", DoubleType()),
     ]
-)
-_LAST_TOUCH_STATE = StructType(
-    [StructField("touch_ts", DoubleType()), StructField("touch_type", StringType())]
 )
 
 
@@ -1300,44 +1373,30 @@ def streaming_last_touch(
     realtime attribution with exactly ONE (ts, type) pair of state per
     key.  Downstream a plain streaming aggregation sums per touch_type,
     exactly like the batch query's final groupBy."""
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        touch_ts, touch_type = state.get if state.exists else (None, None)
-        out: list[tuple[int, int, str | None, float | None]] = []
-        for pdf in _group_chunks(pdfs, sort_cols):
-            tss = _epoch_s(pdf[ts_col])
-            types = pdf[type_col].tolist()
-            vals = pdf[value_col].to_numpy()
-            for i in range(len(tss)):
-                ts = float(tss[i])
-                et = types[i]
-                if et == purchase_type:
-                    fresh = touch_ts is not None and ts - touch_ts <= within_seconds
-                    v = vals[i]
-                    out.append(
-                        (
-                            int(k),
-                            _floor_s(ts),
-                            touch_type if fresh else None,
-                            None if pd.isna(v) else float(v),
-                        )
-                    )
-                else:
-                    touch_ts, touch_type = ts, et
-        state.update((touch_ts, touch_type))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "purchase_ts", "touch_type", "value"]
-            )
+    def is_purchase(rows: pd.DataFrame) -> np.ndarray:
+        return (rows[type_col] == purchase_type).to_numpy()
 
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn, LAST_TOUCH_SCHEMA, _LAST_TOUCH_STATE, "append", GroupStateTimeout.NoTimeout
+    def values(rows: pd.DataFrame) -> dict[str, np.ndarray]:
+        return {"ts": _epoch_s(rows[ts_col]), "type": rows[type_col].to_numpy(dtype=object)}
+
+    def emit(rows, key, cur, prev):
+        hit = is_purchase(rows)
+        if not hit.any():
+            return None
+        fresh = cur["ts"] - prev["ts"] <= within_seconds
+        return pd.DataFrame(
+            {
+                "user_id": key[hit],
+                "purchase_ts": _floor_s(cur["ts"][hit]),
+                "touch_type": np.where(fresh, prev["type"], None)[hit],
+                "value": rows[value_col].to_numpy().astype(float)[hit],
+            }
         )
+
+    return _bucketed_one_slot(
+        events, key_col, ts_col, tiebreak_col, [type_col, value_col],
+        {"ts": DoubleType(), "type": StringType()},
+        values, emit, LAST_TOUCH_SCHEMA, watermark,
+        carry=lambda rows: ~is_purchase(rows),
     )

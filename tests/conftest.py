@@ -13,47 +13,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _ensure_protobuf() -> None:
-    """Make google.protobuf importable when a runtime exists on disk but
-    isn't pip-installed (round-8 verdict #7: unskip the
-    transformWithStateInPandas twin).  TWS's state-server client runs in
-    the PYTHON WORKER, so the path must reach workers too — extend
-    PYTHONPATH BEFORE any SparkContext exists (workers inherit the
-    driver process env).  No-op when protobuf is already importable or
-    no runtime is found; the TWS test's importorskip still governs."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    candidates = [
-        os.environ.get("SPARK_GRAFT_PROTOBUF_PATH", ""),
-        # public Google Cloud SDK bundles a modern protobuf runtime
-        "/usr/lib/google-cloud-sdk/platform/google_appengine",
-    ]
-    for root in candidates:
-        if root and os.path.isdir(os.path.join(root, "google", "protobuf")):
-            sys.path.insert(0, root)
-            os.environ["PYTHONPATH"] = (
-                root + os.pathsep + os.environ.get("PYTHONPATH", "")
-            ).rstrip(os.pathsep)
-            # the found runtime may be one MINOR version behind pyspark's
-            # generated StateMessage gencode (6.32 vs 6.33 here) — same
-            # major, so the wire format is compatible; relax the strict
-            # gencode<=runtime check via protobuf's OWN documented env
-            # override.  Only set on this fallback path, never when a
-            # real protobuf install exists; the TWS test's batch-equality
-            # assertion still catches any actual protocol breakage.
-            os.environ.setdefault(
-                "TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true"
-            )
-            return
-
-
-_ensure_protobuf()
-
 from flinkecuserbehavioranalysis_spark.schemas import TESTDATA_TABLES
 from flinkecuserbehavioranalysis_spark.session import get_spark
 

@@ -19,6 +19,45 @@ from flinkecuserbehavioranalysis_spark.streaming.jobs import (
 from conftest import SF_DIR
 
 
+def test_run_bounded_timeout_stops_query_and_raises(spark):
+    """A bounded replay still running at its timeout must not hand back
+    the memory sink's partial rows: the query is stopped and
+    TimeoutError raised."""
+    import time
+
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def slow(ids):
+        time.sleep(5)
+        return ids
+
+    stream = read_events_stream(spark, SF_DIR).select(slow("event_id").alias("e"))
+    with pytest.raises(TimeoutError):
+        run_bounded(stream, timeout=1)
+    assert not [q for q in spark.streams.active if (q.name or "").startswith("mem_")]
+
+
+def test_partitioned_upsert_empty_batch_replaces_nothing(spark, tmp_path):
+    """The partitioned sink writes empty micro-batches as they come (no
+    emptiness pre-check): such a write replaces no partition, and a
+    store holding no data file yet reads as empty."""
+    from flinkecuserbehavioranalysis_spark.streaming.sinks import (
+        foreach_batch_partitioned_upsert,
+        read_store,
+    )
+
+    store = str(tmp_path / "store")
+    upsert = foreach_batch_partitioned_upsert(store, ["k"])
+    rows = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
+    upsert(rows.limit(0), 0)
+    assert read_store(spark, store) is None
+    upsert(rows, 1)
+    upsert(rows.limit(0), 2)
+    upsert(spark.createDataFrame([(2, 21)], "k long, v long"), 3)
+    assert sorted((r.k, r.v) for r in read_store(spark, store).collect()) == [(1, 10), (2, 21)]
+
+
 def test_salted_count_equals_plain(spark):
     ev = load_table(spark, SF_DIR, "events")
     plain = {

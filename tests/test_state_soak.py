@@ -8,10 +8,12 @@ with 2 checkpoint restarts, reading ``stateOperators[].numRowsTotal``
 from every progress record, and assert the series plateaus at the
 operator's designed bound:
 
-- ``streaming_login_fail`` / ``streaming_pattern_sequence`` hold one
-  state row per KEY (NoTimeout) — rows must track key cardinality, never
-  event count: constant once every key has been seen, no matter how many
-  more batches of events flow.
+- ``streaming_pattern_sequence`` holds one state row per KEY
+  (NoTimeout) — rows must track key cardinality, never event count:
+  constant once every key has been seen, no matter how many more
+  batches of events flow.  ``streaming_login_fail`` / ``streaming_last_touch``
+  group keys into hash buckets: one state row per occupied BUCKET, whose
+  key array holds exactly one entry per key seen.
 - ``streaming_order_timeout`` (EventTimeTimeout) holds only PENDING
   one-sided orders inside the timeout horizon — the watermark must evict
   decided keys, so the series rises, plateaus at the steady-state pending
@@ -37,6 +39,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from flinkecuserbehavioranalysis_spark.streaming.stateful import (
+    KEY_BUCKETS,
     streaming_last_touch,
     streaming_login_fail,
     streaming_order_timeout,
@@ -110,13 +113,15 @@ def _soak(spark, tmp_path, pdf, schema_ddl, kernel) -> list[int]:
 def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
     spark, tmp_path, kernel_name
 ):
-    """NoTimeout keyed kernels: state rows == key cardinality, flat for
+    """NoTimeout keyed kernels: state tracks key cardinality, flat for
     the whole soak once every key has appeared (all keys appear in the
     first micro-batch), while 24 batches of events keep arriving.
     ``last_touch`` (round 8, driver-hashed the same round) holds exactly
     one (ts, type) slot per user — the classic unbounded-attribution
-    trap is keeping every touch, which this gate would catch as rows
-    tracking events."""
+    trap is keeping every touch, which this gate would catch as stored
+    keys tracking events.  For the bucketed kernels (login_fail,
+    last_touch) state rows are occupied hash buckets, and the bucket
+    arrays of the final checkpoint hold exactly one entry per key."""
     n_keys, n_events = 40, 1920
     i = np.arange(n_events)
     types = np.array(["view", "click", "purchase", "error"])[i % 4]
@@ -173,6 +178,26 @@ def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
         assert max(series) == expected_keys, series
         assert series == sorted(series), series
         assert series[-1] == expected_keys, series
+    elif kernel_name in ("login_fail", "last_touch"):
+        # every key appears in batch 1: the series must plateau at the
+        # number of buckets the keys occupy (same hash as the kernel)
+        # and never grow past it ...
+        buckets = (
+            spark.range(n_keys)
+            .select(F.pmod(F.xxhash64(F.col("id")), F.lit(KEY_BUCKETS)).alias("b"))
+            .distinct()
+            .count()
+        )
+        assert max(series) == buckets, (series, buckets)
+        assert series[1:] == [buckets] * (len(series) - 1), series
+        # ... and the bucket arrays hold one entry per key, never more
+        stored = (
+            spark.read.format("statestore")
+            .load(str(tmp_path / "ckpt"))
+            .select(F.sum(F.size("value.groupState.keys")))
+            .first()[0]
+        )
+        assert stored == n_keys, stored
     else:
         # every key appears in batch 1 (slice 0 holds 80 events of 40
         # keys): the series must plateau at n_keys immediately and NEVER

@@ -435,46 +435,6 @@ def test_streaming_dedup_matches_batch_distinct(spark):
     )
 
 
-def test_streaming_login_fail_tws_matches_batch(spark):
-    """transformWithStateInPandas twin must agree with the batch lag()
-    formulation (and therefore with the applyInPandasWithState twin).
-
-    TWS's state-server protocol needs google.protobuf (conftest's
-    _ensure_protobuf finds an on-disk runtime when none is installed —
-    skip only if that probe also came up empty), and its state layout
-    needs the multi-column-family RocksDB provider (rocksdbjni ships in
-    the Spark distribution) — scope the provider override to this query
-    so every other test keeps the default HDFS-backed provider."""
-    pytest.importorskip("google.protobuf")
-    from flinkecuserbehavioranalysis_spark.streaming.stateful import (
-        streaming_login_fail_tws,
-    )
-
-    stream = read_events_stream(spark, SF_DIR).select("user_id", "event_type", "ts", "event_id")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got = run_bounded(streaming_login_fail_tws(stream, max_gap_seconds=3600.0))
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
-    batch = consecutive_fail_alerts(
-        load_table(spark, SF_DIR, "events"),
-        fail_value="error",
-        max_gap_seconds=3600,
-        tiebreak_col="event_id",
-    ).collect()
-    cols = ["user_id", "first_fail_ts", "last_fail_ts", "warning_msg"]
-    assert _rows(got, cols) == _rows(batch, cols)
-    assert len(got) > 0
-
-
 def test_streaming_windowed_count_complete_mode(spark):
     """Complete mode re-emits every window each batch — a bounded replay
     must therefore reproduce the batch result with NO watermark cutoff
