@@ -35,91 +35,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["hot_items_topn"].fn(spark, "/root/testdata/sf0.001")
 
 
-#: Names boosted to the FRONT of the never-checked tier: the bounded
-#: streaming-replay queries (round-6 verdict #7 — their "done" criterion
-#: is a green driver CORRECTNESS row whose Spark side executed through
-#: applyInPandasWithState, so they must reach the next driver window
-#: despite registering at the end).  Once checked, the last-checked key
-#: dominates and this list is inert.
-#: Names REGISTERED in round 9, deliberately held OUT of the round-9
-#: driver window (round-8 verdict #2: the r9 window must be the 22
-#: never-checked queries plus the 28 least-recently-checked round-1-era
-#: queries — a new registration would displace an LRU re-hash slot).
-#: While no CORRECTNESS_r09 record exists these names sort as if checked
-#: in round 9 (the very back); the moment the r9 record lands they are
-#: genuinely never-checked again and jump to the front of the r10
-#: window.  Self-retiring: once every name here has a real record the
-#: set is inert.
-_DEFER_PAST_R9 = {
-    "doc_token_entropy",
-    "corpus_dsir_weights",
-    "token_zipf_fit",
-    "doc_quality_gopher_rules",
-    "docs_paragraph_dedup",
-    "corpus_contamination_ngram_overlap",
-    "reservoir_sample_documents",
-    "domain_quality_mix_report",
-    "token_ngram_perplexity",
-    "dedup_url_canonical",
-    "events_sessionized_stats",
-}
-
-#: Same pattern, round 10 (round-9 verdict #1 + ledger discipline): the
-#: r10 driver window must be the 11 round-9 registrations above (now
-#: genuinely never-checked) plus 39 LRU re-hashes — a round-10
-#: registration would displace an LRU slot.  While no CORRECTNESS_r10
-#: record exists these names sort as if checked in round 10 (the very
-#: back); the moment the r10 record lands they lead the r11 window.
-_DEFER_PAST_R10 = {
-    "streaming_sessionized_stats_replay",
-    "streaming_url_dedup_replay",
-    "token_kn_perplexity",
-    "corpus_source_overlap",
-    "dataset_split_stratified_quota",
-    "corpus_source_kl",
-    "corpus_source_mi",
-    "corpus_heaps_fit",
-}
-
-#: Same pattern, round 11 (round-10 verdict #7): the r11 driver window
-#: must be the 8 round-10 registrations above (now genuinely
-#: never-checked) plus 42 LRU re-hashes — a round-11 registration would
-#: displace an LRU slot.  Self-retiring the moment CORRECTNESS_r11
-#: lands.
-_DEFER_PAST_R11 = {
-    "token_kn_perplexity_wide",
-    "docs_winnow_fingerprints",
-    "corpus_winnow_matches",
-    "dedup_kcore_members",
-    "streaming_winnow_dedup_replay",
-    "corpus_source_js",
-}
-
-
-_DRIVER_PRIORITY = {
-    "streaming_login_fail_replay",
-    "streaming_blacklist_replay",
-    "streaming_order_timeout_replay",
-    "streaming_fail_burst_replay",
-    "streaming_dedup_replay",
-    "streaming_pv_count_replay",
-    "streaming_session_replay",
-    # round 8 (round-7 verdict #5): the CEP-NFA / last-touch / as-of
-    # kernels' replays — same done-criterion, must reach this window
-    "streaming_cep_replay",
-    "streaming_cep_negation_replay",
-    "streaming_last_touch_replay",
-    "streaming_asof_replay",
-    # round-8 continuation: the funnel / looping-quantifier / iterative-
-    # condition kernels' replays (previously pytest-only families)
-    "streaming_funnel_replay",
-    "streaming_one_or_more_replay",
-    "streaming_value_spike_replay",
-    "streaming_pattern_sequence_replay",
-    "streaming_not_followed_by_replay",
-}
-
-
 def _rotation_order() -> list[str]:
     """Registry names, never-driver-checked first (see module doc).
 
@@ -137,25 +52,11 @@ def _rotation_order() -> list[str]:
         if isinstance(names, dict):
             for name in names:
                 last_checked[name] = max(last_checked.get(name, 0), rnd)
-    if max(last_checked.values(), default=0) < 9:
-        # round-9 window protection (see _DEFER_PAST_R9): sort the new
-        # registrations behind everything already checked
-        for name in _DEFER_PAST_R9:
-            last_checked.setdefault(name, 9)
-    if max(last_checked.values(), default=0) < 10:
-        # round-10 window protection (see _DEFER_PAST_R10)
-        for name in _DEFER_PAST_R10:
-            last_checked.setdefault(name, 10)
-    if max(last_checked.values(), default=0) < 11:
-        # round-11 window protection (see _DEFER_PAST_R11)
-        for name in _DEFER_PAST_R11:
-            last_checked.setdefault(name, 11)
     reg_pos = {name: i for i, name in enumerate(QUERIES)}
     return sorted(
         QUERIES,
         key=lambda n: (
             last_checked.get(n, -1),                       # never-checked first
-            n not in _DRIVER_PRIORITY,                     # boosted names first
             QUERIES[n].oracle is None,                     # oracle-backed first
             reg_pos[n],                                    # stable within tier
         ),

@@ -92,10 +92,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def read_csv_events(
     spark: SparkSession,
     path: str,
@@ -140,11 +136,6 @@ def read_apache_log(spark: SparkSession, path: str) -> DataFrame:
         parts.getItem(5).alias("method"),
         parts.getItem(6).alias("url"),
     ).select(*[f.name for f in APACHE_LOG.fields])
-
-
-def write_console(df: DataFrame, n: int = 20) -> None:
-    """S5 print-sink analog for batch."""
-    df.show(n, truncate=False)
 
 
 def write_bucketed(

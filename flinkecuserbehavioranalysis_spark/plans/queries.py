@@ -10234,8 +10234,8 @@ SELECT user_id,
 FROM __c
 WHERE event_type = 'view' AND t3 IS NOT NULL AND t3 - tse < 86400.0
 """,
-    "Extension (the N-step keyed-NFA kernel, driver-hashable): bounded replay through "
-    "streaming/stateful.streaming_pattern_sequence — 3-step view→click→purchase chains "
+    "Extension (the N-step keyed NFA, driver-hashable): bounded replay through "
+    "streaming/cep.match_pattern_stream — 3-step view→click→purchase chains "
     "per user within 24 h, relaxed contiguity; state = the active partial chains, "
     "pruned per event once any completion is out of window.  Greedy first-match "
     "advancement equals the batch lexicographically-earliest chain under uniform "
@@ -10243,8 +10243,9 @@ WHERE event_type = 'view' AND t3 IS NOT NULL AND t3 - tse < 86400.0
     "scalar reverse-window restatement restricted to the replay domain.",
 )
 def streaming_pattern_sequence_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.cep import PatternStep
+    from ..streaming.cep import match_pattern_stream
     from ..streaming.jobs import read_events_stream, run_bounded_df
-    from ..streaming.stateful import streaming_pattern_sequence
 
     def build() -> DataFrame:
         stream = (
@@ -10256,18 +10257,13 @@ def streaming_pattern_sequence_replay(spark: SparkSession, sf_dir: str) -> DataF
             )
             .select("user_id", "ts", "event_type", "event_id")
         )
-        out = streaming_pattern_sequence(
-            stream,
-            key_col="user_id",
-            ts_col="ts",
-            steps=[
-                F.col("event_type") == "view",
-                F.col("event_type") == "click",
-                F.col("event_type") == "purchase",
-            ],
-            within_seconds=86400.0,
-            contiguity="relaxed",
-            tiebreak_col="event_id",
+        steps = [
+            PatternStep(F.col("event_type") == "view"),
+            PatternStep(F.col("event_type") == "click"),
+            PatternStep(F.col("event_type") == "purchase"),
+        ]
+        out = match_pattern_stream(
+            stream, "user_id", "ts", steps, 86400.0, tiebreak_col="event_id"
         )
         return run_bounded_df(out).select(
             F.col("key").alias("user_id"), "step1_ts", "step2_ts", "step3_ts"
@@ -10331,10 +10327,6 @@ def streaming_not_followed_by_replay(spark: SparkSession, sf_dir: str) -> DataFr
 
 # =====================================================================
 # Round 9 — corpus-quality / contamination / canonicalization additions
-# (all names listed in __spark_entry__._DEFER_PAST_R9: registered this
-# round but held out of the r9 driver window so the 22-never-checked +
-# 28-LRU re-hash composition is not displaced; they become the front of
-# the r10 window the moment CORRECTNESS_r09.json lands.)
 # =====================================================================
 
 from ..operators.text import (  # noqa: E402

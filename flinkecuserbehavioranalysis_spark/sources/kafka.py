@@ -66,20 +66,6 @@ def read_kafka_stream(
     return parse_csv_records(reader.load(), schema, ts_col)
 
 
-def write_kafka(
-    df: DataFrame, bootstrap_servers: str, topic: str, checkpoint_dir: str
-):
-    """Streaming sink: JSON-encoded rows to a topic."""
-    return (
-        df.select(encode_json_value(df.columns))
-        .writeStream.format(KAFKA_FORMAT)
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def encode_json_value(columns: list[str]) -> F.Column:
     """The sink-side value encoding (row → JSON string column named
     ``value`` — the shape Kafka's sink requires); broker-free."""

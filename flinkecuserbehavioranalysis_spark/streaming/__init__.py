@@ -1,3 +1,4 @@
+from .cep import match_pattern_stream
 from .jobs import (
     read_events_stream,
     run_bounded,
@@ -11,7 +12,6 @@ from .stateful import (
     streaming_blacklist,
     streaming_login_fail,
     streaming_order_timeout,
-    streaming_pattern_pairs,
 )
 
 __all__ = [
@@ -23,8 +23,8 @@ __all__ = [
     "streaming_uv_update",
     "streaming_login_fail",
     "streaming_order_timeout",
-    "streaming_pattern_pairs",
     "streaming_blacklist",
+    "match_pattern_stream",
     "foreach_batch_upsert",
     "read_store",
 ]

@@ -4,14 +4,21 @@
 contiguity / times / optional / negated — into ONE keyed NFA over
 ``applyInPandasWithState`` (Spark allows a single stateful operator
 per streaming query, so the batch compiler's per-variant union becomes
-per-variant chain lists inside one state store, exactly like
-``streaming_pattern_sequence_optional``).
+per-variant chain lists inside one state store).  It is the streaming
+side's only positive-chain automaton: a pair is a two-step spec
+(``begin/next|followedBy/within``), an N-step sequence an N-step spec,
+``times(n)`` a quantified step and ``optional()`` an optional step.
+``one_or_more`` loop specs dispatch to ``stateful.streaming_one_or_more``.
 
 Semantics per expansion variant (shared `variant_specs`):
 
-- positive chains advance greedily in (ts, tiebreak) order — identical
-  to ``streaming_pattern_sequence`` (uniform contiguity required, the
-  streaming NFA cannot commit to mixed per-gap lookahead);
+- positive chains advance greedily in (ts, tiebreak) order: per event,
+  a chain older than *within* is pruned (any completion is later
+  still), a waiting chain advances when the event matches its next
+  step (relaxed) or advances-or-dies on it (strict), a completed chain
+  emits, and a step-1 match starts a new chain.  Greedy first-match
+  equals the batch compiler's lexicographically-earliest chain only
+  under UNIFORM contiguity, so mixed per-gap policies are rejected;
 - MID-GAP negation: while a chain waits between local steps li and
   li+1, an absent-event with ``ts > chain[li]`` records the earliest
   pending kill; when the chain advances at ``ts2`` it dies iff that
@@ -28,10 +35,12 @@ Semantics per expansion variant (shared `variant_specs`):
 
 State per key is bounded: active chains by the step-1 arrival rate ×
 within (pruned every event), parked completions by the completion rate
-× within.  Ordering contract: order-correct within a micro-batch
-(events sorted) and across batches on an ordered replay — the same
-contract as the other pattern twins, verified against the batch
-compiler on bounded replays (tests/test_streaming.py).
+× within; a key with neither holds no state row at all.  Ordering
+contract: order-correct within a micro-batch (events sorted) and across
+batches on an ordered replay, verified against the batch compilers
+(``match_pattern``, ``pattern_pairs``, ``pattern_sequence``,
+``pattern_sequence_optional``) on bounded replays
+(tests/test_streaming.py).
 """
 
 from __future__ import annotations

@@ -15,6 +15,14 @@ the timers:
   create_ts + deadline (``GroupStateTimeout.EventTimeTimeout`` — fired
   by watermark advance, exactly Flink's event-time timer discipline).
 
+Positive CEP chains — pairs, N-step sequences, ``times``, optional
+steps — are not here: ``streaming/cep.match_pattern_stream`` runs every
+such pattern as one keyed NFA.  Two pattern kernels stay in this module:
+``streaming_one_or_more`` (the loop kernel ``match_pattern_stream``
+hands ``one_or_more`` patterns to) and ``streaming_not_followed_by``
+(which keeps killers above the watermark so a LATE first event is still
+killed; the NFA's trailing negation only kills forward).
+
 Rows inside a micro-batch are buffered to ONE frame per group and
 sorted before state transitions — Flink gets this ordering from per-key
 FIFO delivery; Spark's shuffle delivers a group as arbitrarily-ordered
@@ -673,331 +681,6 @@ def streaming_fail_burst(
         .groupBy("user_id")
         .applyInPandasWithState(
             fn, FAIL_BURST_SCHEMA, _FAIL_BURST_STATE, "append", GroupStateTimeout.EventTimeTimeout
-        )
-    )
-
-
-PATTERN_PAIR_SCHEMA = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("first_ts", LongType()),
-        StructField("second_ts", LongType()),
-    ]
-)
-_PATTERN_STATE = StructType(
-    [
-        StructField("last_a", LongType()),      # strict: 1 if previous event matched A
-        StructField("last_ts", DoubleType()),   # strict: previous event time
-        StructField("pending", StringType()),   # relaxed: ','-joined pending A times
-    ]
-)
-
-
-def streaming_pattern_pairs(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    first_pred,
-    second_pred,
-    within_seconds: float,
-    contiguity: str = "relaxed",
-    tiebreak_col: str | None = None,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Streaming twin of ``operators.patterns.pattern_pairs`` — the
-    parameterized CEP ``begin/next|followedBy/within`` surface over
-    ``applyInPandasWithState``.
-
-    State per key:
-
-    - strict (``next``): the previous event's (matched-A?, ts) — one
-      slot, exactly LoginFailTwo's ListState discipline.
-    - relaxed (``followedBy``): the pending unmatched-A timestamps.
-      The list is PRUNED on every event: an A older than *within* can
-      never match (any future B is later still), and on a B every
-      surviving A matches and the list empties.  State is therefore
-      bounded by the key's A-arrival rate × the within window — also
-      for keys that never see a B (the common view-without-purchase
-      case), which a B-only cleanup would grow forever.
-
-    The time bound is strict (<), matching the batch operator and CEP's
-    end-exclusive ``within``.  Output: (key, first_ts, second_ts) as
-    epoch-second longs — identical to the batch operator on a
-    time-ordered replay (see test_streaming_pattern_pairs_matches_batch).
-    """
-    if contiguity not in ("strict", "relaxed"):
-        raise ValueError(f"contiguity must be 'strict' or 'relaxed', got {contiguity!r}")
-    tagged = events.withColumn("__a", _tag(first_pred)).withColumn(
-        "__b", _tag(second_pred)
-    )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    strict = contiguity == "strict"
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        last_a, last_ts, pending_s = state.get if state.exists else (0, None, "")
-        pending = [float(x) for x in pending_s.split(",") if x] if pending_s else []
-        out: list[tuple[int, int, int]] = []
-        for pdf in _group_chunks(pdfs, sort_cols):
-            tss = _epoch_s(pdf[ts_col])
-            a_arr = pdf["__a"].to_numpy().astype(bool)
-            b_arr = pdf["__b"].to_numpy().astype(bool)
-            if strict:
-                # batch-interior (prev, cur) pairs vectorize; the batch
-                # boundary pair uses the carried one-slot state
-                prev_a = np.concatenate(([bool(last_a)], a_arr[:-1]))
-                prev_ts = np.concatenate(
-                    ([last_ts if last_ts is not None else np.nan], tss[:-1])
-                )
-                hit = b_arr & prev_a & (tss - prev_ts < within_seconds)
-                out.extend(
-                    (int(k), _floor_s(prev_ts[i]), _floor_s(tss[i])) for i in np.flatnonzero(hit)
-                )
-                if len(tss):
-                    last_a, last_ts = (1 if a_arr[-1] else 0), float(tss[-1])
-            else:
-                for i in range(len(tss)):
-                    ts = float(tss[i])
-                    if pending:
-                        # prune A's that can no longer match: any future
-                        # B is >= ts, so expiry is decidable NOW
-                        pending = [ta for ta in pending if ts - ta < within_seconds]
-                    if b_arr[i]:
-                        out.extend((int(k), _floor_s(ta), _floor_s(ts)) for ta in pending)
-                        pending = []
-                    if a_arr[i]:
-                        pending.append(ts)
-        state.update((last_a, last_ts, ",".join(repr(t) for t in pending)))
-        if out:
-            yield pd.DataFrame(out, columns=["key", "first_ts", "second_ts"])
-
-    return (
-        tagged.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn, PATTERN_PAIR_SCHEMA, _PATTERN_STATE, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-_SEQUENCE_STATE = StructType([StructField("chains", StringType())])
-
-
-def streaming_pattern_sequence(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    steps: list,
-    within_seconds: float,
-    contiguity: str = "relaxed",
-    tiebreak_col: str | None = None,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Streaming twin of ``operators.patterns.pattern_sequence`` — the
-    N-step CEP chain as a keyed NFA over ``applyInPandasWithState``.
-
-    State per key: the active partial chains (each a ts-list at step
-    k < N).  Per event, in (ts, tiebreak) order:
-
-    1. PRUNE doomed chains (ts − t1 ≥ within: any completion is later
-       still) — state stays bounded by the key's step-1 arrival rate ×
-       the within window, also for keys that never complete.
-    2. Advance: a chain waiting at step k advances when the event
-       matches step k+1 (relaxed), or advances-or-dies on it (strict —
-       at most N−1 strict chains can ever be live, one per step).
-       A chain advances at most one step per event ("strictly later").
-    3. A chain reaching step N emits (within already guaranteed by 1).
-    4. An event matching step 1 starts a new chain.
-
-    Greedy first-match advancement equals the batch operator's
-    lexicographically-earliest chain ONLY under uniform contiguity
-    (relaxed continuations are monotone: if any later completion
-    exists, the earliest matching event also completes; strict chains
-    have no choice at all).  Mixed per-gap policies would need
-    lookahead a streaming NFA cannot commit to greedily, so they are
-    rejected — use the batch operator for those.  Output: (key,
-    step1_ts … stepN_ts) epoch-second longs, identical to the batch
-    operator on a bounded ordered replay
-    (tests/test_streaming.py::test_streaming_pattern_sequence_matches_batch).
-    """
-    n = len(steps)
-    if n < 2:
-        raise ValueError(f"streaming_pattern_sequence needs >= 2 steps, got {n}")
-    if contiguity not in ("strict", "relaxed"):
-        raise ValueError(
-            "streaming twin supports uniform 'strict' or 'relaxed' contiguity only, "
-            f"got {contiguity!r} (mixed per-gap policies need the batch operator)"
-        )
-    tagged = events
-    for i, pred in enumerate(steps):
-        tagged = tagged.withColumn(f"__m{i}", _tag(pred))
-    out_schema = StructType(
-        [StructField("key", LongType())]
-        + [StructField(f"step{i + 1}_ts", LongType()) for i in range(n)]
-    )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    strict = contiguity == "strict"
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        (chains_s,) = state.get if state.exists else ("",)
-        chains = [
-            [float(x) for x in c.split(",")] for c in chains_s.split(";") if c
-        ]
-        out: list[tuple[int, ...]] = []
-        for pdf in _group_chunks(pdfs, sort_cols):
-            tss = _epoch_s(pdf[ts_col])
-            m = [pdf[f"__m{i}"].to_numpy().astype(bool) for i in range(n)]
-            for i in range(len(tss)):
-                ts = float(tss[i])
-                nxt: list[list[float]] = []
-                for c in chains:
-                    if ts - c[0] >= within_seconds:
-                        continue  # doomed: prune on every event
-                    if m[len(c)][i]:
-                        c2 = c + [ts]
-                        if len(c2) == n:
-                            out.append((int(k), *(_floor_s(t) for t in c2)))
-                        else:
-                            nxt.append(c2)
-                    elif not strict:
-                        nxt.append(c)
-                chains = nxt
-                if m[0][i]:
-                    chains.append([ts])
-        state.update((";".join(",".join(repr(t) for t in c) for c in chains),))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["key"] + [f"step{j + 1}_ts" for j in range(n)]
-            )
-
-    return (
-        tagged.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn, out_schema, _SEQUENCE_STATE, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def streaming_pattern_sequence_optional(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    steps: list,
-    within_seconds: float,
-    optional,
-    contiguity: str = "relaxed",
-    tiebreak_col: str | None = None,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Streaming twin of ``operators.patterns.pattern_sequence_optional``
-    — CEP ``optional()`` over ONE keyed NFA.  The batch operator's
-    expansion semantics (a match per subset of skipped optional steps)
-    can't be a union of per-expansion ``streaming_pattern_sequence``
-    queries — Spark forbids multiple ``applyInPandasWithState``
-    operators in one streaming query — so a single stateful function
-    tracks every expansion's pending chains side by side: the state is
-    the per-expansion chain lists (each pruned by the within bound
-    exactly like the base NFA), each event drives every expansion's
-    transition, and a completing chain emits the full-width row with
-    NULLs at that expansion's skipped positions.  One state store, one
-    shuffle — cheaper than the batch expansion's ≤ 2^(#optional)
-    passes.  Uniform *contiguity* only, expansions keeping < 2 steps
-    are not tracked — both exactly as in the batch operator.  Output:
-    (key, step1_ts … stepN_ts), identical to the batch operator on a
-    bounded ordered replay."""
-    from itertools import combinations
-
-    n = len(steps)
-    if n < 2:
-        raise ValueError(f"needs >= 2 steps, got {n}")
-    if contiguity not in ("strict", "relaxed"):
-        raise ValueError(
-            "streaming twin supports uniform 'strict' or 'relaxed' contiguity only, "
-            f"got {contiguity!r}"
-        )
-    if len(optional) != n:
-        raise ValueError(f"optional flags ({len(optional)}) must match steps ({n})")
-    opt_idx = [i for i, o in enumerate(optional) if o]
-    expansions: list[tuple[int, ...]] = []
-    for r in range(len(opt_idx) + 1):
-        for drop in combinations(opt_idx, r):
-            keep = tuple(i for i in range(n) if i not in drop)
-            if len(keep) >= 2:
-                expansions.append(keep)
-    if not expansions:
-        raise ValueError("no expansion keeps >= 2 steps")
-    tagged = events
-    for i, pred in enumerate(steps):
-        tagged = tagged.withColumn(f"__m{i}", _tag(pred))
-    out_schema = StructType(
-        [StructField("key", LongType())]
-        + [StructField(f"step{i + 1}_ts", LongType()) for i in range(n)]
-    )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    strict = contiguity == "strict"
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        (s,) = state.get if state.exists else ("",)
-        parts = s.split("|") if s else []
-        if len(parts) != len(expansions):
-            parts = ["" for _ in expansions]
-        chain_sets = [
-            [[float(x) for x in c.split(",")] for c in p.split(";") if c]
-            for p in parts
-        ]
-        out: list[tuple] = []
-        for pdf in _group_chunks(pdfs, sort_cols):
-            tss = _epoch_s(pdf[ts_col])
-            m = [pdf[f"__m{i}"].to_numpy().astype(bool) for i in range(n)]
-            for i in range(len(tss)):
-                ts = float(tss[i])
-                for ei, keep in enumerate(expansions):
-                    chains = chain_sets[ei]
-                    nxt: list[list[float]] = []
-                    for c in chains:
-                        if ts - c[0] >= within_seconds:
-                            continue  # doomed: prune on every event
-                        if m[keep[len(c)]][i]:
-                            c2 = c + [ts]
-                            if len(c2) == len(keep):
-                                row: list = [int(k)] + [None] * n
-                                for pos, oi in enumerate(keep):
-                                    row[oi + 1] = _floor_s(c2[pos])
-                                out.append(tuple(row))
-                            else:
-                                nxt.append(c2)
-                        elif not strict:
-                            nxt.append(c)
-                    chains = nxt
-                    if m[keep[0]][i]:
-                        chains.append([ts])
-                    chain_sets[ei] = chains
-        state.update(
-            (
-                "|".join(
-                    ";".join(",".join(repr(t) for t in c) for c in chains)
-                    for chains in chain_sets
-                ),
-            )
-        )
-        if out:
-            yield pd.DataFrame(
-                out, columns=["key"] + [f"step{j + 1}_ts" for j in range(n)]
-            )
-
-    return (
-        tagged.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn, out_schema, _SEQUENCE_STATE, "append", GroupStateTimeout.NoTimeout
         )
     )
 

@@ -40,6 +40,19 @@ _SOAK_REPRESENTATIVES = (
 )
 
 
+def _named_by_node_id(config, item) -> bool:
+    """True when a ``path::name`` command-line argument selects *item*
+    (the test itself, one of its parametrizations, or its class)."""
+    name = item.nodeid.partition("::")[2]
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if not sep or (config.invocation_params.dir / path).resolve() != item.path:
+            continue
+        if name == rest or name.startswith((rest + "[", rest + "::")):
+            return True
+    return False
+
+
 def pytest_collection_modifyitems(config, items):
     """Default run = fast tier + one representative per soak family.
 
@@ -47,7 +60,8 @@ def pytest_collection_modifyitems(config, items):
     pre-record gate) or any explicit ``-m`` expression naming soak; a
     bare ``pytest tests/`` stays well inside the driver's kill window
     (round-11 verdict #1: the 32–40 min full suite was killed at ~96%,
-    reading as a red gate despite zero failures)."""
+    reading as a red gate despite zero failures).  A soak test named by
+    node id (``tests/x.py::test_y``) always runs."""
     if os.environ.get("SPARK_GRAFT_SOAK", "") not in ("", "0"):
         return
     if "soak" in (config.getoption("-m") or ""):
@@ -56,8 +70,10 @@ def pytest_collection_modifyitems(config, items):
         reason="soak tier is opt-in: set SPARK_GRAFT_SOAK=1 (or -m soak)"
     )
     for item in items:
-        if "soak" in item.keywords and not any(
-            item.nodeid.endswith(rep) for rep in _SOAK_REPRESENTATIVES
+        if (
+            "soak" in item.keywords
+            and not any(item.nodeid.endswith(rep) for rep in _SOAK_REPRESENTATIVES)
+            and not _named_by_node_id(config, item)
         ):
             item.add_marker(skip)
 

@@ -656,40 +656,43 @@ def test_streaming_kernels_floor_pre_epoch_emissions(spark, degen_dirs):
     tier: emitted epoch-second longs must FLOOR (the batch contract) —
     Python int() in the kernels would truncate the pre-1970 sub-second
     rows and diverge from the batch twin."""
+    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep
     from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_pairs
+    from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
     from flinkecuserbehavioranalysis_spark.streaming.jobs import (
         read_events_stream,
         run_bounded,
-    )
-    from flinkecuserbehavioranalysis_spark.streaming.stateful import (
-        streaming_pattern_pairs,
     )
 
     sf = os.path.join(degen_dirs, "times")
     ev = load_table(spark, sf, "events")
     assert ev.where(F.col("ts") < F.lit("1970-01-01").cast("timestamp")).count() > 0
-    kw = dict(
-        first_pred=F.col("event_type") == "view",
-        second_pred=F.col("event_type") == "purchase",
-        within_seconds=3600.0,
-        contiguity="strict",
-        tiebreak_col="event_id",
-    )
+    view, purchase = F.col("event_type") == "view", F.col("event_type") == "purchase"
+    steps = [PatternStep(view), PatternStep(purchase, contiguity="strict")]
     got = sorted(
-        (r.key, r.first_ts, r.second_ts)
+        (r.key, r.step1_ts, r.step2_ts)
         for r in run_bounded(
-            streaming_pattern_pairs(
+            match_pattern_stream(
                 read_events_stream(spark, sf).select("user_id", "event_type", "ts", "event_id"),
-                key_col="user_id",
-                ts_col="ts",
-                **kw,
+                "user_id",
+                "ts",
+                steps,
+                3600.0,
+                tiebreak_col="event_id",
             )
         )
     )
     batch = sorted(
         (r.user_id, r.first_ts, r.second_ts)
         for r in pattern_pairs(
-            ev, key_col="user_id", ts_col="ts", **kw
+            ev,
+            key_col="user_id",
+            ts_col="ts",
+            first_pred=view,
+            second_pred=purchase,
+            within_seconds=3600.0,
+            contiguity="strict",
+            tiebreak_col="event_id",
         ).collect()
     )
     assert got == batch and len(got) > 0
@@ -716,6 +719,9 @@ STREAMING_REPLAY_QUERIES = [
     # doc_id IS NOT NULL on both sides)
     "streaming_sessionized_stats_replay",
     "streaming_url_dedup_replay",
+    # the N-step NFA replay, run through match_pattern_stream; same
+    # domain discipline (event_id IS NOT NULL)
+    "streaming_pattern_sequence_replay",
 ]
 
 

@@ -99,14 +99,12 @@ def test_flagship_runs_as_pure_sql(spark):
     assert sorted(tuple(r[c] for c in cols) for r in got.collect()) == expect
 
 
-def test_rotation_orders_never_checked_first_with_priority():
+def test_rotation_orders_never_checked_first():
     """The driver hashes the first 50 of queries() each round; the
-    rotation must (a) front-load names with no CORRECTNESS_r*.json row
-    yet — oracle-backed before rows-only, (b) boost _DRIVER_PRIORITY
-    names to the head of the never-checked tier (round-6 verdict #7:
-    the streaming replays must reach the next driver window despite
-    registering last), and (c) push already-checked names to the back,
-    least-recently-checked first."""
+    rotation must (a) be a permutation of the registry, (b) front-load
+    names with no CORRECTNESS_r*.json row yet and (c) push
+    already-checked names to the back, least-recently-checked first;
+    ties go oracle-backed first, then registration order."""
     import json
     from pathlib import Path
 
@@ -124,100 +122,8 @@ def test_rotation_orders_never_checked_first_with_priority():
             continue
         for n in names:
             last[n] = max(last.get(n, 0), rnd)
-    # _DEFER_PAST_R9 / _DEFER_PAST_R10 names sort as if checked in
-    # their round while no record of that round exists (round-8 verdict
-    # #2 / round-9 verdict #1: new registrations must not displace the
-    # next window's never-checked + LRU composition); each set becomes
-    # "never-checked" only once its round's record lands
-    deferred: set[str] = set()
-    if max(last.values(), default=0) < 9:
-        deferred |= e._DEFER_PAST_R9
-    if max(last.values(), default=0) < 10:
-        deferred |= e._DEFER_PAST_R10
-    if max(last.values(), default=0) < 11:
-        deferred |= e._DEFER_PAST_R11
-    never = [n for n in order if n not in last and n not in deferred]
-    if never:
-        # every never-checked name precedes every checked name
-        first_checked = min(order.index(n) for n in last) if last else len(order)
-        assert max(order.index(n) for n in never) < first_checked
-        # deferred names sort BEHIND every checked name (the very back)
-        for n in deferred:
-            if n in QUERIES:
-                assert order.index(n) > first_checked
-        # priority names lead the never-checked tier
-        prio = [n for n in never if n in e._DRIVER_PRIORITY]
-        for p in prio:
-            assert order.index(p) < min(
-                order.index(n) for n in never if n not in e._DRIVER_PRIORITY
-            )
-        # within the non-priority never-checked tier, oracle-backed first
-        plain = [n for n in never if n not in e._DRIVER_PRIORITY]
-        tail_rows_only = [QUERIES[n].oracle is None for n in plain]
-        assert tail_rows_only == sorted(tail_rows_only)
-    # checked names sort by last-checked round ascending
-    checked_in_order = [n for n in order if n in last]
-    rounds = [last[n] for n in checked_in_order]
-    assert rounds == sorted(rounds)
-
-
-def test_rotation_deferral_self_retires_once_its_record_lands(tmp_path):
-    """For the HIGHEST deferral round N (the active ``_DEFER_PAST_RN``
-    set), the deferred names must sort LAST while no round-N record
-    exists, then jump to the FRONT of the next window the moment a
-    CORRECTNESS_rN.json lands — the self-retirement the whole deferral
-    ledger depends on.  The pre-record phase is CONSTRUCTED, not
-    assumed from repo state: only records for rounds < N are copied
-    into the scratch dir, so the test stays green after the driver's
-    real round-N record lands in the repo root (round-10 verdict #1)."""
-    import importlib.util
-    import json
-    import re
-    import shutil
-    from pathlib import Path
-
-    import __spark_entry__ as e
-
-    defer_sets = {
-        int(m.group(1)): getattr(e, a)
-        for a in dir(e)
-        for m in [re.fullmatch(r"_DEFER_PAST_R(\d+)", a)]
-        if m is not None
-    }
-    assert defer_sets, "deferral ledger disappeared — update this test"
-    active_round = max(defer_sets)
-    deferred = defer_sets[active_round]
-
-    repo = Path(e.__file__).resolve().parent
-    shutil.copy(repo / "__spark_entry__.py", tmp_path / "__spark_entry__.py")
-    for rec in repo.glob("CORRECTNESS_r*.json"):
-        rnd = int("".join(ch for ch in rec.stem if ch.isdigit()) or 0)
-        if rnd < active_round:
-            shutil.copy(rec, tmp_path / rec.name)
-
-    def load_order(d):
-        spec = importlib.util.spec_from_file_location(
-            "entry_scratch", d / "__spark_entry__.py"
-        )
-        m = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(m)
-        return m, m._rotation_order()
-
-    m1, before = load_order(tmp_path)
-    n_defer = len(deferred)
-    # pre-record: every deferred name sits at the very back
-    assert set(before[-n_defer:]) == deferred
-    # land a synthetic round-N record = the current window (first 50)
-    (tmp_path / f"CORRECTNESS_r{active_round}.json").write_text(
-        json.dumps({n: {"hash_match": True} for n in before[:50]})
-    )
-    m2, after = load_order(tmp_path)
-    # post-record: the deferred names are genuinely never-checked again —
-    # every one sorts ahead of every name that carries ANY record from
-    # ANY round (i.e. they lead the next driver window)
-    recorded: set[str] = set()
-    for rec in Path(tmp_path).glob("CORRECTNESS_r*.json"):
-        recorded |= set(json.loads(rec.read_text()))
-    first_checked = min(after.index(n) for n in after if n in recorded)
-    for n in deferred:
-        assert after.index(n) < first_checked, n
+    # never-checked (-1) first, then by last-checked round ascending;
+    # within a round, oracle-backed first, then registration order
+    reg_pos = {n: i for i, n in enumerate(QUERIES)}
+    keys = [(last.get(n, -1), QUERIES[n].oracle is None, reg_pos[n]) for n in order]
+    assert keys == sorted(keys)

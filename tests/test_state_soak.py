@@ -8,10 +8,11 @@ with 2 checkpoint restarts, reading ``stateOperators[].numRowsTotal``
 from every progress record, and assert the series plateaus at the
 operator's designed bound:
 
-- ``streaming_pattern_sequence`` holds one state row per KEY
-  (NoTimeout) — rows must track key cardinality, never event count:
-  constant once every key has been seen, no matter how many more
-  batches of events flow.  ``streaming_login_fail`` / ``streaming_last_touch``
+- ``match_pattern_stream`` on a positive 3-step chain (NoTimeout) holds
+  one state row per key with a LIVE chain — rows must track those keys,
+  never event count: constant once every chain-starting key has been
+  seen, no matter how many more batches of events flow.
+  ``streaming_login_fail`` / ``streaming_last_touch``
   group keys into hash buckets: one state row per occupied BUCKET, whose
   key array holds exactly one entry per key seen.
 - ``streaming_order_timeout`` (EventTimeTimeout) holds only PENDING
@@ -38,12 +39,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep
+from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
 from flinkecuserbehavioranalysis_spark.streaming.stateful import (
     KEY_BUCKETS,
     streaming_last_touch,
     streaming_login_fail,
     streaming_order_timeout,
-    streaming_pattern_sequence,
 )
 
 N_SLICES = 24  # 8 per segment x 3 segments = 24 data micro-batches
@@ -121,7 +123,9 @@ def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
     trap is keeping every touch, which this gate would catch as stored
     keys tracking events.  For the bucketed kernels (login_fail,
     last_touch) state rows are occupied hash buckets, and the bucket
-    arrays of the final checkpoint hold exactly one entry per key."""
+    arrays of the final checkpoint hold exactly one entry per key.  The
+    CEP NFA (pattern_sequence) keeps rows only for keys with live
+    chains, so its plateau is the number of chain-starting keys."""
     n_keys, n_events = 40, 1920
     i = np.arange(n_events)
     types = np.array(["view", "click", "purchase", "error"])[i % 4]
@@ -151,18 +155,18 @@ def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
         expected_keys = len(set(zip(pdf["user_id"], days)))
         assert expected_keys > n_keys  # the midnight crossing is real
     else:
-        kernel = lambda s: streaming_pattern_sequence(  # noqa: E731
-            s,
-            key_col="user_id",
-            ts_col="ts",
-            steps=[
-                F.col("event_type") == "view",
-                F.col("event_type") == "click",
-                F.col("event_type") == "purchase",
-            ],
-            within_seconds=3600.0,
-            tiebreak_col="event_id",
+        steps = [
+            PatternStep(F.col("event_type") == step)
+            for step in ("view", "click", "purchase")
+        ]
+        kernel = lambda s: match_pattern_stream(  # noqa: E731
+            s, "user_id", "ts", steps, 3600.0, tiebreak_col="event_id"
         )
+        # the NFA keeps a state row only for a key with a live chain:
+        # here the keys that see a view (key k only ever sees type
+        # k % 4, and a view every 200 s keeps a 3600 s chain alive)
+        expected_keys = pdf.loc[pdf["event_type"] == "view", "user_id"].nunique()
+        assert 0 < expected_keys < n_keys
     series = _soak(
         spark,
         tmp_path,
@@ -200,8 +204,9 @@ def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
         assert stored == n_keys, stored
     else:
         # every key appears in batch 1 (slice 0 holds 80 events of 40
-        # keys): the series must plateau at n_keys immediately and NEVER
-        # grow past it — state tracks keys, not the 24 batches of events
+        # keys): the series must plateau at the chain-holding key count
+        # immediately and NEVER grow past it — state tracks keys, not the
+        # 24 batches of events
         assert max(series) == expected_keys, series
         assert series[1:] == [expected_keys] * (len(series) - 1), series
 

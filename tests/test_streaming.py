@@ -731,45 +731,51 @@ def test_kafka_sink_value_encoding(spark):
 
 
 def test_streaming_pattern_pairs_matches_batch(spark):
-    """The streaming CEP twin must reproduce the batch pattern_pairs on
-    a time-ordered replay, both contiguities."""
+    """A two-step match_pattern_stream spec (the CEP pair) must
+    reproduce the batch pattern_pairs on a time-ordered replay, both
+    contiguities."""
+    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep
     from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_pairs
-    from flinkecuserbehavioranalysis_spark.streaming.stateful import (
-        streaming_pattern_pairs,
-    )
+    from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
 
-    kw = dict(
-        key_col="user_id",
-        ts_col="ts",
-        first_pred=F.col("event_type") == "view",
-        second_pred=F.col("event_type") == "purchase",
-        within_seconds=1800.0,
-        tiebreak_col="event_id",
-    )
+    view, purchase = F.col("event_type") == "view", F.col("event_type") == "purchase"
     stream = read_events_stream(spark, SF_DIR).select("user_id", "event_type", "ts", "event_id")
     batch_df = load_table(spark, SF_DIR, "events")
     for contiguity in ("relaxed", "strict"):
+        steps = [PatternStep(view), PatternStep(purchase, contiguity=contiguity)]
         got = sorted(
-            (r.key, r.first_ts, r.second_ts)
-            for r in run_bounded(streaming_pattern_pairs(stream, contiguity=contiguity, **kw))
+            (r.key, r.step1_ts, r.step2_ts)
+            for r in run_bounded(
+                match_pattern_stream(
+                    stream, "user_id", "ts", steps, 1800.0, tiebreak_col="event_id"
+                )
+            )
         )
         batch = sorted(
             (r.user_id, r.first_ts, r.second_ts)
-            for r in pattern_pairs(batch_df, contiguity=contiguity, **kw).collect()
+            for r in pattern_pairs(
+                batch_df,
+                key_col="user_id",
+                ts_col="ts",
+                first_pred=view,
+                second_pred=purchase,
+                within_seconds=1800.0,
+                contiguity=contiguity,
+                tiebreak_col="event_id",
+            ).collect()
         )
         assert got == batch, contiguity
         assert len(got) > 0, contiguity
 
 
 def test_streaming_pattern_sequence_matches_batch(spark):
-    """The N-step streaming CEP twin must reproduce the batch
+    """An N-step match_pattern_stream spec must reproduce the batch
     pattern_sequence on a time-ordered replay: the 3-step relaxed
     view→click→purchase funnel (the registered pattern_funnel_3step
     parameterization) and a 3-step strict consecutive-views chain."""
+    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep
     from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_sequence
-    from flinkecuserbehavioranalysis_spark.streaming.stateful import (
-        streaming_pattern_sequence,
-    )
+    from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
 
     stream = read_events_stream(spark, SF_DIR).select(
         "user_id", "event_type", "ts", "event_id"
@@ -795,57 +801,77 @@ def test_streaming_pattern_sequence_matches_batch(spark):
             "strict",
         ),
     ]
-    for steps, within, contiguity in cases:
-        kw = dict(
-            key_col="user_id",
-            ts_col="ts",
-            steps=steps,
-            within_seconds=within,
-            contiguity=contiguity,
-            tiebreak_col="event_id",
-        )
+    for preds, within, contiguity in cases:
+        steps = [PatternStep(p, contiguity=contiguity) for p in preds]
         got = sorted(
-            tuple(r) for r in run_bounded(streaming_pattern_sequence(stream, **kw))
+            tuple(r)
+            for r in run_bounded(
+                match_pattern_stream(
+                    stream, "user_id", "ts", steps, within, tiebreak_col="event_id"
+                )
+            )
         )
-        batch = sorted(tuple(r) for r in pattern_sequence(batch_df, **kw).collect())
+        batch = sorted(
+            tuple(r)
+            for r in pattern_sequence(
+                batch_df,
+                key_col="user_id",
+                ts_col="ts",
+                steps=preds,
+                within_seconds=within,
+                contiguity=contiguity,
+                tiebreak_col="event_id",
+            ).collect()
+        )
         assert got == batch, contiguity
         assert len(got) > 0, contiguity
 
 
 def test_streaming_pattern_sequence_quantified_matches_batch(spark):
-    """Quantifier > 1 on the streaming twin (the CEP ``times(2)`` path):
-    steps = times(view, 2) + [purchase] — quantifiers [2, 1] — must
-    reproduce the batch pattern_sequence on a bounded replay under both
-    uniform policies (uniform strict is ``times(2).consecutive()``
-    chained strictly into the final step)."""
+    """Quantifier > 1 on the streaming NFA (the CEP ``times(2)`` path):
+    a ``times=2`` view step then purchase must reproduce the batch
+    pattern_sequence over times(view, 2) + [purchase] on a bounded
+    replay under both uniform policies (uniform strict is
+    ``times(2).consecutive()`` chained strictly into the final step)."""
+    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep
     from flinkecuserbehavioranalysis_spark.operators.patterns import (
         pattern_sequence,
         times,
     )
-    from flinkecuserbehavioranalysis_spark.streaming.stateful import (
-        streaming_pattern_sequence,
-    )
+    from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
 
     stream = read_events_stream(spark, SF_DIR).select(
         "user_id", "event_type", "ts", "event_id"
     )
     batch_df = load_table(spark, SF_DIR, "events")
-    steps = [*times(F.col("event_type") == "view", 2), F.col("event_type") == "purchase"]
-    # the streaming twin is uniform-contiguity by design (mixed gaps need
+    view, purchase = F.col("event_type") == "view", F.col("event_type") == "purchase"
+    # the streaming NFA is uniform-contiguity by design (mixed gaps need
     # lookahead an NFA can't commit to greedily) — cover both policies
     for contiguity in ("relaxed", "strict"):
-        kw = dict(
-            key_col="user_id",
-            ts_col="ts",
-            steps=steps,
-            within_seconds=86400.0,
-            contiguity=contiguity,
-            tiebreak_col="event_id",
-        )
+        steps = [
+            PatternStep(view, contiguity=contiguity, times=2),
+            PatternStep(purchase, contiguity=contiguity),
+        ]
         got = sorted(
-            tuple(r) for r in run_bounded(streaming_pattern_sequence(stream, **kw))
+            tuple(r)
+            for r in run_bounded(
+                match_pattern_stream(
+                    stream, "user_id", "ts", steps, 86400.0, tiebreak_col="event_id"
+                )
+            )
         )
-        batch = sorted(tuple(r) for r in pattern_sequence(batch_df, **kw).collect())
+        batch = sorted(
+            tuple(r)
+            for r in pattern_sequence(
+                batch_df,
+                key_col="user_id",
+                ts_col="ts",
+                steps=[*times(view, 2), purchase],
+                within_seconds=86400.0,
+                contiguity=contiguity,
+                tiebreak_col="event_id",
+            ).collect()
+        )
         assert got == batch, contiguity
         assert len(got) > 0, contiguity
 
@@ -1139,38 +1165,33 @@ def test_streaming_not_followed_by_boundaries_and_pruning(spark, tmp_path):
 
 
 def test_streaming_pattern_sequence_optional_matches_batch(spark):
-    """The optional-step expansion twin (view, click optional, purchase
-    — the registered pattern_optional_funnel parameterization) must
-    reproduce the batch pattern_sequence_optional on a bounded replay,
-    NULL middle step included."""
+    """An optional-step match_pattern_stream spec (view, click optional,
+    purchase — the registered pattern_optional_funnel parameterization)
+    must reproduce the batch pattern_sequence_optional on a bounded
+    replay, NULL middle step included."""
+    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep
     from flinkecuserbehavioranalysis_spark.operators.patterns import (
         pattern_sequence_optional,
     )
-    from flinkecuserbehavioranalysis_spark.streaming.stateful import (
-        streaming_pattern_sequence_optional,
-    )
+    from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
 
-    steps = [
+    view, click, purchase = (
         F.col("event_type") == "view",
         F.col("event_type") == "click",
         F.col("event_type") == "purchase",
-    ]
-    kw = dict(
-        key_col="user_id",
-        ts_col="ts",
-        steps=steps,
-        within_seconds=3600.0,
-        optional=[False, True, False],
-        contiguity="relaxed",
-        tiebreak_col="event_id",
     )
     stream = read_events_stream(spark, SF_DIR).select(
         "user_id", "event_type", "ts", "event_id"
     )
+    steps = [PatternStep(view), PatternStep(click, optional=True), PatternStep(purchase)]
     got = sorted(
         (
             tuple(r)
-            for r in run_bounded(streaming_pattern_sequence_optional(stream, **kw))
+            for r in run_bounded(
+                match_pattern_stream(
+                    stream, "user_id", "ts", steps, 3600.0, tiebreak_col="event_id"
+                )
+            )
         ),
         key=repr,
     )
@@ -1178,7 +1199,14 @@ def test_streaming_pattern_sequence_optional_matches_batch(spark):
         (
             tuple(r)
             for r in pattern_sequence_optional(
-                load_table(spark, SF_DIR, "events"), **kw
+                load_table(spark, SF_DIR, "events"),
+                key_col="user_id",
+                ts_col="ts",
+                steps=[view, click, purchase],
+                within_seconds=3600.0,
+                optional=[False, True, False],
+                contiguity="relaxed",
+                tiebreak_col="event_id",
             ).collect()
         ),
         key=repr,
