@@ -52,15 +52,38 @@ _TABLE_PLAN_MEMO_CAP = 256
 #: applicationIds whose session confs are already pinned — every
 #: conf.set is a py4j round-trip, and load_table runs 1–5x per query
 #: (r12 driver-floor shave: ~7 round-trips per call → once per session).
-#: Runtime confs are never changed back by the engine, so once-per-app
-#: is equivalent; a new session (new applicationId) re-pins.
+#: The engine never changes a conf back, but its host may: a session
+#: timezone found other than UTC costs one read per call and re-pins
+#: (non-UTC day and week buckets would otherwise be silent); a new
+#: session (new applicationId) re-pins.
 _CONFS_PINNED: set[str] = set()
+
+
+def _footer_schema(path: str) -> StructType:
+    """Spark schema of a single parquet file from its footer, read on
+    the driver — ``spark.read.parquet`` infers it with a Spark job.
+    Gives the types Spark infers: TIMESTAMP(NANOS) columns as BIGINT
+    (``nanosAsLong``), naive timestamps as TIMESTAMP_NTZ, every field
+    nullable."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import LongType, StructField
+
+    fields = []
+    for f in pq.read_schema(path):
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            t = LongType()
+        else:
+            t = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        fields.append(StructField(f.name, t, True))
+    return StructType(fields)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one driver testdata table (S1 analog)."""
     app = spark.sparkContext.applicationId
-    if app not in _CONFS_PINNED:
+    if app not in _CONFS_PINNED or spark.conf.get("spark.sql.session.timeZone") != "UTC":
         apply_runtime_confs(spark)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         _CONFS_PINNED.add(app)
@@ -76,7 +99,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         key = None  # globs / non-local paths: fall through, no memo
     if key is not None and key in _TABLE_PLAN_MEMO:
         return _TABLE_PLAN_MEMO[key]
-    df = spark.read.parquet(path)
+    if os.path.isfile(path):
+        df = spark.read.schema(_footer_schema(path)).parquet(path)
+    else:  # a directory of part files: Spark infers the schema
+        df = spark.read.parquet(path)
     for c, t in df.dtypes:
         if c in _NANO_TS_COLS.get(name, ()) and t == "bigint":
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))

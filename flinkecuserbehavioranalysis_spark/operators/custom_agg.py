@@ -96,7 +96,7 @@ def windowed_quantiles_approx(
     mergeable summary: partial aggregation runs map-side, the shuffle
     carries one sketch per (window, partition), and no Python stage
     exists in the plan.  Error ≤ 1/*accuracy* in rank terms —
-    tolerance-tested against the exact twin (same posture as the HLL++
+    tolerance-tested against the exact twin (same posture as the HLL
     UV query vs exact distinct).  Same output schema (ws, we, q<NN>…,
     n)."""
     qcols = [f"q{int(q * 100)}" for q in quantiles]

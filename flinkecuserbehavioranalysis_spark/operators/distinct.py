@@ -11,17 +11,33 @@ Reference semantics reproduced:
   whose ``merge`` is literally unimplemented
   (UvByBloomFilterWithoutRedis.scala:77 ``???``) and a Redis-bitmap
   variant with a hand-rolled hash (UvWithBloomFilter.scala:93-143) —
-  here ``approx_count_distinct`` (HyperLogLog++): mergeable, fixed-size
-  sketch, no external store.  Designed-for cardinality 1e8/hour
-  (UvByBloomFilterWithoutRedis.scala:20) fits in a ~KB sketch per window.
+  here Spark's built-in DataSketches HLL (``hll_sketch_agg`` /
+  ``hll_sketch_estimate``): mergeable, fixed-size sketch, no external
+  store.  Designed-for cardinality 1e8/hour
+  (UvByBloomFilterWithoutRedis.scala:20) fits in a ~16 KB sketch per
+  window at the default ``rsd``.
+
+Both group on the BIGINT window start of ``windows.with_window_start``,
+not on ``F.window``'s struct.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .windows import _window_bounds, with_window_start
+
+
+def hll_lg_k(rsd: float) -> int:
+    """HLL ``lgConfigK`` for a target relative standard deviation: the
+    smallest k with ``1.04 / sqrt(2^k) <= rsd``, clamped to Spark's
+    [4, 21].  ``rsd=0.01`` gives 14, the 2^14 registers HLL++ uses at
+    that ``rsd``."""
+    return min(21, max(4, math.ceil(math.log2((1.04 / rsd) ** 2))))
 
 
 def windowed_distinct_count(
@@ -35,17 +51,10 @@ def windowed_distinct_count(
     rsd: float = 0.01,
     count_alias: str = "uv",
 ) -> DataFrame:
-    win = F.window(F.col(ts_col), size, slide) if slide else F.window(F.col(ts_col), size)
+    starts, size_s = with_window_start(df, ts_col, size, slide)
     agg = (
-        F.approx_count_distinct(distinct_col, rsd) if approx else F.count_distinct(F.col(distinct_col))
+        F.hll_sketch_estimate(F.hll_sketch_agg(distinct_col, hll_lg_k(rsd)))
+        if approx
+        else F.count_distinct(F.col(distinct_col))
     ).alias(count_alias)
-    return (
-        df.groupBy(win.alias("w"), *[F.col(k) for k in keys])
-        .agg(agg)
-        .select(
-            F.col("w.start").cast("long").alias("ws"),
-            F.col("w.end").cast("long").alias("we"),
-            *[F.col(k) for k in keys],
-            F.col(count_alias),
-        )
-    )
+    return starts.groupBy("__ws", *keys).agg(agg).select(*_window_bounds(size_s), *keys, count_alias)

@@ -6,9 +6,14 @@ Reference semantics reproduced:
   pre-aggregation (``CountAgg`` HotItemsAnalysis/HotItems.scala:70-84,
   NetworkFlowAnalysis/NetworkFlow.scala:78-87) and window-end attachment
   (``WindowResult`` HotItems.scala:91-105) — here a single
-  ``groupBy(window(...), keys).count()``: Catalyst's partial/final
-  HashAggregate *is* the incremental accumulator, and ``window.end`` is
-  just a column;
+  ``groupBy(__ws, keys).count()`` on the window start held as a BIGINT
+  of epoch microseconds (``with_window_start``): Catalyst's
+  partial/final HashAggregate *is* the incremental accumulator, and the
+  window end is ``start + size``.  In batch an event-time window is just
+  a grouping key, so the kernels skip ``F.window``'s two-timestamp
+  struct (and, for sliding windows, its ``Expand``); the streaming twins
+  keep ``F.window`` because watermark state eviction keys on that
+  struct;
 - per-window top-N rank (``TopNHotItems`` HotItems.scala:108-167,
   ``TopNHotUrls`` NetworkFlow.scala:99-155: ListState buffer + timer +
   driver-side sort) — here ``row_number() OVER (PARTITION BY window
@@ -17,9 +22,10 @@ Reference semantics reproduced:
   pre-aggregated) ranks in parallel across executors — no global sort,
   no state buffering, no 1 s sleep throttle (HotItems.scala:163).
 
-Window bounds are emitted as epoch-second BIGINTs (``ws``/``we``) — Spark
-``window()`` is epoch-aligned so results are timezone-independent and
-directly comparable to the DuckDB oracle.
+Window bounds are emitted as epoch-second BIGINTs (``ws``/``we``) — the
+windows are epoch-aligned exactly as Spark's ``window()`` aligns them,
+so results are timezone-independent and directly comparable to the
+DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -28,6 +34,57 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+_UNIT_SECONDS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
+
+
+def _interval_seconds(spec: str) -> int:
+    """Seconds in an ``"N unit"`` interval string (``"5 minutes"``,
+    ``"1 day"``); anything else raises ``ValueError``."""
+    parts = spec.split()
+    unit = parts[-1].lower().removesuffix("s") if len(parts) == 2 else ""
+    if unit not in _UNIT_SECONDS or not parts[0].isdigit() or int(parts[0]) <= 0:
+        raise ValueError(f"window interval must be 'N unit' (unit in {sorted(_UNIT_SECONDS)}): {spec!r}")
+    return int(parts[0]) * _UNIT_SECONDS[unit]
+
+
+def with_window_start(
+    df: DataFrame, ts_col: str, size: str, slide: str | None = None
+) -> tuple[DataFrame, int]:
+    """*df* with one row per (row, event-time window containing it) and
+    the window start in ``__ws`` as BIGINT epoch microseconds; returns
+    ``(frame, window size in seconds)``.
+
+    Same windows as ``F.window(ts, size, slide)``: with ``t`` the row's
+    microsecond instant, the latest start is ``t - pmod(t, slide)``
+    (epoch-aligned, floor for pre-1970 instants) and a sliding window
+    adds the ``ceil(size/slide) - 1`` starts before it; when *size* is
+    not a multiple of *slide* the earliest may end at or before ``t``
+    and is dropped, as ``F.window`` drops it.  Rows with a NULL *ts_col*
+    fall in no window."""
+    size_s = _interval_seconds(size)
+    slide_s = _interval_seconds(slide) if slide else size_s
+    size_us, slide_us = size_s * 1_000_000, slide_s * 1_000_000
+    t = F.unix_micros(F.col(ts_col))
+    last = t - F.pmod(t, F.lit(slide_us))
+    k = -(-size_s // slide_s)
+    if k == 1:
+        ws = last
+    else:
+        ws = F.explode(F.sequence(last - F.lit((k - 1) * slide_us), last, F.lit(slide_us)))
+    out = df.where(F.col(ts_col).isNotNull()).select("*", ws.alias("__ws"))
+    if size_s % slide_s:
+        out = out.where(t < F.col("__ws") + F.lit(size_us))
+    return out, size_s
+
+
+def _window_bounds(size_s: int) -> list:
+    """``ws``/``we`` epoch seconds from ``__ws`` (a whole-second multiple:
+    every accepted unit is), the columns ``F.window``'s ``start``/``end``
+    cast to long gave."""
+    ws = F.expr("__ws div 1000000")
+    return [ws.alias("ws"), (ws + F.lit(size_s)).alias("we")]
 
 
 def windowed_count(
@@ -40,24 +97,17 @@ def windowed_count(
 ) -> DataFrame:
     """Count rows per (event-time window, *keys*).
 
-    One shuffle on ``(window, keys)``; map-side partial counts make the
-    shuffle payload O(#windows x #keys), not O(rows).  Sliding windows
-    expand each row into ``size/slide`` window replicas *after* partial
-    aggregation operands are projected — keep ``size/slide`` modest for
-    the hot path (HotItems uses 12: 1h/5m).
-    """
-    win = F.window(F.col(ts_col), size, slide) if slide else F.window(F.col(ts_col), size)
-    out = (
-        df.groupBy(win.alias("w"), *[F.col(k) for k in keys])
+    One shuffle on ``(window start, keys)``; map-side partial counts make
+    the shuffle payload O(#windows x #keys), not O(rows).  Sliding
+    windows explode each row into ``size/slide`` window starts before
+    the partial aggregation — keep ``size/slide`` modest for the hot
+    path (HotItems uses 12: 1h/5m)."""
+    starts, size_s = with_window_start(df, ts_col, size, slide)
+    return (
+        starts.groupBy("__ws", *keys)
         .agg(F.count(F.lit(1)).alias(count_alias))
-        .select(
-            F.col("w.start").cast("long").alias("ws"),
-            F.col("w.end").cast("long").alias("we"),
-            *[F.col(k) for k in keys],
-            F.col(count_alias),
-        )
+        .select(*_window_bounds(size_s), *keys, count_alias)
     )
-    return out
 
 
 def tumbling_window_count(df: DataFrame, ts_col: str, size: str, keys: Sequence[str] = (), **kw) -> DataFrame:

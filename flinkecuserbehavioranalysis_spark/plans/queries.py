@@ -199,8 +199,8 @@ def unique_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "unique_visitors_approx",
-    None,  # HLL++ sketch — not SQL-reproducible; tolerance-tested in tests/
-    "UvWithBloomFilter/UvByBloomFilterWithoutRedis — approx hourly UV (A6/A7) via HLL++.",
+    None,  # HLL sketch — not SQL-reproducible; tolerance-tested in tests/
+    "UvWithBloomFilter/UvByBloomFilterWithoutRedis — approx hourly UV (A6/A7) via a DataSketches HLL sketch.",
 )
 def unique_visitors_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

@@ -242,12 +242,16 @@ def streaming_uv_update(
     Structured Streaming's ``update`` output mode emits the running
     value once per micro-batch instead (same semantics at batch
     granularity — run with ``output_mode='update'``).  The bloom
-    filter/Redis bitmap becomes a mergeable HLL++ sketch in the state
-    store."""
+    filter/Redis bitmap becomes a mergeable DataSketches HLL sketch in
+    the state store: the same estimator, at the same ``lgConfigK`` for
+    *rsd*, as the batch twin ``windowed_distinct_count(approx=True)``."""
+    from ..operators.distinct import hll_lg_k
+
     wm = stream.withWatermark(ts_col, watermark)
+    uv = F.hll_sketch_estimate(F.hll_sketch_agg(distinct_col, hll_lg_k(rsd)))
     return (
         wm.groupBy(F.window(F.col(ts_col), size).alias("w"))
-        .agg(F.approx_count_distinct(distinct_col, rsd).alias("uv"))
+        .agg(uv.alias("uv"))
         .select(
             F.col("w.start").cast("long").alias("ws"),
             F.col("w.end").cast("long").alias("we"),
@@ -265,12 +269,19 @@ def streaming_topn_foreach_batch(
     """Returns a foreachBatch fn ranking each appended batch of closed
     windows (append mode emits a window exactly once, after watermark
     passes its end — so per-batch ranking sees each window complete,
-    like the reference's timer at windowEnd+100ms)."""
+    like the reference's timer at windowEnd+100ms).  A replayed epoch
+    (Spark re-delivers one after a failure) is skipped by the high-water
+    epoch guard of ``streaming_active_users_foreach_batch``."""
     from ..operators.windows import topn_per_window
 
+    high_water = [-1]  # max fully-committed epoch_id
+
     def process(batch_df: DataFrame, epoch_id: int) -> None:
+        if epoch_id <= high_water[0]:
+            return
         ranked = topn_per_window(batch_df, n, tiebreak_cols=list(key_cols), rank_alias="rnk")
         sink.extend(ranked.collect())
+        high_water[0] = epoch_id
 
     return process
 
@@ -484,7 +495,7 @@ def streaming_active_users_foreach_batch(
        of the union of the frame's day sketches (ONE days-sized Spark
        aggregate for all affected days).
 
-    dau is exact; wau carries standard HLL++ error (~2% at the default
+    dau is exact; wau carries standard HLL error (~2% at the default
     lgConfigK=12) — the price of a days-bounded store, identical to the
     Redis-sketch layout a production monitor would keep.
 
@@ -753,13 +764,20 @@ def streaming_heavy_hitters_foreach_batch(
     count underestimates truth by at most N/k — so the store IS the
     candidate set for an exact recount (the streaming analog of
     ``heavy_hitters_exact``'s pass 1; pass 2 stays a batch job over
-    the landed data)."""
+    the landed data).  A replayed epoch is skipped by the high-water
+    epoch guard of ``streaming_active_users_foreach_batch``: adding its
+    length and summaries again would double-count it."""
     from ..operators.heavy_hitters import mg_merge, mg_summaries
 
+    high_water = [-1]  # max fully-committed epoch_id
+
     def process(batch_df: DataFrame, epoch_id: int) -> None:
+        if epoch_id <= high_water[0]:
+            return
         keyed = batch_df.filter(F.col(key_col).isNotNull())
         n = keyed.count()
         if n == 0:
+            high_water[0] = epoch_id
             return
         totals[0] += n
         parts = mg_summaries(keyed, key_col, k).collect()
@@ -771,5 +789,6 @@ def streaming_heavy_hitters_foreach_batch(
         store_new = mg_merge(dict(store), merged, k)
         store.clear()
         store.update(store_new)
+        high_water[0] = epoch_id
 
     return process

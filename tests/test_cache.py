@@ -236,6 +236,58 @@ def test_load_table_plan_memo_and_invalidation(spark, tmp_path):
     assert (n1, c2.count()) == (3, 5)
 
 
+def test_load_table_footer_schema_matches_spark_inference(spark, tmp_path):
+    """A single-file table's schema comes from its parquet footer on the
+    driver, with no Spark job; it must equal what ``spark.read.parquet``
+    infers, TIMESTAMP(NANOS) as BIGINT and naive timestamps as NTZ."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flinkecuserbehavioranalysis_spark.io import _footer_schema
+
+    load_table(spark, SF_DIR, "nation")  # pins nanosAsLong for the reference read
+    nanos = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, None], pa.int64()),
+            "ts": pa.array([1_700_000_000_123_456_789, None], pa.timestamp("ns")),
+            "aware": pa.array([1, 2], pa.timestamp("us", tz="UTC")),
+            "vec": pa.array([[1.0], None], pa.list_(pa.float32())),
+        }),
+        nanos,
+    )
+    paths = sorted(glob.glob(os.path.join(SF_DIR, "*.parquet"))) + [nanos]
+    for p in paths:
+        assert _footer_schema(p) == spark.read.parquet(p).schema, p
+    ev = load_table(spark, str(tmp_path), "events")
+    assert ev.dtypes == [("event_id", "bigint"), ("ts", "timestamp"), ("aware", "timestamp"), ("vec", "array<float>")]
+    assert ev.count() == 2
+
+
+def test_load_table_repins_utc_after_timezone_change(spark):
+    """A host that moves the session timezone between two queries must
+    still get UTC day buckets: load_table re-pins the confs."""
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.session.timeZone"
+
+    def day_counts():
+        ev = load_table(spark, SF_DIR, "events")
+        return sorted(tuple(r) for r in ev.groupBy(F.to_date("ts").alias("d")).count().collect())
+
+    before = day_counts()
+    try:
+        spark.conf.set(key, "Asia/Shanghai")
+        after = day_counts()
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, "UTC")
+    assert after == before
+
+
 def test_kmeans_codebook_pinned_per_params(spark):
     """round-11 optimization: kmeans_fit pins the trained codebook per
     (input hash, params) — same call twice returns the same pinned

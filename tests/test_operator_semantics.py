@@ -195,6 +195,126 @@ def test_windowed_count_empty_input(spark):
     assert windowed_count(df, "ts", "1 hour").count() == 0
 
 
+# --- BIGINT window starts == F.window --------------------------------------
+
+_WINDOW_SHAPES = [
+    ("1 hour", "5 minutes"),
+    ("6 hours", "1 hour"),
+    ("1 day", "6 hours"),
+    ("1 hour", None),
+    ("1 hour", "25 minutes"),  # size not a multiple of slide
+]
+
+
+@pytest.fixture(scope="module")
+def window_edge_events(spark):
+    """Events whose instants straddle window edges: NULL ts, pre-1970
+    ts, ts exactly on a window boundary, sub-second microseconds, and a
+    NULL key — with enough users per window for the distinct paths."""
+    import random
+
+    rnd = random.Random(7)
+    day_us = 86_400_000_000
+    anchors = [-3 * day_us, -1, 0, 1, 1_700_000_000_000_000]  # around 1970 and 2023
+    micros = []
+    for a in anchors:
+        # boundaries of every shape (all multiples of 5 minutes) and
+        # one microsecond either side of them
+        for m in range(0, 2 * 24 * 60, 25):
+            b = a - a % 300_000_000 + m * 60_000_000
+            micros += [b, b - 1, b + 1]
+        micros += [a + rnd.randrange(-2 * day_us, 2 * day_us) for _ in range(200)]
+    rows = [
+        (rnd.randrange(40), rnd.choice(["a", "b", None]), us) for us in micros
+    ] + [(1, "a", None), (2, None, None)]
+    df = spark.createDataFrame(rows, "user_id BIGINT, k STRING, us BIGINT")
+    events = df.select("user_id", "k", F.timestamp_micros("us").alias("ts")).cache()
+    yield events
+    events.unpersist()
+
+
+def _f_window_reference(df, size, slide, keys, agg):
+    """The kernels' former plan: group on ``F.window``'s struct."""
+    win = F.window("ts", size, slide) if slide else F.window("ts", size)
+    return (
+        df.groupBy(win.alias("w"), *keys)
+        .agg(agg.alias("v"))
+        .select(F.col("w.start").cast("long").alias("ws"), F.col("w.end").cast("long").alias("we"), *keys, "v")
+    )
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("size,slide", _WINDOW_SHAPES)
+@pytest.mark.parametrize("keys", [(), ("k",)])
+def test_window_kernels_match_f_window(spark, window_edge_events, size, slide, keys):
+    from flinkecuserbehavioranalysis_spark.operators.distinct import (
+        hll_lg_k,
+        windowed_distinct_count,
+    )
+
+    df = window_edge_events
+    keys = list(keys)
+    expect = _sorted_rows(_f_window_reference(df, size, slide, keys, F.count(F.lit(1))))
+    assert expect
+    got = windowed_count(df, "ts", size, slide, keys, count_alias="v")
+    assert got.dtypes == [("ws", "bigint"), ("we", "bigint")] + [(k, "string") for k in keys] + [("v", "bigint")]
+    assert _sorted_rows(got) == expect
+
+    exact = _f_window_reference(df, size, slide, keys, F.count_distinct("user_id"))
+    assert _sorted_rows(
+        windowed_distinct_count(df, "ts", size, "user_id", slide, keys, count_alias="v")
+    ) == _sorted_rows(exact)
+
+    sketch = F.hll_sketch_estimate(F.hll_sketch_agg("user_id", hll_lg_k(0.01)))
+    approx = windowed_distinct_count(df, "ts", size, "user_id", slide, keys, approx=True, count_alias="v")
+    assert _sorted_rows(approx) == _sorted_rows(_f_window_reference(df, size, slide, keys, sketch))
+
+
+def test_approx_uv_independent_of_shuffle_partitions(spark):
+    """Windows of ~12k distinct users fed from 8 input partitions: each
+    window's sketch is a union of partial HLL-mode sketches, and its
+    estimate must not depend on how the final aggregation is split."""
+    from flinkecuserbehavioranalysis_spark.operators.distinct import windowed_distinct_count
+
+    ev = spark.range(0, 200_000, numPartitions=8).select(
+        (F.col("id") * 7919 % 50_000).alias("user_id"),
+        F.timestamp_seconds(F.col("id") * 97 % 21_600).alias("ts"),
+    )
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    runs = []
+    try:
+        for n in ("1", "61"):
+            spark.conf.set(key, n)
+            runs.append(
+                _sorted_rows(
+                    windowed_distinct_count(ev, "ts", "1 hour", "user_id", "25 minutes", approx=True)
+                )
+            )
+    finally:
+        spark.conf.set(key, before)
+    assert len(runs[0]) > 10 and runs[0] == runs[1]
+
+
+def test_hll_lg_k_mapping():
+    from flinkecuserbehavioranalysis_spark.operators.distinct import hll_lg_k
+
+    assert hll_lg_k(0.01) == 14
+    assert hll_lg_k(0.05) == 9
+    assert hll_lg_k(0.5) == 4  # clamped up to Spark's minimum
+    assert hll_lg_k(0.0001) == 21  # clamped down to Spark's maximum
+
+
+@pytest.mark.parametrize("bad", ["1 hour 30 minutes", "90", "1 week", "-5 minutes", "1.5 hours", "0 seconds"])
+def test_window_interval_rejects_other_strings(spark, bad):
+    df = spark.createDataFrame([], "user_id INT, ts TIMESTAMP")
+    with pytest.raises(ValueError):
+        windowed_count(df, "ts", bad)
+
+
 # --- pattern_pairs — the parameterized CEP begin/next|followedBy/within ----
 
 
@@ -548,3 +668,20 @@ def test_activity_coverage_bounds(spark):
         assert r["covered_s"] <= hi - lo
         assert r["n_events"] == n
         assert r["n_islands"] == n_sess[u]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_shingles_match_lambda_expression(spark, n):
+    """``shingles`` (zipped slices) emits the same multiset of n-grams as
+    the array expression ``_shingle_expr`` the array callers keep."""
+    from flinkecuserbehavioranalysis_spark.operators.dedup import _shingle_expr, _split_col, shingles
+
+    texts = ["a b c d e f", "a b", "", None, "x  y   z w", " lead trail ", "one", "a b a b a b"]
+    docs = spark.createDataFrame(list(enumerate(texts)) + [(None, "p q r s t u")], "doc_id BIGINT, text STRING")
+    ref = docs.select("doc_id", _split_col("text").alias("__ws")).select(
+        "doc_id", F.explode(F.expr(_shingle_expr("__ws", n, pre_split=True))).alias("sh")
+    )
+    for distinct in (False, True):
+        expect = ref.distinct() if distinct else ref
+        assert _sorted_rows(shingles(docs, n=n, distinct=distinct)) == _sorted_rows(expect)
+

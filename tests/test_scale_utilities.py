@@ -371,7 +371,7 @@ def test_ivf_recall_at_10_floor(spark):
 
 
 def test_hll_uv_within_tolerance(spark):
-    """approx_count_distinct (HLL++, the bloom-filter replacement) must
+    """The DataSketches HLL sketch (the bloom-filter replacement) must
     land within a few rsd of the exact per-window UV."""
     from flinkecuserbehavioranalysis_spark.io import load_table
     from flinkecuserbehavioranalysis_spark.operators.distinct import (

@@ -241,6 +241,37 @@ def test_streaming_topn_foreach_batch(spark):
     assert _rows(sink, cols) == _rows(batch, cols)
 
 
+def test_foreach_batch_sinks_skip_replayed_epoch(spark):
+    """Spark re-delivers an epoch_id after a crash: the top-N and
+    heavy-hitter sinks must not count the replay twice, and must still
+    take the next epoch."""
+    from flinkecuserbehavioranalysis_spark.streaming.jobs import (
+        streaming_heavy_hitters_foreach_batch,
+    )
+
+    counts = spark.createDataFrame(
+        [(0, 3600, k, c) for k, c in [(1, 5), (2, 7), (3, 7), (4, 1)]], "ws LONG, we LONG, item_id INT, cnt LONG"
+    )
+    sink: list = []
+    topn = streaming_topn_foreach_batch(counts, 2, ["item_id"], sink)
+    topn(counts, 0)
+    first = _rows(sink, ["ws", "we", "item_id", "cnt", "rnk"])
+    topn(counts, 0)
+    assert _rows(sink, ["ws", "we", "item_id", "cnt", "rnk"]) == first and len(first) == 2
+    topn(counts, 1)
+    assert len(sink) == 4
+
+    store: dict = {}
+    totals = [0]
+    hh = streaming_heavy_hitters_foreach_batch(store, totals, "item_id", k=3)
+    hh(counts, 0)
+    snapshot = (totals[0], dict(store))
+    hh(counts, 0)
+    assert (totals[0], store) == snapshot and totals[0] == 4
+    hh(counts, 1)
+    assert totals[0] == 8
+
+
 def test_streaming_login_fail_matches_batch(spark):
     stream = read_events_stream(spark, SF_DIR).select("user_id", "event_type", "ts", "event_id")
     got = run_bounded(streaming_login_fail(stream, max_gap_seconds=3600.0))
