@@ -164,31 +164,6 @@ def read_apache_log(spark: SparkSession, path: str) -> DataFrame:
     ).select(*[f.name for f in APACHE_LOG.fields])
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    path: str | None = None,
-) -> None:
-    """Persist *df* hash-bucketed (and optionally sorted) on *bucket_cols*.
-
-    Bucketing is the batch answer to the reference's ``keyBy``
-    co-partitioning (OrderPayTxMatch.scala:42,52): two tables bucketed
-    the same way join with NO shuffle and (if sorted) no sort — at
-    100 TB that converts every recurring fact-fact join from a full
-    network pass into a local merge.  Pick *n_buckets* so one bucket of
-    the largest table fits an executor core (e.g. 100 TB / 32768 ≈ 3 GB).
-    """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,

@@ -43,7 +43,7 @@ unlike the edit-distance family (operators/linkage.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -120,26 +120,19 @@ def apply_merges(
     return out
 
 
-def bpe_train(
-    words: DataFrame, rounds: int
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """Learn up to *rounds* BPE merges over a (word, freq) relation.
-
-    Returns (merges, final_words): merges as (round, x, y, count)
-    starting at round 1, stopping early when no adjacent pair remains;
-    final_words as (word, freq, s) with the post-merge symbol arrays.
-
-    Each round's vocab relation is localCheckpoint-ed so the fold
-    lineage stays one round deep and the pair-count pass never re-runs
-    earlier rounds."""
-    merges, cur, _ = bpe_train_curve(words, rounds, track_curve=False)
-    return merges, cur
-
-
 def bpe_train_curve(
     words: DataFrame, rounds: int, track_curve: bool = True
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame, list[tuple[int, int]]]:
-    """:func:`bpe_train` that also tracks the compression curve —
+    """Learn up to *rounds* BPE merges over a (word, freq) relation.
+
+    Returns (merges, final_words, curve): merges as (round, x, y,
+    count) starting at round 1, stopping early when no adjacent pair
+    remains; final_words as (word, freq, s) with the post-merge symbol
+    arrays.  Each round's vocab relation is localCheckpoint-ed so the
+    fold lineage stays one round deep and the pair-count pass never
+    re-runs earlier rounds.
+
+    With *track_curve*, curve is the compression curve —
     (round, total corpus tokens) from round 0 (character tokenization)
     through every executed merge, with early-exhausted rounds carrying
     the last total forward (matching the oracle's carry-forward CTEs).
@@ -182,7 +175,7 @@ def bpe_train_curve(
 
 
 def bpe_oracle_sql(rounds: int, corpus_sql: str) -> str:
-    """DuckDB twin of :func:`bpe_train`'s *rounds* unrolled over
+    """DuckDB twin of :func:`bpe_train_curve`'s *rounds* unrolled over
     *corpus_sql* (must yield (word, freq)) — window/run-parity merge
     formulation (module docstring).  Exposes per-round CTEs ``__b{r}``
     (the chosen merge + count, empty when training exhausted early) and

@@ -992,8 +992,8 @@ def incremental_dedup_flags(
     max verified Jaccard against the base, NULL when no candidate
     verifies, is_dup ∈ {0,1} at *threshold*).
 
-    At 100 TB the base band keys are a materialized index (write them
-    partitioned by band like ``save_ivf_index``); each daily batch
+    At 100 TB the base band keys are a materialized index (written
+    partitioned by band with ``io.write_partitioned``); each daily batch
     probes it and appends its own keys — cost scales with the batch,
     never the corpus."""
     nb = _band_keys(new_docs, id_col, text_col, n, k, bands)

@@ -58,10 +58,6 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -835,9 +831,9 @@ def build_ivf_index(
     """Build the IVF index relations: (codebook, postings) — the
     build-once half of the index lifecycle.  ``codebook`` is
     (seed_id, s_vec, s_norm); ``postings`` is (neighbor_id, v_vec,
-    v_norm, cell), one row per (vector, probed cell).  Persist both
-    with :func:`save_ivf_index` and serve queries from the saved index
-    — training never reruns per query batch.  A pre-trained *seeds*
+    v_norm, cell), one row per (vector, probed cell).  Build once and
+    serve every query batch from the same relations — training never
+    reruns per query batch.  A pre-trained *seeds*
     codebook skips the Lloyd loop entirely (index-variant sharing)."""
     vectors = _drop_null_vec(vectors, vec_col)
     if corpus_probes not in (1, 2):
@@ -875,7 +871,7 @@ def ivf_assign(
     SAME shared codebook, and the per-vector top-2 fold over the
     broadcast seeds was each query's single biggest exec stage
     (measured r11: ~0.7 s per call at sf0.1).  This is the in-session
-    analog of ``save_ivf_index`` — the index is built once and served;
+    analog of a persisted index — the index is built once and served;
     postings are index-sized (probe_factor × corpus vectors).
     Streaming inputs bypass the pin (checkpointing a streaming frame is
     illegal and incremental ingest must stay unbounded).
@@ -884,8 +880,8 @@ def ivf_assign(
     and PQ-code pins, FLAT postings carry the raw double v_vec + v_norm
     per (vector × probe) — VECTOR-scale bytes, probe_factor × the
     embedding table, not "index ≪ fact" like the other pins.  At crawl
-    scale the flat variant should persist through ``save_ivf_index``
-    (cell-partitioned on disk) instead of a session pin; the session
+    scale the flat variant should persist its postings partitioned
+    by cell on disk (``io.write_partitioned``) instead of a session pin; the session
     pin is sized for the bench-scale corpus and is FIFO/LRU-evictable
     like every other entry.  Pinning only (neighbor_id, cell) and
     re-joining vectors per query was considered and declined: the
@@ -915,28 +911,6 @@ def ivf_assign(
         (app, "ivf_postings", v.semanticHash(), seeds.semanticHash(), corpus_probes),
         lambda: _postings_plan().localCheckpoint(eager=False),
     )
-
-
-def save_ivf_index(seeds: DataFrame, assigned: DataFrame, path: str) -> None:
-    """Persist an IVF index: codebook (tiny) + postings PARTITIONED BY
-    CELL — the layout that lets a query batch's probed cells prune at
-    the directory level (static pruning when cells are literal,
-    dynamic partition pruning through the probe join at scale)."""
-    seeds.write.mode("overwrite").parquet(path.rstrip("/") + "/codebook")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        path.rstrip("/") + "/postings"
-    )
-
-
-def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """Load an index written by :func:`save_ivf_index`.  Round-trips
-    the exact doubles, so query results are bit-identical to querying
-    the in-session index."""
-    seeds = spark.read.parquet(path.rstrip("/") + "/codebook")
-    assigned = spark.read.parquet(path.rstrip("/") + "/postings").select(
-        "neighbor_id", "v_vec", "v_norm", F.col("cell").cast("long").alias("cell")
-    )
-    return seeds, assigned
 
 
 def query_ivf_index(

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
@@ -41,24 +41,6 @@ def salted_count(
         .agg(F.count(F.lit(1)).alias("__pc"))
     )
     return partial.groupBy(*keys).agg(F.sum("__pc").alias(count_alias))
-
-
-def salted_sum(
-    df: DataFrame,
-    keys: Sequence[str],
-    value: str | Column,
-    salt_from: str,
-    salt_buckets: int = 16,
-    sum_alias: str = "total",
-) -> DataFrame:
-    v = F.col(value) if isinstance(value, str) else value
-    salt = F.pmod(F.xxhash64(F.col(salt_from)), F.lit(salt_buckets))
-    partial = (
-        df.withColumn("__salt", salt)
-        .groupBy(*keys, "__salt")
-        .agg(F.sum(v).alias("__ps"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("__ps").alias(sum_alias))
 
 
 def heavy_hitters(

@@ -7,7 +7,7 @@ from .jobs import (
     streaming_uv_update,
     streaming_windowed_count,
 )
-from .sinks import foreach_batch_upsert, read_store
+from .sinks import foreach_batch_partitioned_upsert, foreach_batch_upsert, read_store
 from .stateful import (
     streaming_blacklist,
     streaming_login_fail,
@@ -26,5 +26,6 @@ __all__ = [
     "streaming_blacklist",
     "match_pattern_stream",
     "foreach_batch_upsert",
+    "foreach_batch_partitioned_upsert",
     "read_store",
 ]

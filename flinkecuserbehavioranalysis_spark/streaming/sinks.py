@@ -28,15 +28,31 @@ def read_store(spark, target_dir: str) -> DataFrame | None:
     return None
 
 
+def _committed(path: str) -> bool:
+    """A Spark write to *path* ran to its job commit."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
 def foreach_batch_upsert(
     target_dir: str, key_cols: Sequence[str]
 ) -> Callable[[DataFrame, int], None]:
     """Returns a foreachBatch fn that upserts each batch into
     *target_dir* by *key_cols* (new batch wins — the reference's
-    ``hset`` overwrite semantics)."""
+    ``hset`` overwrite semantics).
+
+    Each batch writes the merged store to a staging copy, then
+    overwrites the store from it.  The overwrite deletes the store
+    before it writes, so a driver that dies in that window leaves the
+    store without its ``_SUCCESS`` marker while the staging copy holds
+    the full merged store.  Spark then re-delivers the epoch; the sink
+    first promotes the staging copy, so the replay merges into every
+    earlier key instead of into a truncated store."""
+    tmp = target_dir.rstrip("/") + ".staging"
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
+        if _committed(tmp) and not _committed(target_dir):
+            spark.read.parquet(tmp).write.mode("overwrite").parquet(target_dir)
         existing = read_store(spark, target_dir)
         incoming = batch_df.withColumn("__v", F.lit(1))
         if existing is not None:
@@ -52,7 +68,6 @@ def foreach_batch_upsert(
             .drop("__rn", "__v")
         )
         # two-phase write: parquet overwrite of the store directory
-        tmp = target_dir.rstrip("/") + ".staging"
         latest.write.mode("overwrite").parquet(tmp)
         final = spark.read.parquet(tmp)
         final.write.mode("overwrite").parquet(target_dir)

@@ -31,7 +31,7 @@ a slice boundary (found at sf1).
 
 Group = key for the kernels with timers or list state (``_group_chunks``
 sorts by (ts, tiebreak)).  The one-slot NoTimeout kernels — login-fail,
-value-spike, type transitions, last-touch — group by a hash BUCKET of
+value-spike, last-touch — group by a hash BUCKET of
 the key instead, ``pmod(xxhash64(key), KEY_BUCKETS)`` with
 ``KEY_BUCKETS = 64`` (``_bucketed_one_slot`` sorts by (key, ts,
 tiebreak)): Spark's per-group transport, not the kernel, was the floor
@@ -983,48 +983,6 @@ def streaming_value_spike(
         events, key_col, ts_col, tiebreak_col, [value_col],
         {"ts": DoubleType(), "value": DoubleType()},
         values, emit, VALUE_SPIKE_SCHEMA, watermark,
-    )
-
-
-TRANSITION_SCHEMA = StructType(
-    [
-        StructField("prev_type", StringType()),
-        StructField("next_type", StringType()),
-        StructField("n", LongType()),
-    ]
-)
-
-
-def streaming_type_transitions(
-    events: DataFrame,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak_col: str | None = "event_id",
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Streaming front half of ``event_type_transitions``: per-key
-    (prev, next) transition events with ONE string of state per key
-    (the previous event type).  Downstream, a plain streaming
-    aggregation sums the counts — kept separate so the emitted
-    transition stream composes with any sink/window."""
-
-    def values(rows: pd.DataFrame) -> dict[str, np.ndarray]:
-        return {"type": rows[type_col].to_numpy(dtype=object)}
-
-    def emit(rows, key, cur, prev):
-        # a NULL previous type starts no transition; a NULL next type
-        # is a transition target like any other
-        hit = pd.notna(prev["type"])
-        if not hit.any():
-            return None
-        pairs = pd.DataFrame({"prev_type": prev["type"][hit], "next_type": cur["type"][hit]})
-        return pairs.groupby(["prev_type", "next_type"], dropna=False, sort=False).size().reset_index(name="n")
-
-    return _bucketed_one_slot(
-        events, key_col, ts_col, tiebreak_col, [type_col],
-        {"type": StringType()},
-        values, emit, TRANSITION_SCHEMA, watermark,
     )
 
 

@@ -28,6 +28,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 _SOAK_REPRESENTATIVES = (
     "test_queries_oracle.py::test_query_matches_oracle[weekly_revenue_wow]",
     "test_streaming.py::test_streaming_windowed_count_matches_batch",
+    "test_streaming.py::test_foreach_batch_store_sinks_survive_epoch_replay",
     "test_properties.py::test_sessionize_matches_naive",
     "test_degenerate_inputs.py::test_null_injected_matches_oracle[top_urls]",
     "test_state_soak.py::test_order_timeout_state_evicted_by_watermark",

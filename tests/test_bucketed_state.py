@@ -1,9 +1,8 @@
 """Key-bucketed one-slot kernels against their batch twins.
 
-``streaming_login_fail``, ``streaming_value_spike``,
-``streaming_type_transitions`` and ``streaming_last_touch`` group their
-key into ``KEY_BUCKETS`` hash buckets and keep each bucket's state as
-parallel sorted arrays.  One synthetic stream exercises every way the
+``streaming_login_fail``, ``streaming_value_spike`` and
+``streaming_last_touch`` group their key into ``KEY_BUCKETS`` hash
+buckets and keep each bucket's state as parallel sorted arrays.  One synthetic stream exercises every way the
 bucket mechanics can go wrong, and each kernel's output must equal its
 batch twin over the same rows:
 
@@ -19,7 +18,7 @@ batch twin over the same rows:
 - a restart from the checkpoint after the third file.
 
 The login kernel (the one the open-loop benchmark runs) is in the
-default tier; the other three are in the soak tier.
+default tier; the other two are in the soak tier.
 """
 
 from __future__ import annotations
@@ -37,7 +36,6 @@ from flinkecuserbehavioranalysis_spark.streaming.stateful import (
     KEY_BUCKETS,
     streaming_last_touch,
     streaming_login_fail,
-    streaming_type_transitions,
     streaming_value_spike,
 )
 
@@ -202,26 +200,6 @@ def test_value_spike_matches_batch(spark, replay):
     ]
     assert _sorted(got) == _sorted(want)
     assert any(r[0] is None for r in got)
-
-
-@pytest.mark.soak
-def test_type_transitions_match_batch(spark, replay):
-    run, batch = replay
-    rows = run("transitions", streaming_type_transitions)
-    got: dict = {}
-    for prev, nxt, n in rows:
-        got[(prev, nxt)] = got.get((prev, nxt), 0) + n
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    want = {
-        (r.prev_type, r.next_type): r.n
-        for r in batch.select(F.lag("event_type").over(w).alias("prev_type"), F.col("event_type").alias("next_type"))
-        .where(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "next_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
-    assert any(nxt is None for _, nxt in got)
 
 
 @pytest.mark.soak

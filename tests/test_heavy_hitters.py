@@ -8,7 +8,6 @@ from collections import Counter
 
 import pytest
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from flinkecuserbehavioranalysis_spark.operators.heavy_hitters import (
     heavy_hitters_exact,
@@ -74,45 +73,3 @@ def test_threshold_validation():
         heavy_hitters_exact(None, "k", threshold=0.0)
     with pytest.raises(ValueError):
         heavy_hitters_exact(None, "k", threshold=1.0)
-
-
-def test_streaming_mg_store_supersets_batch_heavy_hitters(spark):
-    """Bounded replay: the running MG(k) store must (a) contain every
-    batch θ-heavy hitter for θ = 1/k, and (b) underestimate each true
-    count by at most N/k — the mergeable-summaries bound across
-    micro-batch merges."""
-    from flinkecuserbehavioranalysis_spark.io import load_table
-    from flinkecuserbehavioranalysis_spark.streaming.jobs import (
-        read_events_stream,
-        run_bounded,
-        streaming_heavy_hitters_foreach_batch,
-    )
-
-    from conftest import SF_DIR
-
-    k = 40
-    store: dict = {}
-    totals = [0]
-    stream = read_events_stream(
-        spark, SF_DIR, max_files_per_trigger=1
-    ).select(F.pmod(F.col("user_id"), F.lit(25)).alias("province"))
-    run_bounded(
-        stream,
-        "append",
-        foreach_batch=streaming_heavy_hitters_foreach_batch(
-            store, totals, "province", k
-        ),
-    )
-    ev = load_table(spark, SF_DIR, "events").filter(F.col("user_id").isNotNull())
-    exact = {
-        r["province"]: r["cnt"]
-        for r in ev.groupBy(F.pmod(F.col("user_id"), F.lit(25)).alias("province"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    n = sum(exact.values())
-    assert totals[0] == n and n > 0
-    heavy = {p for p, c in exact.items() if c > n / k}
-    assert heavy and heavy <= set(store)
-    for p, mg in store.items():
-        assert 0 < mg <= exact[p] and exact[p] - mg <= n / k

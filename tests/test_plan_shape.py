@@ -62,41 +62,6 @@ def test_windowed_count_single_shuffle(spark):
     assert agg_exchanges == 1, plan
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Co-located (bucketed) fact-fact join: zero Exchange in the plan."""
-    from flinkecuserbehavioranalysis_spark.io import load_table, write_bucketed
-
-    orders = load_table(spark, SF_DIR, "orders")
-    lineitem = load_table(spark, SF_DIR, "lineitem")
-    write_bucketed(orders, "b_orders", ["o_orderkey"], 4, ["o_orderkey"],
-                   path=str(tmp_path / "b_orders"))
-    write_bucketed(lineitem, "b_lineitem", ["l_orderkey"], 4, ["l_orderkey"],
-                   path=str(tmp_path / "b_lineitem"))
-    try:
-        bo, bl = spark.table("b_orders"), spark.table("b_lineitem")
-        j = bo.hint("merge").join(bl, bo.o_orderkey == bl.l_orderkey)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            j.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        # same join without bucketing must shuffle — proves the test bites
-        plain = orders.hint("merge").join(
-            lineitem, orders.o_orderkey == lineitem.l_orderkey
-        )
-        buf2 = io.StringIO()
-        with contextlib.redirect_stdout(buf2):
-            plain.explain("formatted")
-        plain_plan = buf2.getvalue()
-        assert "Exchange" in plain_plan and "hashpartitioning" in plain_plan
-        # and the bucketed join returns the same row count
-        assert j.count() == plain.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_date_range_pushdown_reaches_both_scans(spark):
     plan = _explain(spark, "shipping_priority_topk")
     assert "GreaterThanOrEqual(l_shipdate" in plan, plan

@@ -8,7 +8,7 @@ import pytest
 
 from flinkecuserbehavioranalysis_spark.io import load_table, read_apache_log, read_csv_events
 from flinkecuserbehavioranalysis_spark.operators.joins import interval_join
-from flinkecuserbehavioranalysis_spark.operators.skew import salted_count, salted_sum
+from flinkecuserbehavioranalysis_spark.operators.skew import salted_count
 from flinkecuserbehavioranalysis_spark.schemas import LOGIN_EVENT, ORDER_EVENT
 from flinkecuserbehavioranalysis_spark.streaming.jobs import (
     read_events_stream,
@@ -67,24 +67,6 @@ def test_salted_count_equals_plain(spark):
     salted = {
         (r["event_type"],): r["cnt"]
         for r in salted_count(ev, ["event_type"], salt_from="event_id").collect()
-    }
-    assert plain == salted
-
-
-def test_salted_sum_equals_plain(spark):
-    li = load_table(spark, SF_DIR, "lineitem")
-    # integer-exact sum (quantities are whole-valued doubles ≤ 50)
-    plain = {
-        r["l_returnflag"]: r["t"]
-        for r in li.groupBy("l_returnflag")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("t"))
-        .collect()
-    }
-    salted = {
-        r["l_returnflag"]: r["total"]
-        for r in salted_sum(
-            li, ["l_returnflag"], F.col("l_quantity").cast("decimal(18,2)"), salt_from="l_orderkey"
-        ).collect()
     }
     assert plain == salted
 
@@ -1543,37 +1525,6 @@ def test_observation_metrics_on_corpus_scan(spark):
     assert m["n_rows"] == docs.count()
     assert m["n_quality"] == n
     assert m["n_null_text"] == 0
-
-
-def test_ivf_index_save_load_roundtrip(spark, tmp_path):
-    """Index lifecycle: build → save (postings partitioned by cell) →
-    load → query gives BIT-IDENTICAL results to the in-session
-    ivf_topk, and the postings directory is cell-partitioned."""
-    import os
-
-    from flinkecuserbehavioranalysis_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk,
-        load_ivf_index,
-        query_ivf_index,
-        save_ivf_index,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    kw = dict(n_cells=8, train_iters=2, corpus_probes=2)
-    direct = sorted(
-        tuple(r) for r in ivf_topk(emb, queries, nprobe=3, k=10, **kw).collect()
-    )
-    seeds, assigned = build_ivf_index(emb, **kw)
-    path = str(tmp_path / "ivf")
-    save_ivf_index(seeds, assigned, path)
-    assert any(d.startswith("cell=") for d in os.listdir(path + "/postings"))
-    ls, la = load_ivf_index(spark, path)
-    loaded = sorted(
-        tuple(r) for r in query_ivf_index(ls, la, queries, nprobe=3, k=10).collect()
-    )
-    assert loaded == direct and len(loaded) == 50
 
 
 def test_read_csv_events_tolerates_malformed_rows(spark, tmp_path):
