@@ -588,6 +588,41 @@ def _lsh_verified_rep_pairs(
     return jac.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
 
 
+def _expand_rep_pairs(
+    rep_pairs: DataFrame, members: DataFrame, id_col: str, a: str, b: str, score: str
+) -> DataFrame:
+    """Expand verified representative pairs (a, b, score) back to the
+    member-level pair list through the exact-collapse membership map
+    *members* (id_col, __rep): a pair across two groups inherits its
+    representatives' *score*, and a pair inside one group is emitted at
+    1.0 with no further work (identical items share every band, and
+    their exact score is 1.0).  Returns (a, b, score), a < b."""
+    ma = members.select(F.col("__rep").alias("__ra"), F.col(id_col).alias("__ida"))
+    mb = members.select(F.col("__rep").alias("__rb"), F.col(id_col).alias("__idb"))
+    inter = (
+        rep_pairs.join(ma, rep_pairs[a] == F.col("__ra"))
+        .join(mb, rep_pairs[b] == F.col("__rb"))
+        .select(F.least("__ida", "__idb").alias(a), F.greatest("__ida", "__idb").alias(b), score)
+    )
+    intra = ma.join(
+        mb, (F.col("__ra") == F.col("__rb")) & (F.col("__ida") < F.col("__idb"))
+    ).select(F.col("__ida").alias(a), F.col("__idb").alias(b), F.lit(1.0).alias(score))
+    return inter.unionByName(intra)
+
+
+def _member_edges(
+    rep_pairs: DataFrame, members: DataFrame, id_col: str, a: str, b: str
+) -> DataFrame:
+    """Connectivity edges (a, b): the verified representative pairs plus
+    one member→representative edge per exact duplicate (*members* is
+    the membership map (id_col, __rep)) — linear in members where the
+    pair list is quadratic in group size, with identical components."""
+    edges = members.where(F.col(id_col) != F.col("__rep")).select(
+        F.col("__rep").alias(a), F.col(id_col).alias(b)
+    )
+    return rep_pairs.select(a, b).unionByName(edges)
+
+
 def lsh_verified_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -614,25 +649,7 @@ def lsh_verified_pairs(
         members.where(F.col(id_col) == F.col("__rep")).select(id_col), id_col
     )
     rep_pairs = _lsh_verified_rep_pairs(reps, id_col, text_col, n, k, bands, threshold)
-    ma = members.select(F.col("__rep").alias("__ra"), F.col(id_col).alias("__ida"))
-    mb = members.select(F.col("__rep").alias("__rb"), F.col(id_col).alias("__idb"))
-    inter = (
-        rep_pairs.join(ma, rep_pairs["doc_a"] == F.col("__ra"))
-        .join(mb, rep_pairs["doc_b"] == F.col("__rb"))
-        .select(
-            F.least("__ida", "__idb").alias("doc_a"),
-            F.greatest("__ida", "__idb").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    intra = ma.join(
-        mb, (F.col("__ra") == F.col("__rb")) & (F.col("__ida") < F.col("__idb"))
-    ).select(
-        F.col("__ida").alias("doc_a"),
-        F.col("__idb").alias("doc_b"),
-        F.lit(1.0).alias("jaccard"),
-    )
-    return inter.unionByName(intra)
+    return _expand_rep_pairs(rep_pairs, members, id_col, "doc_a", "doc_b", "jaccard")
 
 
 def lsh_dedup_edges(
@@ -654,13 +671,8 @@ def lsh_dedup_edges(
     reps = docs.join(
         members.where(F.col(id_col) == F.col("__rep")).select(id_col), id_col
     )
-    rep_pairs = _lsh_verified_rep_pairs(
-        reps, id_col, text_col, n, k, bands, threshold
-    ).select("doc_a", "doc_b")
-    member_edges = members.where(F.col(id_col) != F.col("__rep")).select(
-        F.col("__rep").alias("doc_a"), F.col(id_col).alias("doc_b")
-    )
-    return rep_pairs.unionByName(member_edges)
+    rep_pairs = _lsh_verified_rep_pairs(reps, id_col, text_col, n, k, bands, threshold)
+    return _member_edges(rep_pairs, members, id_col, "doc_a", "doc_b")
 
 
 def ngram_contamination(

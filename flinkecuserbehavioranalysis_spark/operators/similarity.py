@@ -5,24 +5,35 @@ Embeddings are ``array<float>`` columns; all math is JVM-side Catalyst
 codegen, no Python in the hot path).  Cosines are rounded to 6 dp at the
 output boundary so cross-engine comparisons (and rank ties) are stable.
 
-Two strategies:
+Every float cosine is one expression, ``_cos``: round(dot / (norm·norm),
+6), each norm computed once per vector (``_with_vec``).  The six top-k
+variants — float, int8 and PQ/ADC scoring, each as a flat scan or over
+an IVF index — share three stages:
 
-- **brute-force top-k** — broadcast the (small) query set against the
-  corpus; exact, linear scan per query.  The right baseline, and the
-  verifier for approximate variants.
-- **bucketed (IVF/LSH-style)** — restrict candidate pairs to a coarse
-  bucket (here the precomputed ``label`` cluster id; in production a
-  trained coarse quantizer or random-hyperplane LSH).  Join shuffles on
-  the bucket id → linear-ish in corpus + intra-bucket pairs, the only
-  shape that survives 100 TB.
+- one query frame (``_query_frame``): one row per query id;
+- one IVF probe step (``_probes``): each query's *nprobe* nearest
+  cells, ordered (s_cos desc, cell);
+- one self-filter and rank tail (``_topk``), (cos desc, neighbor_id).
+
+A variant supplies only its candidate source — a flat broadcast scan of
+the corpus (exact: the baseline and the verifier for the approximate
+variants), or IVF postings (``build_ivf_index``) joined to the probes
+on the cell id — and its scorer: the corpus-side columns, the
+query-side columns and the cosine over them (float, int8 or PQ/ADC).
+Near-duplicate pairs restrict candidates to a coarse bucket
+(``bucketed_neardup_pairs``) or to SRP-LSH bands (``cosine_lsh_pairs``):
+the join shuffles on the bucket id → linear-ish in corpus + intra-bucket
+pairs, the only shape that survives 100 TB.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .dedup import _expand_rep_pairs, _member_edges
 
 
 def _as_double(col: str | Column) -> Column:
@@ -58,6 +69,83 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
+def _with_vec(df: DataFrame, vec_col: str, p: str, *cols: str | Column) -> DataFrame:
+    """*cols* plus the vector as doubles (``{p}_vec``) and its norm
+    (``{p}_norm``).  Norms are computed per vector, not per pair — at
+    corpus scale the pair count dwarfs the vector count, so this is a
+    3x flop reduction (sqrt(dot(x,x)) is the same double either way)."""
+    v = F.col(f"{p}_vec")
+    return df.select(*cols, _as_double(vec_col).alias(f"{p}_vec")).withColumn(
+        f"{p}_norm", F.sqrt(dot(v, v))
+    )
+
+
+def _cos(a: str | Column, b: str | Column) -> Column:
+    """The one float cosine, round(dot / (norm·norm), 6), between two
+    sides: a column prefix ``p`` (``p_vec``, ``p_norm`` — see
+    ``_with_vec``) or a packed codebook entry (its ``s_vec``, ``s_norm``
+    fields)."""
+    (av, an), (bv, bn) = (
+        (F.col(f"{x}_vec"), F.col(f"{x}_norm")) if isinstance(x, str) else (x.s_vec, x.s_norm)
+        for x in (a, b)
+    )
+    return F.round(dot(av, bv) / (an * bn), 6)
+
+
+def _query_frame(queries: DataFrame, query_id_col: str, vec_col: str) -> DataFrame:
+    """The query frame every top-k variant starts from: (q_id, q_vec,
+    q_norm), ONE row per query id.  A repeated query id is one query: a
+    repeat neither returns a neighbor twice nor takes a probe slot.
+    When the repeats carry different vectors, the smallest vector (array
+    order) wins — a rule on values, so partitioning never changes which
+    row survives."""
+    q = (
+        _drop_null_vec(queries, vec_col)
+        .groupBy(F.col(query_id_col).alias("q_id"))
+        .agg(F.min(_as_double(vec_col)).alias("__v"))
+    )
+    return _with_vec(q, "__v", "q", "q_id")
+
+
+def _rank(scored: DataFrame, k: int, part: str = "q_id", tie: str = "neighbor_id") -> DataFrame:
+    """The rank tail: the top *k* rows per *part* by (cos desc, *tie*),
+    numbered ``rnk``."""
+    w = Window.partitionBy(part).orderBy(F.col("cos").desc(), F.col(tie).asc())
+    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
+        F.col("rnk") <= k
+    )
+
+
+def _probes(q: DataFrame, seeds: DataFrame, nprobe: int) -> DataFrame:
+    """The IVF probe step: every column of the query frame *q* plus
+    ``cell``, one row for each of the query's *nprobe* nearest cells of
+    the codebook *seeds*, ranked (s_cos desc, cell) — explode + rank,
+    but only over the (small) query set."""
+    wq = Window.partitionBy("q_id").orderBy(F.col("s_cos").desc(), F.col("cell").asc())
+    return (
+        q.crossJoin(F.broadcast(seeds))
+        .select(*q.columns, F.col("seed_id").alias("cell"), _cos("q", "s").alias("s_cos"))
+        .withColumn("__r", F.row_number().over(wq))
+        .filter(F.col("__r") <= nprobe)
+        .drop("s_cos", "__r")
+    )
+
+
+def _topk(cands: DataFrame, cos: Column, k: int, dedup: bool = False) -> DataFrame:
+    """The self-filter and rank tail of every top-k variant: *cands*
+    pairs a query (``q_id`` and the scorer's query-side columns) with a
+    candidate (``neighbor_id`` and its corpus-side columns), and *cos*
+    scores the pair.  *dedup* drops the second copy of a neighbor
+    indexed under two probed cells (same cosine) before ranking.
+    Returns (q_id, neighbor_id, cos, rnk)."""
+    scored = cands.filter(F.col("neighbor_id") != F.col("q_id")).select(
+        "q_id", "neighbor_id", cos.alias("cos")
+    )
+    if dedup:
+        scored = scored.dropDuplicates(["q_id", "neighbor_id"])
+    return _rank(scored, k)
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -71,37 +159,11 @@ def brute_force_topk(
     *queries* should be small (it is broadcast); the corpus scan is
     embarrassingly parallel.  Returns (q_id, neighbor_id, cos) ranked
     desc with neighbor_id tiebreak; self-matches excluded."""
-    vectors = _drop_null_vec(vectors, vec_col)
-    queries = _drop_null_vec(queries, vec_col)
-    from pyspark.sql import Window
-
-    # norms are precomputed per vector, not per pair — at corpus scale the
-    # pair count dwarfs the vector count, so this is a 3x flop reduction
-    # (sqrt(dot(x,x)) is the same double either way → oracle still matches)
-    q = queries.select(
-        F.col(query_id_col).alias("q_id"),
-        _as_double(vec_col).alias("q_vec"),
-    ).withColumn("q_norm", F.sqrt(dot(F.col("q_vec"), F.col("q_vec"))))
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("v_vec")
-    ).withColumn("v_norm", F.sqrt(dot(F.col("v_vec"), F.col("v_vec"))))
-    scored = (
-        v.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("v_vec")) / (F.col("q_norm") * F.col("v_norm")), 6
-            ).alias("cos"),
-        )
+    corpus = _with_vec(
+        _drop_null_vec(vectors, vec_col), vec_col, "v", F.col(id_col).alias("neighbor_id")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "neighbor_id", "cos", "rnk")
-    )
+    q = _query_frame(queries, query_id_col, vec_col)
+    return _topk(corpus.crossJoin(F.broadcast(q)), _cos("q", "v"), k)
 
 
 def bucketed_neardup_pairs(
@@ -148,12 +210,14 @@ def bucketed_neardup_pairs(
         base = vectors.withColumn("__sub", F.lit(0).cast("long"))
 
     def side(tag: str) -> DataFrame:
-        return base.select(
+        return _with_vec(
+            base,
+            vec_col,
+            tag,
             F.col(id_col).alias(f"vec_{tag}"),
             F.col(bucket_col).alias(f"bucket_{tag}"),
             F.col("__sub").alias(f"sub_{tag}"),
-            _as_double(vec_col).alias(f"v_{tag}"),
-        ).withColumn(f"norm_{tag}", F.sqrt(dot(F.col(f"v_{tag}"), F.col(f"v_{tag}"))))
+        )
 
     a, b = side("a"), side("b")
     return (
@@ -163,14 +227,7 @@ def bucketed_neardup_pairs(
             & (F.col("sub_a") == F.col("sub_b"))
             & (F.col("vec_a") < F.col("vec_b")),
         )
-        .select(
-            "vec_a",
-            "vec_b",
-            F.col("bucket_a").alias("bucket"),
-            F.round(
-                dot(F.col("v_a"), F.col("v_b")) / (F.col("norm_a") * F.col("norm_b")), 6
-            ).alias("cos"),
-        )
+        .select("vec_a", "vec_b", F.col("bucket_a").alias("bucket"), _cos("a", "b").alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
 
@@ -211,8 +268,6 @@ def collapse_exact_vectors(
     Collapsed, the group costs ONE signature and zero verifies; members
     reconnect through their representative (linear edges, identical
     components).  One shuffle on the vector value."""
-    from pyspark.sql import Window
-
     v = _drop_null_vec(vectors, vec_col)
     return v.select(
         F.col(id_col),
@@ -304,20 +359,12 @@ def _srp_rep_pairs(
     )
 
     def side(tag: str) -> DataFrame:
-        return vectors.select(
-            F.col(id_col).alias(f"vec_{tag}"), _as_double(vec_col).alias(f"v_{tag}")
-        ).withColumn(f"norm_{tag}", F.sqrt(dot(F.col(f"v_{tag}"), F.col(f"v_{tag}"))))
+        return _with_vec(vectors, vec_col, tag, F.col(id_col).alias(f"vec_{tag}"))
 
     return (
         cand.join(side("a"), "vec_a")
         .join(side("b"), "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                dot(F.col("v_a"), F.col("v_b")) / (F.col("norm_a") * F.col("norm_b")), 6
-            ).alias("cos"),
-        )
+        .select("vec_a", "vec_b", _cos("a", "b").alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
 
@@ -353,26 +400,7 @@ def cosine_lsh_pairs(
         members.where(F.col(id_col) == F.col("__rep")).select(id_col), id_col
     )
     rep_pairs = _srp_rep_pairs(reps, id_col, vec_col, dim, n_planes, bands, threshold)
-    ma = members.select(F.col("__rep").alias("__ra"), F.col(id_col).alias("__ida"))
-    mb = members.select(F.col("__rep").alias("__rb"), F.col(id_col).alias("__idb"))
-    inter = (
-        rep_pairs.join(ma, rep_pairs["vec_a"] == F.col("__ra"))
-        .join(mb, rep_pairs["vec_b"] == F.col("__rb"))
-        .select(
-            F.least("__ida", "__idb").alias("vec_a"),
-            F.greatest("__ida", "__idb").alias("vec_b"),
-            "cos",
-        )
-    )
-    intra = (
-        ma.join(mb, (F.col("__ra") == F.col("__rb")) & (F.col("__ida") < F.col("__idb")))
-        .select(
-            F.col("__ida").alias("vec_a"),
-            F.col("__idb").alias("vec_b"),
-            F.lit(1.0).alias("cos"),
-        )
-    )
-    return inter.unionByName(intra)
+    return _expand_rep_pairs(rep_pairs, members, id_col, "vec_a", "vec_b", "cos")
 
 
 def cosine_lsh_dedup_edges(
@@ -396,19 +424,8 @@ def cosine_lsh_dedup_edges(
     reps = vectors.join(
         members.where(F.col(id_col) == F.col("__rep")).select(id_col), id_col
     )
-    rep_pairs = _srp_rep_pairs(
-        reps, id_col, vec_col, dim, n_planes, bands, threshold
-    ).select("vec_a", "vec_b")
-    member_edges = members.where(F.col(id_col) != F.col("__rep")).select(
-        F.col("__rep").alias("vec_a"), F.col(id_col).alias("vec_b")
-    )
-    return rep_pairs.unionByName(member_edges)
-
-
-def _scos(vec: str, norm: str, s) -> Column:
-    """Cosine against one packed-codebook entry, rounded to 6 dp so the
-    argmax comparisons are engine-stable."""
-    return F.round(dot(F.col(vec), s.s_vec) / (F.col(norm) * s.s_norm), 6)
+    rep_pairs = _srp_rep_pairs(reps, id_col, vec_col, dim, n_planes, bands, threshold)
+    return _member_edges(rep_pairs, members, id_col, "vec_a", "vec_b")
 
 
 def _pack(seeds: DataFrame) -> DataFrame:
@@ -419,10 +436,11 @@ def _pack(seeds: DataFrame) -> DataFrame:
     )
 
 
-def _best_cell_scored(vec: str, norm: str) -> Column:
-    """Map-side argmax over the packed codebook as a (c, id) struct:
-    fold keeping the strictly-greater cosine, so the first (lowest
-    seed_id) wins ties — identical to ORDER BY cos DESC, seed_id."""
+def _best_cell_scored() -> Column:
+    """Map-side argmax of the ``v_vec``/``v_norm`` vector over the
+    packed codebook as a (c, id) struct: fold keeping the strictly-
+    greater cosine, so the first (lowest seed_id) wins ties — identical
+    to ORDER BY cos DESC, seed_id."""
     init = F.struct(
         F.lit(-2.0).cast("double").alias("c"), F.lit(-1).cast("bigint").alias("id")
     )
@@ -430,20 +448,15 @@ def _best_cell_scored(vec: str, norm: str) -> Column:
         F.col("cells"),
         init,
         lambda acc, s: F.when(
-            _scos(vec, norm, s) > acc.c,
-            F.struct(_scos(vec, norm, s).alias("c"), s.seed_id.alias("id")),
+            _cos("v", s) > acc.c, F.struct(_cos("v", s).alias("c"), s.seed_id.alias("id"))
         ).otherwise(acc),
     )
 
 
-def _best_cell(vec: str, norm: str) -> Column:
-    return _best_cell_scored(vec, norm).id
-
-
-def _top2_cells(vec: str, norm: str) -> Column:
-    """Map-side top-2 cells as an array — the fold carries (best,
-    second) slots; strict > comparisons give the same tiebreak as
-    ORDER BY cos DESC, seed_id at both ranks."""
+def _top2_cells() -> Column:
+    """Map-side top-2 cells of the ``v_vec``/``v_norm`` vector as an
+    array — the fold carries (best, second) slots; strict > comparisons
+    give the same tiebreak as ORDER BY cos DESC, seed_id at both ranks."""
     init = F.struct(
         F.lit(-2.0).cast("double").alias("c1"),
         F.lit(-1).cast("bigint").alias("id1"),
@@ -452,7 +465,7 @@ def _top2_cells(vec: str, norm: str) -> Column:
     )
 
     def step(acc, s):
-        sc = _scos(vec, norm, s)
+        sc = _cos("v", s)
         return (
             F.when(
                 sc > acc.c1,
@@ -567,10 +580,7 @@ def _kmeans_fit_impl(
         train_vectors = hash_sample(vectors, id_col, train_fraction)
     else:
         train_vectors = vectors
-    vt = (
-        train_vectors.select(_as_double(vec_col).alias("v_vec"))
-        .withColumn("v_norm", F.sqrt(dot(F.col("v_vec"), F.col("v_vec"))))
-    )
+    vt = _with_vec(train_vectors, vec_col, "v")
     if train_iters > 1:
         # Each Lloyd round re-reads the training frame; without a persist
         # a lazy upstream (the hashed text vectorizer, an expensive UDF
@@ -591,11 +601,11 @@ def _kmeans_fit_impl(
             ),
             vt,
         )
-    seeds = (
-        train_vectors.orderBy(F.col(id_col))
-        .limit(n_cells)
-        .select(F.col(id_col).alias("seed_id"), _as_double(vec_col).alias("s_vec"))
-        .withColumn("s_norm", F.sqrt(dot(F.col("s_vec"), F.col("s_vec"))))
+    seeds = _with_vec(
+        train_vectors.orderBy(F.col(id_col)).limit(n_cells),
+        vec_col,
+        "s",
+        F.col(id_col).alias("seed_id"),
     )
     converge = tol is not None
     if converge:
@@ -603,7 +613,7 @@ def _kmeans_fit_impl(
         seeds = seeds.localCheckpoint(eager=True)
     for it in range(train_iters):
         assigned_t = vt.crossJoin(F.broadcast(_pack(seeds))).select(
-            "v_vec", _best_cell("v_vec", "v_norm").alias("cell")
+            "v_vec", _best_cell_scored().id.alias("cell")
         )
         cent = (
             assigned_t.select("cell", F.posexplode("v_vec").alias("pos", "x"))
@@ -616,15 +626,15 @@ def _kmeans_fit_impl(
                 ).alias("m")
             )
         )
-        new_seeds = (
-            cent.groupBy("cell")
-            .agg(
+        new_seeds = _with_vec(
+            cent.groupBy("cell").agg(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s.m
                 ).alias("s_vec")
-            )
-            .select(F.col("cell").alias("seed_id"), "s_vec")
-            .withColumn("s_norm", F.sqrt(dot(F.col("s_vec"), F.col("s_vec"))))
+            ),
+            "s_vec",
+            "s",
+            F.col("cell").alias("seed_id"),
         )
         if not converge:
             seeds = new_seeds
@@ -698,14 +708,12 @@ def kmeans_cluster_stats(
         train_fraction=train_fraction,
     )
     label_cols = [F.col(label_col)] if label_col else []
-    v = vectors.select(
-        F.col(id_col), *label_cols, _as_double(vec_col).alias("v_vec")
-    ).withColumn("v_norm", F.sqrt(dot(F.col("v_vec"), F.col("v_vec"))))
+    v = _with_vec(vectors, vec_col, "v", F.col(id_col), *label_cols)
     # project the argmax struct ONCE, extract fields in a second select —
     # pulling best.id and best.c straight out of the fold in one select
     # would inline the whole O(n_cells x dim) codebook scan twice per row
     # (CollapseProject keeps non-cheap multiply-referenced exprs staged)
-    best = _best_cell_scored("v_vec", "v_norm")
+    best = _best_cell_scored()
     assigned = (
         v.crossJoin(F.broadcast(_pack(seeds)))
         .select(F.col(id_col), *label_cols, best.alias("__b"))
@@ -725,8 +733,6 @@ def kmeans_cluster_stats(
     )
     if not label_col:
         return stats
-    from pyspark.sql import Window
-
     lc = assigned.groupBy("cluster_id", label_col).agg(F.count(F.lit(1)).alias("__n"))
     wl = Window.partitionBy("cluster_id").orderBy(
         F.col("__n").desc(), F.col(label_col).asc()
@@ -800,21 +806,11 @@ def ivf_topk(
     instead of the brute-force O(n·q).  Recall < 1 by construction;
     verified against ``brute_force_topk``.  Output: (q_id, neighbor_id,
     cos, rnk) — same schema as the exact baseline."""
-    vectors = _drop_null_vec(vectors, vec_col)
-    queries = _drop_null_vec(queries, vec_col)
-    seeds, assigned = build_ivf_index(
-        vectors,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_cells=n_cells,
-        train_iters=train_iters,
-        corpus_probes=corpus_probes,
-        train_fraction=train_fraction,
-        seeds=seeds,
+    seeds, postings = build_ivf_index(
+        vectors, id_col, vec_col, n_cells, train_iters, corpus_probes, train_fraction, seeds
     )
     return query_ivf_index(
-        seeds, assigned, queries, query_id_col=query_id_col, vec_col=vec_col,
-        nprobe=nprobe, k=k, dedup_candidates=corpus_probes > 1,
+        seeds, postings, queries, query_id_col, vec_col, nprobe, k, corpus_probes > 1
     )
 
 
@@ -838,10 +834,6 @@ def build_ivf_index(
     vectors = _drop_null_vec(vectors, vec_col)
     if corpus_probes not in (1, 2):
         raise ValueError(f"corpus_probes must be 1 or 2, got {corpus_probes}")
-    v = (
-        vectors.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("v_vec"))
-        .withColumn("v_norm", F.sqrt(dot(F.col("v_vec"), F.col("v_vec"))))
-    )
     if seeds is None:
         seeds = kmeans_fit(
             vectors,
@@ -851,8 +843,10 @@ def build_ivf_index(
             train_iters=train_iters,
             train_fraction=train_fraction,
         )
-    assigned = ivf_assign(v, seeds, corpus_probes=corpus_probes)
-    return seeds, assigned
+    v = _with_vec(vectors, vec_col, "v", F.col(id_col).alias("neighbor_id"))
+    # r11: cell assignment through the shared pinned postings (same
+    # corpus + codebook across the three IVF variants — ivf_assign memo)
+    return seeds, ivf_assign(v, seeds, corpus_probes=corpus_probes)
 
 
 def ivf_assign(
@@ -894,9 +888,7 @@ def ivf_assign(
     def _postings_plan() -> DataFrame:
         packed = _pack(seeds)
         cell_expr = (
-            F.array(_best_cell("v_vec", "v_norm"))
-            if corpus_probes == 1
-            else _top2_cells("v_vec", "v_norm")
+            F.array(_best_cell_scored().id) if corpus_probes == 1 else _top2_cells()
         )
         return v.crossJoin(F.broadcast(packed)).select(
             "neighbor_id", "v_vec", "v_norm", F.explode(cell_expr).alias("cell")
@@ -926,52 +918,9 @@ def query_ivf_index(
     """Serve top-k queries from a built (or loaded) IVF index — the
     query-many half of the lifecycle.  Same semantics and output schema
     as ``ivf_topk``."""
-    queries = _drop_null_vec(queries, vec_col)
-    from pyspark.sql import Window
-
-    q = (
-        queries.select(F.col(query_id_col).alias("q_id"), _as_double(vec_col).alias("q_vec"))
-        .withColumn("q_norm", F.sqrt(dot(F.col("q_vec"), F.col("q_vec"))))
-    )
-    # probes need the nprobe best cells — explode + rank, but only over
-    # the (small) query set
-    q_scored = (
-        q.crossJoin(F.broadcast(seeds))
-        .select(
-            "q_id",
-            "q_vec",
-            "q_norm",
-            F.col("seed_id").alias("cell"),
-            _scos("q_vec", "q_norm", F.struct(F.col("seed_id"), F.col("s_vec"), F.col("s_norm"))).alias("s_cos"),
-        )
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("s_cos").desc(), F.col("cell").asc())
-    probes = (
-        q_scored.withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= nprobe)
-        .select("q_id", "q_vec", "q_norm", "cell")
-    )
-    scored = (
-        assigned.join(probes, "cell")
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("v_vec")) / (F.col("q_norm") * F.col("v_norm")), 6
-            ).alias("cos"),
-        )
-    )
-    if dedup_candidates:
-        # a neighbor indexed under two probed cells scores twice with the
-        # same cosine — drop the duplicate before ranking
-        scored = scored.dropDuplicates(["q_id", "neighbor_id"])
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "neighbor_id", "cos", "rnk")
-    )
+    q = _query_frame(queries, query_id_col, vec_col)
+    cands = assigned.join(_probes(q, seeds, nprobe), "cell")
+    return _topk(cands, _cos("q", "v"), k, dedup_candidates)
 
 
 def label_centroids(
@@ -1019,38 +968,38 @@ def quantize_embeddings(
     division).  Returns (id, scale rounded 9dp for display, q
     array<int>)."""
     vectors = _drop_null_vec(vectors, vec_col)
-
-    # r12 (guide §5): assembly deferred into the builder so a pin HIT
-    # skips the higher-order-fold py4j construction entirely
-    def _quantized_plan() -> DataFrame:
-        v = _as_double(vec_col)
-        maxabs = F.array_max(F.transform(v, lambda x: F.abs(x)))
-        scale = (maxabs / F.lit(127.0)).alias("__scale")
-        return vectors.select(F.col(id_col), v.alias("__v"), scale).select(
-            F.col(id_col),
-            F.round(F.col("__scale"), 9).alias("scale"),
-            F.when(
-                F.col("__scale") > 0,
-                F.transform(
-                    F.col("__v"), lambda x: F.round(x / F.col("__scale")).cast("int")
-                ),
-            )
-            .otherwise(F.transform(F.col("__v"), lambda x: F.lit(0)))
-            .alias("q"),
-        )
-
     if vectors.isStreaming:
-        return _quantized_plan()
+        return _int8_codes(vectors, vec_col, id_col)
     # r11: the quantized corpus is the INT8 INDEX (ann_quantized_topk
     # and ann_ivf_quantized_topk both quantize the same vectors) — pin
     # per input hash so the two higher-order folds run once per session;
-    # index-sized rows (dim ints + a scale per vector)
+    # index-sized rows (dim ints + a scale per vector).  r12 (guide §5):
+    # assembly deferred into the builder so a pin HIT skips the
+    # higher-order-fold py4j construction entirely
     from .. import cache as _frame_cache
 
     app = vectors.sparkSession.sparkContext.applicationId
     return _frame_cache.pin(
         (app, "int8_codes", vectors.semanticHash(), id_col, vec_col),
-        lambda: _quantized_plan().localCheckpoint(eager=False),
+        lambda: _int8_codes(vectors, vec_col, id_col).localCheckpoint(eager=False),
+    )
+
+
+def _int8_codes(df: DataFrame, vec_col: str, *keep: str) -> DataFrame:
+    """*keep* plus ``scale`` and the int8 codes ``q`` of *vec_col* — the
+    quantization of ``quantize_embeddings``, unpinned."""
+    v = _as_double(vec_col)
+    maxabs = F.array_max(F.transform(v, lambda x: F.abs(x)))
+    scale = (maxabs / F.lit(127.0)).alias("__scale")
+    return df.select(*keep, v.alias("__v"), scale).select(
+        *keep,
+        F.round(F.col("__scale"), 9).alias("scale"),
+        F.when(
+            F.col("__scale") > 0,
+            F.transform(F.col("__v"), lambda x: F.round(x / F.col("__scale")).cast("int")),
+        )
+        .otherwise(F.transform(F.col("__v"), lambda x: F.lit(0)))
+        .alias("q"),
     )
 
 
@@ -1062,6 +1011,33 @@ def idot(a: Column, b: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
+
+
+def _int8_scorer(
+    vectors: DataFrame, q: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The int8 scorer: (corpus, query frame, cosine).  The corpus is the
+    pinned int8 index (``quantize_embeddings``) as (neighbor_id, v_q,
+    v_n).  Queries quantize their OWN vectors (q_q, q_n): per-vector
+    scales cancel out of the cosine independently per side, so nothing
+    requires the query to come from the corpus — a query id absent from
+    *vectors* still scores.  The cosine is exact int64 dot products and
+    one IEEE division."""
+
+    def side(df: DataFrame, p: str, *cols: str | Column) -> DataFrame:
+        c = F.col(f"{p}_q")
+        return df.select(*cols, F.col("q").alias(f"{p}_q")).withColumn(
+            f"{p}_n", F.sqrt(idot(c, c).cast("double"))
+        )
+
+    corpus = side(
+        quantize_embeddings(vectors, id_col, vec_col), "v", F.col(id_col).alias("neighbor_id")
+    )
+    q = side(_int8_codes(q, "q_vec", *q.columns), "q", *q.columns)
+    cos = F.round(
+        idot(F.col("q_q"), F.col("v_q")).cast("double") / (F.col("q_n") * F.col("v_n")), 6
+    )
+    return corpus, q, cos
 
 
 def quantized_topk(
@@ -1086,47 +1062,10 @@ def quantized_topk(
     the corpus-side math running on int8 codes — at 100 TB this is the
     scan you can actually afford to keep hot.  Output schema matches
     the float baseline: (q_id, neighbor_id, cos, rnk)."""
-    vectors = _drop_null_vec(vectors, vec_col)
-    queries = _drop_null_vec(queries, vec_col)
-    from pyspark.sql import Window
-
-    qz = quantize_embeddings(vectors, id_col, vec_col).select(
-        F.col(id_col), F.col("q")
+    corpus, q, cos = _int8_scorer(
+        vectors, _query_frame(queries, query_id_col, vec_col), id_col, vec_col
     )
-    v = qz.select(
-        F.col(id_col).alias("neighbor_id"), F.col("q").alias("v_q")
-    ).withColumn("v_n", F.sqrt(idot(F.col("v_q"), F.col("v_q")).cast("double")))
-    # quantize the queries' OWN vectors (per-vector scales cancel out of
-    # the cosine independently per side, so nothing requires the query to
-    # come from the corpus) — a query id absent from `vectors` still
-    # scores, instead of silently emitting no rows as a corpus-join would
-    qs = quantize_embeddings(
-        queries.select(
-            F.col(query_id_col).alias("q_id"), F.col(vec_col)
-        ).dropDuplicates(["q_id"]),
-        "q_id",
-        vec_col,
-    ).select(F.col("q_id"), F.col("q").alias("q_q"))
-    qs = qs.withColumn("q_n", F.sqrt(idot(F.col("q_q"), F.col("q_q")).cast("double")))
-    scored = (
-        v.crossJoin(F.broadcast(qs))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(
-                idot(F.col("q_q"), F.col("v_q")).cast("double")
-                / (F.col("q_n") * F.col("v_n")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "neighbor_id", "cos", "rnk")
-    )
+    return _topk(corpus.crossJoin(F.broadcast(q)), cos, k)
 
 
 def ivf_quantized_topk(
@@ -1154,86 +1093,14 @@ def ivf_quantized_topk(
     the IVF probe loss with int8 rank perturbation — floor-tested vs
     the float brute force.  Output schema matches the other top-k
     variants: (q_id, neighbor_id, cos, rnk)."""
-    vectors = _drop_null_vec(vectors, vec_col)
-    queries = _drop_null_vec(queries, vec_col)
-    from pyspark.sql import Window
-
-    if corpus_probes not in (1, 2):
-        raise ValueError(f"corpus_probes must be 1 or 2, got {corpus_probes}")
-
-    if seeds is None:
-        seeds = kmeans_fit(
-            vectors,
-            id_col=id_col,
-            vec_col=vec_col,
-            n_cells=n_cells,
-            train_iters=train_iters,
-            train_fraction=train_fraction,
-        )
-    qz = quantize_embeddings(vectors, id_col, vec_col).select(F.col(id_col), F.col("q"))
-
-    v = (
-        vectors.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("v_vec"))
-        .withColumn("v_norm", F.sqrt(dot(F.col("v_vec"), F.col("v_vec"))))
+    seeds, postings = build_ivf_index(
+        vectors, id_col, vec_col, n_cells, train_iters, corpus_probes, train_fraction, seeds
     )
-    # r11: cell assignment through the shared pinned postings (same
-    # corpus + codebook across the three IVF variants — ivf_assign memo)
-    assigned = (
-        ivf_assign(v, seeds, corpus_probes=corpus_probes)
-        .select("neighbor_id", "cell")
-        .join(qz.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id")
-        .withColumnRenamed("q", "v_q")
-        .withColumn("v_n", F.sqrt(idot(F.col("v_q"), F.col("v_q")).cast("double")))
+    corpus, q, cos = _int8_scorer(
+        vectors, _query_frame(queries, query_id_col, vec_col), id_col, vec_col
     )
-    q = (
-        queries.select(F.col(query_id_col).alias("q_id"), _as_double(vec_col).alias("q_vec"))
-        .withColumn("q_norm", F.sqrt(dot(F.col("q_vec"), F.col("q_vec"))))
-    )
-    q_scored = q.crossJoin(F.broadcast(seeds)).select(
-        "q_id",
-        F.col("seed_id").alias("cell"),
-        _scos("q_vec", "q_norm", F.struct(F.col("seed_id"), F.col("s_vec"), F.col("s_norm"))).alias(
-            "s_cos"
-        ),
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("s_cos").desc(), F.col("cell").asc())
-    # query codes come from the queries' own vectors (scale cancellation
-    # is per-side — see quantized_topk), not a join into the corpus codes
-    q_codes = quantize_embeddings(
-        queries.select(
-            F.col(query_id_col).alias("q_id"), F.col(vec_col)
-        ).dropDuplicates(["q_id"]),
-        "q_id",
-        vec_col,
-    ).select(F.col("q_id"), F.col("q").alias("q_q"))
-    probes = (
-        q_scored.withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= nprobe)
-        .select("q_id", "cell")
-        .join(q_codes, "q_id")
-        .withColumn("q_n", F.sqrt(idot(F.col("q_q"), F.col("q_q")).cast("double")))
-    )
-    scored = (
-        assigned.join(probes, "cell")
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(
-                idot(F.col("q_q"), F.col("v_q")).cast("double")
-                / (F.col("q_n") * F.col("v_n")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    if corpus_probes > 1:
-        scored = scored.dropDuplicates(["q_id", "neighbor_id"])
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "neighbor_id", "cos", "rnk")
-    )
+    corpus = postings.select("neighbor_id", "cell").join(corpus, "neighbor_id")
+    return _topk(corpus.join(_probes(q, seeds, nprobe), "cell"), cos, k, corpus_probes > 1)
 
 
 def _sdot(a: Column, b: Column, w: int) -> Column:
@@ -1370,9 +1237,6 @@ def pq_fit(
     iteration's plan is flat and the kernel gets the book as a plain
     closure.  Returns (m_idx, code, c_vec)."""
     vectors = _drop_null_vec(vectors, vec_col)
-    import pandas as pd  # noqa: F401
-    from pyspark.sql import Window
-
     if dim % m != 0:
         raise ValueError(f"pq_fit: dim={dim} not divisible by m={m}")
     if train_fraction < 1.0:
@@ -1525,47 +1389,6 @@ def pq_encode(
     )
 
 
-def _pq_queries(
-    queries: DataFrame,
-    packed: DataFrame,
-    query_id_col: str,
-    vec_col: str,
-    dim: int,
-    m: int,
-) -> DataFrame:
-    """Query-side ADC preparation: per query, the m×k lookup table of
-    int64-quantized sub-dots (lut[m][code] = round(q_m · c × 1e6)) and
-    the float query norm — built once per query against the broadcast
-    codebook, so pair scoring is O(m) integer lookups."""
-    return (
-        queries.select(
-            F.col(query_id_col).alias("q_id"), _as_double(vec_col).alias("__qv")
-        )
-        .dropDuplicates(["q_id"])
-        .crossJoin(F.broadcast(packed))
-        .select(
-            "q_id",
-            F.sqrt(dot(F.col("__qv"), F.col("__qv"))).alias("q_n"),
-            _pq_subs(F.col("__qv"), dim, m).alias("__subs"),
-            F.col("cells"),
-        )
-        .select(
-            "q_id",
-            "q_n",
-            F.transform(
-                F.col("cells"),
-                lambda cs, j: F.transform(
-                    cs,
-                    lambda s: F.round(
-                        _sdot(F.element_at(F.col("__subs"), j + 1), s.c_vec, dim // m)
-                        * 1e6
-                    ).cast("long"),
-                ),
-            ).alias("lut"),
-        )
-    )
-
-
 def _adc_cos(lut: Column, q_n: Column, codes: Column, xn2: Column) -> Column:
     """ADC cosine: integer ip = Σ lut[m][code_m] (exact, order-free),
     reconstruction norm from the stored Σ c·c — one float division at
@@ -1581,6 +1404,61 @@ def _adc_cos(lut: Column, q_n: Column, codes: Column, xn2: Column) -> Column:
     return F.when(
         den > 0, F.round((ip6 / F.lit(1e6)) / den, 6)
     ).otherwise(F.lit(0.0))
+
+
+def _pq_scorer(
+    vectors: DataFrame,
+    q: DataFrame,
+    book: DataFrame | None,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    m: int,
+    k_codes: int,
+    train_iters: int,
+    train_fraction: float,
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The PQ/ADC scorer: (corpus, query frame, cosine).  The corpus is
+    the pinned PQ index (``pq_encode``) as (neighbor_id, codes, xn2).
+    Each query gets its m×k lookup table of int64-quantized sub-dots
+    (lut[m][code] = round(q_m · c × 1e6)), built once against the
+    broadcast codebook, so pair scoring is O(m) integer lookups
+    (``_adc_cos``).  Without a pre-trained *book*, one is trained from
+    *vectors* with the given parameters."""
+    if book is None:
+        # a lazy localCheckpoint, as for the shared registry book: encode
+        # and the LUT each broadcast a packed view of the book, and the
+        # checkpoint runs its training lineage once for both — where a
+        # persist() would leave a cached plan that clear_cache() never
+        # releases
+        book = pq_fit(
+            vectors,
+            id_col=id_col,
+            vec_col=vec_col,
+            dim=dim,
+            m=m,
+            k=k_codes,
+            train_iters=train_iters,
+            train_fraction=train_fraction,
+        ).localCheckpoint(eager=False)
+    corpus = pq_encode(
+        vectors, book, id_col=id_col, vec_col=vec_col, dim=dim, m=m
+    ).withColumnRenamed(id_col, "neighbor_id")
+    lut = F.transform(
+        F.col("cells"),
+        lambda cs, j: F.transform(
+            cs,
+            lambda s: F.round(
+                _sdot(F.element_at(F.col("__subs"), j + 1), s.c_vec, dim // m) * 1e6
+            ).cast("long"),
+        ),
+    )
+    q = (
+        q.crossJoin(F.broadcast(_pack_pq(book)))
+        .select(*q.columns, _pq_subs(F.col("q_vec"), dim, m).alias("__subs"), "cells")
+        .select(*q.columns, lut.alias("lut"))
+    )
+    return corpus, q, _adc_cos(F.col("lut"), F.col("q_norm"), F.col("codes"), F.col("xn2"))
 
 
 def pq_topk(
@@ -1610,49 +1488,15 @@ def pq_topk(
     Scale shape: codebook training is (m×k)-cell-bounded Lloyd on a
     deterministic sample; encoding and scoring are map-only with the
     packed codebook broadcast; the only shuffle is the per-query rank.
-    Pass a pre-trained *book* (from ``pq_fit``, ideally persisted) to
+    Pass a pre-trained *book* (from ``pq_fit``, ideally checkpointed) to
     reuse one codebook across indexes — the training params are then
     ignored.  Output matches the other top-k variants: (q_id,
     neighbor_id, cos, rnk)."""
-    vectors = _drop_null_vec(vectors, vec_col)
-    queries = _drop_null_vec(queries, vec_col)
-    from pyspark.sql import Window
-
-    if book is None:
-        # persist the (m×k-row) codebook: encode and the query LUT each
-        # broadcast a packed view of it, and an unpersisted book would
-        # re-run the whole training lineage per consumer
-        book = pq_fit(
-            vectors,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-            m=m,
-            k=k_codes,
-            train_iters=train_iters,
-            train_fraction=train_fraction,
-        ).persist()
-    packed = _pack_pq(book)
-    enc = pq_encode(vectors, book, id_col=id_col, vec_col=vec_col, dim=dim, m=m)
-    qs = _pq_queries(queries, packed, query_id_col, vec_col, dim, m)
-    scored = (
-        enc.withColumnRenamed(id_col, "neighbor_id")
-        .crossJoin(F.broadcast(qs))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            _adc_cos(F.col("lut"), F.col("q_n"), F.col("codes"), F.col("xn2")).alias(
-                "cos"
-            ),
-        )
+    corpus, q, cos = _pq_scorer(
+        vectors, _query_frame(queries, query_id_col, vec_col), book, id_col, vec_col,
+        dim, m, k_codes, train_iters, train_fraction,
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "neighbor_id", "cos", "rnk")
-    )
+    return _topk(corpus.crossJoin(F.broadcast(q)), cos, k)
 
 
 def ivf_pq_topk(
@@ -1684,86 +1528,15 @@ def ivf_pq_topk(
     error — floor-tested vs the float brute force.  Pass a pre-trained
     *book* (PQ) and/or *seeds* (coarse quantizer) to reuse codebooks
     across indexes.  Output: (q_id, neighbor_id, cos, rnk)."""
-    vectors = _drop_null_vec(vectors, vec_col)
-    queries = _drop_null_vec(queries, vec_col)
-    from pyspark.sql import Window
-
-    if corpus_probes not in (1, 2):
-        raise ValueError(f"corpus_probes must be 1 or 2, got {corpus_probes}")
-    # both trained artifacts feed two broadcast consumers each (corpus
-    # assignment + query probes / encode + LUT) — persist so the Lloyd
-    # lineages run once, not once per consumer
-    if seeds is None:
-        seeds = kmeans_fit(
-            vectors,
-            id_col=id_col,
-            vec_col=vec_col,
-            n_cells=n_cells,
-            train_iters=train_iters,
-            train_fraction=train_fraction,
-        ).persist()
-    coarse_packed = _pack(seeds)
-    if book is None:
-        book = pq_fit(
-            vectors,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-            m=m,
-            k=k_codes,
-            train_iters=train_iters,
-            train_fraction=train_fraction,
-        ).persist()
-    enc = pq_encode(vectors, book, id_col=id_col, vec_col=vec_col, dim=dim, m=m)
-
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("v_vec")
-    ).withColumn("v_norm", F.sqrt(dot(F.col("v_vec"), F.col("v_vec"))))
-    # r11: cell assignment through the shared pinned postings (same
-    # corpus + codebook across the three IVF variants — ivf_assign memo)
-    assigned = (
-        ivf_assign(v, seeds, corpus_probes=corpus_probes)
-        .select("neighbor_id", "cell")
-        .join(enc.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id")
+    seeds, postings = build_ivf_index(
+        vectors, id_col, vec_col, n_cells, train_iters, corpus_probes, train_fraction, seeds
     )
-    q = (
-        queries.select(F.col(query_id_col).alias("q_id"), _as_double(vec_col).alias("q_vec"))
-        .dropDuplicates(["q_id"])
-        .withColumn("q_norm", F.sqrt(dot(F.col("q_vec"), F.col("q_vec"))))
+    corpus, q, cos = _pq_scorer(
+        vectors, _query_frame(queries, query_id_col, vec_col), book, id_col, vec_col,
+        dim, m, k_codes, train_iters, train_fraction,
     )
-    q_scored = q.crossJoin(F.broadcast(seeds)).select(
-        "q_id",
-        F.col("seed_id").alias("cell"),
-        _scos("q_vec", "q_norm", F.struct(F.col("seed_id"), F.col("s_vec"), F.col("s_norm"))).alias(
-            "s_cos"
-        ),
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("s_cos").desc(), F.col("cell").asc())
-    probes = (
-        q_scored.withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= nprobe)
-        .select("q_id", "cell")
-        .join(_pq_queries(queries, _pack_pq(book), query_id_col, vec_col, dim, m), "q_id")
-    )
-    scored = (
-        assigned.join(probes, "cell")
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            _adc_cos(F.col("lut"), F.col("q_n"), F.col("codes"), F.col("xn2")).alias(
-                "cos"
-            ),
-        )
-    )
-    if corpus_probes > 1:
-        scored = scored.dropDuplicates(["q_id", "neighbor_id"])
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "neighbor_id", "cos", "rnk")
-    )
+    corpus = postings.select("neighbor_id", "cell").join(corpus, "neighbor_id")
+    return _topk(corpus.join(_probes(q, seeds, nprobe), "cell"), cos, k, corpus_probes > 1)
 
 
 def label_feature_stats(
@@ -1817,44 +1590,29 @@ def hard_negatives(
     side for an IVF/LSH candidate set at corpus scale exactly like the
     ANN variants.  Returns (anchor_id, anchor_label, negative_id,
     negative_label, cos, rnk)."""
-    vectors = _drop_null_vec(vectors, vec_col)
-    anchors = _drop_null_vec(anchors, vec_col)
-    from pyspark.sql import Window
-
-    a = (
-        anchors.select(
-            F.col(id_col).alias("anchor_id"),
-            F.col(label_col).alias("anchor_label"),
-            _as_double(vec_col).alias("a_vec"),
-        )
-        .withColumn("a_norm", F.sqrt(dot(F.col("a_vec"), F.col("a_vec"))))
+    a = _with_vec(
+        _drop_null_vec(anchors, vec_col),
+        vec_col,
+        "a",
+        F.col(id_col).alias("anchor_id"),
+        F.col(label_col).alias("anchor_label"),
     )
-    v = (
-        vectors.select(
-            F.col(id_col).alias("negative_id"),
-            F.col(label_col).alias("negative_label"),
-            _as_double(vec_col).alias("v_vec"),
-        )
-        .withColumn("v_norm", F.sqrt(dot(F.col("v_vec"), F.col("v_vec"))))
+    v = _with_vec(
+        _drop_null_vec(vectors, vec_col),
+        vec_col,
+        "v",
+        F.col(id_col).alias("negative_id"),
+        F.col(label_col).alias("negative_label"),
     )
     scored = (
         v.crossJoin(F.broadcast(a))
         .filter(F.col("negative_label") != F.col("anchor_label"))
         .select(
-            "anchor_id",
-            "anchor_label",
-            "negative_id",
-            "negative_label",
-            F.round(
-                dot(F.col("a_vec"), F.col("v_vec")) / (F.col("a_norm") * F.col("v_norm")), 6
-            ).alias("cos"),
+            "anchor_id", "anchor_label", "negative_id", "negative_label",
+            _cos("a", "v").alias("cos"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(F.col("cos").desc(), F.col("negative_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    return _rank(scored, k, "anchor_id", "negative_id")
 
 
 def semantic_dedup(
@@ -1905,12 +1663,10 @@ def semantic_dedup(
         train_iters=train_iters,
         train_fraction=train_fraction,
     )
-    v = vectors.select(F.col(id_col), _as_double(vec_col).alias("v_vec")).withColumn(
-        "v_norm", F.sqrt(dot(F.col("v_vec"), F.col("v_vec")))
-    )
     members = (
-        v.crossJoin(F.broadcast(_pack(seeds)))
-        .select(F.col(id_col), "v_vec", _best_cell("v_vec", "v_norm").alias("cluster_id"))
+        _with_vec(vectors, vec_col, "v", F.col(id_col))
+        .crossJoin(F.broadcast(_pack(seeds)))
+        .select(F.col(id_col), "v_vec", _best_cell_scored().id.alias("cluster_id"))
     )
     tau6 = int(math.floor(float(tau) * 1e6 + 0.5))
     out_schema = (

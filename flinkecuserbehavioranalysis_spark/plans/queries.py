@@ -31,12 +31,7 @@ from ..functions.scalar import floor_div
 from ..io import load_table
 from ..operators.distinct import windowed_distinct_count
 from ..operators.joins import interval_join, tx_match_full_outer
-from ..operators.patterns import (
-    blacklist_filter,
-    consecutive_fail_alerts,
-    pattern_pairs,
-    pattern_sequence,
-)
+from ..operators.patterns import blacklist_filter
 from ..operators.sessions import sessionize
 from ..operators.timeout import create_pay_status
 from ..operators.windows import sliding_window_count, topn_per_window, tumbling_window_count
@@ -441,13 +436,6 @@ def pattern_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
         within_seconds=86400.0,
         tiebreak_col="event_id",
     )
-
-
-from ..operators.patterns import (  # noqa: E402
-    pattern_not_followed_by,
-    pattern_pairs_not_between,
-    pattern_sequence_optional,
-)
 
 
 @_q(
@@ -1228,10 +1216,11 @@ def ann_cosine_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SRP-LSH verified pair set at threshold 0.4, persisted and
-    memoized per (session, sf_dir) — ann_cosine_lsh_neardup returns it
-    directly and embedding_neardup_components builds its components
-    from the same frame, so the LSH pipeline runs once per session."""
+    """The SRP-LSH verified pair set at threshold 0.4, checkpointed and
+    memoized per (session, sf_dir); its one consumer is
+    ann_cosine_lsh_neardup, which returns it directly
+    (embedding_neardup_components builds from
+    ``cosine_lsh_dedup_edges`` instead, never the pair list)."""
 
     def build() -> DataFrame:
         return cosine_lsh_pairs(
@@ -1422,7 +1411,7 @@ def props_numeric_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # analytics over the full star schema, holistic window aggregates
 # =====================================================================
 
-from ..operators.custom_agg import windowed_quantiles, windowed_quantiles_approx  # noqa: E402
+from ..operators.custom_agg import windowed_quantiles_approx  # noqa: E402
 
 
 @_q(
@@ -3713,27 +3702,21 @@ SELECT q_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rnk FROM __rk WHERE rnk <=
 
 def _ivf_shared_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One IVF coarse quantizer (n_cells=8, 2 Lloyd iters, trained on
-    the deterministic 50% hash-sample of the null-cleaned embeddings)
-    persisted + memoized per (session, sf_dir) — ann_ivf_topk,
-    ann_ivf_quantized_topk and ann_ivf_pq_topk index with the SAME
-    codebook (their oracles already replay this identical sampled
-    training), so the Lloyd loop runs once per session instead of once
-    per index variant; the codebook is also broadcast-consumed twice
-    per query (corpus assignment + query probes), which the persist
-    collapses to one lineage run."""
+    the deterministic 50% hash-sample of the null-cleaned embeddings) —
+    ann_ivf_topk, ann_ivf_quantized_topk and ann_ivf_pq_topk index with
+    the SAME codebook (their oracles already replay this identical
+    sampled training).  This function fixes the training parameters;
+    ``kmeans_fit`` itself pins the codebook per (input hash, params), so
+    the Lloyd loop runs once per session instead of once per index
+    variant."""
     from ..operators.similarity import _drop_null_vec, kmeans_fit
 
-    def build() -> DataFrame:
-        # kmeans_fit already pins + localCheckpoints the codebook per
-        # (input hash, params); no extra persist layer needed here
-        return kmeans_fit(
-            _drop_null_vec(load_table(spark, sf_dir, "embeddings"), "embedding"),
-            n_cells=8,
-            train_iters=2,
-            train_fraction=0.5,
-        )
-
-    return _cached_canon(spark, sf_dir, "ivf_seeds_8x2_05", build)
+    return kmeans_fit(
+        _drop_null_vec(load_table(spark, sf_dir, "embeddings"), "embedding"),
+        n_cells=8,
+        train_iters=2,
+        train_fraction=0.5,
+    )
 
 
 def _pq_shared_book(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4272,31 +4255,21 @@ FROM __pos p JOIN __neg n USING (anchor_id)
 def embedding_triplet_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..operators.similarity import _as_double, _drop_null_vec, dot
+    from ..operators.similarity import _cos, _drop_null_vec, _with_vec
 
     emb = _drop_null_vec(load_table(spark, sf_dir, "embeddings"), "embedding")
-    a = (
-        emb.filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("anchor_id"),
-            F.col("label").alias("anchor_label"),
-            _as_double("embedding").alias("av"),
-        )
-        .withColumn("an", F.sqrt(dot(F.col("av"), F.col("av"))))
+    a = _with_vec(
+        emb.filter(F.col("vec_id") < 10),
+        "embedding",
+        "a",
+        F.col("vec_id").alias("anchor_id"),
+        F.col("label").alias("anchor_label"),
     )
-    v = emb.select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    ).withColumn("vn", F.sqrt(dot(F.col("v"), F.col("v"))))
+    v = _with_vec(emb, "embedding", "v", "vec_id", "label")
     s = (
         v.crossJoin(F.broadcast(a))
         .filter(F.col("vec_id") != F.col("anchor_id"))
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "vec_id",
-            "label",
-            F.round(dot(F.col("av"), F.col("v")) / (F.col("an") * F.col("vn")), 6).alias("cos"),
-        )
+        .select("anchor_id", "anchor_label", "vec_id", "label", _cos("a", "v").alias("cos"))
     )
     wp = Window.partitionBy("anchor_id").orderBy(F.col("cos").asc(), F.col("vec_id").asc())
     pos = (
@@ -5684,14 +5657,12 @@ FROM __oasg WHERE r = 1
     "Lloyd loop; map-only assignment, per-vector flag.",
 )
 def embedding_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import _best_cell_scored, _drop_null_vec, _pack, dot, kmeans_fit
+    from ..operators.similarity import _best_cell_scored, _drop_null_vec, _pack, _with_vec, kmeans_fit
 
     emb = _drop_null_vec(load_table(spark, sf_dir, "embeddings"), "embedding")
     seeds = kmeans_fit(emb, n_cells=8, train_iters=2)
-    v = emb.select(
-        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v_vec")
-    ).withColumn("v_norm", F.sqrt(dot(F.col("v_vec"), F.col("v_vec"))))
-    best = _best_cell_scored("v_vec", "v_norm")
+    v = _with_vec(emb, "embedding", "v", F.col("vec_id"))
+    best = _best_cell_scored()
     return (
         v.crossJoin(F.broadcast(_pack(seeds)))
         .select(F.col("vec_id"), best.alias("__b"))

@@ -188,7 +188,37 @@ def test_ann_index_relations_memo_managed(spark):
     q1 = quantize_embeddings(emb)
     q2 = quantize_embeddings(emb)
     assert q2 is q1
+    # one memo per artifact across the three registered IVF variants:
+    # one codebook pin (no second key for the same seeds) and one
+    # postings pin, because all three index through build_ivf_index
+    from flinkecuserbehavioranalysis_spark.plans.queries import QUERIES
+
     clear_cache()
+    for name in ("ann_ivf_topk", "ann_ivf_quantized_topk", "ann_ivf_pq_topk"):
+        QUERIES[name].fn(spark, SF_DIR)
+    keys = list(cache._entries)
+    assert sum("kmeans_seeds" in key for key in keys) == 1, keys
+    assert sum("ivf_postings" in key for key in keys) == 1, keys
+    assert not any("ivf_seeds_8x2_05" in key for key in keys), keys
+    clear_cache()
+
+
+def test_trained_pq_books_released_by_clear_cache(spark):
+    """pq_topk and ivf_pq_topk train their own codebooks when none is
+    passed; after clear_cache() Spark's CacheManager holds no plan from
+    either call."""
+    from pyspark.sql import functions as F
+
+    from flinkecuserbehavioranalysis_spark.operators.similarity import ivf_pq_topk, pq_topk
+
+    spark.catalog.clearCache()  # start from an empty CacheManager
+    clear_cache()
+    emb = load_table(spark, SF_DIR, "embeddings")
+    q = emb.filter(F.col("vec_id") < 3)
+    assert pq_topk(emb, q, m=4, k_codes=8, book=None).count() > 0
+    assert ivf_pq_topk(emb, q, m=4, k_codes=8, n_cells=4, book=None, seeds=None).count() > 0
+    clear_cache()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_daily_purchase_spine_empty_events(spark, tmp_path):

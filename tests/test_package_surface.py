@@ -11,6 +11,8 @@ live when either definition is referenced.
 Functions that only tests call are allowed only on ``KEEP``, each with
 its reason.  A ``KEEP`` entry must name an existing function that
 nothing else reaches, so the list cannot go stale.
+
+No package module imports a name it never uses.
 """
 
 from __future__ import annotations
@@ -111,3 +113,23 @@ def test_keep_list_names_only_otherwise_dead_functions():
     _, live = scan(keep=())
     stale = sorted(set(KEEP) & live)
     assert not stale, f"KEEP names functions that non-test code already calls: {stale}"
+
+
+def test_no_unused_imports():
+    """Every name a package module imports appears as a name somewhere
+    in that module; ``__init__.py`` re-exports are exempt."""
+    unused = []
+    for f in _py_files(PACKAGE):
+        if f.name == "__init__.py":
+            continue
+        tree = ast.parse(f.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for alias in node.names:
+                    name = (alias.asname or alias.name).split(".")[0]
+                    if name != "*" and name not in used:
+                        unused.append(f"{f.relative_to(ROOT)}:{node.lineno} {name}")
+    assert not unused, "unused imports:\n" + "\n".join(unused)

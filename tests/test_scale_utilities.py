@@ -263,6 +263,42 @@ def test_ivf_topk_agrees_with_brute_force(spark):
     assert len(approx_pairs & set(exact_cos)) > 0
 
 
+def test_repeated_query_id_changes_no_topk_result(spark):
+    """A query frame that repeats one row answers exactly like the same
+    frame without the repeat, for all six top-k variants: a repeated
+    query id is one query, so it neither returns a neighbor twice nor
+    takes a second probe slot."""
+    from flinkecuserbehavioranalysis_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_pq_topk,
+        ivf_quantized_topk,
+        ivf_topk,
+        pq_topk,
+        quantized_topk,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    q = emb.filter(F.col("vec_id") < 3)
+    repeated = q.unionByName(emb.filter(F.col("vec_id") == 1))
+    ivf = dict(n_cells=4, nprobe=2, k=500, train_iters=1)
+    pq = dict(m=4, k_codes=8)
+    variants = {
+        "brute_force_topk": lambda qs: brute_force_topk(emb, qs, k=500),
+        "ivf_topk/1": lambda qs: ivf_topk(emb, qs, corpus_probes=1, **ivf),
+        "ivf_topk/2": lambda qs: ivf_topk(emb, qs, corpus_probes=2, **ivf),
+        "quantized_topk": lambda qs: quantized_topk(emb, qs, k=500),
+        "ivf_quantized_topk": lambda qs: ivf_quantized_topk(emb, qs, **ivf),
+        "pq_topk": lambda qs: pq_topk(emb, qs, k=500, **pq),
+        "ivf_pq_topk": lambda qs: ivf_pq_topk(emb, qs, **ivf, **pq),
+    }
+    differ = []
+    for name, run in variants.items():
+        want = sorted(map(tuple, run(q).collect()))
+        if sorted(map(tuple, run(repeated).collect())) != want or not want:
+            differ.append(name)
+    assert not differ, differ
+
+
 def test_bucketed_neardup_cap_bounds_fat_bucket(spark):
     """One fat bucket must not go quadratic: max_bucket sub-buckets it
     (deterministic md5(vec_id) % ceil(size/cap)), pairs form only
