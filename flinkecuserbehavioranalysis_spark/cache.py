@@ -1,30 +1,27 @@
-"""Session-scoped persist lifecycle for memoized DataFrames.
+"""Session-scoped memo registry for DataFrames that several queries share.
 
-Several query families share one expensive intermediate (the LSH pair
+Some query families share one expensive intermediate (the LSH pair
 set, the canonical-id map, the PQ codebook, the lang-ID scored frame,
-the covariance cells) built once per (applicationId, sf_dir, family)
-and ``persist()``-ed so every family member reuses the materialized
-blocks.  Without lifecycle management those persists accumulate for
-the life of the session — fine for a single bench run, unbounded for
-a long-lived multi-tenant driver (round-4 verdict, "What's wrong" #1).
+the covariance cells).  It is built once per (applicationId, sf_dir,
+family) and every family member reuses the materialized blocks.  A
+frame earns a memo only when two or more registry queries read it;
+``tests/test_package_surface.py`` checks that for every ``pin`` site.
+A frame that one call reads several times takes a bare lazy
+``localCheckpoint`` instead: its blocks live as long as the call's
+plan references them, and no registry entry outlives the call.
 
-This module is that lifecycle: an LRU-capped registry with explicit
-``clear_cache()``.  Eviction unpersists the frame; a later request for
-the same key simply rebuilds (builds are deterministic), so eviction
-affects cost, never correctness.  ``global_rank``'s per-call
-range-partitioned shard (operators/ranking.py) registers here too, so
-chained ntile passes can't pile up cached partitions either.
+This module is that registry: an LRU capped at ``max_entries``, with
+an explicit ``clear_cache()``.  Eviction ``unpersist()``s a frame built
+with ``persist()`` and only drops the reference to a checkpointed one:
+``localCheckpoint`` blocks are not in Spark's CacheManager, so Spark's
+ContextCleaner frees them asynchronously once the frame is
+unreferenced.  A later request for an evicted key rebuilds (builds are
+deterministic), so eviction affects cost, never correctness.
 
-The LRU cap bounds executor storage to ``max_entries`` frames; the
-largest memoized frames are corpus-pair-set sized (≪ fact scale), so
-at 100 TB the cap translates to a fixed, small multiple of the dedup
-signature footprint, not of the corpus.  Measured at sf1: eight family
-queries hold 0.8 MB of cached blocks; ``clear_cache()`` releases every
-registry persist (BENCH_DIFF round-5 accounting).  One caveat:
-``localCheckpoint`` blocks (the components loop's materialization) are
-not synchronously unpersistable — dropping the evicted frame's
-reference lets Spark's ContextCleaner GC them, so they are bounded by
-the same cap, released asynchronously.
+The largest memoized frames are corpus-pair-set sized (far below fact
+scale), so the cap bounds executor storage to a small multiple of the
+dedup signature footprint, not of the corpus.  Measured at sf1: eight
+family queries hold 0.8 MB of cached blocks.
 """
 
 from __future__ import annotations
@@ -51,9 +48,8 @@ max_entries: int = DEFAULT_MAX_ENTRIES
 _entries: "OrderedDict[Hashable, DataFrame]" = OrderedDict()
 
 #: pin()/clear_cache() may be called from driver thread pools that
-#: overlap independent jobs (guide §2.6 — e.g. the RFM ntile passes);
-#: the registry mutations are guarded so concurrent registration can't
-#: corrupt the LRU order.  Builds run OUTSIDE the lock (they submit
+#: overlap independent jobs; the registry mutations are guarded so
+#: concurrent registration can't corrupt the LRU order.  Builds run OUTSIDE the lock (they submit
 #: Spark jobs); a racing duplicate build registers once, the loser is
 #: released.
 _lock = threading.Lock()
@@ -66,7 +62,7 @@ def _release(obj) -> None:
     # Lifecycle caveats (r12, ADVICE):
     # - localCheckpoint blocks are NOT freed by DataFrame.unpersist();
     #   dropping the registry reference here lets ContextCleaner GC them
-    #   asynchronously (bounded by the caps, released lazily).  On a
+    #   asynchronously (bounded by the cap, released lazily).  On a
     #   real cluster, lineage-truncated frames whose executor blocks are
     #   lost FAIL instead of recomputing — prefer reliable checkpoint()
     #   + setCheckpointDir there; acceptable for this container.
@@ -112,32 +108,6 @@ def pin(key: Hashable, build: Callable[[], DataFrame]) -> DataFrame:
     return df
 
 
-#: Lifecycle-only registrations (global_rank's per-call shard persists)
-#: have UNIQUE keys — they are never re-hit, only released.  Routing
-#: them through the LRU made every ranked query flush real memos out of
-#: the shared registry (measured r11: a full-registry sweep evicted the
-#: minhash family mid-sweep, dedup_incremental_flags 1.9 → 3.5 s).
-#: They get their own small FIFO instead: same eviction-unpersists +
-#: clear_cache() lifecycle, zero pressure on the memo LRU.
-TRANSIENT_MAX_ENTRIES = 8
-
-_transients: "OrderedDict[Hashable, DataFrame]" = OrderedDict()
-
-
-def pin_transient(key: Hashable, df: DataFrame) -> DataFrame:
-    """Register a per-call materialized frame for lifecycle management
-    only (FIFO-capped, released by clear_cache) — no memoization."""
-    evicted = []
-    with _lock:
-        _transients[key] = df
-        while len(_transients) > TRANSIENT_MAX_ENTRIES:
-            _, old = _transients.popitem(last=False)
-            evicted.append(old)
-    for old in evicted:
-        _release(old)
-    return df
-
-
 def clear_cache(spark=None) -> int:
     """Unpersist and drop every registered frame; with *spark* given,
     only frames whose key belongs to that application (keys are tuples
@@ -146,14 +116,12 @@ def clear_cache(spark=None) -> int:
     app = spark.sparkContext.applicationId if spark is not None else None
     released = 0
     with _lock:
-        frames = []
-        for reg in (_entries, _transients):
-            doomed = [
-                k
-                for k in reg
-                if app is None or (isinstance(k, tuple) and k and k[0] == app)
-            ]
-            frames.extend(reg.pop(k) for k in doomed)
+        doomed = [
+            k
+            for k in _entries
+            if app is None or (isinstance(k, tuple) and k and k[0] == app)
+        ]
+        frames = [_entries.pop(k) for k in doomed]
     for f in frames:
         _release(f)
         released += 1
@@ -161,8 +129,4 @@ def clear_cache(spark=None) -> int:
 
 
 def stats() -> dict:
-    return {
-        "entries": len(_entries),
-        "max_entries": max_entries,
-        "transients": len(_transients),
-    }
+    return {"entries": len(_entries), "max_entries": max_entries}

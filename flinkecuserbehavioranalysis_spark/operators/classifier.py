@@ -6,7 +6,7 @@ one (FastText-style filters in C4/CCNet/RefinedWeb are linear models
 over cheap text features).  Training such a model is an iterative
 aggregation — exactly the shape this engine already runs for k-means,
 PageRank and BPE: per-round, one partial-aggregated pass over a
-persisted map-only feature frame, with dimension-bounded driver state.
+checkpointed map-only feature frame, with dimension-bounded driver state.
 
 The classifier here is the BATCH PERCEPTRON on integer features:
 
@@ -21,7 +21,7 @@ summation-order free).  That is what lets a SQL oracle replay training
 round by round, the same discipline as ``kmeans_fit``'s decimal
 centroids (similarity.py) and ``bpe_learn_merges``' fold.
 
-Scale shape: the feature projection is map-only and persisted once;
+Scale shape: the feature projection is map-only and checkpointed once;
 each round is ONE aggregation to a single row (partial aggregates
 map-side, d+2 longs per partition crossing the wire).  Driver state is
 the (d+1)-vector w — dimension-bounded, never data-bounded (the PCA
@@ -79,30 +79,27 @@ def perceptron_curve(
         F.lit(1).cast("long").alias("__x0"),
         *[F.col(c).cast("long").alias(c) for c in feature_cols],
         F.col(label_col).cast("long").alias("__y"),
-    ).persist()
-    try:
-        w = [0] * len(feats)
-        curve: list[tuple[int, int, int]] = []
-        for r in range(rounds + 1):
-            dot = sum(
-                (F.lit(wi) * F.col(c) for wi, c in zip(w, feats)),
-                start=F.lit(0).cast("long"),
-            )
-            mis = (F.col("__y") * dot) <= 0
-            row = x.agg(
-                F.count(F.lit(1)).alias("n_tot"),
-                F.sum(F.when(mis, 1).otherwise(0)).alias("n_err"),
-                *[
-                    F.sum(F.when(mis, F.col("__y") * F.col(c))).alias(f"u{i}")
-                    for i, c in enumerate(feats)
-                ],
-            ).collect()[0]
-            curve.append((r, int(row["n_err"] or 0), int(row["n_tot"])))
-            if r < rounds:
-                w = [wi + int(row[f"u{i}"] or 0) for i, wi in enumerate(w)]
-        return curve, w
-    finally:
-        x.unpersist()
+    ).localCheckpoint()
+    w = [0] * len(feats)
+    curve: list[tuple[int, int, int]] = []
+    for r in range(rounds + 1):
+        dot = sum(
+            (F.lit(wi) * F.col(c) for wi, c in zip(w, feats)),
+            start=F.lit(0).cast("long"),
+        )
+        mis = (F.col("__y") * dot) <= 0
+        row = x.agg(
+            F.count(F.lit(1)).alias("n_tot"),
+            F.sum(F.when(mis, 1).otherwise(0)).alias("n_err"),
+            *[
+                F.sum(F.when(mis, F.col("__y") * F.col(c))).alias(f"u{i}")
+                for i, c in enumerate(feats)
+            ],
+        ).collect()[0]
+        curve.append((r, int(row["n_err"] or 0), int(row["n_tot"])))
+        if r < rounds:
+            w = [wi + int(row[f"u{i}"] or 0) for i, wi in enumerate(w)]
+    return curve, w
 
 
 def curve_frame(spark: SparkSession, curve: list[tuple[int, int, int]]) -> DataFrame:

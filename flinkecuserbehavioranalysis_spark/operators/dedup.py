@@ -1109,26 +1109,9 @@ def prefix_filter_pairs(
     jaccard)."""
 
     # three consumers (df counts, the ranking join, the verify arrays)
-    # read the distinct shingle relation — persist so the explode +
-    # distinct shuffle runs once.  Registered in the session frame
-    # cache (keyed by the doc plan's semantic hash) so repeat calls hit
-    # the memo and LRU eviction releases the blocks — an unmanaged
-    # .persist() here left one corpus-scale cached relation per
-    # invocation for the life of the session (round-8 advice #1).
-    from .. import cache as _frame_cache
-
-    sh_plan = shingles(docs, id_col, text_col, n)
-    sh = _frame_cache.pin(
-        (
-            docs.sparkSession.sparkContext.applicationId,
-            "prefix_filter_shingles",
-            docs.semanticHash(),
-            id_col,
-            text_col,
-            n,
-        ),
-        lambda: sh_plan.localCheckpoint(eager=False),
-    )
+    # read the distinct shingle relation — a lazy checkpoint runs the
+    # explode + distinct shuffle once per call.
+    sh = shingles(docs, id_col, text_col, n).localCheckpoint(eager=False)
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     w = Window.partitionBy(id_col).orderBy("__df", "sh")

@@ -55,10 +55,10 @@ def pagerank(
     Scale shape: each round is one join of the edge list with the
     (node, rank/degree) relation — both partitioned on the node id, so
     the shuffle is edge-sized — plus one dst-keyed partial-aggregated
-    sum.  The loop is UNROLLED lazily (no driver actions, no
-    checkpoint): fine for the handful of rounds rank scoring needs; for
-    tens of rounds insert ``localCheckpoint`` every ~5 like
-    ``duplicate_components`` documents."""
+    sum.  The loop is UNROLLED lazily (no driver actions): fine for
+    the handful of rounds rank scoring needs; for tens of rounds
+    insert ``localCheckpoint`` every ~5 like ``duplicate_components``
+    documents."""
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     e = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
     converge = tol is not None
@@ -70,31 +70,19 @@ def pagerank(
         # round + once for the init — without materialization each
         # reference re-runs the symmetrize+distinct shuffle (and
         # whatever lineage produced the edge list).  Both relations are
-        # edge-/node-sized (pair-set scale, not corpus scale), so
-        # caching them is the whole point of the unrolled formulation
-        # staying cheap.  A LAZY localCheckpoint (not .persist()) does
-        # the caching AND truncates the logical plan to a LogicalRDD:
-        # with .persist() each of the 3 rounds re-embedded the full
-        # upstream lineage (an LSH pipeline for the dedup graph), so
-        # plan construction + analysis cost more than execution
-        # (measured r11: warm build 1.8 s / exec 3.8 s at sf0.1).
-        # Laziness is preserved — nothing runs until the first action —
-        # and the frames are REGISTERED in the session frame cache
-        # (keyed by the edge plan's semantic hash) so (a) repeated
-        # calls over the same edge relation reuse the materialized
-        # blocks instead of stacking new ones and (b) LRU eviction
-        # drops them for the ContextCleaner — session-lifetime
-        # accumulation was round-8 advice #2.
-        from .. import cache as _frame_cache
-
-        app = edges.sparkSession.sparkContext.applicationId
-        sig = (app, "pagerank_sym_edges", edges.semanticHash(), src, dst)
-        e = _frame_cache.pin(sig, lambda e=e: e.localCheckpoint(eager=False))
-        deg = _frame_cache.pin(
-            (*sig[:2], "deg", *sig[2:]),
-            lambda e=e: e.groupBy("s")
+        # edge-/node-sized (pair-set scale, not corpus scale).  A LAZY
+        # localCheckpoint (not .persist()) does the caching AND
+        # truncates the logical plan to a LogicalRDD: with .persist()
+        # each of the 3 rounds re-embedded the full upstream lineage (an
+        # LSH pipeline for the dedup graph), so plan construction +
+        # analysis cost more than execution (measured r11: warm build
+        # 1.8 s / exec 3.8 s at sf0.1).  Nothing runs until the first
+        # action.
+        e = e.localCheckpoint(eager=False)
+        deg = (
+            e.groupBy("s")
             .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=False),
+            .localCheckpoint(eager=False)
         )
     n1 = deg.agg(F.count(F.lit(1)).alias("__n"))
     ranks = (
@@ -212,7 +200,7 @@ def kcore(
     Use case in a data pipeline: the 2-core of the near-dup pair graph
     separates DENSE template families (every member similar to every
     other — boilerplate factories, mirror rings) from transitive
-    CHAINS (A~B~C where A and C are not acutally alike): chains and
+    CHAINS (A~B~C where A and C are not actually alike): chains and
     pendant trees peel away, cores survive.  Cluster-size histograms
     cannot make that distinction; the core degree ranks how deep in
     the template family a document sits.

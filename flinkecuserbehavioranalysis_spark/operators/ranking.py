@@ -59,24 +59,17 @@ def global_rank(
     assert shard-count invariance with it)."""
     from pyspark.sql import Window
 
-    from .. import cache as _frame_cache
-
     ranged = (
         df.repartitionByRange(shards, *order)
         if shards is not None
         else df.repartitionByRange(*order)
     )
-    part = ranged.withColumn("__pid", F.spark_partition_id()).persist()
-    # Register the persisted shard with the session cache registry so
-    # chained callers (three ntile passes over a fact-scale relation)
-    # can't accumulate cached partitions for the whole session: the
-    # transient FIFO evicts old shards, and clear_cache() releases them
-    # all.  Keys are unique per call — this is lifecycle, not
-    # memoization, so it must NOT ride the memo LRU (r11: unique shard
-    # keys flushed real family memos out mid-sweep).
-    _frame_cache.pin_transient(
-        (df.sparkSession.sparkContext.applicationId, "__global_rank", id(part)),
-        part,
+    # the offsets collect and the ranked frame must read the SAME shard
+    # layout, so the shards are materialized once: the lazy checkpoint
+    # runs with the collect and the ranked frame reads its blocks.  No
+    # CacheManager entry is left behind; the blocks go with the frame.
+    part = ranged.withColumn("__pid", F.spark_partition_id()).localCheckpoint(
+        eager=False
     )
     offs = {
         r["__pid"]: r["n"]

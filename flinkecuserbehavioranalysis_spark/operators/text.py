@@ -424,7 +424,7 @@ def build_vocab(
       both the top-K heap and the id window into one fat partition, so
       the ranking AUTO-SHARDS via ``operators.ranking.global_rank``:
       range-partition the counts on (cnt desc, token asc) into *shards*
-      sorted shards (persisted once so both passes see identical
+      sorted shards (checkpointed once so both passes see identical
       partitioning), rank within each shard, then offset by the
       shard-count prefix sums (a *shards*-row driver aggregate).  Range partitioning totally
       orders the shards, so offset + local rank IS the global rank —
@@ -1071,49 +1071,25 @@ def dsir_weights(
     scored by one bucket-keyed join (broadcast-sized by construction)."""
     from ..functions.fixedpoint import ONE_Q12, with_log2_q12
 
-    # db feeds BOTH the bucket model and the per-doc scoring — without a
-    # persist the token explode + count shuffle runs twice.  Registered
-    # in the session frame cache so repeats are memo hits and LRU
-    # eviction releases the blocks (the graph.py/prefix-filter
-    # discipline).  Size bound: ≤ min(doc_tokens, n_buckets) rows per
-    # document, three int columns — the bucketing compresses the token
-    # stream by construction.  Keyed on the INPUT plan hash + the
-    # predicate's expression string + params (the _remapped_doc_bigrams
-    # discipline): the explode/count graph is built only on a miss.
-    from .. import cache as _frame_cache
-
-    app = docs.sparkSession.sparkContext.applicationId
-
-    def build_db() -> DataFrame:
-        toks = docs.select(
-            F.col(id_col),
-            target_pred.alias("__is_t"),
-            F.explode(
-                F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
-            ).alias("w"),
-        )
-        bucket = F.pmod(
-            F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10).cast("long"),
-            F.lit(n_buckets),
-        )
-        return (
-            toks.select(F.col(id_col), F.col("__is_t"), bucket.alias("b"))
-            .groupBy(id_col, "__is_t", "b")
-            .agg(F.count(F.lit(1)).cast("long").alias("k"))
-            .localCheckpoint(eager=False)
-        )
-
-    db = _frame_cache.pin(
-        (
-            app,
-            "dsir_doc_buckets",
-            docs.semanticHash(),
-            str(target_pred),
-            n_buckets,
-            id_col,
-            text_col,
-        ),
-        build_db,
+    # db feeds BOTH the bucket model and the per-doc scoring — a lazy
+    # checkpoint runs the token explode + count shuffle once per call.
+    # Size bound: ≤ min(doc_tokens, n_buckets) rows per document, three
+    # int columns — the bucketing compresses the token stream by
+    # construction.
+    toks = docs.select(
+        F.col(id_col),
+        target_pred.alias("__is_t"),
+        F.explode(F.filter(F.split(F.col(text_col), " "), lambda w: w != "")).alias("w"),
+    )
+    bucket = F.pmod(
+        F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10).cast("long"),
+        F.lit(n_buckets),
+    )
+    db = (
+        toks.select(F.col(id_col), F.col("__is_t"), bucket.alias("b"))
+        .groupBy(id_col, "__is_t", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("k"))
+        .localCheckpoint(eager=False)
     )
     feats = db.groupBy("b").agg(
         F.sum(F.when(F.col("__is_t"), F.col("k")).otherwise(0)).cast("long").alias("c_t"),

@@ -1089,7 +1089,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _doc_pair_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trigram inverted-index pair-intersection relation (df_max=64),
-    persisted and memoized per (session, sf_dir) — the shared core of
+    checkpointed and memoized per (session, sf_dir) — the shared core of
     dedup_ngram_jaccard and dedup_containment (each previously paid the
     shingle self-join independently; one relation serves both)."""
     from ..operators.dedup import _pair_intersections
@@ -1212,22 +1212,7 @@ WHERE {_COS_SQL.format(a='ea.v', b='eb.v')} >= 0.4
     "near-dups in tests/test_scale_utilities.py.",
 )
 def ann_cosine_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _emb_lsh_pairs(spark, sf_dir)
-
-
-def _emb_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SRP-LSH verified pair set at threshold 0.4, checkpointed and
-    memoized per (session, sf_dir); its one consumer is
-    ann_cosine_lsh_neardup, which returns it directly
-    (embedding_neardup_components builds from
-    ``cosine_lsh_dedup_edges`` instead, never the pair list)."""
-
-    def build() -> DataFrame:
-        return cosine_lsh_pairs(
-            load_table(spark, sf_dir, "embeddings"), threshold=0.4
-        ).localCheckpoint(eager=False)
-
-    return _cached_canon(spark, sf_dir, "emb_srp_04_pairs", build)
+    return cosine_lsh_pairs(load_table(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
 @_q(
@@ -1922,9 +1907,9 @@ from ..operators.dedup import canonicalize_duplicates  # noqa: E402
 #: propagation loop whose per-round convergence probe and localCheckpoint
 #: are Spark actions, so the LSH + propagation work executes inside the
 #: query-builder ``fn(spark, sf_dir)`` rather than at the caller's first
-#: action; (b) lazily-persisted intermediates (the lang-ID scored frame)
-#: where handing every dependent query the SAME persisted DataFrame lets
-#: the first action materialize the cache and the rest reuse it.  Either
+#: action; (b) lazily-checkpointed intermediates (the lang-ID scored
+#: frame) where handing every dependent query the SAME DataFrame lets the
+#: first action materialize the blocks and the rest reuse them.  Either
 #: way the memo converts a per-dependent-query cost into once per
 #: (session, sf_dir, family); keys include the Spark applicationId so a
 #: fresh driver process never sees stale frames.
@@ -2029,13 +2014,8 @@ def corpus_neardup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ok = load_table(spark, sf_dir, "documents").filter(quality_ok("text"))
 
-    def build() -> DataFrame:
-        pairs = lsh_verified_pairs(
-            ok, k=_MINHASH_K, bands=_MINHASH_BANDS, threshold=0.5
-        )
-        return canonicalize_duplicates(ok, pairs)
-
-    canon = _cached_canon(spark, sf_dir, "docs_ok_lsh_05", build)
+    pairs = lsh_verified_pairs(ok, k=_MINHASH_K, bands=_MINHASH_BANDS, threshold=0.5)
+    canon = canonicalize_duplicates(ok, pairs)
     return (
         ok.select("doc_id", "source")
         .join(canon, "doc_id")
@@ -2761,11 +2741,11 @@ def text_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lang_id_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trigram classifier's scored frame (doc_id, lang,
-    lang_guess_ngram, profile_hits), persisted and memoized per
+    lang_guess_ngram, profile_hits), checkpointed and memoized per
     (session, sf_dir) — text_lang_id_ngram and lang_id_confusion_matrix
     share ONE classifier run instead of each re-deriving the profile
-    and re-scoring the corpus.  persist() is lazy: whichever dependent
-    query acts first materializes the cache (corpus-sized but narrow —
+    and re-scoring the corpus.  The checkpoint is lazy: whichever
+    dependent query acts first materializes it (corpus-sized but narrow —
     4 scalar columns per doc)."""
 
     def build() -> DataFrame:
@@ -3277,26 +3257,22 @@ FROM embeddings e LEFT JOIN __lbl l USING (vec_id)
     "near-dup graph — SRP-LSH candidates -> exact-cosine verify (>= 0.4) -> hash-min "
     "label propagation -> full-corpus canonical-id assignment; the semantic-dedup "
     "analog of dedup_components' lexical pipeline. Eager by contract (iterative "
-    "propagation); memoized per (session, sf_dir).",
+    "propagation).",
 )
 def embedding_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import canonicalize_duplicates
     from ..operators.similarity import cosine_lsh_dedup_edges
 
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def build() -> DataFrame:
-        # connectivity edges, NOT the pair list: a duplicate flood's
-        # clique never materializes (members connect through their
-        # representative; identical components, linear edge count —
-        # the skew tier at sf0.1 measured the pair-list route at ~2.5×
-        # the clean runtime from the clique alone)
-        edges = cosine_lsh_dedup_edges(emb, threshold=0.4)
-        return canonicalize_duplicates(
-            emb, edges, id_col="vec_id", a_col="vec_a", b_col="vec_b"
-        )
-
-    return _cached_canon(spark, sf_dir, "emb_srp_04", build)
+    # connectivity edges, NOT the pair list: a duplicate flood's clique
+    # never materializes (members connect through their representative;
+    # identical components, linear edge count — the skew tier at sf0.1
+    # measured the pair-list route at ~2.5× the clean runtime from the
+    # clique alone)
+    edges = cosine_lsh_dedup_edges(emb, threshold=0.4)
+    return canonicalize_duplicates(
+        emb, edges, id_col="vec_id", a_col="vec_a", b_col="vec_b"
+    )
 
 
 from ..operators.patterns import funnel_conversion  # noqa: E402
@@ -3721,7 +3697,7 @@ def _ivf_shared_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_shared_book(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One PQ codebook (dim=64, m=32, k=32, 2 Lloyd iters, trained on
-    the deterministic 50% hash-sample) persisted + memoized per
+    the deterministic 50% hash-sample) checkpointed + memoized per
     (session, sf_dir) — ann_pq_topk and ann_ivf_pq_topk index with the
     SAME book, so the joint sub-space training runs once per session
     (and both oracles replay the identical sampled training)."""
@@ -3948,7 +3924,7 @@ from ..operators.text import hashed_vectorize  # noqa: E402
 
 
 def _hashed_doc_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hashing-trick document vectors (dim=16), persisted and
+    """The hashing-trick document vectors (dim=16), checkpointed and
     memoized per (session, sf_dir) — shared by text_hashed_vectors,
     text_topic_clusters and text_ann_topk, and materialized ONCE even
     within a single plan (text_ann_topk's corpus and probe sides both
@@ -4328,7 +4304,7 @@ GROUP BY 1, 2
     "Extension (model evaluation): the trigram language-ID classifier's confusion matrix "
     "— (true, predicted) doc counts over the full corpus; the quality gate an in-engine "
     "classifier ships with (precision/recall derive directly from these cells). Shares "
-    "text_lang_id_ngram's persisted scored frame — one classifier run per session.",
+    "text_lang_id_ngram's memoized scored frame — one classifier run per session.",
 )
 def lang_id_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _lang_id_scored(spark, sf_dir)
@@ -4578,9 +4554,8 @@ def _semdedup_cells(n: int) -> int:
     "both engines — n counts the CONTRACT-VALID vectors (NULL/non-finite/insane rows "
     "excluded) on the Spark side exactly as the oracle's scalar subquery counts the "
     "filtered __et relation, so a corrupt-vector corpus straddling a 500-row boundary "
-    "can't train different codebooks on the two engines (round-6 ADVICE).  The 1-row "
-    "count is memoized per (session, sf_dir) through the session frame cache, so "
-    "repeated invocations cost zero extra jobs.  Per-cluster size — and the "
+    "can't train different codebooks on the two engines (round-6 ADVICE); the count "
+    "is one eager 1-row job per call.  Per-cluster size — and the "
     "within-cluster quadratic term — stays constant as the corpus grows; the "
     "fixed-cell variant measured super-linear at 30x (BENCH_DIFF round-5).",
 )
@@ -4588,11 +4563,7 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _drop_null_vec, semantic_dedup
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # The memo value is a plain int; cache._release tolerates non-frames.
-    n_valid = _cached_canon(
-        spark, sf_dir, "semdedup_valid_count",
-        lambda: _drop_null_vec(emb, "embedding").count(),
-    )
+    n_valid = _drop_null_vec(emb, "embedding").count()
     return semantic_dedup(emb, n_cells=_semdedup_cells(n_valid), train_iters=2, tau=0.4)
 
 
@@ -6240,13 +6211,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thread pool (guide §2.6 — jobs back-fill each other's tails).
     # Bucket values are unchanged: same input ordering per dimension,
     # same NTILE arithmetic; the joins below are keyed on the customer.
-    # r12 (ADVICE): the eager checkpoint registers in the transient FIFO
-    # so clear_cache()/eviction governs its blocks' lifetime instead of
-    # waiting on GC + ContextCleaner (unique key — lifecycle, not memo).
     c = c.localCheckpoint(eager=True)
-    _frame_cache.pin_transient(
-        (spark.sparkContext.applicationId, "__rfm_cust_agg", id(c)), c
-    )
 
     def bucketize(dim: str, colname: str) -> DataFrame:
         return global_ntile(
@@ -9737,7 +9702,7 @@ def _perceptron_shared(spark: SparkSession, sf_dir: str):
     "Extension (iterative algorithm #5: in-engine model TRAINING): a batch perceptron "
     "learns the rule-based quality gate from integer text features (n_words, n_chars, "
     "n_stopwords + bias) — 3 training rounds, each ONE partial-aggregated pass over a "
-    "persisted map-only feature frame collecting d+2 longs; weights are int64 so the "
+    "checkpointed map-only feature frame collecting d+2 longs; weights are int64 so the "
     "whole curve is bit-identical in any engine/partitioning and the oracle replays "
     "training round by round.  Emits (round, n_errors, n_total, error_rate) for rounds "
     "0..3 — the convergence curve of the learned FastText-style quality filter.",
@@ -11528,21 +11493,17 @@ SELECT doc_id, core_degree FROM __fin
     "rings, boilerplate factories — every member similar to every other) from "
     "transitive near-dup CHAINS that peel away; core degree ranks how deep in the "
     "family a document sits, a distinction cluster-size histograms cannot make.  "
-    "Each round is one degree aggregation + two node-keyed semi-joins, per-round "
-    "relations pinned in the session frame cache (operators/graph.kcore).  Reuses "
-    "the session-shared pair set.",
+    "Each round is one degree aggregation + two node-keyed semi-joins, each round's "
+    "edge set materialized by an eager localCheckpoint (operators/graph.kcore).  "
+    "Reuses the session-shared pair set.",
 )
 def dedup_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import kcore
 
-    def build() -> DataFrame:
-        # eager by contract (per-round localCheckpoint) — memoized per
-        # (session, sf_dir) so repeated calls don't re-run the peel
-        return kcore(
-            _doc_lsh_pairs(spark, sf_dir), "doc_a", "doc_b", k=2, rounds=4
-        ).select(F.col("id").alias("doc_id"), "core_degree")
-
-    return _cached_canon(spark, sf_dir, "dedup_kcore_members", build)
+    # eager by contract (per-round localCheckpoint)
+    return kcore(_doc_lsh_pairs(spark, sf_dir), "doc_a", "doc_b", k=2, rounds=4).select(
+        F.col("id").alias("doc_id"), "core_degree"
+    )
 
 
 @_q(

@@ -109,45 +109,75 @@ def test_second_sf_dir_does_not_double_storage(spark):
         clear_cache()
 
 
-def test_pagerank_persists_are_memo_managed(spark):
-    """pagerank's fixed-round e/deg persists register in the session
-    frame cache keyed by the edge plan's semantic hash: a repeat call
-    over the same edges is a memo HIT (no new cached relations), and
-    clear_cache() releases the blocks (round-8 advice #2)."""
+def _pagerank(spark):
     from flinkecuserbehavioranalysis_spark.operators.graph import pagerank
 
-    clear_cache()
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 5)], ["src", "dst"]
-    )
-    before = cache.stats()["entries"]
-    r1 = pagerank(edges, iters=2)
-    r1.count()
-    grew = cache.stats()["entries"] - before
-    assert grew == 2  # symmetrized edges + degrees, exactly once
-    r2 = pagerank(edges, iters=2)
-    assert cache.stats()["entries"] - before == 2  # memo hit, no growth
-    assert sorted(map(tuple, r1.collect())) == sorted(map(tuple, r2.collect()))
-    base = _n_persisted(spark)
-    clear_cache()
-    assert _n_persisted(spark) <= base
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (4, 5)], ["src", "dst"])
+    return pagerank(edges, iters=2)
 
 
-def test_prefix_filter_shingles_memo_managed(spark):
-    """prefix_filter_pairs' corpus-scale shingle persist goes through
-    the frame cache: repeat calls don't stack session-lifetime cached
-    relations (round-8 advice #1)."""
+def _prefix_filter_pairs(spark):
     from flinkecuserbehavioranalysis_spark.operators.dedup import prefix_filter_pairs
 
+    return prefix_filter_pairs(load_table(spark, SF_DIR, "documents"), threshold=0.75)
+
+
+def _global_rank(spark):
+    from pyspark.sql import functions as F
+
+    from flinkecuserbehavioranalysis_spark.operators.ranking import global_rank
+
+    orders = load_table(spark, SF_DIR, "orders")
+    return global_rank(orders, [F.col("o_totalprice").desc(), F.col("o_orderkey")])[0]
+
+
+def _kmeans_fit(spark):
+    from flinkecuserbehavioranalysis_spark.operators.similarity import kmeans_fit
+
+    return kmeans_fit(load_table(spark, SF_DIR, "embeddings"), n_cells=4, train_iters=2)
+
+
+def _perceptron_curve(spark):
+    from pyspark.sql import functions as F
+
+    from flinkecuserbehavioranalysis_spark.operators.classifier import perceptron_curve
+
+    ev = load_table(spark, SF_DIR, "events").select(
+        (F.col("event_id") % 7).cast("int").alias("x"),
+        F.when(F.col("event_id") % 2 == 0, 1).otherwise(-1).alias("y"),
+    )
+    return perceptron_curve(ev, ["x"], "y", rounds=2)
+
+
+@pytest.mark.parametrize(
+    "run, memos",
+    [
+        (_pagerank, 0),
+        (_prefix_filter_pairs, 0),
+        (_global_rank, 0),
+        (_kmeans_fit, 1),  # the trained codebook, shared by seven queries
+        (_perceptron_curve, 0),
+    ],
+    ids=["pagerank", "prefix_filter_pairs", "global_rank", "kmeans_fit", "perceptron_curve"],
+)
+def test_in_call_reuse_leaves_no_cached_plan(spark, run, memos):
+    """A frame read several times within one call is materialized for
+    that call only: two calls return equal rows, the memo registry grows
+    by the operator's shared memos alone, and Spark's CacheManager holds
+    nothing afterwards, with no clear_cache() in between."""
     clear_cache()
-    docs = load_table(spark, SF_DIR, "documents")
+    spark.catalog.clearCache()
     before = cache.stats()["entries"]
-    out1 = prefix_filter_pairs(docs, threshold=0.75)
-    out1.count()
-    assert cache.stats()["entries"] - before == 1
-    out2 = prefix_filter_pairs(docs, threshold=0.75)
-    assert cache.stats()["entries"] - before == 1  # same semantic key → hit
-    assert out1.count() == out2.count()
+
+    def rows():
+        out = run(spark)
+        return out if isinstance(out, tuple) else sorted(map(tuple, out.collect()))
+
+    first = rows()
+    assert first
+    assert rows() == first
+    assert cache.stats()["entries"] == before + memos
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     clear_cache()
 
 

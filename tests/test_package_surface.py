@@ -13,6 +13,12 @@ its reason.  A ``KEEP`` entry must name an existing function that
 nothing else reaches, so the list cannot go stale.
 
 No package module imports a name it never uses.
+
+A memo earns its registry entry: every ``pin``/``_cached_canon`` call
+is reached by at least two registry queries, except the streaming
+replays on ``ONE_CONSUMER_MEMOS``.  No package code calls
+``.persist()``; a frame read several times within one call takes a
+``localCheckpoint``, which leaves nothing in Spark's CacheManager.
 """
 
 from __future__ import annotations
@@ -43,6 +49,19 @@ KEEP = {
     "apply_merges": "test reference twin of bpe_train_curve's segmentation",
     "log2_q12_py": "test reference twin of the log2 fold",
     "run_bounded": "harness: runs a streaming twin to completion",
+}
+
+#: Memo sites allowed a single registry consumer, by the function that
+#: holds the call.  Each replay memoizes its own result; deleting them
+#: waits on cheap cold replays.
+ONE_CONSUMER_MEMOS = {
+    f"streaming_{name}_replay": "ROADMAP direction 1"
+    for name in (
+        "asof", "blacklist", "cep", "cep_negation", "dedup", "fail_burst",
+        "funnel", "last_touch", "login_fail", "not_followed_by", "one_or_more",
+        "order_timeout", "pattern_sequence", "pv_count", "session",
+        "sessionized_stats", "url_dedup", "value_spike", "winnow_dedup",
+    )
 }
 
 
@@ -84,6 +103,11 @@ def scan(keep=KEEP) -> tuple[dict[str, list[str]], set[str]]:
     for rel in NON_TEST_CALLERS:
         for f in _py_files(rel):
             roots |= _names(ast.parse(f.read_text()))
+    return defs, _reach(bodies, roots)
+
+
+def _reach(bodies: dict[str, list[ast.AST]], roots) -> set[str]:
+    """The names in *bodies* reachable from *roots* by name reference."""
     live: set[str] = set()
     todo = [n for n in roots if n in bodies]
     while todo:
@@ -92,7 +116,7 @@ def scan(keep=KEEP) -> tuple[dict[str, list[str]], set[str]]:
             live.add(name)
             for body in bodies[name]:
                 todo.extend(n for n in _names(body) if n in bodies and n not in live)
-    return defs, live
+    return live
 
 
 def test_every_public_function_has_a_non_test_caller():
@@ -133,3 +157,58 @@ def test_no_unused_imports():
                     if name != "*" and name not in used:
                         unused.append(f"{f.relative_to(ROOT)}:{node.lineno} {name}")
     assert not unused, "unused imports:\n" + "\n".join(unused)
+
+
+def _called(call: ast.Call) -> str | None:
+    fn = call.func
+    return fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+
+
+def memo_sites() -> list[tuple[str, str, list[str]]]:
+    """(function, "path:line", consumers) for every ``pin`` or
+    ``_cached_canon`` call in a top-level package function; consumers
+    are the registry queries whose function reaches it by name."""
+    bodies: dict[str, list[ast.AST]] = {}
+    queries: dict[str, str] = {}
+    calls = []
+    for f in _py_files(PACKAGE):
+        for node in ast.parse(f.read_text()).body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            bodies.setdefault(node.name, []).append(node)
+            for d in node.decorator_list:
+                if isinstance(d, ast.Call) and _called(d) == "_q":
+                    queries[d.args[0].value] = node.name
+            if node.name == "_cached_canon":  # the memo wrapper itself
+                continue
+            for c in ast.walk(node):
+                if isinstance(c, ast.Call) and _called(c) in ("pin", "_cached_canon"):
+                    calls.append((node.name, f"{f.relative_to(ROOT)}:{c.lineno}"))
+    reach = {query: _reach(bodies, [fn]) for query, fn in queries.items()}
+    return [
+        (fn, loc, sorted(q for q, live in reach.items() if fn in live))
+        for fn, loc in calls
+    ]
+
+
+def test_every_memo_has_two_registry_consumers():
+    sites = memo_sites()
+    lonely = sorted(
+        f"{loc} {fn} <- {consumers}"
+        for fn, loc, consumers in sites
+        if len(consumers) < 2 and fn not in ONE_CONSUMER_MEMOS
+    )
+    assert not lonely, "memos with fewer than two registry consumers:\n" + "\n".join(lonely)
+    allowed = {fn for fn, _, consumers in sites if len(consumers) < 2}
+    stale = sorted(set(ONE_CONSUMER_MEMOS) - allowed)
+    assert not stale, f"ONE_CONSUMER_MEMOS names no single-consumer memo: {stale}"
+
+
+def test_no_persist_in_package():
+    found = [
+        f"{f.relative_to(ROOT)}:{n.lineno}"
+        for f in _py_files(PACKAGE)
+        for n in ast.walk(ast.parse(f.read_text()))
+        if isinstance(n, ast.Call) and _called(n) == "persist"
+    ]
+    assert not found, "persist() calls in package code:\n" + "\n".join(found)
