@@ -702,26 +702,28 @@ def _remapped_doc_bigrams(
     below the cut remap to *unk*; ``min_count <= 1`` disables it).
 
     Shape: the doc→bigram explode feeds ONE (prev,cur,id) count shuffle;
-    the raw relation is PINNED in the session frame cache (it feeds the
-    rare-vocab derivation, the model build and the per-doc scoring —
-    without the persist the corpus-scale explode+shuffle runs once per
-    branch; ReusedExchange does not fire across the remap join's
-    subtrees, measured).  Unigram counts for the cut come WITHOUT a
-    second corpus pass: a token at position i of an n-token doc appears
-    as `prev` iff i < n and is the doc-final token iff i = n, so
-    c(w) = Σ k over rows with prev = w  +  #docs ending in w — one
-    model-sized aggregate plus a one-row-per-doc finals scan.  The RARE
-    set (the minimal carrier: only tokens the remap touches) is
-    left-joined twice against the doc-distinct-bigram relation, never
-    the raw token stream, with NO re-aggregation — downstream groupBys
-    absorb collapsed duplicates exactly (sums over remapped keys are
-    invariant to pre-grouping).  The remapped relation is pinned too
-    (read by model build + scoring).  Size bound for both pins: ≤ one
-    row per distinct (doc, prev, cur) triple, four narrow columns; the
-    count shuffle compresses the bigram stream by construction, and
-    persist spills to disk past the memory fraction.  Neither vocab
-    relation is forced broadcast: on a raw crawl the hapax tail can
-    exceed the broadcast budget, and AQE picks broadcast when it fits."""
+    the raw relation is PINNED in the session frame cache as a lazy
+    ``localCheckpoint`` (it feeds the rare-vocab derivation, the model
+    build and the per-doc scoring — without the pin the corpus-scale
+    explode+shuffle runs once per branch; ReusedExchange does not fire
+    across the remap join's subtrees, measured).  Unigram counts for the
+    cut come WITHOUT a second corpus pass: a token at position i of an
+    n-token doc appears as `prev` iff i < n and is the doc-final token
+    iff i = n, so c(w) = Σ k over rows with prev = w  +  #docs ending in
+    w — one model-sized aggregate plus a one-row-per-doc finals
+    scan.  The RARE set (the minimal carrier: only tokens the remap
+    touches) is left-joined twice against the doc-distinct-bigram
+    relation, never the raw token stream, with NO re-aggregation —
+    downstream groupBys absorb collapsed duplicates exactly (sums over
+    remapped keys are invariant to pre-grouping).  The remapped relation
+    is pinned too (read by model build + scoring).  Size bound for both
+    pins: ≤ one row per distinct (doc, prev, cur) triple, four narrow
+    columns; the count shuffle compresses the bigram stream by
+    construction.  Both pins are checkpoint blocks held by the block
+    manager, which spills them to disk under memory pressure; they leave
+    nothing in Spark's CacheManager.  Neither vocab relation is forced
+    broadcast: on a raw crawl the hapax tail can exceed the broadcast
+    budget, and AQE picks broadcast when it fits."""
     from .. import cache as _frame_cache
 
     # pin keys carry the INPUT plan's semantic hash (docs is a cheap

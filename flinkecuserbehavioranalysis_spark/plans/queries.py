@@ -8983,9 +8983,10 @@ def event_next_order_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded file replay (availableNow) and returns the memory-sink table
 # as an ordinary DataFrame — so the driver's oracle gate hashes output
 # that really flowed through the streaming state store, not the batch
-# twin.  Eager by contract (like the iterative dedup/k-means queries);
-# the replay result is memoized per (session, sf_dir) so repeated fn
-# calls (bench reps, plan audit) replay once.
+# twin.  Eager by contract (like the iterative dedup/k-means queries)
+# and not memoized: each fn call replays (the keyed kernels run on the
+# bucketed runtime of streaming/stateful.py, so a cold replay is cheap),
+# and the replay's memory-sink view is dropped before fn returns.
 #
 # Replay domain (degenerate-tier contract, probed on all eight tiers):
 # the stateful kernels process KEYED, STAMPED, kernel-representable
@@ -9040,15 +9041,12 @@ def streaming_login_fail_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import read_events_stream, run_bounded_df
     from ..streaming.stateful import streaming_login_fail
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(F.col("user_id").isNotNull() & _replay_ts_ok())
-            .select("user_id", "event_type", "ts", "event_id")
-        )
-        return run_bounded_df(streaming_login_fail(stream, max_gap_seconds=3600.0))
-
-    return _cached_canon(spark, sf_dir, "streaming_login_fail_replay", build)
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(F.col("user_id").isNotNull() & _replay_ts_ok())
+        .select("user_id", "event_type", "ts", "event_id")
+    )
+    return run_bounded_df(streaming_login_fail(stream, max_gap_seconds=3600.0))
 
 
 @_q(
@@ -9074,25 +9072,22 @@ def streaming_blacklist_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import read_events_stream, run_bounded_df
     from ..streaming.stateful import streaming_blacklist
 
-    def build() -> DataFrame:
-        # event_id >= 0 keeps the derived ad_id key inside the replay
-        # domain: a NULL event_id would put a NULL key in front of the
-        # kernel, and pmod vs the oracle's signed % diverge on negative
-        # ids ({0,1} vs {-1,0,1}) — both filtered on BOTH sides
-        # (round-7 advice), matching the other replays' discipline.
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(
-                F.col("user_id").isNotNull()
-                & F.col("event_id").isNotNull()
-                & (F.col("event_id") >= 0)
-                & _replay_ts_ok()
-            )
-            .select("user_id", F.pmod("event_id", F.lit(2)).alias("ad_id"), "ts")
+    # event_id >= 0 keeps the derived ad_id key inside the replay
+    # domain: a NULL event_id would put a NULL key in front of the
+    # kernel, and pmod vs the oracle's signed % diverge on negative
+    # ids ({0,1} vs {-1,0,1}) — both filtered on BOTH sides
+    # (round-7 advice), matching the other replays' discipline.
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(
+            F.col("user_id").isNotNull()
+            & F.col("event_id").isNotNull()
+            & (F.col("event_id") >= 0)
+            & _replay_ts_ok()
         )
-        return run_bounded_df(streaming_blacklist(stream, threshold=1))
-
-    return _cached_canon(spark, sf_dir, "streaming_blacklist_replay", build)
+        .select("user_id", F.pmod("event_id", F.lit(2)).alias("ad_id"), "ts")
+    )
+    return run_bounded_df(streaming_blacklist(stream, threshold=1))
 
 
 @_q(
@@ -9137,26 +9132,23 @@ def streaming_order_timeout_replay(spark: SparkSession, sf_dir: str) -> DataFram
     from ..streaming.jobs import read_events_stream, run_bounded_df
     from ..streaming.stateful import streaming_order_timeout
 
-    def build() -> DataFrame:
-        o_stream = read_events_stream(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("order_id"),
-            F.lit("create").alias("event_type"),
-            F.col("o_orderdate").alias("ts"),
-        )
-        l_stream = read_events_stream(spark, sf_dir, "lineitem").select(
-            F.col("l_orderkey").alias("order_id"),
-            F.lit("pay").alias("event_type"),
-            F.col("l_shipdate").alias("ts"),
-        )
-        oe = (
-            o_stream.unionByName(l_stream)
-            .where(F.col("order_id").isNotNull() & _replay_ts_ok())
-        )
-        return run_bounded_df(
-            streaming_order_timeout(oe, timeout_seconds=30 * DAY)
-        )
-
-    return _cached_canon(spark, sf_dir, "streaming_order_timeout_replay", build)
+    o_stream = read_events_stream(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("order_id"),
+        F.lit("create").alias("event_type"),
+        F.col("o_orderdate").alias("ts"),
+    )
+    l_stream = read_events_stream(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("order_id"),
+        F.lit("pay").alias("event_type"),
+        F.col("l_shipdate").alias("ts"),
+    )
+    oe = (
+        o_stream.unionByName(l_stream)
+        .where(F.col("order_id").isNotNull() & _replay_ts_ok())
+    )
+    return run_bounded_df(
+        streaming_order_timeout(oe, timeout_seconds=30 * DAY)
+    )
 
 
 @_q(
@@ -9202,17 +9194,14 @@ def streaming_fail_burst_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import read_events_stream, run_bounded_df
     from ..streaming.stateful import streaming_fail_burst
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(F.col("user_id").isNotNull() & _replay_ts_ok())
-            .select("user_id", "event_type", "ts", "event_id")
-        )
-        return run_bounded_df(
-            streaming_fail_burst(stream, window_seconds=3600.0, min_fails=2)
-        )
-
-    return _cached_canon(spark, sf_dir, "streaming_fail_burst_replay", build)
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(F.col("user_id").isNotNull() & _replay_ts_ok())
+        .select("user_id", "event_type", "ts", "event_id")
+    )
+    return run_bounded_df(
+        streaming_fail_burst(stream, window_seconds=3600.0, min_fails=2)
+    )
 
 
 @_q(
@@ -9231,17 +9220,14 @@ WHERE ts IS NOT NULL AND epoch(ts) > 0 AND epoch(ts) < 9200000000
 def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import read_events_stream, run_bounded_df, streaming_dedup
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(_replay_ts_ok())
-            .select("user_id", "event_type", "ts")
-        )
-        return run_bounded_df(
-            streaming_dedup(stream, ["user_id", "event_type"], watermark="90 days")
-        ).select("user_id", "event_type")
-
-    return _cached_canon(spark, sf_dir, "streaming_dedup_replay", build)
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(_replay_ts_ok())
+        .select("user_id", "event_type", "ts")
+    )
+    return run_bounded_df(
+        streaming_dedup(stream, ["user_id", "event_type"], watermark="90 days")
+    ).select("user_id", "event_type")
 
 
 @_q(
@@ -9270,13 +9256,10 @@ def streaming_pv_count_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_windowed_count,
     )
 
-    def build() -> DataFrame:
-        stream = read_events_stream(spark, sf_dir).filter(
-            F.col("event_type") == "view"
-        )
-        return run_bounded_df(streaming_windowed_count(stream, size="1 hour"))
-
-    return _cached_canon(spark, sf_dir, "streaming_pv_count_replay", build)
+    stream = read_events_stream(spark, sf_dir).filter(
+        F.col("event_type") == "view"
+    )
+    return run_bounded_df(streaming_windowed_count(stream, size="1 hour"))
 
 
 @_q(
@@ -9326,13 +9309,10 @@ def streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_session_window,
     )
 
-    def build() -> DataFrame:
-        stream = read_events_stream(spark, sf_dir).select("user_id", "ts")
-        return run_bounded_df(
-            streaming_session_window(stream, gap="30 minutes")
-        )
-
-    return _cached_canon(spark, sf_dir, "streaming_session_replay", build)
+    stream = read_events_stream(spark, sf_dir).select("user_id", "ts")
+    return run_bounded_df(
+        streaming_session_window(stream, gap="30 minutes")
+    )
 
 
 @_q(
@@ -9388,29 +9368,26 @@ def streaming_cep_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.cep import match_pattern_stream
     from ..streaming.jobs import read_events_stream, run_bounded_df
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(
-                F.col("user_id").isNotNull()
-                & F.col("event_id").isNotNull()
-                & _replay_ts_ok()
-            )
-            .select("user_id", "event_type", "ts", "event_id")
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(
+            F.col("user_id").isNotNull()
+            & F.col("event_id").isNotNull()
+            & _replay_ts_ok()
         )
-        steps = [
-            PatternStep(F.col("event_type") == "view"),
-            PatternStep(F.col("event_type") == "click", optional=True),
-            PatternStep(F.col("event_type") == "error", negated=True),
-            PatternStep(F.col("event_type") == "purchase"),
-        ]
-        return run_bounded_df(
-            match_pattern_stream(
-                stream, "user_id", "ts", steps, 3600.0, tiebreak_col="event_id"
-            )
+        .select("user_id", "event_type", "ts", "event_id")
+    )
+    steps = [
+        PatternStep(F.col("event_type") == "view"),
+        PatternStep(F.col("event_type") == "click", optional=True),
+        PatternStep(F.col("event_type") == "error", negated=True),
+        PatternStep(F.col("event_type") == "purchase"),
+    ]
+    return run_bounded_df(
+        match_pattern_stream(
+            stream, "user_id", "ts", steps, 3600.0, tiebreak_col="event_id"
         )
-
-    return _cached_canon(spark, sf_dir, "streaming_cep_replay", build)
+    )
 
 
 @_q(
@@ -9445,21 +9422,18 @@ def streaming_cep_negation_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..streaming.cep import match_pattern_stream
     from ..streaming.jobs import read_events_stream, run_bounded_df
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(F.col("user_id").isNotNull() & _replay_ts_ok())
-            .select("user_id", "event_type", "ts")
-        )
-        steps = [
-            PatternStep(F.col("event_type") == "view"),
-            PatternStep(F.col("event_type") == "purchase", negated=True),
-        ]
-        return run_bounded_df(
-            match_pattern_stream(stream, "user_id", "ts", steps, 900.0)
-        )
-
-    return _cached_canon(spark, sf_dir, "streaming_cep_negation_replay", build)
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(F.col("user_id").isNotNull() & _replay_ts_ok())
+        .select("user_id", "event_type", "ts")
+    )
+    steps = [
+        PatternStep(F.col("event_type") == "view"),
+        PatternStep(F.col("event_type") == "purchase", negated=True),
+    ]
+    return run_bounded_df(
+        match_pattern_stream(stream, "user_id", "ts", steps, 900.0)
+    )
 
 
 @_q(
@@ -9496,19 +9470,16 @@ def streaming_last_touch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import read_events_stream, run_bounded_df
     from ..streaming.stateful import streaming_last_touch
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(
-                F.col("user_id").isNotNull()
-                & F.col("event_id").isNotNull()
-                & _replay_ts_ok()
-            )
-            .select("user_id", "ts", "event_type", "value", "event_id")
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(
+            F.col("user_id").isNotNull()
+            & F.col("event_id").isNotNull()
+            & _replay_ts_ok()
         )
-        return run_bounded_df(streaming_last_touch(stream))
-
-    return _cached_canon(spark, sf_dir, "streaming_last_touch_replay", build)
+        .select("user_id", "ts", "event_type", "value", "event_id")
+    )
+    return run_bounded_df(streaming_last_touch(stream))
 
 
 @_q(
@@ -9545,70 +9516,67 @@ def streaming_asof_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import read_events_stream, run_bounded_df
     from ..streaming.stateful import streaming_as_of_enrich
 
-    def build() -> DataFrame:
-        import os
+    import os
 
-        orders = load_table(spark, sf_dir, "orders").where(
-            F.col("o_custkey").isNotNull()
-            & F.col("o_orderkey").isNotNull()
-            & _replay_ts_ok("o_orderdate")
+    orders = load_table(spark, sf_dir, "orders").where(
+        F.col("o_custkey").isNotNull()
+        & F.col("o_orderkey").isNotNull()
+        & _replay_ts_ok("o_orderdate")
+    )
+    rt = orders.groupBy(
+        F.col("o_custkey").alias("user_id"),
+        F.col("o_orderdate").alias("ts"),
+    ).agg(F.max("o_orderkey").alias("last_order_id"))
+    scratch = os.path.join(
+        "/tmp/spark_graft_replay_inputs",
+        os.path.basename(os.path.normpath(sf_dir)),
+        "orders_asof",
+    )
+    # coalesce(1) is a REPLAY-scale choice, not the operator's scale
+    # posture: one file -> one availableNow micro-batch -> the
+    # kernel's in-batch (ts, __tag) sort supplies the global time
+    # order a production feed gets from per-key Kafka log order.
+    # At fact scale the kernel itself needs no single file — state
+    # is one slot per key and input partitions by the group key.
+    rt.coalesce(1).write.mode("overwrite").parquet(scratch)
+    r_stream = (
+        spark.readStream.schema(rt.schema)
+        .parquet(scratch)
+        .selectExpr(
+            "user_id",
+            "ts",
+            "CAST(0 AS INT) __tag",
+            "CAST(NULL AS LONG) event_id",
+            "last_order_id",
+            "CAST(ts AS LONG) last_order_ts",
         )
-        rt = orders.groupBy(
-            F.col("o_custkey").alias("user_id"),
-            F.col("o_orderdate").alias("ts"),
-        ).agg(F.max("o_orderkey").alias("last_order_id"))
-        scratch = os.path.join(
-            "/tmp/spark_graft_replay_inputs",
-            os.path.basename(os.path.normpath(sf_dir)),
-            "orders_asof",
+    )
+    l_stream = (
+        read_events_stream(spark, sf_dir)
+        .where(
+            F.col("user_id").isNotNull()
+            & F.col("event_id").isNotNull()
+            & _replay_ts_ok()
         )
-        # coalesce(1) is a REPLAY-scale choice, not the operator's scale
-        # posture: one file -> one availableNow micro-batch -> the
-        # kernel's in-batch (ts, __tag) sort supplies the global time
-        # order a production feed gets from per-key Kafka log order.
-        # At fact scale the kernel itself needs no single file — state
-        # is one slot per key and input partitions by the group key.
-        rt.coalesce(1).write.mode("overwrite").parquet(scratch)
-        r_stream = (
-            spark.readStream.schema(rt.schema)
-            .parquet(scratch)
-            .selectExpr(
-                "user_id",
-                "ts",
-                "CAST(0 AS INT) __tag",
-                "CAST(NULL AS LONG) event_id",
-                "last_order_id",
-                "CAST(ts AS LONG) last_order_ts",
-            )
+        .selectExpr(
+            "user_id",
+            "ts",
+            "CAST(1 AS INT) __tag",
+            "event_id",
+            "CAST(NULL AS LONG) last_order_id",
+            "CAST(NULL AS LONG) last_order_ts",
         )
-        l_stream = (
-            read_events_stream(spark, sf_dir)
-            .where(
-                F.col("user_id").isNotNull()
-                & F.col("event_id").isNotNull()
-                & _replay_ts_ok()
-            )
-            .selectExpr(
-                "user_id",
-                "ts",
-                "CAST(1 AS INT) __tag",
-                "event_id",
-                "CAST(NULL AS LONG) last_order_id",
-                "CAST(NULL AS LONG) last_order_ts",
-            )
-        )
-        out = streaming_as_of_enrich(
-            r_stream.unionByName(l_stream),
-            key="user_id",
-            payload_cols=("last_order_id", "last_order_ts"),
-            left_cols=("event_id",),
-        )
-        # the heaviest replay (two fact-scale sources through one
-        # kernel): 45 s at sf1, ~8 min at sf10 — the default 300 s
-        # fail-loud guard binds before the kernel does
-        return run_bounded_df(out, timeout=1800).withColumnRenamed("ts", "event_ts")
-
-    return _cached_canon(spark, sf_dir, "streaming_asof_replay", build)
+    )
+    out = streaming_as_of_enrich(
+        r_stream.unionByName(l_stream),
+        key="user_id",
+        payload_cols=("last_order_id", "last_order_ts"),
+        left_cols=("event_id",),
+    )
+    # the heaviest replay (two fact-scale sources through one
+    # kernel): 45 s at sf1, ~8 min at sf10 — the default 300 s
+    # fail-loud guard binds before the kernel does
+    return run_bounded_df(out, timeout=1800).withColumnRenamed("ts", "event_ts")
 
 
 # --------------------------------------------------------------------
@@ -10015,18 +9983,15 @@ def streaming_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import read_events_stream, run_bounded_df
     from ..streaming.stateful import streaming_funnel
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(F.col("user_id").isNotNull() & _replay_ts_ok())
-            .select("user_id", "ts", "event_type")
-        )
-        # (user, day)-keyed groups make this the widest-keyed replay:
-        # 172 s at sf1 — the default 300 s fail-loud guard would bind
-        # at sf10, so scale the bound like the as-of replay does
-        return run_bounded_df(streaming_funnel(stream), timeout=1800)
-
-    return _cached_canon(spark, sf_dir, "streaming_funnel_replay", build)
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(F.col("user_id").isNotNull() & _replay_ts_ok())
+        .select("user_id", "ts", "event_type")
+    )
+    # (user, day)-keyed groups make this the widest-keyed replay:
+    # 172 s at sf1 — the default 300 s fail-loud guard would bind
+    # at sf10, so scale the bound like the as-of replay does
+    return run_bounded_df(streaming_funnel(stream), timeout=1800)
 
 
 @_q(
@@ -10060,33 +10025,30 @@ def streaming_one_or_more_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import read_events_stream, run_bounded_df
     from ..streaming.stateful import streaming_one_or_more
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(
-                F.col("user_id").isNotNull()
-                & F.col("event_id").isNotNull()
-                & _replay_ts_ok()
-            )
-            .select("user_id", "ts", "event_type", "event_id")
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(
+            F.col("user_id").isNotNull()
+            & F.col("event_id").isNotNull()
+            & _replay_ts_ok()
         )
-        out = streaming_one_or_more(
-            stream,
-            key_col="user_id",
-            ts_col="ts",
-            a_pred=F.col("event_type") == "view",
-            b_pred=F.col("event_type") == "purchase",
-            within_seconds=86400.0,
-            tiebreak_col="event_id",
-        )
-        return run_bounded_df(out).select(
-            F.col("key").alias("user_id"),
-            F.col("first_a_ts").alias("first_view_ts"),
-            F.col("b_ts").alias("purchase_ts"),
-            F.col("n_a").alias("n_views"),
-        )
-
-    return _cached_canon(spark, sf_dir, "streaming_one_or_more_replay", build)
+        .select("user_id", "ts", "event_type", "event_id")
+    )
+    out = streaming_one_or_more(
+        stream,
+        key_col="user_id",
+        ts_col="ts",
+        a_pred=F.col("event_type") == "view",
+        b_pred=F.col("event_type") == "purchase",
+        within_seconds=86400.0,
+        tiebreak_col="event_id",
+    )
+    return run_bounded_df(out).select(
+        F.col("key").alias("user_id"),
+        F.col("first_a_ts").alias("first_view_ts"),
+        F.col("b_ts").alias("purchase_ts"),
+        F.col("n_a").alias("n_views"),
+    )
 
 
 @_q(
@@ -10119,27 +10081,24 @@ def streaming_value_spike_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import read_events_stream, run_bounded_df
     from ..streaming.stateful import streaming_value_spike
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(
-                _finite_or_null("value")
-                & F.col("user_id").isNotNull()
-                & F.col("event_id").isNotNull()
-                & _replay_ts_ok()
-            )
-            .select("user_id", "ts", "value", "event_id")
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(
+            _finite_or_null("value")
+            & F.col("user_id").isNotNull()
+            & F.col("event_id").isNotNull()
+            & _replay_ts_ok()
         )
-        out = streaming_value_spike(stream)
-        return run_bounded_df(out).select(
-            F.col("key").alias("user_id"),
-            "prev_ts",
-            "spike_ts",
-            "prev_value",
-            "spike_value",
-        )
-
-    return _cached_canon(spark, sf_dir, "streaming_value_spike_replay", build)
+        .select("user_id", "ts", "value", "event_id")
+    )
+    out = streaming_value_spike(stream)
+    return run_bounded_df(out).select(
+        F.col("key").alias("user_id"),
+        "prev_ts",
+        "spike_ts",
+        "prev_value",
+        "spike_value",
+    )
 
 
 @_q(
@@ -10183,29 +10142,26 @@ def streaming_pattern_sequence_replay(spark: SparkSession, sf_dir: str) -> DataF
     from ..streaming.cep import match_pattern_stream
     from ..streaming.jobs import read_events_stream, run_bounded_df
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(
-                F.col("user_id").isNotNull()
-                & F.col("event_id").isNotNull()
-                & _replay_ts_ok()
-            )
-            .select("user_id", "ts", "event_type", "event_id")
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(
+            F.col("user_id").isNotNull()
+            & F.col("event_id").isNotNull()
+            & _replay_ts_ok()
         )
-        steps = [
-            PatternStep(F.col("event_type") == "view"),
-            PatternStep(F.col("event_type") == "click"),
-            PatternStep(F.col("event_type") == "purchase"),
-        ]
-        out = match_pattern_stream(
-            stream, "user_id", "ts", steps, 86400.0, tiebreak_col="event_id"
-        )
-        return run_bounded_df(out).select(
-            F.col("key").alias("user_id"), "step1_ts", "step2_ts", "step3_ts"
-        )
-
-    return _cached_canon(spark, sf_dir, "streaming_pattern_sequence_replay", build)
+        .select("user_id", "ts", "event_type", "event_id")
+    )
+    steps = [
+        PatternStep(F.col("event_type") == "view"),
+        PatternStep(F.col("event_type") == "click"),
+        PatternStep(F.col("event_type") == "purchase"),
+    ]
+    out = match_pattern_stream(
+        stream, "user_id", "ts", steps, 86400.0, tiebreak_col="event_id"
+    )
+    return run_bounded_df(out).select(
+        F.col("key").alias("user_id"), "step1_ts", "step2_ts", "step3_ts"
+    )
 
 
 @_q(
@@ -10242,23 +10198,20 @@ def streaming_not_followed_by_replay(spark: SparkSession, sf_dir: str) -> DataFr
     from ..streaming.jobs import read_events_stream, run_bounded_df
     from ..streaming.stateful import streaming_not_followed_by
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(F.col("user_id").isNotNull() & _replay_ts_ok())
-            .select("user_id", "ts", "event_type")
-        )
-        out = streaming_not_followed_by(
-            stream,
-            key_col="user_id",
-            ts_col="ts",
-            first_pred=F.col("event_type") == "click",
-            absent_pred=F.col("event_type") == "error",
-            within_seconds=1800.0,
-        )
-        return run_bounded_df(out)
-
-    return _cached_canon(spark, sf_dir, "streaming_not_followed_by_replay", build)
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(F.col("user_id").isNotNull() & _replay_ts_ok())
+        .select("user_id", "ts", "event_type")
+    )
+    out = streaming_not_followed_by(
+        stream,
+        key_col="user_id",
+        ts_col="ts",
+        first_pred=F.col("event_type") == "click",
+        absent_pred=F.col("event_type") == "error",
+        within_seconds=1800.0,
+    )
+    return run_bounded_df(out)
 
 
 # =====================================================================
@@ -10946,15 +10899,12 @@ def streaming_sessionized_stats_replay(spark: SparkSession, sf_dir: str) -> Data
         streaming_session_stats,
     )
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .where(F.col("event_id").isNotNull() & _replay_ts_ok())
-            .select("user_id", "ts", "event_id", "event_type")
-        )
-        return run_bounded_df(streaming_session_stats(stream, gap="30 minutes"))
-
-    return _cached_canon(spark, sf_dir, "streaming_sessionized_stats_replay", build)
+    stream = (
+        read_events_stream(spark, sf_dir)
+        .where(F.col("event_id").isNotNull() & _replay_ts_ok())
+        .select("user_id", "ts", "event_id", "event_type")
+    )
+    return run_bounded_df(streaming_session_stats(stream, gap="30 minutes"))
 
 
 @_q(
@@ -11001,23 +10951,20 @@ def streaming_url_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import canonical_url
     from ..streaming.jobs import read_events_stream, run_bounded_df, streaming_dedup
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir, "documents")
-            .where(F.col("doc_id").isNotNull())
-            .select(
-                F.expr(
-                    _URL_SYNTH_SQL.format(k="doc_id", d4="doc_id div 4", str_t="STRING")
-                ).alias("url"),
-                F.timestamp_seconds(F.col("doc_id") + 1).alias("ts"),
-            )
-            .select(canonical_url("url").alias("canon"), F.col("ts"))
+    stream = (
+        read_events_stream(spark, sf_dir, "documents")
+        .where(F.col("doc_id").isNotNull())
+        .select(
+            F.expr(
+                _URL_SYNTH_SQL.format(k="doc_id", d4="doc_id div 4", str_t="STRING")
+            ).alias("url"),
+            F.timestamp_seconds(F.col("doc_id") + 1).alias("ts"),
         )
-        return run_bounded_df(
-            streaming_dedup(stream, ["canon"], watermark="90 days")
-        ).select("canon")
-
-    return _cached_canon(spark, sf_dir, "streaming_url_dedup_replay", build)
+        .select(canonical_url("url").alias("canon"), F.col("ts"))
+    )
+    return run_bounded_df(
+        streaming_dedup(stream, ["canon"], watermark="90 days")
+    ).select("canon")
 
 
 from ..operators.text import kneser_ney_surprisal  # noqa: E402
@@ -11531,25 +11478,22 @@ def streaming_winnow_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators.dedup import _WINNOW_POS_BITS, _winnow_selected
     from ..streaming.jobs import read_events_stream, run_bounded_df, streaming_dedup
 
-    def build() -> DataFrame:
-        stream = (
-            read_events_stream(spark, sf_dir, "documents")
-            .where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-            .select(
-                "doc_id",
-                "text",
-                F.timestamp_seconds(F.col("doc_id") + 1).alias("ts"),
-            )
+    stream = (
+        read_events_stream(spark, sf_dir, "documents")
+        .where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
+        .select(
+            "doc_id",
+            "text",
+            F.timestamp_seconds(F.col("doc_id") + 1).alias("ts"),
         )
-        fp = _winnow_selected(stream, 4, 4, "doc_id", "text", ["doc_id", "ts"])
-        fp = fp.select(
-            "ts", F.explode("fp_keys").alias("key")
-        ).select("ts", F.shiftright("key", _WINNOW_POS_BITS).alias("h"))
-        return run_bounded_df(
-            streaming_dedup(fp, ["h"], watermark="90 days")
-        ).select("h")
-
-    return _cached_canon(spark, sf_dir, "streaming_winnow_dedup_replay", build)
+    )
+    fp = _winnow_selected(stream, 4, 4, "doc_id", "text", ["doc_id", "ts"])
+    fp = fp.select(
+        "ts", F.explode("fp_keys").alias("key")
+    ).select("ts", F.shiftright("key", _WINNOW_POS_BITS).alias("h"))
+    return run_bounded_df(
+        streaming_dedup(fp, ["h"], watermark="90 days")
+    ).select("h")
 
 
 # --- round-11: Jensen-Shannon divergence (wide-chain consumer #2) -----

@@ -1,10 +1,11 @@
 """Streaming twin of the declarative CEP compiler (operators/cep.py).
 
 ``match_pattern_stream`` compiles the SAME ``PatternStep`` spec —
-contiguity / times / optional / negated — into ONE keyed NFA over
-``applyInPandasWithState`` (Spark allows a single stateful operator
+contiguity / times / optional / negated — into ONE keyed NFA, a
+per-key step on the bucketed keyed-state runtime
+(``stateful._keyed_state``; Spark allows a single stateful operator
 per streaming query, so the batch compiler's per-variant union becomes
-per-variant chain lists inside one state store).  It is the streaming
+per-variant chains inside one state store).  It is the streaming
 side's only positive-chain automaton: a pair is a two-step spec
 (``begin/next|followedBy/within``), an N-step sequence an N-step spec,
 ``times(n)`` a quantified step and ``optional()`` an optional step.
@@ -29,13 +30,17 @@ Semantics per expansion variant (shared `variant_specs`):
   ``first_ts + within``; a later absent with ``ts > last_ts`` (and
   ``< deadline``) kills it, and survivors emit only once the WATERMARK
   passes the deadline (negation decided by time, like
-  ``streaming_not_followed_by``), flushed by an event-time timer so
-  quiet keys drain on watermark advance.  Without any trailing
-  negation completions emit immediately and no timer is armed.
+  ``streaming_not_followed_by``), flushed by the key's timer (its
+  earliest parked deadline) so quiet keys drain on watermark advance.
+  Without any trailing negation completions emit immediately and the
+  query runs without timers.
 
-State per key is bounded: active chains by the step-1 arrival rate ×
-within (pruned every event), parked completions by the completion rate
-× within; a key with neither holds no state row at all.  Ordering
+State per key is two ``array<array<double>>`` lists: active chains as
+``[variant, kill ts or NaN, t1, t2, ...]`` and parked completions as
+``[variant, t1, ...]``.  It is bounded: active chains by the step-1
+arrival rate × within (pruned every event), parked completions by the
+completion rate × within; a key with neither holds no state at all.  A
+checkpoint written before the bucketed runtime must restart.  Ordering
 contract: order-correct within a micro-batch (events sorted) and across
 batches on an ordered replay, verified against the batch compilers
 (``match_pattern``, ``pattern_pairs``, ``pattern_sequence``,
@@ -45,19 +50,13 @@ batches on an ordered replay, verified against the batch compilers
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+import math
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from ..operators.cep import PatternStep, variant_specs
-from .stateful import _epoch_s, _floor_s, _group_chunks, _tag
-
-_CEP_STATE = StructType(
-    [StructField("active", StringType()), StructField("done", StringType())]
-)
+from .stateful import _NO_DEADLINE, _floor_s, _keyed_state, _per_key, _tag
 
 
 def match_pattern_stream(
@@ -134,10 +133,9 @@ def match_pattern_stream(
         [StructField("key", LongType())]
         + [StructField(f"step{i + 1}_ts", LongType()) for i in range(n_atoms)]
     )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
 
     def _row(k: int, keep: list[int], chain: list[float]) -> tuple:
-        row: list = [int(k)] + [None] * n_atoms
+        row: list = [k] + [None] * n_atoms
         # _floor_s, not int(): int() truncates toward zero, diverging
         # from the batch compiler's floor_long on pre-1970 sub-second
         # event times (int(-0.75) = 0 vs floor -1).
@@ -145,137 +143,99 @@ def match_pattern_stream(
             row[gi + 1] = _floor_s(chain[pos])
         return tuple(row)
 
-    # state encodings ------------------------------------------------
-    # active: per-variant "|"-joined; chains ";"-joined;
-    #         chain = "t1,t2@kill" (kill empty when none pending)
-    # done:   per-variant "|"-joined; entries ";"-joined; entry = "t1,t2"
-    def _load(s: str | None, nv: int) -> list[list]:
-        parts = s.split("|") if s else []
-        if len(parts) != nv:
-            parts = ["" for _ in range(nv)]
-        return [p.split(";") if p else [] for p in parts]
+    nv = len(compiled)
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        active_s, done_s = state.get if state.exists else ("", "")
-        nv = len(compiled)
-        active: list[list[tuple[list[float], float | None]]] = []
-        for p in _load(active_s, nv):
-            chains = []
-            for c in p:
-                body, _, kill = c.partition("@")
-                chains.append(
-                    ([float(x) for x in body.split(",")], float(kill) if kill else None)
-                )
-            active.append(chains)
-        done: list[list[list[float]]] = [
-            [[float(x) for x in c.split(",")] for c in p] for p in _load(done_s, nv)
-        ]
+    def step(b, k, s: int, e: int, st: tuple | None):
+        # state: active chains [variant, kill (NaN: none), t1, ...] and
+        # parked completions [variant, t1, ...], one list per key
+        active: list[list[tuple[list[float], float | None]]] = [[] for _ in range(nv)]
+        done: list[list[list[float]]] = [[] for _ in range(nv)]
+        for c in st[0] if st else []:
+            active[int(c[0])].append((list(c[2:]), None if math.isnan(c[1]) else c[1]))
+        for c in st[1] if st else []:
+            done[int(c[0])].append(list(c[1:]))
         out: list[tuple] = []
 
-        for pdf in _group_chunks(pdfs, sort_cols):
-            tss = _epoch_s(pdf[ts_col])
-            m = {gi: pdf[f"__m{gi}"].to_numpy().astype(bool) for gi in tagged_atoms}
-            g = [pdf[f"__g{j}"].to_numpy().astype(bool) for j in range(n_negs)]
-            for i in range(len(tss)):
-                ts = float(tss[i])
-                for vi, v in enumerate(compiled):
-                    keep, gaps, trail = v["keep"], v["gaps"], v["trail"]
-                    n_pos = len(keep)
-                    # 1. kill parked completions (trailing negation)
-                    if trail and any(g[j][i] for j in trail):
-                        done[vi] = [
-                            c
-                            for c in done[vi]
-                            if not (c[-1] < ts < c[0] + within_seconds)
-                        ]
-                    # 2. advance / prune active chains
-                    nxt: list[tuple[list[float], float | None]] = []
-                    for chain, kill in active[vi]:
-                        if ts - chain[0] >= within_seconds:
-                            continue  # doomed: any completion is later
-                        if m[keep[len(chain)]][i]:
-                            if kill is not None and kill < ts:
-                                continue  # mid-gap negation killed it
-                            c2 = chain + [ts]
-                            if len(c2) == n_pos:
-                                if trail:
-                                    done[vi].append(c2)
-                                else:
-                                    out.append(_row(k, keep, c2))
-                            else:
-                                nxt.append((c2, None))
-                        elif strict:
-                            continue  # advance-or-die
-                        else:
-                            k2 = kill
-                            js = gaps.get(len(chain))
-                            if js and any(g[j][i] for j in js) and ts > chain[-1]:
-                                k2 = ts if k2 is None else min(k2, ts)
-                            nxt.append((chain, k2))
-                    active[vi] = nxt
-                    # 3. start a new chain on a step-1 match
-                    if m[keep[0]][i]:
-                        if n_pos == 1:
+        tss = b.ts[s:e].tolist()
+        m = {gi: b.col[f"__m{gi}"][s:e].astype(bool).tolist() for gi in tagged_atoms}
+        g = [b.col[f"__g{j}"][s:e].astype(bool).tolist() for j in range(n_negs)]
+        for i, ts in enumerate(tss):
+            for vi, v in enumerate(compiled):
+                keep, gaps, trail = v["keep"], v["gaps"], v["trail"]
+                n_pos = len(keep)
+                # 1. kill parked completions (trailing negation)
+                if trail and any(g[j][i] for j in trail):
+                    done[vi] = [
+                        c
+                        for c in done[vi]
+                        if not (c[-1] < ts < c[0] + within_seconds)
+                    ]
+                # 2. advance / prune active chains
+                nxt: list[tuple[list[float], float | None]] = []
+                for chain, kill in active[vi]:
+                    if ts - chain[0] >= within_seconds:
+                        continue  # doomed: any completion is later
+                    if m[keep[len(chain)]][i]:
+                        if kill is not None and kill < ts:
+                            continue  # mid-gap negation killed it
+                        c2 = chain + [ts]
+                        if len(c2) == n_pos:
                             if trail:
-                                done[vi].append([ts])
+                                done[vi].append(c2)
                             else:
-                                out.append(_row(k, keep, [ts]))
+                                out.append(_row(k, keep, c2))
                         else:
-                            active[vi].append(([ts], None))
+                            nxt.append((c2, None))
+                    elif strict:
+                        continue  # advance-or-die
+                    else:
+                        k2 = kill
+                        js = gaps.get(len(chain))
+                        if js and any(g[j][i] for j in js) and ts > chain[-1]:
+                            k2 = ts if k2 is None else min(k2, ts)
+                        nxt.append((chain, k2))
+                active[vi] = nxt
+                # 3. start a new chain on a step-1 match
+                if m[keep[0]][i]:
+                    if n_pos == 1:
+                        if trail:
+                            done[vi].append([ts])
+                        else:
+                            out.append(_row(k, keep, [ts]))
+                    else:
+                        active[vi].append(([ts], None))
 
         # 4. watermark flush of parked completions
-        wm = state.getCurrentWatermarkMs() / 1000.0
-        for vi, v in enumerate(compiled):
-            if not v["trail"]:
-                continue
-            ready = [c for c in done[vi] if c[0] + within_seconds <= wm]
-            done[vi] = [c for c in done[vi] if c[0] + within_seconds > wm]
-            for c in sorted(ready):
-                out.append(_row(k, v["keep"], c))
+        if any_trailing:
+            wm = b.wm / 1000.0
+            for vi, v in enumerate(compiled):
+                ready = [c for c in done[vi] if c[0] + within_seconds <= wm]
+                done[vi] = [c for c in done[vi] if c[0] + within_seconds > wm]
+                for c in sorted(ready):
+                    out.append(_row(k, v["keep"], c))
 
-        has_active = any(active[vi] for vi in range(nv))
-        has_done = any(done[vi] for vi in range(nv))
-        if has_active or has_done:
-            state.update(
-                (
-                    "|".join(
-                        ";".join(
-                            ",".join(repr(t) for t in chain)
-                            + ("@" + repr(kill) if kill is not None else "")
-                            for chain, kill in chains
-                        )
-                        for chains in active
-                    ),
-                    "|".join(
-                        ";".join(",".join(repr(t) for t in c) for c in chains)
-                        for chains in done
-                    ),
-                )
-            )
-            if any_trailing and has_done:
-                deadline = min(
-                    c[0] + within_seconds for vi in range(nv) for c in done[vi]
-                )
-                state.setTimeoutTimestamp(
-                    max(int(deadline * 1000), int(wm * 1000) + 1)
-                )
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                out, columns=["key"] + [f"step{j + 1}_ts" for j in range(n_atoms)]
-            )
+        st_active = [
+            [float(vi), math.nan if kill is None else kill, *chain]
+            for vi in range(nv)
+            for chain, kill in active[vi]
+        ]
+        st_done = [[float(vi), *c] for vi in range(nv) for c in done[vi]]
+        if not st_active and not st_done:
+            return out, None, _NO_DEADLINE
+        deadline = (
+            int(min(c[1] + within_seconds for c in st_done) * 1000) if st_done else _NO_DEADLINE
+        )
+        return out, (st_active, st_done), deadline
 
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout
-        if any_trailing
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        tagged.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(fn, out_schema, _CEP_STATE, "append", timeout)
+    return _keyed_state(
+        tagged,
+        [key_col],
+        ts_col,
+        [tiebreak_col] if tiebreak_col else [],
+        [f"__m{gi}" for gi in sorted(tagged_atoms)] + [f"__g{j}" for j in range(n_negs)],
+        {"active": ArrayType(ArrayType(DoubleType())), "done": ArrayType(ArrayType(DoubleType()))},
+        _per_key(step, out_schema.names),
+        out_schema,
+        watermark,
+        timers=any_trailing,
     )

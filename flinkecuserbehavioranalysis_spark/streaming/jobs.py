@@ -304,8 +304,12 @@ def run_bounded(
         _await_bounded(writer.foreachBatch(foreach_batch).start(), timeout)
         return []
     name = f"mem_{abs(hash(out.schema.json())) % 10**8}_{id(out)}"
-    _await_bounded(writer.format("memory").queryName(name).start(), timeout)
-    return out.sparkSession.sql(f"SELECT * FROM {name}").collect()
+    q = writer.format("memory").queryName(name).start()
+    try:
+        _await_bounded(q, timeout)
+        return out.sparkSession.table(name).collect()
+    finally:
+        out.sparkSession.catalog.dropTempView(name)
 
 
 def _await_bounded(q, timeout: int) -> None:
@@ -330,8 +334,11 @@ def run_bounded_df(
     the driver an ordinary DataFrame over the sink.
 
     Eager by contract (the streaming query runs on call, like the
-    k-means/codebook operators); the sink name is sequence-unique per
-    session so repeated invocations never read a stale table."""
+    k-means/codebook operators).  The sink's temp view is dropped before
+    returning — the returned frame holds the sink's rows, and a view
+    left per call would keep every replay's rows in the driver; the
+    sink name is sequence-unique per session so repeated invocations
+    never read a stale table."""
     _BOUNDED_SEQ[0] += 1
     name = f"bounded_replay_{_BOUNDED_SEQ[0]}_{abs(hash(out.schema.json())) % 10**8}"
     q = (
@@ -341,8 +348,11 @@ def run_bounded_df(
         .trigger(availableNow=True)
         .start()
     )
-    _await_bounded(q, timeout)
-    return out.sparkSession.table(name)
+    try:
+        _await_bounded(q, timeout)
+        return out.sparkSession.table(name)
+    finally:
+        out.sparkSession.catalog.dropTempView(name)
 
 
 def streaming_dedup(

@@ -1,57 +1,60 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``
-(SURVEY.md §2.8 — the Flink ``KeyedProcessFunction`` surface).
+"""Keyed stateful streaming operators on one bucketed runtime (SURVEY.md
+§2.8 — the Flink ``KeyedProcessFunction`` surface).
 
 These are the streaming twins of the batch formulations in
-``operators.patterns`` / ``operators.timeout``; keyed state plays the
-role of Flink's ``ValueState``/``ListState`` and the timeout conf plays
-the timers:
+``operators.patterns`` / ``operators.timeout`` / ``operators.joins``;
+keyed state plays the role of Flink's ``ValueState``/``ListState`` and
+the watermark plays the event-time timers.  Every kernel here, and
+``streaming/cep.match_pattern_stream``, runs through ``_keyed_state``,
+the package's one ``applyInPandasWithState`` call, and supplies only its
+transition.  The runtime owns how keyed state is grouped, ordered,
+stored and timed out — the Structured Streaming model of keyed state as
+a versioned store with watermark-driven timeouts:
 
-- **login-fail** (LoginFailTwo.scala:60-91): state = last event per
-  user (kept in the user's hash bucket); a fail arriving ≤ gap after a
-  stored fail emits a warning; success clears — identical to the
-  reference's one-slot ListState.
-- **order timeout** (OrderTimeout.scala:58-143): state = (create_ts,
-  pay_ts); emit on the pairing event, or on event-time timeout at
-  create_ts + deadline (``GroupStateTimeout.EventTimeTimeout`` — fired
-  by watermark advance, exactly Flink's event-time timer discipline).
+- **Grouping.** Spark groups rows by a hash bucket of the key,
+  ``pmod(xxhash64(key cols), KEY_BUCKETS)``, so a micro-batch makes at
+  most ``KEY_BUCKETS`` Python calls per kernel whatever the key
+  cardinality (Spark's per-group transport, not the transition, was the
+  floor of a one-call-per-key kernel).
+- **Ordering.** A bucket arrives as Arrow slices in shuffle order; the
+  runtime concatenates them and sorts once by (key, ts with NaT last,
+  tiebreak).  Flink gets this order from per-key FIFO delivery; sorting
+  each slice alone breaks once a key straddles a slice (found at sf1).
+- **Storage.** A bucket's state is parallel arrays sorted by key: one
+  key array per key column (``keys``, then ``keys1``; a NULL key part is
+  ``None`` and sorts last, so a NULL key is a key of its own) plus one
+  typed array per slot field.  List state is a nested array, e.g.
+  ``array<array<double>>``.  A key the transition leaves without state
+  is dropped, and a bucket without keys removes its row, so
+  ``numRowsTotal`` counts occupied buckets and ``size(keys)`` counts
+  keys.
+- **Timers.** A kernel with timers keeps one ``deadline_ms`` per key and
+  runs with ``EventTimeTimeout``.  On every call the runtime fires the
+  keys that have no rows in the call and whose deadline is strictly
+  below ``state.getCurrentWatermarkMs()`` — Spark's per-key rule; keys
+  with rows are processed as rows.  The bucket's timeout is its smallest
+  deadline raised to the watermark (``setTimeoutTimestamp`` refuses a
+  value below it), so a quiet bucket is called on the first watermark
+  advance that makes one of its keys due.
 
-Positive CEP chains — pairs, N-step sequences, ``times``, optional
-steps — are not here: ``streaming/cep.match_pattern_stream`` runs every
-such pattern as one keyed NFA.  Two pattern kernels stay in this module:
-``streaming_one_or_more`` (the loop kernel ``match_pattern_stream``
-hands ``one_or_more`` patterns to) and ``streaming_not_followed_by``
-(which keeps killers above the watermark so a LATE first event is still
-killed; the NFA's trailing negation only kills forward).
+A transition is either vectorized over the whole bucket (``_one_slot``:
+login-fail, value-spike, last-touch, as-of enrich; order timeout) or a
+per-key step the runtime loops over key segments (``_per_key``:
+blacklist's day runs aside, fail-burst, not-followed-by, funnel,
+one-or-more and the CEP NFA).  Each micro-batch rewrites every touched
+bucket's arrays, which is cheap while a bucket holds thousands of keys,
+not millions.
 
-Rows inside a micro-batch are buffered to ONE frame per group and
-sorted before state transitions — Flink gets this ordering from per-key
-FIFO delivery; Spark's shuffle delivers a group as arbitrarily-ordered
-Arrow slices, so per-slice sorting alone breaks once a group straddles
-a slice boundary (found at sf1).
+The state layout is part of the checkpoint.  Login-fail, value-spike and
+last-touch keep the layout they had (``keys`` plus one array per slot,
+every key seen kept); a checkpoint any other kernel wrote before it ran
+on this runtime is refused by Spark's state-schema check, and the query
+must restart from a new checkpoint.
 
-Group = key for the kernels with timers or list state (``_group_chunks``
-sorts by (ts, tiebreak)).  The one-slot NoTimeout kernels — login-fail,
-value-spike, last-touch — group by a hash BUCKET of
-the key instead, ``pmod(xxhash64(key), KEY_BUCKETS)`` with
-``KEY_BUCKETS = 64`` (``_bucketed_one_slot`` sorts by (key, ts,
-tiebreak)): Spark's per-group transport, not the kernel, was the floor
-of a one-call-per-user kernel, so a micro-batch now makes at most 64
-Python calls per kernel, each vectorized over all keys in its bucket.
-A bucket's state is parallel arrays sorted by key (``keys`` plus one
-array per slot field), so ``numRowsTotal`` counts occupied buckets and
-the arrays hold one entry per key seen.  This is a state-schema change:
-a checkpoint written by the former per-key layout is refused by Spark's
-state-schema check and the query must restart from a new checkpoint.
-Each micro-batch rewrites every touched bucket's arrays, which is cheap
-while a bucket holds thousands of keys, not millions.
-
-Hot-path discipline: every operator here extracts the pandas frame's
-columns to numpy arrays ONCE per batch (``.astype('int64')`` epoch-ns →
-float seconds) and loops over plain scalars — never ``iterrows`` (whose
-per-row Series construction is ~100× the cost of the transition itself).
-Transitions that are order-free (min/max) or expressible as segment
-boundaries vectorize fully; inherently sequential ones (pending-list
-CEP state) keep a scalar loop over the numpy views.
+Hot-path discipline: the runtime extracts each column to numpy ONCE per
+call (``.astype('int64')`` epoch-ns → float seconds) and per-key steps
+loop over plain scalars — never ``iterrows`` (whose per-row Series
+construction is ~100× the cost of the transition itself).
 
 Watermark gotcha: a row whose event time equals the operator's current
 watermark is dropped as late — in particular, epoch-0 timestamps die
@@ -63,6 +66,7 @@ watermark advance.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Iterator, Sequence
 from typing import Any
 
@@ -77,11 +81,13 @@ from pyspark.sql.types import (
     DataType,
     DoubleType,
     IntegerType,
+    IntegralType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
 
 def _epoch_s(col: pd.Series) -> np.ndarray:
     """datetime64[ns] column → float epoch seconds, one vectorized cast
@@ -113,33 +119,9 @@ def _tag(pred: F.Column) -> F.Column:
     return F.coalesce(pred.cast("boolean"), F.lit(False)).cast("int")
 
 
-def _group_chunks(pdfs: Iterator[pd.DataFrame], sort_cols: list) -> Iterator[pd.DataFrame]:
-    """Yield a key's micro-batch group as ONE time-sorted frame.
-
-    ``applyInPandasWithState`` delivers a group as Arrow-batch slices in
-    shuffle-arrival order.  Sorting each slice independently is only
-    correct while the whole group fits one Arrow batch (always true at
-    test SF); once the grouped partition exceeds ``maxRecordsPerBatch``
-    (~10k rows), a group can straddle slice boundaries whose RELATIVE
-    order is arbitrary, and a sequential kernel would replay events out
-    of time order (found by the round-8 sf1 sweep: the union-tagged
-    as-of replay read stale right-side state on exactly the keys whose
-    group straddled a batch boundary).  Buffering the whole group — per
-    key per MICRO-BATCH, never per stream — is the documented
-    ProcessWindowFunction-style memory bound these kernels already
-    carry.  Sort columns absent from the frame are dropped; a timer-only
-    invocation (no data chunks) yields nothing."""
-    frames = list(pdfs)
-    if not frames:
-        return
-    pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-    cols = [c for c in sort_cols if c in pdf.columns]
-    yield pdf.sort_values(cols) if cols else pdf
-
-
-#: Hash buckets of the one-slot kernels' key: state is grouped by
-#: ``pmod(xxhash64(key), KEY_BUCKETS)``, so a micro-batch makes at most
-#: this many Python calls per kernel, whatever the key cardinality.
+#: Hash buckets of a kernel's key: state is grouped by
+#: ``pmod(xxhash64(key cols), KEY_BUCKETS)``, so a micro-batch makes at
+#: most this many Python calls per kernel, whatever the key cardinality.
 #: Login kernel alone on a 4-core host, 2k events of 5k users per
 #: micro-batch, steady ``addBatch`` median: one call per user ~3.0 s;
 #: 16 buckets 0.80-0.91 s, 64 buckets 0.81-0.93 s, 256 buckets
@@ -147,155 +129,284 @@ def _group_chunks(pdfs: Iterator[pd.DataFrame], sort_cols: list) -> Iterator[pd.
 #: equal cost, and keeps bucket arrays short (~80 keys at 5k users).
 KEY_BUCKETS = 64
 
+#: ``deadline_ms`` of a key without a timer (Spark's ``NO_TIMESTAMP``).
+_NO_DEADLINE = -1
+
+
+def _dtype(t: DataType) -> Any:
+    if isinstance(t, DoubleType):
+        return np.float64
+    if isinstance(t, BooleanType):
+        return np.bool_
+    if isinstance(t, IntegralType):
+        return np.int64
+    return object
+
 
 def _placeholder(dtype: np.dtype) -> np.ndarray:
-    """The slot value meaning "no row": NaN, None or False.  Every
-    bucketed kernel's predicate is false against it."""
+    """The slot value meaning "no state": NaN, None, 0 or False.  Every
+    one-slot kernel's predicate is false against it."""
     fill = None if dtype.kind == "O" else np.nan if dtype.kind == "f" else 0
     return np.full(1, fill, dtype=dtype)
 
 
-def _bucketed_one_slot(
+def _slot_array(values: list, t: DataType) -> np.ndarray:
+    """A stored state list as an array of its slot's dtype (NULL doubles
+    become NaN); a nested slot is an object array of Python lists."""
+    dtype = _dtype(t)
+    if dtype is not object:
+        return np.array(values, dtype=dtype)
+    out = np.empty(len(values), dtype=object)
+    for i, v in enumerate(values):
+        out[i] = v
+    return out
+
+
+class _Bucket:
+    """One call of the runtime on one hash bucket.
+
+    ``rows`` are the call's rows sorted by (key, ts, tiebreak); ``ts`` is
+    their epoch seconds and ``col`` their data columns as numpy arrays.
+    Key segment ``j`` spans rows ``starts[j]:ends[j]`` (``seg`` maps a
+    row to its segment).  Every key with stored state or rows in the
+    call is one *entry*, in stored key order: ``entry`` maps a segment
+    to its entry and ``rows_of`` an entry to its segment (-1: no rows).
+    ``found`` marks entries with stored state and ``due`` those whose
+    timer fires in this call (``wm`` is the watermark, timers only).  A
+    transition updates the per-entry ``state`` arrays (placeholders
+    where not found), ``keep`` and ``deadline`` in place."""
+
+    def __init__(self, rows, ts_col, data, kc, nc, stored, slot, wm_ms):
+        self.rows, self.wm, n = rows, wm_ms, len(rows)
+        self.ts = _epoch_s(rows[ts_col])
+        self.col = {c: rows[c].to_numpy() for c in data}
+        self.row_val = [rows[c].to_numpy().astype(np.int64) for c in kc]
+        self.row_null = [rows[c].to_numpy().astype(bool) for c in nc]
+        head = np.zeros(n, dtype=bool)
+        head[:1] = True
+        for a in (*self.row_val, *self.row_null):
+            head[1:] |= a[1:] != a[:-1]
+        self.starts = np.flatnonzero(head)
+        self.ends = np.append(self.starts[1:], n).astype(np.int64)
+        self.seg = np.cumsum(head) - 1
+
+        # entries: the union of the stored keys and this call's segments,
+        # stored before new among equals
+        nk, m = len(kc), len(stored[0])
+        val = [
+            np.concatenate(
+                (np.array([0 if v is None else v for v in stored[j]], dtype=np.int64), rv[self.starts])
+            )
+            for j, rv in enumerate(self.row_val)
+        ]
+        null = [
+            np.concatenate((np.array([v is None for v in stored[j]], dtype=bool), rn[self.starts]))
+            for j, rn in enumerate(self.row_null)
+        ]
+        o = np.lexsort([np.arange(len(val[0]))] + [a for j in reversed(range(nk)) for a in (val[j], null[j])])
+        first = np.zeros(len(o), dtype=bool)
+        first[:1] = True
+        for a in (*val, *null):
+            first[1:] |= a[o][1:] != a[o][:-1]
+        ent, from_st = np.cumsum(first) - 1, o < m
+        st_idx = np.full(int(first.sum()), -1)
+        st_idx[ent[from_st]] = o[from_st]
+        self.rows_of = np.full(len(st_idx), -1)
+        self.rows_of[ent[~from_st]] = o[~from_st] - m
+        self.entry = np.empty(len(self.starts), dtype=np.int64)
+        self.entry[self.rows_of[self.rows_of >= 0]] = np.flatnonzero(self.rows_of >= 0)
+        self.found = st_idx >= 0
+        self.ent_val = [a[o[first]] for a in val]
+        self.ent_null = [a[o[first]] for a in null]
+        pick = np.where(self.found, st_idx, m)
+        self.state = {}
+        for i, (name, t) in enumerate(slot.items()):
+            col = _slot_array(stored[nk + i], t)
+            self.state[name] = np.concatenate((col, _placeholder(col.dtype)))[pick]
+        self.keep = np.ones(len(st_idx), dtype=bool)
+        self.deadline = np.full(len(st_idx), _NO_DEADLINE, dtype=np.int64)
+        self.due = np.zeros(len(st_idx), dtype=bool)
+        if wm_ms is not None:
+            self.deadline = np.append(np.array(stored[-1], dtype=np.int64), _NO_DEADLINE)[pick]
+            self.due = (self.rows_of < 0) & (self.deadline >= 0) & (self.deadline < wm_ms)
+
+    def row_key(self, j: int = 0) -> pd.arrays.IntegerArray:
+        """Key column *j* of every row, NULL-aware."""
+        return pd.arrays.IntegerArray(self.row_val[j], self.row_null[j])
+
+    def entry_key(self, j: int = 0) -> pd.arrays.IntegerArray:
+        """Key column *j* of every entry, NULL-aware."""
+        return pd.arrays.IntegerArray(self.ent_val[j], self.ent_null[j])
+
+    def key_of(self, i: int) -> Any:
+        """Entry *i*'s key as Python values: a scalar, or a tuple for a
+        composite key."""
+        k = tuple(None if n[i] else int(v[i]) for v, n in zip(self.ent_val, self.ent_null))
+        return k[0] if len(k) == 1 else k
+
+    def kept(self) -> tuple[tuple[list, ...], int | None]:
+        """The state row of the kept entries (``None`` keys for NULL
+        parts) and their smallest deadline, or ``((), None)`` when no
+        entry is kept."""
+        kept = np.flatnonzero(self.keep)
+        if not len(kept):
+            return (), None
+        keys = []
+        for v, nl in zip(self.ent_val, self.ent_null):
+            k = v[kept].astype(object)
+            k[nl[kept]] = None
+            keys.append(k.tolist())
+        row = keys + [a[kept].tolist() for a in self.state.values()]
+        if self.wm is None:
+            return tuple(row), None
+        live = self.deadline[kept]
+        live = live[live >= 0]
+        return tuple(row + [self.deadline[kept].tolist()]), int(live.min()) if len(live) else None
+
+
+def _keyed_state(
     events: DataFrame,
-    key_col: str,
+    keys: Sequence[str],
     ts_col: str,
-    tiebreak_col: str | None,
+    tiebreak: Sequence[str],
     cols: Sequence[str],
     slot: dict[str, DataType],
-    values: Callable[[pd.DataFrame], dict[str, np.ndarray]],
-    emit: Callable[..., pd.DataFrame | None],
+    transition: Callable[[_Bucket], pd.DataFrame | None],
     out_schema: StructType,
     watermark: str,
-    carry: Callable[[pd.DataFrame], np.ndarray] | None = None,
+    timers: bool = False,
 ) -> DataFrame:
-    """Run a one-slot NoTimeout kernel vectorized over hash buckets of
-    its key instead of one Python call per key.
+    """Run a keyed transition over hash buckets of its integral *keys*.
 
-    Each kernel keeps ONE slot of state per key (e.g. login: the last
-    event's fail flag and ts).  Spark groups by the key's bucket; the
-    bucket's state is parallel arrays sorted by key — ``keys`` plus one
-    array per *slot* field.  A NULL key is a key of its own, stored as a
-    trailing ``None`` in ``keys``.  Per call this helper:
-
-    1. sorts the bucket's rows by (key, ts, tiebreak) — NaT last, as the
-       per-key sort did;
-    2. gives each row its predecessor's slot values: the latest earlier
-       *carried* row of the same key (all rows carry unless *carry*
-       masks some out, e.g. last-touch's purchases);
-    3. seeds each key's first rows from the stored arrays
-       (``searchsorted`` on ``keys``), or with the placeholder (NaN /
-       None / False) for a key never seen;
-    4. writes back each key's last carried row, merged into the sorted
-       arrays; a key seen with no carried row yet stores the
-       placeholder, so state holds every key seen, as the per-key
-       operator did.
-
-    ``values(rows)`` maps the sorted rows to the row's own slot values;
-    ``emit(rows, key, cur, prev)`` returns the kernel's output rows
-    (``key`` is a nullable Int64 array aligned with *rows*) and must
-    treat a placeholder ``prev`` as "no predecessor".  The key must be
-    integral; the NULL flag travels as its own column so keys beyond
-    2^53 survive pandas' NULL-widening to float."""
-    key_type = events.schema[key_col].dataType
-    if not isinstance(key_type, (IntegerType, LongType)):
-        raise TypeError(f"bucketed kernels need an integral key, {key_col} is {key_type}")
-    tb = [tiebreak_col] if tiebreak_col and tiebreak_col in events.columns else []
+    *slot* declares the per-key state fields; *transition* sees one
+    :class:`_Bucket` per call and returns its output rows.  With
+    *timers*, state carries ``deadline_ms`` and the query runs with
+    ``EventTimeTimeout``.  The NULL flag of each key column travels as
+    its own column, so keys beyond 2^53 survive pandas' NULL-widening to
+    float.  Tiebreak columns absent from *events* are ignored."""
+    for k in keys:
+        t = events.schema[k].dataType
+        if not isinstance(t, IntegralType):
+            raise TypeError(f"keyed kernels need integral keys, {k} is {t}")
+    tb = [c for c in tiebreak if c in events.columns]
     data = list(dict.fromkeys([ts_col, *tb, *cols]))
+    kc = [f"__k{j}" for j in range(len(keys))]
+    nc = [f"__n{j}" for j in range(len(keys))]
+    names = ["keys"] + [f"keys{j}" for j in range(1, len(keys))]
     state_schema = StructType(
-        [StructField("keys", ArrayType(LongType()))]
+        [StructField(n, ArrayType(LongType())) for n in names]
         + [StructField(name, ArrayType(t)) for name, t in slot.items()]
+        + ([StructField("deadline_ms", ArrayType(LongType()))] if timers else [])
     )
+    empty = ([],) * len(state_schema.fields)
 
     def fn(
         _bucket: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        frames = list(pdfs)
-        if not frames:
-            return
-        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        # sort by (key, ts, tiebreak); key segments start at `starts`
-        ts = pdf[ts_col]
-        order = np.lexsort(
-            [pdf[c].to_numpy() for c in reversed(tb)]
-            + [
-                ts.to_numpy().view("int64"),
-                ts.isna().to_numpy(),
-                pdf["__key"].to_numpy(),
-                pdf["__key_null"].to_numpy(),
-            ]
-        )
-        rows = pdf.take(order).reset_index(drop=True)
-        key = rows["__key"].to_numpy().astype(np.int64)
-        key_null = rows["__key_null"].to_numpy()
-        n = len(rows)
-        head = np.ones(n, dtype=bool)
-        head[1:] = (key[1:] != key[:-1]) | (key_null[1:] != key_null[:-1])
-        starts = np.flatnonzero(head)
-        seg = np.cumsum(head) - 1
-
-        # find each key segment's stored slot (NULL key: the trailing one)
-        stored = state.get if state.exists else ([],) * (1 + len(slot))
-        null_slot = bool(stored[0]) and stored[0][-1] is None
-        st_keys = np.array(stored[0][:-1] if null_slot else stored[0], dtype=np.int64)
-        m = len(stored[0])
-        s_key, s_null = key[starts], key_null[starts]
-        pos = np.searchsorted(st_keys, s_key)
-        found = np.zeros(len(starts), dtype=bool)
-        inside = pos < len(st_keys)
-        found[inside] = st_keys[pos[inside]] == s_key[inside]
-        found &= ~s_null
-        pos[s_null] = len(st_keys)
-        found[s_null] = null_slot
-
-        # each row's predecessor: the latest earlier carried row of its
-        # key, else the stored slot, else the placeholder (index n + m)
-        cur = values(rows)
-        carried = np.ones(n, dtype=bool) if carry is None else carry(rows)
-        last_c = np.maximum.accumulate(np.where(carried, np.arange(n), -1))
-        pred = np.concatenate(([-1], last_c[:-1]))
-        in_key = pred >= starts[seg]
-        src = np.where(in_key, pred, np.where(found[seg], n + pos[seg], n + m))
-        st_vals = {
-            name: np.asarray(stored[i + 1], dtype=cur[name].dtype) for i, name in enumerate(slot)
-        }
-        prev = {
-            name: np.concatenate((cur[name], st_vals[name], _placeholder(cur[name].dtype)))[src]
-            for name in slot
-        }
-
-        # write back each key's last carried row, keys kept sorted
-        last = last_c[np.concatenate((starts[1:], [n])) - 1]
-        has_c = last >= starts
-        upd, new = has_c & found, ~found & ~s_null
-        null_new = s_null & ~found
-        keys = np.concatenate((st_keys, s_key[new]))
-        by_key = np.argsort(keys, kind="stable")
-        out_state = [keys[by_key].tolist() + [None] * (null_slot or bool(null_new.any()))]
-        for name in slot:
-            # a key seen without a carried row stores the placeholder
-            seg_val = np.concatenate((cur[name], _placeholder(cur[name].dtype)))[
-                np.where(has_c, last, n)
-            ]
-            v = st_vals[name].copy()
-            v[pos[upd]] = seg_val[upd]
-            merged = np.concatenate((v[: len(st_keys)], seg_val[new]))[by_key]
-            tail = v[len(st_keys) :] if null_slot else seg_val[null_new]
-            out_state.append(merged.tolist() + tail.tolist())
-        state.update(tuple(out_state))
-
-        out = emit(rows, pd.arrays.IntegerArray(key, key_null), cur, prev)
+        frames = [f for f in pdfs if len(f)]
+        if frames:
+            pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+            ts = pdf[ts_col]
+            order = np.lexsort(
+                [pdf[c].to_numpy() for c in reversed(tb)]
+                + [ts.to_numpy().view("int64"), ts.isna().to_numpy()]
+                + [pdf[c].to_numpy() for j in reversed(range(len(keys))) for c in (kc[j], nc[j])]
+            )
+            rows = pdf.take(order).reset_index(drop=True)
+        else:  # a timer-only call
+            rows = pd.DataFrame({c: [] for c in [*kc, *nc, *data]})
+        wm = state.getCurrentWatermarkMs() if timers else None
+        b = _Bucket(rows, ts_col, data, kc, nc, state.get if state.exists else empty, slot, wm)
+        out = transition(b)
+        row, deadline = b.kept()
+        if row:
+            state.update(row)
+            if deadline is not None:
+                state.setTimeoutTimestamp(max(deadline, wm, 1))
+        elif state.exists:
+            state.remove()
         if out is not None and len(out):
             yield out
 
     bucketed = events.withWatermark(ts_col, watermark).select(
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(KEY_BUCKETS)).alias("__bucket"),
-        F.coalesce(F.col(key_col), F.lit(0)).alias("__key"),
-        F.col(key_col).isNull().alias("__key_null"),
+        F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(KEY_BUCKETS)).alias("__bucket"),
+        *[F.coalesce(F.col(k), F.lit(0)).cast("long").alias(c) for k, c in zip(keys, kc)],
+        *[F.col(k).isNull().alias(c) for k, c in zip(keys, nc)],
         *data,
     )
+    timeout = GroupStateTimeout.EventTimeTimeout if timers else GroupStateTimeout.NoTimeout
     return bucketed.groupBy("__bucket").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, out_schema, state_schema, "append", timeout
     )
+
+
+def _one_slot(
+    values: Callable[[pd.DataFrame], dict[str, np.ndarray]],
+    emit: Callable[..., pd.DataFrame | None],
+    carry: Callable[[pd.DataFrame], np.ndarray] | None = None,
+) -> Callable[[_Bucket], pd.DataFrame | None]:
+    """The vectorized transition of a kernel with ONE slot of state per
+    key (e.g. login: the last event's fail flag and ts).
+
+    Each row gets its predecessor's slot values: the latest earlier
+    *carried* row of its key (all rows carry unless *carry* masks some
+    out, e.g. last-touch's purchases), else the key's stored slot, else
+    the placeholder (NaN / None / 0 / False).  Each key then stores its
+    last carried row; a key seen with no carried row yet keeps the
+    placeholder, so state holds every key seen.
+
+    ``values(rows)`` maps the sorted rows to their own slot values;
+    ``emit(rows, key, cur, prev)`` returns the output rows (``key`` is a
+    nullable Int64 array aligned with *rows*) and must treat a
+    placeholder ``prev`` as "no predecessor"."""
+
+    def transition(b: _Bucket) -> pd.DataFrame | None:
+        n = len(b.rows)
+        cur = values(b.rows)
+        carried = np.ones(n, dtype=bool) if carry is None else carry(b.rows)
+        last_c = np.maximum.accumulate(np.where(carried, np.arange(n), -1))
+        pred = np.concatenate(([-1], last_c[:-1]))
+        src = np.where(pred >= b.starts[b.seg], pred, n + b.entry[b.seg])
+        prev = {name: np.concatenate((cur[name], b.state[name]))[src] for name in b.state}
+        last = last_c[b.ends - 1]
+        has_c = last >= b.starts
+        for name in b.state:
+            b.state[name][b.entry[has_c]] = cur[name][last[has_c]]
+        return emit(b.rows, b.row_key(), cur, prev)
+
+    return transition
+
+
+def _per_key(
+    step: Callable[[_Bucket, Any, int, int, tuple | None], tuple[list, tuple | None, int]],
+    columns: Sequence[str],
+) -> Callable[[_Bucket], pd.DataFrame | None]:
+    """The transition that loops a scalar per-key *step* over the keys
+    with rows and the keys whose timer fires.
+
+    ``step(b, key, s, e, st)`` sees the key's rows ``s:e`` of the call
+    (``s == e``: its timer fired) and its stored slot tuple (None for a
+    key without state); it returns (output tuples in *columns* order,
+    the new slot tuple or None to drop the key, its ``deadline_ms``)."""
+
+    def transition(b: _Bucket) -> pd.DataFrame | None:
+        names = list(b.state)
+        out: list[tuple] = []
+        for i in np.flatnonzero((b.rows_of >= 0) | b.due):
+            j = b.rows_of[i]
+            s, e = (int(b.starts[j]), int(b.ends[j])) if j >= 0 else (0, 0)
+            st = tuple(b.state[name][i] for name in names) if b.found[i] else None
+            rows, st, deadline = step(b, b.key_of(i), s, e, st)
+            out += rows
+            if st is None:
+                b.keep[i] = False
+                continue
+            for name, v in zip(names, st):
+                b.state[name][i] = v
+            b.deadline[i] = deadline
+        return pd.DataFrame(out, columns=list(columns)) if out else None
+
+    return transition
 
 
 LOGIN_WARNING_SCHEMA = StructType(
@@ -313,9 +424,6 @@ ORDER_RESULT_SCHEMA = StructType(
         StructField("pay_ts", LongType()),
         StructField("status", StringType()),
     ]
-)
-_ORDER_STATE = StructType(
-    [StructField("create_ts", DoubleType()), StructField("pay_ts", DoubleType())]
 )
 
 
@@ -346,10 +454,10 @@ def streaming_login_fail(
             }
         )
 
-    return _bucketed_one_slot(
-        events, "user_id", "ts", "event_id", ["event_type"],
+    return _keyed_state(
+        events, ["user_id"], "ts", ["event_id"], ["event_type"],
         {"fail": BooleanType(), "ts": DoubleType()},
-        values, emit, LOGIN_WARNING_SCHEMA, watermark,
+        _one_slot(values, emit), LOGIN_WARNING_SCHEMA, watermark,
     )
 
 
@@ -359,13 +467,6 @@ BLACKLIST_WARNING_SCHEMA = StructType(
         StructField("ad_id", LongType()),
         StructField("day", LongType()),
         StructField("warning_msg", StringType()),
-    ]
-)
-_BLACKLIST_STATE = StructType(
-    [
-        StructField("day", LongType()),
-        StructField("cnt", LongType()),
-        StructField("sent", LongType()),
     ]
 )
 
@@ -381,41 +482,50 @@ def streaming_blacklist(
     warning when the count first exceeds *threshold*.  The reference's
     midnight processing-time timer (:81-84) becomes an event-time day
     rollover in state — deterministic under replay, which a wall-clock
-    timer is not.  Input columns: user_id, ad_id, ts."""
+    timer is not.  Input columns: user_id, ad_id, ts.
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        user_id, ad_id = key
-        day, cnt, sent = state.get if state.exists else (None, 0, 0)
-        out = []
-        for pdf in _group_chunks(pdfs, ["ts"]):
-            # integer day ids straight from epoch-ns — the count per day
-            # is order-free, so the loop runs over DAY SEGMENTS, not rows
-            days = pdf["ts"].astype("int64").to_numpy() // (86400 * 1_000_000_000)
-            if not len(days):
-                continue
-            bounds = np.concatenate(([0], np.flatnonzero(np.diff(days)) + 1, [len(days)]))
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                d = int(days[s])
-                if day is None or d != day:
-                    day, cnt, sent = d, 0, 0  # midnight state reset
-                cnt += int(e - s)
-                if cnt > threshold and not sent:
-                    out.append(
-                        (int(user_id), int(ad_id), day, f"Click over {threshold} times today")
-                    )
-                    sent = 1
-        state.update((day, cnt, sent))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "ad_id", "day", "warning_msg"])
+    The count per day is order-free, so the transition is vectorized
+    over runs of one key and one day.  State: (day, cnt, sent) per
+    (user, ad); a checkpoint written before the bucketed runtime must
+    restart."""
+    msg = f"Click over {threshold} times today"
 
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", "ad_id")
-        .applyInPandasWithState(
-            fn, BLACKLIST_WARNING_SCHEMA, _BLACKLIST_STATE, "append", GroupStateTimeout.NoTimeout
+    def transition(b: _Bucket) -> pd.DataFrame | None:
+        n = len(b.rows)
+        # integer day ids straight from epoch-ns
+        days = b.rows["ts"].astype("int64").to_numpy() // (86400 * 1_000_000_000)
+        head = np.zeros(n, dtype=bool)
+        head[b.starts] = True
+        head[1:] |= days[1:] != days[:-1]
+        rs = np.flatnonzero(head)
+        re = np.append(rs[1:], n)
+        rseg = b.seg[rs]
+        ent = b.entry[rseg]
+        day, cnt, sent = b.state["day"], b.state["cnt"], b.state["sent"]
+        # a day run continues the stored count only as the key's first
+        # run, on the stored day; any other run is a midnight reset
+        cont = (rs == b.starts[rseg]) & b.found[ent] & (day[ent] == days[rs])
+        cnt1 = np.where(cont, cnt[ent], 0) + (re - rs)
+        sent0 = np.where(cont, sent[ent], 0)
+        hit = (cnt1 > threshold) & (sent0 == 0)
+        last = re == b.ends[rseg]
+        e = ent[last]
+        day[e], cnt[e], sent[e] = days[rs][last], cnt1[last], (sent0 | hit)[last]
+        if not hit.any():
+            return None
+        return pd.DataFrame(
+            {
+                "user_id": b.entry_key(0)[ent[hit]],
+                "ad_id": b.entry_key(1)[ent[hit]],
+                "day": days[rs][hit],
+                "warning_msg": msg,
+            }
         )
+
+    return _keyed_state(
+        events, ["user_id", "ad_id"], "ts", [], [],
+        {"day": LongType(), "cnt": LongType(), "sent": LongType()},
+        transition, BLACKLIST_WARNING_SCHEMA, watermark,
     )
 
 
@@ -425,59 +535,51 @@ def streaming_order_timeout(
     watermark: str = "5 seconds",
 ) -> DataFrame:
     """Streaming twin of ``operators.timeout.create_pay_status``.
-    Input columns: order_id, event_type ('create'|'pay'), ts."""
+    Input columns: order_id, event_type ('create'|'pay'), ts.
+
+    State per order is (min create ts, min pay ts) — order-free, so the
+    transition is vectorized over the bucket.  Pairing emits and drops
+    the order; one pending side arms the event-time timer at anchor +
+    *timeout_seconds* (Flink: OrderTimeout.scala:90-92 create+15min /
+    :116-123 pay-alone), which emits ``order timeout`` or ``already
+    payed but not found created log``.  A checkpoint written before the
+    bucketed runtime must restart."""
     from ..operators.timeout import PAID_AFTER_TIMEOUT, PAID_NO_CREATE, PAY_OK, TIMEOUT
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (order_id,) = key
-        if state.hasTimedOut:
-            create_ts, pay_ts = state.get
-            status = TIMEOUT if pay_ts is None else PAID_NO_CREATE
-            state.remove()
-            yield pd.DataFrame(
-                [
-                    (
-                        int(order_id),
-                        None if create_ts is None else _floor_s(create_ts),
-                        None if pay_ts is None else _floor_s(pay_ts),
-                        status,
-                    )
-                ],
-                columns=["order_id", "create_ts", "pay_ts", "status"],
-            )
-            return
-        create_ts, pay_ts = state.get if state.exists else (None, None)
-        for pdf in pdfs:
-            # state is (min create, min pay) — order-free, no sort needed
-            tss = _epoch_s(pdf["ts"])
-            is_create = (pdf["event_type"] == "create").to_numpy()
-            c, p = tss[is_create], tss[~is_create]
-            if c.size:
-                create_ts = float(c.min()) if create_ts is None else min(create_ts, float(c.min()))
-            if p.size:
-                pay_ts = float(p.min()) if pay_ts is None else min(pay_ts, float(p.min()))
-        if create_ts is not None and pay_ts is not None:
-            status = PAY_OK if pay_ts - create_ts < timeout_seconds else PAID_AFTER_TIMEOUT
-            state.remove()
-            yield pd.DataFrame(
-                [(int(order_id), _floor_s(create_ts), _floor_s(pay_ts), status)],
-                columns=["order_id", "create_ts", "pay_ts", "status"],
-            )
-        else:
-            # one pending side — arm the event-time timer (Flink:
-            # OrderTimeout.scala:90-92 create+15min / :116-123 pay-alone)
-            state.update((create_ts, pay_ts))
-            anchor = create_ts if create_ts is not None else pay_ts
-            state.setTimeoutTimestamp(int((anchor + timeout_seconds) * 1000))
-
-    return (
-        order_events.withWatermark("ts", watermark)
-        .groupBy("order_id")
-        .applyInPandasWithState(
-            fn, ORDER_RESULT_SCHEMA, _ORDER_STATE, "append", GroupStateTimeout.EventTimeTimeout
+    def transition(b: _Bucket) -> pd.DataFrame | None:
+        create, pay = b.state["create_ts"], b.state["pay_ts"]
+        has = b.rows_of >= 0
+        if len(b.starts):
+            is_create = b.col["event_type"] == "create"
+            e = b.entry
+            create[e] = np.fmin(create[e], np.fmin.reduceat(np.where(is_create, b.ts, np.nan), b.starts))
+            pay[e] = np.fmin(pay[e], np.fmin.reduceat(np.where(is_create, np.nan, b.ts), b.starts))
+        paired = has & ~np.isnan(create) & ~np.isnan(pay)
+        pending = has & ~paired
+        anchor = np.where(np.isnan(create), pay, create)
+        b.deadline[pending] = ((anchor[pending] + timeout_seconds) * 1000).astype(np.int64)
+        done = paired | b.due
+        b.keep &= ~done
+        if not done.any():
+            return None
+        status = np.where(
+            paired,
+            np.where(pay - create < timeout_seconds, PAY_OK, PAID_AFTER_TIMEOUT),
+            np.where(np.isnan(pay), TIMEOUT, PAID_NO_CREATE),
         )
+        return pd.DataFrame(
+            {
+                "order_id": b.entry_key()[done],
+                "create_ts": pd.array(np.floor(create[done]), dtype="Int64"),
+                "pay_ts": pd.array(np.floor(pay[done]), dtype="Int64"),
+                "status": status[done],
+            }
+        )
+
+    return _keyed_state(
+        order_events, ["order_id"], "ts", [], ["event_type"],
+        {"create_ts": DoubleType(), "pay_ts": DoubleType()},
+        transition, ORDER_RESULT_SCHEMA, watermark, timers=True,
     )
 
 
@@ -493,12 +595,14 @@ def streaming_as_of_enrich(
     left row with the most recent right payload at-or-before it.
 
     Input is a union-tagged stream (``__tag`` 0 = right/reference side,
-    1 = left/probe side — the J2 connect pattern); keyed state holds the
-    latest right (ts, payload).  Within a micro-batch rows process in
+    1 = left/probe side — the J2 connect pattern); keyed state is ONE
+    slot, the latest right (ts, payload), so the transition is
+    ``_one_slot`` with the right rows carried.  Rows process in
     (ts, __tag) order, right-before-left at equal timestamps, matching
     the batch operator's <= visibility; across batches the state carries
     the running latest right row, so time-ordered replays (file sources,
-    Kafka per-key order) reproduce the batch result exactly.
+    Kafka per-key order) reproduce the batch result exactly.  A
+    checkpoint written before the bucketed runtime must restart.
 
     Output: key, left ts, *left_cols, *payload_cols (NULLs before the
     first right row).  Payload columns are integer-long by contract
@@ -509,13 +613,7 @@ def streaming_as_of_enrich(
     float64 inside the micro-batch, so payload values above 2^53 also
     need the caller to fill those never-read slots with a non-null
     sentinel (e.g. 0) to keep the column int64 end-to-end."""
-    from pyspark.sql.types import DoubleType, StructType
-
-    n_pay = len(payload_cols)
-    state_schema = StructType(
-        [StructField("r_ts", DoubleType())]
-        + [StructField(f"p{i}", LongType()) for i in range(n_pay)]
-    )
+    pay = {f"p{i}": c for i, c in enumerate(payload_cols)}
     out_schema = StructType(
         [
             StructField(key, LongType()),
@@ -525,45 +623,30 @@ def streaming_as_of_enrich(
         + [StructField(c, LongType()) for c in payload_cols]
     )
 
-    def fn(key_t, pdfs, state):
-        stored = state.get if state.exists else (None,) * (1 + n_pay)
-        r_ts, pays = stored[0], list(stored[1:])
-        out = []
-        k0 = int(key_t[0])
-        for pdf in _group_chunks(pdfs, [ts_col, "__tag"]):
-            tss = _epoch_s(pdf[ts_col])
-            is_right = (pdf["__tag"].to_numpy() == 0)
-            # forward-fill: index of the latest right row at-or-before
-            # each position (-1 = none yet in this batch → carried state)
-            last_right = np.maximum.accumulate(
-                np.where(is_right, np.arange(len(pdf)), -1)
-            )
-            pay_arr = {c: pdf[c].to_numpy() for c in payload_cols}
-            left_arr = {c: pdf[c].to_numpy() for c in left_cols}
-            for pos in np.flatnonzero(~is_right):
-                j = last_right[pos]
-                cur = [int(pay_arr[c][j]) for c in payload_cols] if j >= 0 else pays
-                out.append(
-                    (k0, _floor_s(tss[pos]))
-                    + tuple(int(left_arr[c][pos]) for c in left_cols)
-                    + tuple(cur)
-                )
-            if is_right.any():
-                j = int(np.flatnonzero(is_right)[-1])
-                r_ts = float(tss[j])
-                pays = [int(pay_arr[c][j]) for c in payload_cols]
-        state.update((r_ts, *pays))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[key, "ts", *left_cols, *payload_cols]
-            )
+    def is_right(rows: pd.DataFrame) -> np.ndarray:
+        return (rows["__tag"] == 0).to_numpy()
 
-    return (
-        tagged.withWatermark(ts_col, watermark)
-        .groupBy(key)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    def values(rows: pd.DataFrame) -> dict[str, np.ndarray]:
+        # left rows' payload slots are never carried: fill, don't read
+        return {"r_ts": _epoch_s(rows[ts_col])} | {
+            p: rows[c].fillna(0).to_numpy().astype(np.int64) for p, c in pay.items()
+        }
+
+    def emit(rows, k, cur, prev):
+        left = ~is_right(rows)
+        if not left.any():
+            return None
+        unseen = np.isnan(prev["r_ts"][left])
+        return pd.DataFrame(
+            {key: k[left], "ts": _floor_s(cur["r_ts"][left])}
+            | {c: rows[c].to_numpy()[left].astype(np.int64) for c in left_cols}
+            | {c: pd.arrays.IntegerArray(prev[p][left], unseen) for p, c in pay.items()}
         )
+
+    return _keyed_state(
+        tagged, [key], ts_col, ["__tag"], [*payload_cols, *left_cols],
+        {"r_ts": DoubleType()} | {p: LongType() for p in pay},
+        _one_slot(values, emit, carry=is_right), out_schema, watermark,
     )
 
 
@@ -574,13 +657,6 @@ FAIL_BURST_SCHEMA = StructType(
         StructField("last_fail_ts", LongType()),
         StructField("n_fails", LongType()),
         StructField("warning_msg", StringType()),
-    ]
-)
-_FAIL_BURST_STATE = StructType(
-    [
-        StructField("anchor", DoubleType()),   # first fail of the open run
-        StructField("fails", StringType()),    # ','-joined fail times in [anchor, anchor+W]
-        StructField("done", LongType()),       # 1 = timer fired for this run
     ]
 )
 
@@ -607,90 +683,64 @@ def streaming_fail_burst(
       silently drops a qualifying burst when the success beats the
       timer; the batch twin counts such runs, so this twin does too.)
     - fail, no anchor → anchor it, buffer it, arm the timer at
-      anchor + window (``GroupStateTimeout.EventTimeTimeout`` — fired
-      by watermark advance, Flink's event-time timer discipline).
+      anchor + window.
     - fail inside [anchor, anchor+window] → buffer it.
     - fail past the window → ignored (the reference's timer has
       conceptually fired; the batch twin drops these too).
-    - timeout → emit (anchor, max buffered, count) if count ≥
+    - timer → emit (anchor, max buffered, count) if count ≥
       *min_fails*; mark the run ``done`` so later fails stay ignored
       until the next success — exactly the batch operator's one-row-
       per-run contract.
 
     A run whose timer the final watermark never passes (anchor +
     window ≥ max event time) stays pending — the bounded-replay test
-    filters the batch twin the same way.  Input columns: user_id,
-    event_type, ts (+ event_id tiebreak).  Output = batch schema:
-    (user_id, first_fail_ts, last_fail_ts, n_fails, warning_msg)."""
+    filters the batch twin the same way.  State per user: (anchor,
+    fails as ``array<double>``, done); a user with no open run holds
+    none.  A checkpoint written before the bucketed runtime must
+    restart.  Input columns: user_id, event_type, ts (+ event_id
+    tiebreak).  Output = batch schema: (user_id, first_fail_ts,
+    last_fail_ts, n_fails, warning_msg)."""
 
     msg = f"login fail {min_fails} times in {int(window_seconds)}s"
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            anchor, fails_s, done = state.get
-            fails = [float(x) for x in fails_s.split(",") if x] if fails_s else []
-            if not done and len(fails) >= min_fails:
-                yield pd.DataFrame(
-                    [(int(user_id), _floor_s(anchor), _floor_s(max(fails)), len(fails), msg)],
-                    columns=["user_id", "first_fail_ts", "last_fail_ts", "n_fails", "warning_msg"],
-                )
-            # run stays closed (done=1) until a success resets it; no
-            # timer re-arm — state is one tuple per user, bounded
-            state.update((anchor, "", 1))
-            return
-        anchor, fails_s, done = state.get if state.exists else (None, "", 0)
-        fails = [float(x) for x in fails_s.split(",") if x] if fails_s else []
+    def step(b: _Bucket, user: Any, s: int, e: int, st: tuple | None):
+        anchor, fails, done = (float(st[0]), list(st[1]), int(st[2])) if st else (math.nan, [], 0)
         out = []
-        for pdf in _group_chunks(pdfs, ["ts", "event_id"]):
-            tss = _epoch_s(pdf["ts"])
-            # NULL event_type counts as a FAIL — the batch twin's
-            # success predicate is `event_type <> fail`, which NULL
-            # fails (oracle CASE -> 0); treating NULL as success here
-            # flushed runs early on NULL-bearing tiers
-            is_fail = (
-                (pdf["event_type"] == fail_value) | pdf["event_type"].isna()
-            ).to_numpy()
-            for i in range(len(tss)):
-                ts = float(tss[i])
-                if not is_fail[i]:
-                    if anchor is not None and not done and len(fails) >= min_fails:
-                        out.append(
-                            (int(user_id), _floor_s(anchor), _floor_s(max(fails)), len(fails), msg)
-                        )
-                    anchor, fails, done = None, [], 0
-                elif done:
-                    continue
-                elif anchor is None:
-                    anchor, fails = ts, [ts]
-                elif ts <= anchor + window_seconds:
-                    fails.append(ts)
-        state.update((anchor, ",".join(repr(t) for t in fails), done))
-        if anchor is not None and not done:
-            state.setTimeoutTimestamp(int((anchor + window_seconds) * 1000))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["user_id", "first_fail_ts", "last_fail_ts", "n_fails", "warning_msg"],
-            )
+        if s == e:  # the timer fired
+            if not done and len(fails) >= min_fails:
+                out.append((user, _floor_s(anchor), _floor_s(max(fails)), len(fails), msg))
+            return out, (anchor, [], 1), _NO_DEADLINE
+        et = b.col["event_type"][s:e]
+        # NULL event_type counts as a FAIL — the batch twin's success
+        # predicate is `event_type <> fail`, which NULL fails (oracle
+        # CASE -> 0); treating NULL as success flushed runs early on
+        # NULL-bearing tiers
+        is_fail = ((et == fail_value) | pd.isna(et)).tolist()
+        for ts, fail in zip(b.ts[s:e].tolist(), is_fail):
+            if not fail:
+                if not math.isnan(anchor) and not done and len(fails) >= min_fails:
+                    out.append((user, _floor_s(anchor), _floor_s(max(fails)), len(fails), msg))
+                anchor, fails, done = math.nan, [], 0
+            elif done:
+                continue
+            elif math.isnan(anchor):
+                anchor, fails = ts, [ts]
+            elif ts <= anchor + window_seconds:
+                fails.append(ts)
+        if math.isnan(anchor) and not done:
+            return out, None, _NO_DEADLINE
+        deadline = _NO_DEADLINE if done else int((anchor + window_seconds) * 1000)
+        return out, (anchor, fails, done), deadline
 
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn, FAIL_BURST_SCHEMA, _FAIL_BURST_STATE, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    return _keyed_state(
+        events, ["user_id"], "ts", ["event_id"], ["event_type"],
+        {"anchor": DoubleType(), "fails": ArrayType(DoubleType()), "done": LongType()},
+        _per_key(step, FAIL_BURST_SCHEMA.names), FAIL_BURST_SCHEMA, watermark, timers=True,
     )
 
 
 NFB_SCHEMA = StructType(
     [StructField("key", LongType()), StructField("first_ts", LongType())]
-)
-
-_NFB_STATE = StructType(
-    [StructField("pending", StringType()), StructField("absents", StringType())]
 )
 
 
@@ -709,7 +759,7 @@ def streaming_not_followed_by(
 
     Negation is decided by TIME, not by data: a first-event survives
     only once the watermark proves no killer can still arrive.  State
-    per key, both lists PRUNED every call:
+    per key, both ``array<double>`` lists PRUNED every call:
 
     - ``pending`` — undecided first-event timestamps.  A new one is
       admitted only if no stored absent already kills it (stored
@@ -723,74 +773,45 @@ def streaming_not_followed_by(
       future first event must have ts > watermark, so only those can
       kill it).  Bounded by absent-rate × watermark delay.
 
-    Survival emission rides ``EventTimeTimeout``: the earliest pending
-    deadline arms a timer, so quiet keys flush on watermark advance
-    (the trailing no-data micro-batch) exactly like a Flink event-time
-    timer; a key with neither list non-empty removes its state.  The
-    kill window is the batch operator's value-ordered end-exclusive
-    ``first_ts < absent_ts < first_ts + within`` — equal-ts killers
-    don't kill, so in-batch sort order never changes the outcome."""
+    Survival emission rides the key's timer: the earliest pending
+    deadline (or, absent-only, the last absent + 1 s, to self-clean)
+    fires on watermark advance (the trailing no-data micro-batch)
+    exactly like a Flink event-time timer; a key with neither list
+    non-empty holds no state.  The kill window is the batch operator's
+    value-ordered end-exclusive ``first_ts < absent_ts < first_ts +
+    within`` — equal-ts killers don't kill, so in-batch sort order never
+    changes the outcome.  A checkpoint written before the bucketed
+    runtime must restart."""
     tagged = events.withColumn("__a", _tag(first_pred)).withColumn(
         "__b", _tag(absent_pred)
     )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
 
-    def _parse(s: str | None) -> list[float]:
-        return [float(x) for x in s.split(",") if x] if s else []
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        if state.exists:
-            pending_s, absents_s = state.get
-            pending, absents = _parse(pending_s), _parse(absents_s)
-        else:
-            pending, absents = [], []
-        for pdf in _group_chunks(pdfs, sort_cols):
-            tss = _epoch_s(pdf[ts_col])
-            a_arr = pdf["__a"].to_numpy().astype(bool)
-            b_arr = pdf["__b"].to_numpy().astype(bool)
-            for i in range(len(tss)):
-                ts = float(tss[i])
-                if b_arr[i]:
-                    pending = [
-                        v for v in pending if not (v < ts < v + within_seconds)
-                    ]
-                    absents.append(ts)
-                if a_arr[i]:
-                    if not any(ts < at < ts + within_seconds for at in absents):
-                        pending.append(ts)
-        wm_s = state.getCurrentWatermarkMs() / 1000.0
-        survived = sorted(v for v in pending if v + within_seconds <= wm_s)
+    def step(b: _Bucket, k: Any, s: int, e: int, st: tuple | None):
+        pending, absents = (list(st[0]), list(st[1])) if st else ([], [])
+        a_arr = b.col["__a"][s:e].astype(bool).tolist()
+        b_arr = b.col["__b"][s:e].astype(bool).tolist()
+        for ts, is_a, is_b in zip(b.ts[s:e].tolist(), a_arr, b_arr):
+            if is_b:
+                pending = [v for v in pending if not (v < ts < v + within_seconds)]
+                absents.append(ts)
+            if is_a and not any(ts < at < ts + within_seconds for at in absents):
+                pending.append(ts)
+        wm_s = b.wm / 1000.0
+        out = [(k, _floor_s(v)) for v in sorted(v for v in pending if v + within_seconds <= wm_s)]
         pending = [v for v in pending if v + within_seconds > wm_s]
         absents = [at for at in absents if at > wm_s]
-        if pending or absents:
-            state.update(
-                (
-                    ",".join(repr(t) for t in pending),
-                    ",".join(repr(t) for t in absents),
-                )
-            )
-            if pending:
-                deadline_ms = int(min(v + within_seconds for v in pending) * 1000)
-            else:
-                # absent-only state: self-clean once these can't kill
-                deadline_ms = int((max(absents) + 1.0) * 1000)
-            state.setTimeoutTimestamp(max(deadline_ms, int(wm_s * 1000) + 1))
-        elif state.exists:
-            state.remove()
-        if survived:
-            yield pd.DataFrame(
-                [(int(k), int(v)) for v in survived], columns=["key", "first_ts"]
-            )
+        if pending:
+            deadline = int(min(v + within_seconds for v in pending) * 1000)
+        elif absents:
+            deadline = int((max(absents) + 1.0) * 1000)
+        else:
+            return out, None, _NO_DEADLINE
+        return out, (pending, absents), deadline
 
-    return (
-        tagged.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn, NFB_SCHEMA, _NFB_STATE, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    return _keyed_state(
+        tagged, [key_col], ts_col, [tiebreak_col] if tiebreak_col else [], ["__a", "__b"],
+        {"pending": ArrayType(DoubleType()), "absents": ArrayType(DoubleType())},
+        _per_key(step, NFB_SCHEMA.names), NFB_SCHEMA, watermark, timers=True,
     )
 
 
@@ -800,14 +821,6 @@ FUNNEL_SCHEMA = StructType(
         StructField("day", StringType()),
         StructField("step", IntegerType()),
         StructField("step_ts", LongType()),
-    ]
-)
-
-_FUNNEL_STATE = StructType(
-    [
-        StructField("t0", DoubleType()),
-        StructField("t1", DoubleType()),
-        StructField("t2", DoubleType()),
     ]
 )
 
@@ -829,41 +842,42 @@ def streaming_funnel(
     chain, so a bounded replay reproduces the batch funnel (asserted in
     tests/test_streaming.py).  One row is emitted per step advancement
     (update-style progress feed); aggregating max(step) per (user, day)
-    gives the batch reach counts.  State is three scalar slots per
-    active (user, day) — bounded, watermark-evictable."""
-    day = F.date_format(F.col(ts_col), "yyyy-MM-dd")
+    gives the batch reach counts.  The day is keyed as an integral day
+    id (days since 1970-01-01 in the session time zone) and rendered
+    back as its ``yyyy-MM-dd`` string on output.  State is three scalar
+    slots per (user, day) seen, kept for the life of the query: no timer
+    drops a finished day.  A checkpoint written before the bucketed
+    runtime must restart."""
     tagged = events.select(
-        F.col(key_col), day.alias("__day"), F.col(type_col), F.col(ts_col)
+        F.col(key_col),
+        F.datediff(F.to_date(F.col(ts_col)), F.lit("1970-01-01").cast("date")).alias("__day"),
+        F.col(type_col),
+        F.col(ts_col),
     )
     step_idx = {s: i for i, s in enumerate(steps)}
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        u, d = key
-        t: list[float | None] = list(state.get) if state.exists else [None, None, None]
-        out: list[tuple[int, str, int, int]] = []
-        for pdf in _group_chunks(pdfs, [ts_col]):
-            tss = _epoch_s(pdf[ts_col])
-            types = pdf[type_col].to_numpy()
-            for ts, et in zip(tss, types):
-                i = step_idx.get(et)
-                if i is None or t[i] is not None:
-                    continue
-                if i == 0 or (t[i - 1] is not None and float(ts) > t[i - 1]):
-                    t[i] = float(ts)
-                    out.append((int(u), str(d), i + 1, _floor_s(ts)))
-        state.update(tuple(t))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "day", "step", "step_ts"])
-
-    return (
-        tagged.withWatermark(ts_col, watermark)
-        .groupBy(key_col, "__day")
-        .applyInPandasWithState(
-            fn, FUNNEL_SCHEMA, _FUNNEL_STATE, "append", GroupStateTimeout.NoTimeout
-        )
+    out_schema = StructType(
+        [FUNNEL_SCHEMA["user_id"], StructField("day", LongType()), *FUNNEL_SCHEMA.fields[2:]]
     )
+
+    def step(b: _Bucket, key: tuple, s: int, e: int, st: tuple | None):
+        t = [float(x) for x in st] if st else [math.nan] * 3
+        out = []
+        for ts, et in zip(b.ts[s:e].tolist(), b.col[type_col][s:e].tolist()):
+            i = step_idx.get(et)
+            if i is None or not math.isnan(t[i]):
+                continue
+            if i == 0 or ts > t[i - 1]:  # a NaN (unclaimed) anchor compares False
+                t[i] = ts
+                out.append((*key, i + 1, _floor_s(ts)))
+        return out, tuple(t), _NO_DEADLINE
+
+    out = _keyed_state(
+        tagged, [key_col, "__day"], ts_col, [], [type_col],
+        {"t0": DoubleType(), "t1": DoubleType(), "t2": DoubleType()},
+        _per_key(step, out_schema.names), out_schema, watermark,
+    )
+    day = F.date_add(F.lit("1970-01-01").cast("date"), F.col("day").cast("int"))
+    return out.select("user_id", day.cast("string").alias("day"), "step", "step_ts")
 
 
 ONE_OR_MORE_SCHEMA = StructType(
@@ -872,12 +886,6 @@ ONE_OR_MORE_SCHEMA = StructType(
         StructField("first_a_ts", LongType()),
         StructField("b_ts", LongType()),
         StructField("n_a", LongType()),
-    ]
-)
-_ONE_OR_MORE_STATE = StructType(
-    [
-        StructField("run_len", LongType()),
-        StructField("first_a", DoubleType()),
     ]
 )
 
@@ -899,42 +907,33 @@ def streaming_one_or_more(
     (ts, tiebreak) order: A extends (or starts) the run; B with a live
     run emits (first_a, b_ts, len) when the bound holds, and — being a
     non-A — ends the run; anything else resets.  Constant-size state,
-    no buffered prefixes, no pruning needed."""
+    no buffered prefixes, no pruning needed; a key without a live run
+    holds none.  A checkpoint written before the bucketed runtime must
+    restart."""
     tagged = events.withColumn("__a", _tag(a_pred)).withColumn(
         "__b", _tag(b_pred)
     )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        run_len, first_a = state.get if state.exists else (0, 0.0)
-        out: list[tuple[int, int, int, int]] = []
-        for pdf in _group_chunks(pdfs, sort_cols):
-            tss = _epoch_s(pdf[ts_col])
-            is_b = pdf["__b"].to_numpy().astype(bool)
-            is_a = pdf["__a"].to_numpy().astype(bool) & ~is_b
-            for i in range(len(tss)):
-                ts = float(tss[i])
-                if is_a[i]:
-                    if run_len == 0:
-                        first_a = ts
-                    run_len += 1
-                    continue
-                if is_b[i] and run_len >= 1 and ts <= first_a + within_seconds:
-                    out.append((int(k), _floor_s(first_a), _floor_s(ts), int(run_len)))
-                run_len, first_a = 0, 0.0
-        state.update((run_len, first_a))
-        if out:
-            yield pd.DataFrame(out, columns=["key", "first_a_ts", "b_ts", "n_a"])
+    def step(b: _Bucket, k: Any, s: int, e: int, st: tuple | None):
+        run_len, first_a = (int(st[0]), float(st[1])) if st else (0, 0.0)
+        out = []
+        is_b = b.col["__b"][s:e].astype(bool)
+        is_a = (b.col["__a"][s:e].astype(bool) & ~is_b).tolist()
+        for ts, a, bb in zip(b.ts[s:e].tolist(), is_a, is_b.tolist()):
+            if a:
+                if run_len == 0:
+                    first_a = ts
+                run_len += 1
+                continue
+            if bb and run_len >= 1 and ts <= first_a + within_seconds:
+                out.append((k, _floor_s(first_a), _floor_s(ts), run_len))
+            run_len, first_a = 0, 0.0
+        return out, (run_len, first_a) if run_len else None, _NO_DEADLINE
 
-    return (
-        tagged.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn, ONE_OR_MORE_SCHEMA, _ONE_OR_MORE_STATE, "append", GroupStateTimeout.NoTimeout
-        )
+    return _keyed_state(
+        tagged, [key_col], ts_col, [tiebreak_col] if tiebreak_col else [], ["__a", "__b"],
+        {"run_len": LongType(), "first_a": DoubleType()},
+        _per_key(step, ONE_OR_MORE_SCHEMA.names), ONE_OR_MORE_SCHEMA, watermark,
     )
 
 
@@ -947,6 +946,7 @@ VALUE_SPIKE_SCHEMA = StructType(
         StructField("spike_value", DoubleType()),
     ]
 )
+
 
 def streaming_value_spike(
     events: DataFrame,
@@ -979,10 +979,10 @@ def streaming_value_spike(
             }
         )
 
-    return _bucketed_one_slot(
-        events, key_col, ts_col, tiebreak_col, [value_col],
+    return _keyed_state(
+        events, [key_col], ts_col, [tiebreak_col] if tiebreak_col else [], [value_col],
         {"ts": DoubleType(), "value": DoubleType()},
-        values, emit, VALUE_SPIKE_SCHEMA, watermark,
+        _one_slot(values, emit), VALUE_SPIKE_SCHEMA, watermark,
     )
 
 
@@ -1035,9 +1035,9 @@ def streaming_last_touch(
             }
         )
 
-    return _bucketed_one_slot(
-        events, key_col, ts_col, tiebreak_col, [type_col, value_col],
+    return _keyed_state(
+        events, [key_col], ts_col, [tiebreak_col] if tiebreak_col else [], [type_col, value_col],
         {"ts": DoubleType(), "type": StringType()},
-        values, emit, LAST_TOUCH_SCHEMA, watermark,
-        carry=lambda rows: ~is_purchase(rows),
+        _one_slot(values, emit, carry=lambda rows: ~is_purchase(rows)),
+        LAST_TOUCH_SCHEMA, watermark,
     )

@@ -1,10 +1,10 @@
-"""Key-bucketed one-slot kernels against their batch twins.
+"""Keyed kernels on the bucketed runtime against their batch twins.
 
-``streaming_login_fail``, ``streaming_value_spike`` and
-``streaming_last_touch`` group their key into ``KEY_BUCKETS`` hash
-buckets and keep each bucket's state as parallel sorted arrays.  One synthetic stream exercises every way the
-bucket mechanics can go wrong, and each kernel's output must equal its
-batch twin over the same rows:
+Every keyed kernel in ``streaming/`` groups its key into ``KEY_BUCKETS``
+hash buckets and keeps each bucket's state as parallel sorted arrays.
+One synthetic stream exercises every way the bucket mechanics can go
+wrong, and each kernel's output must equal its batch twin over the same
+rows:
 
 - every key's events straddle six micro-batches (``maxFilesPerTrigger=1``),
   so each key's first row per batch is seeded from stored state;
@@ -17,8 +17,16 @@ batch twin over the same rows:
   bucket nor reading or writing key 0's slot;
 - a restart from the checkpoint after the third file.
 
-The login kernel (the one the open-loop benchmark runs) is in the
-default tier; the other two are in the soak tier.
+The timer kernels also meet keys whose deadline passes in a micro-batch
+where the key has rows (processed as rows, not fired), and the
+composite-key blacklist meets one user with two ads in one bucket.
+Where a batch twin drops NULL keys (a filter or a join on the key),
+the comparison covers the non-NULL keys.  Timer outcomes are
+compared where the closing watermark decided them.
+
+The login and order-timeout kernels are in the default tier (the
+benchmark runs login; order timeout covers the timers); the others are
+in the soak tier.
 """
 
 from __future__ import annotations
@@ -31,11 +39,33 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from flinkecuserbehavioranalysis_spark.operators.patterns import consecutive_fail_alerts
+from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep, match_pattern
+from flinkecuserbehavioranalysis_spark.operators.joins import as_of_join
+from flinkecuserbehavioranalysis_spark.operators.patterns import (
+    blacklist_filter,
+    consecutive_fail_alerts,
+    fail_burst_alerts,
+    pattern_not_followed_by,
+    pattern_one_or_more,
+)
+from flinkecuserbehavioranalysis_spark.operators.timeout import (
+    PAID_AFTER_TIMEOUT,
+    PAID_NO_CREATE,
+    PAY_OK,
+    TIMEOUT,
+)
+from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
 from flinkecuserbehavioranalysis_spark.streaming.stateful import (
     KEY_BUCKETS,
+    streaming_as_of_enrich,
+    streaming_blacklist,
+    streaming_fail_burst,
+    streaming_funnel,
     streaming_last_touch,
     streaming_login_fail,
+    streaming_not_followed_by,
+    streaming_one_or_more,
+    streaming_order_timeout,
     streaming_value_spike,
 )
 
@@ -119,7 +149,7 @@ def replay(spark, tmp_path_factory):
         return rows
 
     batch = spark.createDataFrame(pdf, DDL)
-    return run, batch
+    return run, batch, pdf
 
 
 def _sorted(rows) -> list[tuple]:
@@ -129,7 +159,7 @@ def _sorted(rows) -> list[tuple]:
 def test_replay_exercises_every_bucket_edge(spark, replay):
     """The synthetic stream really has the shapes the kernels must
     survive — otherwise the equivalence tests below prove little."""
-    _, batch = replay
+    _, batch, _ = replay
     per_bucket = (
         batch.withColumn("f", F.floor(F.col("event_id") / ROWS_PER_FILE))
         .groupBy("f", F.pmod(F.xxhash64("user_id"), F.lit(KEY_BUCKETS)))
@@ -149,7 +179,7 @@ def test_replay_exercises_every_bucket_edge(spark, replay):
 
 
 def test_login_fail_matches_batch(spark, replay):
-    run, batch = replay
+    run, batch, _ = replay
     got = run("login", lambda s: streaming_login_fail(s.select("user_id", "event_type", "ts", "event_id")))
     want = [
         tuple(r)
@@ -172,7 +202,7 @@ def test_login_fail_matches_batch(spark, replay):
 
 @pytest.mark.soak
 def test_value_spike_matches_batch(spark, replay):
-    run, batch = replay
+    run, batch, _ = replay
     got = run("spike", streaming_value_spike)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     want = [
@@ -204,7 +234,7 @@ def test_value_spike_matches_batch(spark, replay):
 
 @pytest.mark.soak
 def test_last_touch_matches_batch(spark, replay):
-    run, batch = replay
+    run, batch, _ = replay
     got = run("last_touch", lambda s: streaming_last_touch(s, within_seconds=300.0))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(Window.unboundedPreceding, -1)
     touch = F.max(
@@ -230,3 +260,303 @@ def test_last_touch_matches_batch(spark, replay):
     # both arms of the freshness test and the NULL key all occur
     assert {r[2] is None for r in got} == {True, False}
     assert any(r[0] is None for r in got)
+
+
+def _max_ts(pdf: pd.DataFrame) -> float:
+    """The closing watermark in seconds (0 s delay): the max event time."""
+    return pdf["ts"].max().timestamp()
+
+
+def _epoch(ts: pd.Series) -> np.ndarray:
+    return ts.astype("datetime64[ns]").astype("int64").to_numpy() / 1e9
+
+
+def _not_null_key(rows) -> list[tuple]:
+    return _sorted(r for r in rows if r[0] is not None)
+
+
+#: Event types that become order creates; the rest (errors, NULL) pay.
+CREATES = ("view", "click")
+
+
+def _order_events(stream):
+    """The fixture as create/pay events of ten orders per user (a NULL
+    user's orders are one NULL order, user 0's include order 0): about
+    one event per order and micro-batch, so orders pair, re-open and
+    time out, with and without rows in the batch that passes their
+    deadline."""
+    return stream.select(
+        (F.col("user_id") * 10 + F.col("event_id") % 10).alias("order_id"),
+        F.when(F.col("event_type").isin(*CREATES), "create").otherwise("pay").alias("event_type"),
+        "ts",
+    )
+
+
+def _order_timeout_model(pdf: pd.DataFrame, timeout: float) -> tuple[list[tuple], int]:
+    """Spark's per-key event-time semantics on the fixture's micro-batches.
+
+    Orders are keyed as in ``_order_events``.  Batch k reads file k;
+    its watermark is the max event time of the files before it (0 s
+    delay), and it drops as late the rows at or below the watermark of
+    the batch before it.  The end of each replay segment (after file 3,
+    and at the end) adds a no-data batch at the advanced watermark.  A
+    key with rows folds them into (min create, min pay) and emits once
+    both are set; a key without rows whose deadline is strictly below
+    the watermark times out.  Also returns how often a key had rows in
+    the batch that passed its deadline."""
+    files = [pdf.iloc[i * ROWS_PER_FILE : (i + 1) * ROWS_PER_FILE] for i in range(N_FILES)]
+    state: dict = {}
+    out: list[tuple] = []
+    late_ms, wm_ms, passed_with_rows = 0, 0, 0
+    for rows in [*files[:3], None, *files[3:], None]:
+        seen = set()
+        if rows is not None:
+            rows = rows[_epoch(rows["ts"]) * 1000 > late_ms]
+            for key, g in rows.groupby(rows["user_id"] * 10 + rows["event_id"] % 10, dropna=False):
+                key = None if pd.isna(key) else int(key)
+                seen.add(key)
+                tss = _epoch(g["ts"])
+                create = g["event_type"].isin(CREATES).to_numpy()
+                c, p, deadline = state.pop(key, (np.nan, np.nan, -1))
+                passed_with_rows += 0 <= deadline < wm_ms
+                c = np.fmin(c, tss[create].min()) if create.any() else c
+                p = np.fmin(p, tss[~create].min()) if (~create).any() else p
+                if not (np.isnan(c) or np.isnan(p)):
+                    status = PAY_OK if p - c < timeout else PAID_AFTER_TIMEOUT
+                    out.append((key, int(np.floor(c)), int(np.floor(p)), status))
+                else:
+                    anchor = p if np.isnan(c) else c
+                    state[key] = (c, p, int((anchor + timeout) * 1000))
+        for key in [k for k, v in state.items() if k not in seen and v[2] < wm_ms]:
+            c, p, _ = state.pop(key)
+            status = TIMEOUT if np.isnan(p) else PAID_NO_CREATE
+            out.append(
+                (key, None if np.isnan(c) else int(np.floor(c)), None if np.isnan(p) else int(np.floor(p)), status)
+            )
+        late_ms = wm_ms
+        if rows is not None:
+            wm_ms = max(wm_ms, int(rows["ts"].max().timestamp() * 1000))
+    return out, passed_with_rows
+
+
+def _on_time(spark, pdf: pd.DataFrame):
+    """The rows a timer kernel keeps: the no-data batch that closes the
+    first replay segment advances the watermark to the max event time
+    of files 0-2, so rows of the later files at or below it are late."""
+    head = pdf.iloc[: 3 * ROWS_PER_FILE]
+    late = (np.arange(len(pdf)) >= 3 * ROWS_PER_FILE) & (pdf["ts"] <= head["ts"].max()).to_numpy()
+    assert 0 < late.sum() < ROWS_PER_FILE
+    return spark.createDataFrame(pdf[~late], DDL)
+
+
+def test_order_timeout_matches_per_key_timers(spark, replay):
+    run, _, pdf = replay
+    timeout = 100.0
+    got = run(
+        "order_timeout",
+        lambda s: streaming_order_timeout(_order_events(s), timeout_seconds=timeout, watermark="0 seconds"),
+    )
+    want, passed_with_rows = _order_timeout_model(pdf, timeout)
+    assert _sorted(got) == _sorted(want)
+    # every outcome occurs, for the NULL key and key 0 too; some keys
+    # had rows in the batch whose watermark passed their deadline
+    assert {r[3] for r in got} == {PAY_OK, PAID_AFTER_TIMEOUT, TIMEOUT, PAID_NO_CREATE}
+    assert any(r[0] is None for r in got) and any(r[0] == 0 for r in got)
+    assert passed_with_rows > 0
+
+
+def _colliding_ad(batch) -> int:
+    """An ad id *a* for which some user's (user, 0) and (user, a) keys
+    share a hash bucket."""
+    users = batch.where(F.col("user_id").isNotNull()).select("user_id").distinct()
+    bucket = lambda ad: F.pmod(F.xxhash64("user_id", ad), F.lit(KEY_BUCKETS))  # noqa: E731
+    return (
+        users.crossJoin(batch.sparkSession.range(1, 500).withColumnRenamed("id", "a"))
+        .where(bucket(F.lit(0).cast("long")) == bucket(F.col("a")))
+        .agg(F.min("a"))
+        .first()[0]
+    )
+
+
+@pytest.mark.soak
+def test_blacklist_matches_batch(spark, replay):
+    run, batch, _ = replay
+    ad = _colliding_ad(batch)
+    assert ad is not None
+
+    def with_ad(df):
+        return df.withColumn("ad_id", F.pmod("event_id", F.lit(2)) * F.lit(ad).cast("long"))
+
+    got = run("blacklist", lambda s: streaming_blacklist(with_ad(s).select("user_id", "ad_id", "ts"), threshold=20))
+    _, warnings = blacklist_filter(with_ad(batch), threshold=20, tiebreak_col="event_id")
+    want = [tuple(r) for r in warnings.select("user_id", "ad_id", "day", "warning_msg").collect()]
+    assert _sorted(got) == _sorted(want)
+    # some keys warn and some do not; the NULL user warns
+    assert 0 < len(got) < 2 * (N_KEYS + 1)
+    assert any(r[0] is None for r in got)
+
+
+@pytest.mark.soak
+def test_as_of_enrich_matches_batch(spark, replay):
+    run, batch, _ = replay
+
+    def tagged(df):
+        return df.select(
+            "user_id",
+            "ts",
+            F.when(F.col("event_id") % 7 == 0, 0).otherwise(1).alias("__tag"),
+            F.col("event_id").alias("lid"),
+            F.col("event_id").alias("rid"),
+        )
+
+    got = run("as_of", lambda s: streaming_as_of_enrich(tagged(s), key="user_id"))
+    t = tagged(batch)
+    right = t.where("__tag = 0").select("user_id", F.col("ts").alias("rts"), "rid")
+    # one right row per (key, ts): the twin's pick among tied right rows
+    # would be arbitrary
+    assert right.groupBy("user_id", "rts").count().where("count > 1").count() == 0
+    left = t.where("__tag = 1").select("user_id", "ts", "lid")
+    want = [
+        tuple(r)
+        for r in as_of_join(left, right, key="user_id", left_ts="ts", right_ts="rts", right_payload=["rid"])
+        .select("user_id", F.col("ts").cast("long"), "lid", "rid")
+        .collect()
+    ]
+    assert _not_null_key(got) == _not_null_key(want)
+    # both arms (a right row seen, none yet) occur; the NULL key enriches
+    # from its own right rows only
+    assert {r[3] is None for r in got} == {True, False}
+    assert any(r[0] is None and r[3] is not None for r in got)
+
+
+@pytest.mark.soak
+def test_fail_burst_matches_batch(spark, replay):
+    run, _, pdf = replay
+    batch = _on_time(spark, pdf)
+    window = 60
+    got = run(
+        "fail_burst",
+        lambda s: streaming_fail_burst(
+            s.select("user_id", "event_type", "ts", "event_id"), window_seconds=float(window), min_fails=2
+        ),
+    )
+    want = [
+        tuple(r)
+        for r in fail_burst_alerts(
+            batch, fail_value="error", window_seconds=window, min_fails=2, tiebreak_col="event_id"
+        ).collect()
+    ]
+    # a run whose timer the closing watermark passed is decided on both
+    # sides; a later run may be flushed early by a success, or pending
+    closed = _max_ts(pdf) - window
+    assert _not_null_key(r for r in got if r[1] < closed) == _not_null_key(r for r in want if r[1] < closed)
+    assert set(_not_null_key(got)) <= set(want)
+    assert any(r[0] is None for r in got) and any(r[0] == 0 for r in got)
+
+
+@pytest.mark.soak
+def test_not_followed_by_matches_batch(spark, replay):
+    run, _, pdf = replay
+    batch = _on_time(spark, pdf)
+    within = 59.5  # deadlines never coincide with a whole-second watermark
+    kw = dict(
+        key_col="user_id",
+        ts_col="ts",
+        first_pred=F.col("event_type") == "view",
+        absent_pred=F.col("event_type") == "purchase",
+        within_seconds=within,
+    )
+    got = run("nfb", lambda s: streaming_not_followed_by(s, tiebreak_col="event_id", **kw))
+    closed = _max_ts(pdf) - within
+    want = [tuple(r) for r in pattern_not_followed_by(batch, **kw).collect() if r[1] < closed]
+    assert _not_null_key(got) == _not_null_key(want)
+    assert any(r[0] is None for r in got)
+
+
+@pytest.mark.soak
+def test_funnel_matches_batch(spark, replay):
+    run, _, pdf = replay
+    got = run("funnel", streaming_funnel)
+    # the batch funnel's per-(user, day) first-touch anchors: each step
+    # takes its type's earliest event strictly after the previous anchor
+    want = []
+    ev = pdf.assign(t=_epoch(pdf["ts"]), day=pdf["ts"].dt.strftime("%Y-%m-%d"))
+    for (user, day), g in ev.groupby(["user_id", "day"], dropna=False):
+        anchor = -np.inf
+        for step, kind in enumerate(("view", "click", "purchase"), start=1):
+            ts = g.loc[(g["event_type"] == kind) & (g["t"] > anchor), "t"]
+            if ts.empty:
+                break
+            anchor = ts.min()
+            want.append((None if pd.isna(user) else int(user), day, step, int(np.floor(anchor))))
+    assert _sorted(got) == _sorted(want)
+    assert {r[2] for r in got} == {1, 2, 3}
+
+
+@pytest.mark.soak
+def test_one_or_more_matches_batch(spark, replay):
+    run, batch, _ = replay
+    kw = dict(
+        key_col="user_id",
+        ts_col="ts",
+        a_pred=F.col("event_type") == "view",
+        b_pred=F.col("event_type") == "purchase",
+        within_seconds=120.0,
+        tiebreak_col="event_id",
+    )
+    got = run("one_or_more", lambda s: streaming_one_or_more(s, **kw))
+    want = [
+        (r[0], int(r[1].timestamp()), int(r[2].timestamp()), r[3])
+        for r in pattern_one_or_more(batch, **kw).collect()
+    ]
+    assert _not_null_key(got) == _not_null_key(want)
+    assert any(r[3] > 1 for r in got)
+    assert any(r[0] is None for r in got)
+
+
+@pytest.mark.soak
+@pytest.mark.parametrize("shape", ["sequence", "trailing_negation"])
+def test_cep_nfa_matches_batch(spark, replay, shape):
+    run, batch, pdf = replay
+    view, click, purchase = (F.col("event_type") == t for t in ("view", "click", "purchase"))
+    if shape == "sequence":
+        steps, within = [PatternStep(view), PatternStep(click), PatternStep(purchase)], 300.0
+        closed = np.inf
+    else:
+        steps, within = [PatternStep(view), PatternStep(purchase, negated=True)], 59.5
+        closed = _max_ts(pdf) - within
+        batch = _on_time(spark, pdf)
+    got = run(
+        f"cep_{shape}",
+        lambda s: match_pattern_stream(s, "user_id", "ts", steps, within, tiebreak_col="event_id"),
+    )
+    want = [
+        tuple(r)
+        for r in match_pattern(batch, "user_id", "ts", steps, within, tiebreak_col="event_id").collect()
+        if r[1] < closed
+    ]
+    assert _not_null_key(got) == _not_null_key(want)
+    assert len(got) > N_KEYS
+
+
+def test_replays_leave_no_sink_view(spark):
+    """A registry replay is not memoized: each call runs the streaming
+    query again into a memory sink, whose temp view must be dropped
+    before the call returns, or every call would keep its rows in the
+    driver."""
+    from conftest import SF_DIR
+
+    from flinkecuserbehavioranalysis_spark.plans.queries import QUERIES
+    from flinkecuserbehavioranalysis_spark.streaming.jobs import run_bounded
+
+    def sink_views() -> list[str]:
+        return [
+            t.name for t in spark.catalog.listTables() if t.name.startswith(("bounded_replay_", "mem_"))
+        ]
+
+    replay = QUERIES["streaming_login_fail_replay"].fn
+    first, second = (_sorted(tuple(r) for r in replay(spark, SF_DIR).collect()) for _ in range(2))
+    assert first == second and first
+    stream = spark.readStream.format("rate").option("rowsPerSecond", 10).load()
+    assert run_bounded(stream.where("false"), timeout=120) == []
+    assert sink_views() == []

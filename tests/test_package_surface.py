@@ -15,8 +15,7 @@ nothing else reaches, so the list cannot go stale.
 No package module imports a name it never uses.
 
 A memo earns its registry entry: every ``pin``/``_cached_canon`` call
-is reached by at least two registry queries, except the streaming
-replays on ``ONE_CONSUMER_MEMOS``.  No package code calls
+is reached by at least two registry queries.  No package code calls
 ``.persist()``; a frame read several times within one call takes a
 ``localCheckpoint``, which leaves nothing in Spark's CacheManager.
 """
@@ -49,19 +48,6 @@ KEEP = {
     "apply_merges": "test reference twin of bpe_train_curve's segmentation",
     "log2_q12_py": "test reference twin of the log2 fold",
     "run_bounded": "harness: runs a streaming twin to completion",
-}
-
-#: Memo sites allowed a single registry consumer, by the function that
-#: holds the call.  Each replay memoizes its own result; deleting them
-#: waits on cheap cold replays.
-ONE_CONSUMER_MEMOS = {
-    f"streaming_{name}_replay": "ROADMAP direction 1"
-    for name in (
-        "asof", "blacklist", "cep", "cep_negation", "dedup", "fail_burst",
-        "funnel", "last_touch", "login_fail", "not_followed_by", "one_or_more",
-        "order_timeout", "pattern_sequence", "pv_count", "session",
-        "sessionized_stats", "url_dedup", "value_spike", "winnow_dedup",
-    )
 }
 
 
@@ -192,16 +178,10 @@ def memo_sites() -> list[tuple[str, str, list[str]]]:
 
 
 def test_every_memo_has_two_registry_consumers():
-    sites = memo_sites()
     lonely = sorted(
-        f"{loc} {fn} <- {consumers}"
-        for fn, loc, consumers in sites
-        if len(consumers) < 2 and fn not in ONE_CONSUMER_MEMOS
+        f"{loc} {fn} <- {consumers}" for fn, loc, consumers in memo_sites() if len(consumers) < 2
     )
     assert not lonely, "memos with fewer than two registry consumers:\n" + "\n".join(lonely)
-    allowed = {fn for fn, _, consumers in sites if len(consumers) < 2}
-    stale = sorted(set(ONE_CONSUMER_MEMOS) - allowed)
-    assert not stale, f"ONE_CONSUMER_MEMOS names no single-consumer memo: {stale}"
 
 
 def test_no_persist_in_package():

@@ -4,22 +4,25 @@ The bounded-replay equivalence tests prove the stateful kernels compute
 the right ANSWER; these prove their STATE STAYS BOUNDED — the mechanical
 guard against the unbounded-state bug class: drive each kernel through
 >= 20 micro-batches (maxFilesPerTrigger=1 over time-ordered file slices)
-with 2 checkpoint restarts, reading ``stateOperators[].numRowsTotal``
-from every progress record, and assert the series plateaus at the
-operator's designed bound:
+with 2 checkpoint restarts and assert the state series plateaus at the
+operator's designed bound.  Every keyed kernel keeps its keys in hash
+buckets (one state row per occupied BUCKET, holding one array entry per
+key), so ``stateOperators[].numRowsTotal`` counts buckets; the key
+series is ``sum(size(value.groupState.keys))`` read with the
+``statestore`` reader at every committed batch id:
 
-- ``match_pattern_stream`` on a positive 3-step chain (NoTimeout) holds
-  one state row per key with a LIVE chain — rows must track those keys,
-  never event count: constant once every chain-starting key has been
-  seen, no matter how many more batches of events flow.
-  ``streaming_login_fail`` / ``streaming_last_touch``
-  group keys into hash buckets: one state row per occupied BUCKET, whose
-  key array holds exactly one entry per key seen.
-- ``streaming_order_timeout`` (EventTimeTimeout) holds only PENDING
-  one-sided orders inside the timeout horizon — the watermark must evict
-  decided keys, so the series rises, plateaus at the steady-state pending
-  level, and ends at exactly the undecided count (computed independently
-  from the synthetic data), far below total keys.
+- ``match_pattern_stream`` on a positive 3-step chain (no timers) holds
+  one key per LIVE chain — keys must track those, never event count:
+  constant once every chain-starting key has been seen, no matter how
+  many more batches of events flow.
+- ``streaming_login_fail`` / ``streaming_last_touch`` hold every key
+  seen: the bucket rows plateau at the occupied-bucket count and the
+  arrays hold exactly one entry per key.
+- ``streaming_order_timeout`` (timers) holds only PENDING one-sided
+  orders inside the timeout horizon — the watermark must evict decided
+  keys, so the series rises, plateaus at the steady-state pending
+  level, and ends at exactly the undecided count (computed
+  independently from the synthetic data), far below total keys.
 
 Synthetic minute-scale data (not testdata) so the expected plateau is
 closed-form; noop sink (state metrics need no output) + one shared
@@ -81,6 +84,20 @@ def _state_rows(q) -> list[int]:
     return out
 
 
+def _state_keys(spark, ckpt: str) -> list[int]:
+    """Keys held in state after each committed batch: the summed length
+    of the bucket rows' key arrays."""
+    batches = sorted(int(f) for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit())
+    return [
+        spark.read.format("statestore")
+        .option("batchId", b)
+        .load(ckpt)
+        .select(F.coalesce(F.sum(F.size("value.groupState.keys")), F.lit(0)))
+        .first()[0]
+        for b in batches
+    ]
+
+
 def _soak(spark, tmp_path, pdf, schema_ddl, kernel) -> list[int]:
     """Three checkpointed availableNow segments (8 slices each, one file
     per trigger) over the same kernel = >= 24 data batches, 2 restarts.
@@ -115,17 +132,18 @@ def _soak(spark, tmp_path, pdf, schema_ddl, kernel) -> list[int]:
 def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
     spark, tmp_path, kernel_name
 ):
-    """NoTimeout keyed kernels: state tracks key cardinality, flat for
-    the whole soak once every key has appeared (all keys appear in the
-    first micro-batch), while 24 batches of events keep arriving.
+    """Keyed kernels without timers: state tracks key cardinality, flat
+    for the whole soak once every key has appeared (all keys appear in
+    the first micro-batch), while 24 batches of events keep arriving.
     ``last_touch`` (round 8, driver-hashed the same round) holds exactly
     one (ts, type) slot per user — the classic unbounded-attribution
     trap is keeping every touch, which this gate would catch as stored
-    keys tracking events.  For the bucketed kernels (login_fail,
-    last_touch) state rows are occupied hash buckets, and the bucket
-    arrays of the final checkpoint hold exactly one entry per key.  The
-    CEP NFA (pattern_sequence) keeps rows only for keys with live
-    chains, so its plateau is the number of chain-starting keys."""
+    keys tracking events.  For login_fail and last_touch the state rows
+    are occupied hash buckets, and the bucket arrays of the final
+    checkpoint hold exactly one entry per key.  The CEP NFA
+    (pattern_sequence) keeps only keys with live chains, so its plateau
+    is the number of chain-starting keys; the funnel keeps every
+    (user, day) seen."""
     n_keys, n_events = 40, 1920
     i = np.arange(n_events)
     types = np.array(["view", "click", "purchase", "error"])[i % 4]
@@ -162,7 +180,7 @@ def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
         kernel = lambda s: match_pattern_stream(  # noqa: E731
             s, "user_id", "ts", steps, 3600.0, tiebreak_col="event_id"
         )
-        # the NFA keeps a state row only for a key with a live chain:
+        # the NFA keeps state only for a key with a live chain:
         # here the keys that see a view (key k only ever sees type
         # k % 4, and a view every 200 s keeps a 3600 s chain alive)
         expected_keys = pdf.loc[pdf["event_type"] == "view", "user_id"].nunique()
@@ -175,6 +193,9 @@ def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
         kernel,
     )
     assert len(series) >= 20, f"soak too short: {len(series)} state batches"
+    if kernel_name in ("funnel", "pattern_sequence"):
+        series = _state_keys(spark, str(tmp_path / "ckpt"))
+        assert len(series) >= 20, f"soak too short: {len(series)} committed batches"
     if kernel_name == "funnel":
         # day-2 (user, day) keys only exist after the midnight crossing
         # (~slice 16): the series must climb monotonically to the exact
@@ -214,7 +235,7 @@ def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
 def test_cep_nfa_parked_state_drained_by_watermark(spark, tmp_path):
     """The streaming CEP NFA's trailing-negation path (EventTimeTimeout,
     driver-hashed round 8): completed anchors PARK in keyed state until
-    a kill or the watermark-fired flush — state rows must track keys
+    a kill or the watermark-fired flush — state must track keys
     with UNDECIDED anchors, drain as the watermark passes deadlines, and
     end at the independently-computed undecided-key count (1), never at
     key or event cardinality."""
@@ -248,6 +269,8 @@ def test_cep_nfa_parked_state_drained_by_watermark(spark, tmp_path):
         lambda s: match_pattern_stream(s, "user_id", "ts", steps, within),
     )
     assert len(series) >= 20, f"soak too short: {len(series)} state batches"
+    series = _state_keys(spark, str(tmp_path / "ckpt"))
+    assert len(series) >= 20, f"soak too short: {len(series)} committed batches"
     # ground truth: keys < 20 park each view for 400 s until its
     # purchase kills it; keys >= 20 park each view for `within` until
     # the flush.  At the closing watermark (max ts), the only anchor
@@ -260,7 +283,7 @@ def test_cep_nfa_parked_state_drained_by_watermark(spark, tmp_path):
          if t + within >= wm}
     )
     assert series[-1] == expected_keys, (series[-5:], expected_keys)
-    # state is keyed: one row per key with live chains, never more
+    # state is keyed: one entry per key with live chains, never more
     assert max(series) <= n_keys, (max(series), n_keys)
     # drain keeps pace: the second half's peak never exceeds the first's
     half = len(series) // 2
@@ -294,6 +317,8 @@ def test_order_timeout_state_evicted_by_watermark(spark, tmp_path):
         lambda s: streaming_order_timeout(s, timeout_seconds=timeout_s),
     )
     assert len(series) >= 20, f"soak too short: {len(series)} state batches"
+    series = _state_keys(spark, str(tmp_path / "ckpt"))
+    assert len(series) >= 20, f"soak too short: {len(series)} committed batches"
     # ground truth: watermark closes at max event time - 5 s (the
     # kernel's bounded-out-of-orderness delay); an unpaid create whose
     # deadline the watermark never passed is still pending at the end

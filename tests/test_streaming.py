@@ -658,9 +658,9 @@ def test_stateful_kernels_correct_when_group_spans_arrow_batches(spark, tmp_path
     group that straddles slice boundaries interleaves arbitrarily, so
     per-slice sorting replays events out of time order (round-8 sf1
     finding: the as-of replay read stale right-side state on straddling
-    keys).  _group_chunks buffers the whole group and sorts once —
-    pinned here by forcing maxRecordsPerBatch far below the group size
-    and feeding the rows pre-shuffled within the file."""
+    keys).  The keyed-state runtime concatenates a bucket's slices and
+    sorts once — pinned here by forcing maxRecordsPerBatch far below the
+    group size and feeding the rows pre-shuffled within the file."""
     import random
 
     from flinkecuserbehavioranalysis_spark.operators.joins import as_of_join
