@@ -2,12 +2,13 @@
 
 The reference consumes flink-cep through two fixed call chains
 (LoginFailWithCep.scala:56-60 ``begin.times(2).consecutive().within``;
-OrderTimeoutWithOutCep.scala:45-48 ``begin.followedBy.within``); the
-operator layer here already generalizes every shape those need —
-pairs, N-step sequences, negation, optional steps, loops
-(patterns.py:32-604) — but each shape was a separate entry point, so a
-pattern MIXING shapes (negation inside an optional funnel) had no
-surface (round-4 verdict, "What's missing" #2).
+OrderTimeoutWithOutCep.scala:45-48 ``begin.followedBy.within``).  The
+operators in ``patterns.py`` cover every shape those need, one entry
+point per shape: N-step sequences, pairs being the 2-step case
+(``pattern_sequence``), trailing negation (``pattern_not_followed_by``),
+optional steps (``pattern_sequence_optional``) and loops
+(``pattern_one_or_more``).  A pattern MIXING shapes (negation inside an
+optional funnel) needs one surface.
 
 ``match_pattern`` is that surface: a list of :class:`PatternStep`
 (per-step predicate, contiguity, quantifier, optional flag, negation

@@ -152,17 +152,7 @@ def minhash_candidates(
     Returns (doc_a, doc_b) with doc_a < doc_b.  The pair join shuffles
     on (band_idx, band_key) — bucket sizes are the skew knob: more rows
     per band → fewer, higher-precision candidates."""
-    rows = k // bands
-    sig = minhash_signatures(docs, id_col, text_col, n, k)
-    band_keys = [
-        F.md5(F.concat_ws("", *[F.col(f"h{b * rows + r}") for r in range(rows)])).alias(f"b{b}")
-        for b in range(bands)
-    ]
-    sig_b = sig.select(F.col(id_col), *band_keys)
-    stack_args = ", ".join(f"{b}, b{b}" for b in range(bands))
-    long = sig_b.select(
-        F.col(id_col), F.expr(f"stack({bands}, {stack_args}) as (band_idx, band_key)")
-    )
+    long = _band_keys(docs, id_col, text_col, n, k, bands)
     a, b = long.alias("a"), long.alias("b")
     return (
         a.join(
@@ -346,6 +336,8 @@ def duplicate_components(
 
     Returns (v, label): every node that appears in *pairs*, labeled with
     its component's min id.  Deterministic (min is order-insensitive).
+    Raises ``RuntimeError`` when *max_iter* rounds pass without
+    convergence: a cut loop's labels split components.
     """
     if deep:
         return _star_components(pairs, a_col, b_col, max_iter)
@@ -363,9 +355,18 @@ def duplicate_components(
         ).localCheckpoint(eager=True)
         s = labels.agg(F.sum("label").alias("s")).collect()[0]["s"]
         if s == prev_sum:
-            break
+            return labels
         prev_sum = s
-    return labels
+    raise _unconverged("hash-min", max_iter)
+
+
+def _unconverged(loop: str, max_iter: int) -> RuntimeError:
+    """A components loop cut at *max_iter* rounds holds partial labels
+    (a component split in several), so it raises instead of returning."""
+    return RuntimeError(
+        f"duplicate_components: {loop} did not converge in max_iter={max_iter} rounds; "
+        "raise max_iter, or use deep=True on deep graphs"
+    )
 
 
 def _star_components(
@@ -468,13 +469,10 @@ def _star_components(
         cur = ss_fringe.union(ss_center).distinct().localCheckpoint(eager=True)
         if _is_star_forest(cur):
             break
-    # at fixpoint each member has exactly one root edge; groupBy-min is a
-    # safety net for a max_iter cutoff short of convergence
-    member = (
-        cur.select(F.col("b").alias("v"), F.col("a").alias("label"))
-        .groupBy("v")
-        .agg(F.min("label").alias("label"))
-    )
+    else:
+        raise _unconverged("large-star/small-star", max_iter)
+    # at the fixpoint every member has exactly one root edge
+    member = cur.select(F.col("b").alias("v"), F.col("a").alias("label"))
     return nodes.join(member, "v", "left").select(
         "v", F.coalesce(F.col("label"), F.col("v")).alias("label")
     )
@@ -568,24 +566,35 @@ def _lsh_verified_rep_pairs(
     candidate pairs × shingles per doc."""
     cand = minhash_candidates(docs, id_col, text_col, n, k, bands)
     sh = shingles(docs, id_col, text_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    sa = sh.select(F.col(id_col).alias("doc_a"), "sh")
-    sb = sh.select(F.col(id_col).alias("doc_b"), "sh")
+    jac = _candidate_jaccard(cand, sh, sh, id_col, "doc_a", "doc_b")
+    return jac.filter(F.col("jaccard") >= threshold)
+
+
+def _candidate_jaccard(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, id_col: str, a: str, b: str
+) -> DataFrame:
+    """Exact Jaccard of each candidate pair (a, b): |A∩B| from joining
+    the pair to side a's shingle relation *sh_a* and then to side b's
+    *sh_b* on (doc, shingle), over |A| + |B| - |A∩B|.  Both shingle
+    relations are (id_col, sh); the join is linear in candidate pairs ×
+    shingles per doc, never in corpus².  Returns (a, b, jaccard)."""
+
+    def sizes(sh: DataFrame, side: str, name: str) -> DataFrame:
+        sz = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
+        return sz.select(F.col(id_col).alias(side), F.col("__sz").alias(name))
+
     common = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
+        cand.join(sh_a.select(F.col(id_col).alias(a), "sh"), a)
+        .join(sh_b.select(F.col(id_col).alias(b), "sh"), [b, "sh"])
+        .groupBy(a, b)
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    jac = (
-        common.join(sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sza")), "doc_a")
-        .join(sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("szb")), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("sza") + F.col("szb") - F.col("common")),
-        )
+    jaccard = F.col("common") / (F.col("sza") + F.col("szb") - F.col("common"))
+    return (
+        common.join(sizes(sh_a, a, "sza"), a)
+        .join(sizes(sh_b, b, "szb"), b)
+        .select(a, b, jaccard.alias("jaccard"))
     )
-    return jac.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
 
 
 def _expand_rep_pairs(
@@ -1022,27 +1031,14 @@ def incremental_dedup_flags(
         )
         .distinct()
     )
-    # exact verify on candidates only: restrict both shingle relations
-    new_sh = shingles(new_docs, id_col, text_col, n).select(
-        F.col(id_col).alias("new_id"), "sh"
-    )
-    base_sh = shingles(base_docs, id_col, text_col, n).select(
-        F.col(id_col).alias("base_id"), "sh"
-    )
-    new_sz = new_sh.groupBy("new_id").agg(F.count(F.lit(1)).alias("sza"))
-    base_sz = base_sh.groupBy("base_id").agg(F.count(F.lit(1)).alias("szb"))
-    common = (
-        cand.join(new_sh, "new_id")
-        .join(base_sh, ["base_id", "sh"])
-        .groupBy("new_id", "base_id")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    jac = (
-        common.join(new_sz, "new_id")
-        .join(base_sz, "base_id")
-        .withColumn(
-            "jaccard", F.col("common") / (F.col("sza") + F.col("szb") - F.col("common"))
-        )
+    # exact verify on candidates only
+    jac = _candidate_jaccard(
+        cand,
+        shingles(new_docs, id_col, text_col, n),
+        shingles(base_docs, id_col, text_col, n),
+        id_col,
+        "new_id",
+        "base_id",
     )
     per_new = cand.groupBy("new_id").agg(F.count(F.lit(1)).alias("n_candidates"))
     best = (

@@ -28,7 +28,10 @@ et al., PODS'12) is:
 
 NULL keys join no frequency contract (engine NULL-group semantics
 differ from the candidate join's) and are excluded on both sides,
-including from the denominator N.
+including from the denominator N.  ``candidate_counts`` is the two
+passes; each caller applies its own threshold to its counts and N
+(``heavy_hitters_exact``: cnt > t·N; the ``text_hot_tokens`` query:
+freq ≥ ⌈φ·N⌉).
 """
 
 from __future__ import annotations
@@ -39,46 +42,44 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def mg_merge(acc: dict, counts: dict, k: int) -> dict:
-    """Merge exact-or-MG *counts* into MG summary *acc* and prune to at
-    most *k* keys (subtract the (k+1)-th largest, drop non-positive) —
-    the mergeable-summaries step; error bounds add across any merge
-    tree (Agarwal et al., PODS'12)."""
-    for key, cnt in counts.items():
-        acc[key] = acc.get(key, 0) + int(cnt)
-    if len(acc) > k:
-        cut = sorted(acc.values(), reverse=True)[k]
-        acc = {x: c - cut for x, c in acc.items() if c - cut > 0}
-    return acc
-
-
-def mg_summaries(df: DataFrame, key_col: str, k: int) -> DataFrame:
-    """Per-partition Misra–Gries summaries as (key_col, mg_cnt) rows —
-    at most *k* per partition, O(k) memory per task regardless of key
-    cardinality.  ``mg_cnt`` underestimates the partition-true count by
-    at most n_partition/k (the MG error bound)."""
-
-    def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict = {}
-        for b in batches:
-            acc = mg_merge(acc, b[key_col].value_counts().to_dict(), k)
-        yield pd.DataFrame(
-            {key_col: list(acc.keys()), "mg_cnt": list(acc.values())}
-        )
-
-    keyed = df.select(key_col).filter(F.col(key_col).isNotNull())
-    out_schema = f"{keyed.schema[key_col].dataType.simpleString()}"
-    return keyed.mapInPandas(
-        summarize, schema=f"{key_col} {out_schema}, mg_cnt long"
-    )
+from pyspark.sql.types import StructType
 
 
 def mg_candidates(df: DataFrame, key_col: str, k: int) -> DataFrame:
-    """Per-partition Misra–Gries candidate keys (single column
-    *key_col*, deduplicated across partitions)."""
-    return mg_summaries(df, key_col, k).select(key_col).distinct()
+    """Misra–Gries candidate keys (single column *key_col*, deduplicated
+    across partitions) — step 1 above: at most *k* keys and O(k) memory
+    per task whatever the key cardinality."""
+
+    def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        counts: dict = {}
+        for b in batches:
+            for key, c in b[key_col].value_counts().items():
+                counts[key] = counts.get(key, 0) + int(c)
+            if len(counts) > k:
+                cut = sorted(counts.values(), reverse=True)[k]
+                counts = {x: c - cut for x, c in counts.items() if c > cut}
+        yield pd.DataFrame({key_col: list(counts)})
+
+    keyed = df.select(key_col).filter(F.col(key_col).isNotNull())
+    return keyed.mapInPandas(summarize, StructType([keyed.schema[key_col]])).distinct()
+
+
+def candidate_counts(
+    df: DataFrame, key_col: str, k: int, count_name: str = "cnt"
+) -> DataFrame:
+    """The exact recount: every Misra–Gries candidate of capacity *k*
+    with its EXACT count, plus ``__n``, the non-NULL-key row count N
+    for the caller's frequency threshold.  Only candidate-keyed rows
+    shuffle; the candidate set (≤ k per partition) is broadcast.
+    Returns (key_col, count_name, __n)."""
+    keyed = df.filter(F.col(key_col).isNotNull())
+    total = keyed.select(F.count(F.lit(1)).alias("__n"))
+    return (
+        keyed.join(F.broadcast(mg_candidates(keyed, key_col, k)), key_col, "left_semi")
+        .groupBy(key_col)
+        .agg(F.count(F.lit(1)).alias(count_name))
+        .crossJoin(F.broadcast(total))
+    )
 
 
 def heavy_hitters_exact(
@@ -95,14 +96,8 @@ def heavy_hitters_exact(
     if not 0 < threshold < 1:
         raise ValueError("heavy_hitters_exact: threshold must be in (0, 1)")
     k = k if k is not None else math.ceil(2.0 / threshold)
-    keyed = df.filter(F.col(key_col).isNotNull())
-    cand = mg_candidates(df, key_col, k)
-    total = keyed.select(F.count(F.lit(1)).alias("__n"))
     return (
-        keyed.join(F.broadcast(cand), key_col, "left_semi")
-        .groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias(count_name))
-        .crossJoin(F.broadcast(total))
+        candidate_counts(df, key_col, k, count_name)
         .filter(F.col(count_name) > F.lit(threshold) * F.col("__n"))
         .drop("__n")
     )

@@ -31,95 +31,6 @@ from ..functions.scalar import floor_div, floor_long
 _DAY = 86400
 
 
-def pattern_pairs(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    first_pred: Column,
-    second_pred: Column,
-    within_seconds: float,
-    contiguity: str = "relaxed",
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Generic quantified two-step pattern: per *key_col*, an event
-    matching *first_pred* followed by one matching *second_pred* within
-    *within_seconds* — the parameterized form of flink-cep's
-    ``begin.where(A).next/followedBy.where(B).within(t)``
-    (LoginFailWithCep.scala:56-60 is the strict instance,
-    OrderTimeoutWithOutCep.scala:45-48 the relaxed one).
-
-    *contiguity*:
-
-    - ``'strict'`` (CEP ``next``): B must be the key's immediately-next
-      event after A — intervening events of any kind break the match
-      (LoginFailTwo.scala:87-88's success-reset falls out of this).
-      One ``lag`` pass.
-    - ``'relaxed'`` (CEP ``followedBy``): B is the EARLIEST later event
-      matching *second_pred*; other events in between are skipped.
-      Implemented as a running conditional min over the key's events in
-      reverse order — an O(n)-per-key running frame, NOT the O(n²)
-      unbounded-following frame Spark would use on the forward order.
-
-    The time bound is strict (``second_ts - first_ts < within``),
-    matching both reference jobs (LoginFailTwo.scala:74 compares
-    ``eventTime < first + 2``; OrderTimeout.scala:104 compares
-    ``payTime < timerTs``) and CEP's end-exclusive ``within``.
-
-    Returns (key_col, first_ts, second_ts) as epoch-second longs.  One
-    shuffle on *key_col*; per-key in-partition sort — holds at 100 TB
-    because per-key history is bounded."""
-    if contiguity not in ("strict", "relaxed"):
-        raise ValueError(f"contiguity must be 'strict' or 'relaxed', got {contiguity!r}")
-    # unstamped events cannot be ordered into the stream — excluded, so
-    # strict adjacency and engine NULL-ordering can never interact
-    df = df.where(F.col(ts_col).isNotNull())
-    tse = F.col(ts_col).cast("double")
-    tb = [tiebreak_col] if tiebreak_col else []
-    base = df.withColumn("__tse", tse).withColumn("__a", first_pred).withColumn("__b", second_pred)
-    if contiguity == "strict":
-        order = [F.col(ts_col).asc()] + [F.col(c).asc() for c in tb]
-        w = Window.partitionBy(key_col).orderBy(*order)
-        matched = (
-            base.withColumn("__prev_a", F.lag("__a").over(w))
-            .withColumn("__prev_tse", F.lag("__tse").over(w))
-            .filter(
-                F.col("__b")
-                & F.col("__prev_a")
-                & (F.col("__tse") - F.col("__prev_tse") < F.lit(float(within_seconds)))
-            )
-            .select(
-                F.col(key_col),
-                floor_long(F.col("__prev_tse")).alias("first_ts"),
-                floor_long(F.col("__tse")).alias("second_ts"),
-            )
-        )
-    else:
-        # reverse event order → "earliest following B" is a running min
-        # over PRECEDING rows (O(n) sliding frame; the forward-order
-        # formulation would be an unbounded-FOLLOWING frame, which Spark
-        # evaluates quadratically per partition)
-        rev = [F.col(ts_col).desc()] + [F.col(c).desc() for c in tb]
-        w = (
-            Window.partitionBy(key_col)
-            .orderBy(*rev)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        next_b = F.min(F.when(F.col("__b"), F.col("__tse"))).over(w)
-        matched = (
-            base.withColumn("__next_b", next_b)
-            .filter(
-                F.col("__a")
-                & (F.col("__next_b") - F.col("__tse") < F.lit(float(within_seconds)))
-            )
-            .select(
-                F.col(key_col),
-                floor_long(F.col("__tse")).alias("first_ts"),
-                floor_long(F.col("__next_b")).alias("second_ts"),
-            )
-        )
-    return matched
-
-
 def times(pred: Column, n: int) -> list[Column]:
     """CEP ``times(n)`` quantifier: the predicate repeated *n* times.
     Splat into ``pattern_sequence`` steps — with ``'strict'`` on the
@@ -140,20 +51,29 @@ def pattern_sequence(
     tiebreak_col: str | None = None,
     emit_double: bool = False,
 ) -> DataFrame:
-    """N-step quantified sequence pattern — the generalization of
-    ``pattern_pairs`` to flink-cep chains of any length:
+    """N-step quantified sequence pattern — flink-cep's
     ``begin.where(s1).next|followedBy.where(s2)...where(sN).within(t)``
-    (LoginFailWithCep.scala:56-60 is the 2-step strict instance; a
-    view→click→purchase funnel is the 3-step relaxed one).  Quantifiers
-    expand via ``times``: ``steps=[*times(fail, 2)]`` + strict internal
-    gaps ≡ ``.times(2).consecutive()``.
+    as one parameterized operator.  The reference's CEP jobs are its
+    2-step instances: LoginFailWithCep.scala:56-60 is the strict one
+    (``consecutive_fail_alerts``), OrderTimeoutWithOutCep.scala:45-48
+    the relaxed one; a view→click→purchase funnel is the 3-step relaxed
+    one.  Quantifiers expand via ``times``: ``steps=[*times(fail, 2)]``
+    + strict internal gaps ≡ ``.times(2).consecutive()``.
 
     *contiguity* is one gap policy for all N-1 gaps, or a per-gap list:
 
     - ``'strict'`` (CEP ``next``): step i+1 must be the key's
-      immediately-next event after step i.
+      immediately-next event after step i — intervening events of any
+      kind break the match (LoginFailTwo.scala:87-88's success-reset
+      falls out of this).
     - ``'relaxed'`` (CEP ``followedBy``): step i+1 may skip intervening
       events.
+
+    The time bound is strict (``last_ts - first_ts < within``), matching
+    both reference jobs (LoginFailTwo.scala:74 compares ``eventTime <
+    first + 2``; OrderTimeout.scala:104 ``payTime < timerTs``) and
+    CEP's end-exclusive ``within``.  Events with a NULL timestamp cannot
+    be ordered into the stream and are excluded.
 
     Semantics: per first-step event, the **lexicographically-earliest
     complete chain** (compare step-1 ts, then step-2 ts, …), then the
@@ -185,8 +105,7 @@ def pattern_sequence(
     for c in contigs:
         if c not in ("strict", "relaxed"):
             raise ValueError(f"contiguity must be 'strict' or 'relaxed', got {c!r}")
-    # same NULL-ts exclusion as pattern_pairs: adjacency must not
-    # depend on where an unorderable event sorts
+    # adjacency must not depend on where an unorderable event sorts
     df = df.where(F.col(ts_col).isNotNull())
     rev = [F.col(ts_col).desc()] + ([F.col(tiebreak_col).desc()] if tiebreak_col else [])
     w_lag = Window.partitionBy(key_col).orderBy(*rev)
@@ -245,7 +164,7 @@ def pattern_not_followed_by(
     ``first_ts < absent_ts < first_ts + within`` — an absent event at
     exactly the same timestamp does not kill (no tiebreak column can
     change the outcome), and one at exactly the deadline doesn't either
-    (end-exclusive, matching ``pattern_pairs``' ``< within``).
+    (end-exclusive, matching ``pattern_sequence``' ``< within``).
 
     Execution: LEFT ANTI equi-join on the key with the range predicate —
     one shuffle per side (both pre-filtered to their predicate), the
@@ -269,55 +188,6 @@ def pattern_not_followed_by(
     return survived.select(
         F.col(key_col), floor_long(F.col("__ft")).alias("first_ts")
     )
-
-
-def pattern_pairs_not_between(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    first_pred: Column,
-    second_pred: Column,
-    absent_pred: Column,
-    within_seconds: float,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """MID-PATTERN CEP negation — flink-cep
-    ``begin(A).notFollowedBy(C).followedBy(B).within(t)``: the (A,
-    earliest-following-B) pairs of ``pattern_pairs`` (relaxed), kept
-    only when NO *absent_pred* event for the key falls STRICTLY between
-    the two matched timestamps ("clicked then purchased with no error
-    in between").
-
-    The pair match is exactly ``pattern_pairs``' relaxed semantics
-    (earliest later B, end-exclusive within); the negation is
-    value-ordered and boundary-exclusive on both sides
-    (``first_ts < absent_ts < second_ts`` — a C sharing either
-    endpoint's timestamp does not kill), so tie order never changes the
-    outcome.  Executed as the pair query followed by one co-partitioned
-    LEFT ANTI range join against the (pre-filtered) absent events —
-    the same scale shape as ``pattern_not_followed_by`` stacked on the
-    single-shuffle pair plan.  Returns (key_col, first_ts, second_ts)
-    as epoch-second longs."""
-    pairs = pattern_pairs(
-        df,
-        key_col=key_col,
-        ts_col=ts_col,
-        first_pred=first_pred,
-        second_pred=second_pred,
-        within_seconds=within_seconds,
-        contiguity="relaxed",
-        tiebreak_col=tiebreak_col,
-    )
-    absents = df.filter(absent_pred).select(
-        F.col(key_col).alias("__ak"), F.col(ts_col).cast("double").alias("__at")
-    )
-    return pairs.join(
-        absents,
-        (pairs[key_col] == absents["__ak"])
-        & (F.col("__at") > F.col("first_ts"))
-        & (F.col("__at") < F.col("second_ts")),
-        "left_anti",
-    ).select(F.col(key_col), F.col("first_ts"), F.col("second_ts"))
 
 
 def pattern_sequence_optional(
@@ -401,25 +271,24 @@ def consecutive_fail_alerts(
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """F3/F4 — emit a warning per (fail, fail) adjacent pair within gap:
-    the strict-contiguity instance of ``pattern_pairs`` (success rows
-    break adjacency — LoginFailTwo.scala:87-88).  The gap bound is
-    strict (``< max_gap_seconds``), matching LoginFailTwo.scala:74
+    ``pattern_sequence(times(fail, 2), contiguity='strict')``, the
+    LoginFailWithCep.scala:56-60 pattern (success rows break adjacency —
+    LoginFailTwo.scala:87-88).  The gap bound is strict
+    (``< max_gap_seconds``), matching LoginFailTwo.scala:74
     ``value.eventTime < firstFailEvent.eventTime + 2``.  *tiebreak_col*
     pins a total event order under equal timestamps."""
-    fail = F.col(type_col) == fail_value
-    return pattern_pairs(
+    return pattern_sequence(
         df,
         key_col=user_col,
         ts_col=ts_col,
-        first_pred=fail,
-        second_pred=fail,
+        steps=times(F.col(type_col) == fail_value, 2),
         within_seconds=float(max_gap_seconds),
         contiguity="strict",
         tiebreak_col=tiebreak_col,
     ).select(
         F.col(user_col),
-        F.col("first_ts").alias("first_fail_ts"),
-        F.col("second_ts").alias("last_fail_ts"),
+        F.col("step1_ts").alias("first_fail_ts"),
+        F.col("step2_ts").alias("last_fail_ts"),
         F.lit("login fail 2 times in a short time").alias("warning_msg"),
     )
 

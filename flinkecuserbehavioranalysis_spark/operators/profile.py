@@ -19,18 +19,15 @@ def profile_table(
     df: DataFrame,
     numeric_cols: Sequence[str] = (),
     string_cols: Sequence[str] = (),
-    exact_distinct: bool = True,
-    rsd: float = 0.01,
 ) -> DataFrame:
     """Per-column profile: (column_name, n_rows, n_nulls, n_distinct,
     min_num, max_num, min_str, max_str) — numeric columns fill the
     ``_num`` bounds (cast to double), string columns the ``_str``
     bounds, the other pair is NULL.
 
-    *exact_distinct* uses ``count(DISTINCT)`` (k distinct aggregates in
-    one pass costs one Expand ×k over the scan — exact, engine-
-    comparable); at 100 TB flip it off for HLL++ ``approx_count_
-    distinct`` (single pass, mergeable, ±rsd).
+    Distinct counts are exact ``count(DISTINCT)`` (k distinct
+    aggregates in one pass cost one Expand ×k over the scan —
+    engine-comparable).
 
     String min/max run in a SEPARATE, column-pruned aggregate that is
     cross-joined back onto the 1-row numeric frame: a string min/max
@@ -44,16 +41,11 @@ def profile_table(
     cols = [*numeric_cols, *string_cols]
     if not cols:
         raise ValueError("profile_table needs at least one column")
-    nd = (
-        (lambda c: F.countDistinct(F.col(c)))
-        if exact_distinct
-        else (lambda c: F.approx_count_distinct(c, rsd))
-    )
     aggs = [F.count(F.lit(1)).alias("__rows")]
     for c in cols:
         aggs += [
             F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"),
-            nd(c).alias(f"__nd_{c}"),
+            F.countDistinct(F.col(c)).alias(f"__nd_{c}"),
         ]
     for c in numeric_cols:
         aggs += [

@@ -43,71 +43,6 @@ def salted_count(
     return partial.groupBy(*keys).agg(F.sum("__pc").alias(count_alias))
 
 
-def heavy_hitters(
-    df: DataFrame,
-    key_col: str,
-    phi: float,
-    capacity: int | None = None,
-) -> DataFrame:
-    """EXACT φ-heavy hitters (keys with frequency ≥ ⌈φ·N⌉) in two
-    passes — the scale-correct shape when the key domain is too large to
-    count exactly in one shuffle (hot tokens / stopword discovery, hot
-    users, hot join keys feeding ``salted_*`` / df-cap decisions).
-
-    Pass 1 — candidate generation: each partition builds a Misra-Gries
-    summary of *capacity* k (default ⌈2/φ⌉) in one ``mapInPandas``
-    sweep and emits its ≤k surviving keys.  Correctness of the prune:
-    a key with global frequency ≥ φ·N has frequency ≥ φ·N_p on at
-    least one partition (averaging), and MG's count error is < N_p/(k+1)
-    ≤ φ·N_p for k ≥ 1/φ, so that partition's summary retains it — the
-    union of summaries is a guaranteed superset of the true heavy
-    hitters.  Candidate volume is ≤ k per partition, independent of N.
-
-    Pass 2 — exact recount: the stream joins the broadcast candidate
-    set and only candidates are counted exactly; the ⌈φ·N⌉ filter makes
-    the output exact, so the sketch never shows in the result (the
-    DuckDB oracle is plain GROUP BY / HAVING).
-
-    The MG trim is batch-vectorized: merge a batch's ``value_counts``
-    into the running dict, and when it exceeds k subtract the
-    (size−k)-th smallest count from everything and drop the
-    non-positives — equivalent to that many unit decrements at once.
-
-    Returns (key_col, freq)."""
-    import pandas as pd  # noqa: PLC0415 — Arrow path only
-    from pyspark.sql.types import StructType
-
-    if capacity is None:
-        capacity = max(1, int(-(-2.0 // phi)))
-    k = capacity
-    out_schema = StructType([df.schema[key_col]])
-
-    def mg_partition(batches):
-        import numpy as np
-
-        counts: dict = {}
-        for pdf in batches:
-            vc = pdf[key_col].value_counts()
-            for key, c in vc.items():
-                counts[key] = counts.get(key, 0) + int(c)
-            if len(counts) > k:
-                arr = np.fromiter(counts.values(), dtype=np.int64, count=len(counts))
-                m = np.partition(arr, len(counts) - k - 1)[len(counts) - k - 1]
-                counts = {key: c - m for key, c in counts.items() if c > m}
-        yield pd.DataFrame({key_col: list(counts.keys())})
-
-    candidates = df.select(key_col).mapInPandas(mg_partition, out_schema).distinct()
-    total = df.agg(F.count(F.lit(1)).alias("__n"))
-    return (
-        df.join(F.broadcast(candidates), key_col)
-        .groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("freq") >= F.ceil(F.lit(phi) * F.col("__n")))
-        .select(key_col, "freq")
-    )
-
-
 def attach_deterministic_salt(df: DataFrame, n: int) -> DataFrame:
     """Attach a ``__salt`` column in ``[0, n)`` that is a *deterministic*
     function of the input's row multiset, safe to shuffle on.

@@ -330,8 +330,8 @@ WHERE event_type = 'error' AND prev_type = 'error'
 )
 def login_fail_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # declarative spec — .times(2).consecutive().within (LoginFailWithCep
-    # .scala:56-60), compiled by operators/cep.py onto the strict-pair
-    # kernel; same rows as consecutive_fail_alerts (property-tested)
+    # .scala:56-60), compiled by operators/cep.py onto pattern_sequence,
+    # the kernel under consecutive_fail_alerts too
     from ..operators.cep import PatternStep, match_pattern
 
     ev = load_table(spark, sf_dir, "events")
@@ -464,9 +464,10 @@ WHERE v.event_type = 'view' AND v.next_b - v.tse < 1800.0
 )
 def pattern_clean_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # begin(view).notFollowedBy(error).followedBy(purchase).within as a
-    # declarative spec; the compiler evaluates the kill window at full
-    # double precision (the hand-rolled kernel compared against floored
-    # endpoints — same oracle, tighter boundary semantics)
+    # declarative spec; the compiler compares the kill window at full
+    # double precision, as the oracle does, so an error earlier in the
+    # view's second never kills and one between the pair inside the
+    # purchase's second always does
     from ..operators.cep import PatternStep, match_pattern
 
     ev = load_table(spark, sf_dir, "events")
@@ -2479,7 +2480,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk(load_table(spark, sf_dir, "documents"), list(_BM25_TERMS), k=20)
 
 
-from ..operators.skew import heavy_hitters  # noqa: E402
+from ..operators.heavy_hitters import candidate_counts  # noqa: E402
 
 
 @_q(
@@ -2499,7 +2500,9 @@ HAVING count(*) >= (SELECT CAST(ceil(0.02 * n) AS BIGINT) FROM __n)
 def text_hot_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
-    return heavy_hitters(toks, "tok", phi=0.02)
+    # capacity ceil(2/phi) = 100 keeps every key with freq >= phi*N
+    freq = candidate_counts(toks, "tok", k=100, count_name="freq")
+    return freq.filter(F.col("freq") >= F.ceil(F.lit(0.02) * F.col("__n"))).select("tok", "freq")
 
 
 @_q(

@@ -43,7 +43,7 @@ completion rate × within; a key with neither holds no state at all.  A
 checkpoint written before the bucketed runtime must restart.  Ordering
 contract: order-correct within a micro-batch (events sorted) and across
 batches on an ordered replay, verified against the batch compilers
-(``match_pattern``, ``pattern_pairs``, ``pattern_sequence``,
+(``match_pattern``, ``pattern_sequence``,
 ``pattern_sequence_optional``) on bounded replays
 (tests/test_streaming.py).
 """

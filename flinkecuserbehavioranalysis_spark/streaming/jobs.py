@@ -288,28 +288,26 @@ def streaming_topn_foreach_batch(
     return process
 
 
+#: Seconds a bounded replay may run before it is stopped and raises.
+_BOUNDED_TIMEOUT_S = 300
+_BOUNDED_SEQ = [0]
+
+
 def run_bounded(
     out: DataFrame,
     output_mode: str = "append",
     foreach_batch: Callable | None = None,
-    timeout: int = 120,
+    timeout: int = _BOUNDED_TIMEOUT_S,
 ) -> list:
     """Execute a streaming plan to completion on its bounded source
-    (``availableNow`` trigger) and return collected rows (memory sink)
-    or [] when *foreach_batch* handles its own output.  A replay still
-    running after *timeout* seconds is stopped and raises
-    ``TimeoutError``: its output so far would be a silent partial."""
+    (``availableNow`` trigger) and return its collected rows, or []
+    when *foreach_batch* handles its own output.  Raises
+    ``TimeoutError`` like :func:`run_bounded_df`."""
+    if foreach_batch is None:
+        return run_bounded_df(out, output_mode, timeout).collect()
     writer = out.writeStream.outputMode(output_mode).trigger(availableNow=True)
-    if foreach_batch is not None:
-        _await_bounded(writer.foreachBatch(foreach_batch).start(), timeout)
-        return []
-    name = f"mem_{abs(hash(out.schema.json())) % 10**8}_{id(out)}"
-    q = writer.format("memory").queryName(name).start()
-    try:
-        _await_bounded(q, timeout)
-        return out.sparkSession.table(name).collect()
-    finally:
-        out.sparkSession.catalog.dropTempView(name)
+    _await_bounded(writer.foreachBatch(foreach_batch).start(), timeout)
+    return []
 
 
 def _await_bounded(q, timeout: int) -> None:
@@ -318,20 +316,18 @@ def _await_bounded(q, timeout: int) -> None:
         raise TimeoutError(f"bounded replay {q.name or q.id} did not finish in {timeout}s")
 
 
-_BOUNDED_SEQ = [0]
-
-
 def run_bounded_df(
     out: DataFrame,
     output_mode: str = "append",
-    timeout: int = 300,
+    timeout: int = _BOUNDED_TIMEOUT_S,
 ) -> DataFrame:
-    """Like :func:`run_bounded`, but returns the memory-sink TABLE as a
-    batch DataFrame instead of collecting — the bridge that lets the
-    stateful streaming kernels participate in the driver's ``queries()``
-    / ``oracle_sql()`` contract (round-6 verdict #7): the registry entry
-    executes the bounded replay to completion inside ``fn`` and hands
-    the driver an ordinary DataFrame over the sink.
+    """Execute a streaming plan to completion on its bounded source into
+    a memory sink and return the sink's TABLE as a batch DataFrame — the
+    bridge that lets the stateful streaming kernels serve as registry
+    queries: the registry entry runs the bounded replay to completion
+    inside ``fn`` and returns an ordinary DataFrame over the sink.  A
+    replay still running after *timeout* seconds is stopped and raises
+    ``TimeoutError``: its output so far would be a silent partial.
 
     Eager by contract (the streaming query runs on call, like the
     k-means/codebook operators).  The sink's temp view is dropped before

@@ -845,12 +845,17 @@ def streaming_funnel(
     gives the batch reach counts.  The day is keyed as an integral day
     id (days since 1970-01-01 in the session time zone) and rendered
     back as its ``yyyy-MM-dd`` string on output.  State is three scalar
-    slots per (user, day) seen, kept for the life of the query: no timer
-    drops a finished day.  A checkpoint written before the bucketed
-    runtime must restart."""
+    slots per open (user, day): each key's timer is the end of its day,
+    so a day's keys are dropped once the watermark passes its midnight.
+    As in every timer kernel, a row at or below the watermark is late
+    and dropped, so no row can reopen a closed day (nor, under the
+    initial watermark of 0, count at or before the epoch).  A checkpoint
+    written before the day timers must restart."""
+    date = F.to_date(F.col(ts_col))
     tagged = events.select(
         F.col(key_col),
-        F.datediff(F.to_date(F.col(ts_col)), F.lit("1970-01-01").cast("date")).alias("__day"),
+        F.datediff(date, F.lit("1970-01-01").cast("date")).alias("__day"),
+        F.unix_millis(F.date_add(date, 1).cast("timestamp")).alias("__day_end_ms"),
         F.col(type_col),
         F.col(ts_col),
     )
@@ -860,6 +865,8 @@ def streaming_funnel(
     )
 
     def step(b: _Bucket, key: tuple, s: int, e: int, st: tuple | None):
+        if s == e:  # the day is over
+            return [], None, _NO_DEADLINE
         t = [float(x) for x in st] if st else [math.nan] * 3
         out = []
         for ts, et in zip(b.ts[s:e].tolist(), b.col[type_col][s:e].tolist()):
@@ -869,12 +876,13 @@ def streaming_funnel(
             if i == 0 or ts > t[i - 1]:  # a NaN (unclaimed) anchor compares False
                 t[i] = ts
                 out.append((*key, i + 1, _floor_s(ts)))
-        return out, tuple(t), _NO_DEADLINE
+        end = b.col["__day_end_ms"][s]  # one day per key; NULL without a ts
+        return out, tuple(t), _NO_DEADLINE if pd.isna(end) else int(end)
 
     out = _keyed_state(
-        tagged, [key_col, "__day"], ts_col, [], [type_col],
+        tagged, [key_col, "__day"], ts_col, [], [type_col, "__day_end_ms"],
         {"t0": DoubleType(), "t1": DoubleType(), "t2": DoubleType()},
-        _per_key(step, out_schema.names), out_schema, watermark,
+        _per_key(step, out_schema.names), out_schema, watermark, timers=True,
     )
     day = F.date_add(F.lit("1970-01-01").cast("date"), F.col("day").cast("int"))
     return out.select("user_id", day.cast("string").alias("day"), "step", "step_ts")

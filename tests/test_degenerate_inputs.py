@@ -657,7 +657,7 @@ def test_streaming_kernels_floor_pre_epoch_emissions(spark, degen_dirs):
     Python int() in the kernels would truncate the pre-1970 sub-second
     rows and diverge from the batch twin."""
     from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep
-    from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_pairs
+    from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_sequence
     from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
     from flinkecuserbehavioranalysis_spark.streaming.jobs import (
         read_events_stream,
@@ -683,13 +683,12 @@ def test_streaming_kernels_floor_pre_epoch_emissions(spark, degen_dirs):
         )
     )
     batch = sorted(
-        (r.user_id, r.first_ts, r.second_ts)
-        for r in pattern_pairs(
+        (r.user_id, r.step1_ts, r.step2_ts)
+        for r in pattern_sequence(
             ev,
             key_col="user_id",
             ts_col="ts",
-            first_pred=view,
-            second_pred=purchase,
+            steps=[view, purchase],
             within_seconds=3600.0,
             contiguity="strict",
             tiebreak_col="event_id",

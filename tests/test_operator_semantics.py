@@ -315,7 +315,7 @@ def test_window_interval_rejects_other_strings(spark, bad):
         windowed_count(df, "ts", bad)
 
 
-# --- pattern_pairs — the parameterized CEP begin/next|followedBy/within ----
+# --- pattern_sequence at N=2 — the CEP begin/next|followedBy/within pair ----
 
 
 def test_pattern_pairs_strict_vs_relaxed(spark):
@@ -340,31 +340,31 @@ def test_pattern_pairs_strict_vs_relaxed(spark):
         (5, "b", 110, 10),
         (5, "b", 120, 11),
     ]
-    from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_pairs
+    from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_sequence
 
     df = _ts_df(spark, rows, ["user_id", "event_type", "ts", "event_id"])
     kw = dict(
         key_col="user_id",
         ts_col="ts",
-        first_pred=F.col("event_type") == "a",
-        second_pred=F.col("event_type") == "b",
+        steps=[F.col("event_type") == "a", F.col("event_type") == "b"],
         within_seconds=50.0,
         tiebreak_col="event_id",
     )
     relaxed = sorted(
-        (r.user_id, r.first_ts, r.second_ts)
-        for r in pattern_pairs(df, contiguity="relaxed", **kw).collect()
+        (r.user_id, r.step1_ts, r.step2_ts)
+        for r in pattern_sequence(df, contiguity="relaxed", **kw).collect()
     )
     strict = sorted(
-        (r.user_id, r.first_ts, r.second_ts)
-        for r in pattern_pairs(df, contiguity="strict", **kw).collect()
+        (r.user_id, r.step1_ts, r.step2_ts)
+        for r in pattern_sequence(df, contiguity="strict", **kw).collect()
     )
     assert relaxed == [(1, 100, 102), (2, 100, 101), (5, 100, 110)]
     assert strict == [(2, 100, 101), (5, 100, 110)]
 
 
 def test_pattern_pairs_subsumes_consecutive_fail(spark):
-    """consecutive_fail_alerts is the strict instance — identical matches."""
+    """consecutive_fail_alerts is the strict 2-step instance —
+    identical matches."""
     rows = [
         (1, "fail", 100, 0),
         (1, "success", 101, 1),
@@ -374,18 +374,17 @@ def test_pattern_pairs_subsumes_consecutive_fail(spark):
     ]
     from flinkecuserbehavioranalysis_spark.operators.patterns import (
         consecutive_fail_alerts,
-        pattern_pairs,
+        pattern_sequence,
     )
 
     df = _ts_df(spark, rows, ["user_id", "event_type", "ts", "event_id"])
     via_generic = sorted(
-        (r.user_id, r.first_ts, r.second_ts)
-        for r in pattern_pairs(
+        (r.user_id, r.step1_ts, r.step2_ts)
+        for r in pattern_sequence(
             df,
             key_col="user_id",
             ts_col="ts",
-            first_pred=F.col("event_type") == "fail",
-            second_pred=F.col("event_type") == "fail",
+            steps=[F.col("event_type") == "fail", F.col("event_type") == "fail"],
             within_seconds=2.0,
             contiguity="strict",
             tiebreak_col="event_id",
@@ -489,7 +488,7 @@ def test_pattern_alternation_via_or_predicate(spark):
     operator — a predicate disjunction on the first step IS flink-cep's
     where().or(): the match set equals the union of the two
     single-type runs minus double counting."""
-    from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_pairs
+    from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_sequence
 
     rows = [
         (1, "view", 10, 1), (1, "purchase", 20, 2),
@@ -500,13 +499,12 @@ def test_pattern_alternation_via_or_predicate(spark):
     df = spark.createDataFrame(rows, "user_id long, event_type string, ts long, event_id long")
     alt = (F.col("event_type") == "view") | (F.col("event_type") == "click")
     got = sorted(
-        (r.user_id, r.first_ts, r.second_ts)
-        for r in pattern_pairs(
+        (r.user_id, r.step1_ts, r.step2_ts)
+        for r in pattern_sequence(
             df,
             key_col="user_id",
             ts_col="ts",
-            first_pred=alt,
-            second_pred=F.col("event_type") == "purchase",
+            steps=[alt, F.col("event_type") == "purchase"],
             within_seconds=100.0,
             contiguity="relaxed",
             tiebreak_col="event_id",

@@ -35,7 +35,7 @@ def test_run_bounded_timeout_stops_query_and_raises(spark):
     stream = read_events_stream(spark, SF_DIR).select(slow("event_id").alias("e"))
     with pytest.raises(TimeoutError):
         run_bounded(stream, timeout=1)
-    assert not [q for q in spark.streams.active if (q.name or "").startswith("mem_")]
+    assert not [q for q in spark.streams.active if (q.name or "").startswith("bounded_replay_")]
 
 
 def test_partitioned_upsert_empty_batch_replaces_nothing(spark, tmp_path):
@@ -595,6 +595,18 @@ def test_duplicate_components_transitive_chain(spark):
     assert canon == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 10: 10, 11: 10, 99: 99}
 
 
+@pytest.mark.parametrize("deep", [False, True])
+def test_duplicate_components_raise_when_max_iter_runs_out(spark, deep):
+    """A loop cut before convergence holds partial labels (a 40-node
+    path split into many components); both loops must raise, never
+    return them."""
+    from flinkecuserbehavioranalysis_spark.operators.dedup import duplicate_components
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(39)], "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        duplicate_components(path, deep=deep, max_iter=2)
+
+
 @pytest.mark.soak
 def test_star_components_match_hashmin_on_fixtures(spark):
     """deep=True (large-star/small-star) must produce EXACTLY the same
@@ -677,22 +689,19 @@ def test_stratified_sample_two_phase_equals_direct_rank(spark):
 
 
 def test_heavy_hitters_exact_under_eviction(spark):
-    """Vocab (203 keys) far above the MG capacity (ceil(2/phi)=20) so
+    """Vocab (202 keys) far above the MG capacity (ceil(2/phi)=20) so
     per-partition summaries must evict; the exact-recount pass still
-    yields exactly the keys with freq >= ceil(phi*N), matching a naive
-    full count."""
-    import math
+    yields exactly the keys with freq > phi*N, matching a naive full
+    count."""
     from collections import Counter
 
-    from flinkecuserbehavioranalysis_spark.operators.skew import heavy_hitters
+    from flinkecuserbehavioranalysis_spark.operators.heavy_hitters import heavy_hitters_exact
 
     rows = ["hot_a"] * 300 + ["hot_b"] * 150 + [f"cold{i}" for i in range(200) for _ in (0, 1)]
     phi = 0.1
     df = spark.createDataFrame([(t,) for t in rows], "tok string").repartition(7)
-    got = {(r.tok, r.freq) for r in heavy_hitters(df, "tok", phi).collect()}
-    c = Counter(rows)
-    thr = math.ceil(phi * len(rows))
-    expect = {(t, n) for t, n in c.items() if n >= thr}
+    got = {(r.tok, r.cnt) for r in heavy_hitters_exact(df, "tok", phi).collect()}
+    expect = {(t, n) for t, n in Counter(rows).items() if n > phi * len(rows)}
     assert got == expect and expect  # non-vacuous
 
 

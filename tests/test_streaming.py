@@ -801,10 +801,10 @@ def test_kafka_sink_value_encoding(spark):
 
 def test_streaming_pattern_pairs_matches_batch(spark):
     """A two-step match_pattern_stream spec (the CEP pair) must
-    reproduce the batch pattern_pairs on a time-ordered replay, both
-    contiguities."""
+    reproduce the batch 2-step pattern_sequence on a time-ordered
+    replay, both contiguities."""
     from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep
-    from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_pairs
+    from flinkecuserbehavioranalysis_spark.operators.patterns import pattern_sequence
     from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
 
     view, purchase = F.col("event_type") == "view", F.col("event_type") == "purchase"
@@ -821,13 +821,12 @@ def test_streaming_pattern_pairs_matches_batch(spark):
             )
         )
         batch = sorted(
-            (r.user_id, r.first_ts, r.second_ts)
-            for r in pattern_pairs(
+            (r.user_id, r.step1_ts, r.step2_ts)
+            for r in pattern_sequence(
                 batch_df,
                 key_col="user_id",
                 ts_col="ts",
-                first_pred=view,
-                second_pred=purchase,
+                steps=[view, purchase],
                 within_seconds=1800.0,
                 contiguity=contiguity,
                 tiebreak_col="event_id",
