@@ -85,7 +85,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     app = spark.sparkContext.applicationId
     if app not in _CONFS_PINNED or spark.conf.get("spark.sql.session.timeZone") != "UTC":
         apply_runtime_confs(spark)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         _CONFS_PINNED.add(app)
         if len(_CONFS_PINNED) > 64:  # pathological many-session guard
             _CONFS_PINNED.clear()

@@ -2,15 +2,11 @@
 
 The reference consumes flink-cep through two fixed call chains
 (LoginFailWithCep.scala:56-60 ``begin.times(2).consecutive().within``;
-OrderTimeoutWithOutCep.scala:45-48 ``begin.followedBy.within``).  The
-operators in ``patterns.py`` cover every shape those need, one entry
-point per shape: N-step sequences, pairs being the 2-step case
-(``pattern_sequence``), trailing negation (``pattern_not_followed_by``),
-optional steps (``pattern_sequence_optional``) and loops
-(``pattern_one_or_more``).  A pattern MIXING shapes (negation inside an
-optional funnel) needs one surface.
-
-``match_pattern`` is that surface: a list of :class:`PatternStep`
+OrderTimeoutWithOutCep.scala:45-48 ``begin.followedBy.within``).
+``match_pattern`` is the batch side's one surface for every pattern
+shape: N-step sequences (pairs being the 2-step case), ``times(n)``
+quantifiers, optional steps, mid-pattern and trailing negation, and
+the ``oneOrMore`` loop.  A spec is a list of :class:`PatternStep`
 (per-step predicate, contiguity, quantifier, optional flag, negation
 flag) compiled to a DataFrame plan:
 
@@ -19,8 +15,10 @@ flag) compiled to a DataFrame plan:
    ``.times(2).consecutive()``).
 2. ``optional`` steps expand by SUBSET: one positive-sequence variant
    per drop-set (flink-cep emits both the with- and without- matches),
-   unioned with NULL timestamps at skipped positions — exactly
-   ``pattern_sequence_optional``'s contract.
+   unioned with NULL timestamps at skipped positions.  Variants with
+   fewer than 2 surviving atoms and no negation are not emitted (a
+   1-step pattern is a plain filter, not a sequence).  Dropping a step
+   merges its two gaps, so optional specs need one uniform contiguity.
 3. Each variant's positive atoms run through ``pattern_sequence``
    (earliest-chain, end-exclusive ``within``); a single positive atom
    is a plain filter (legal only when negation gives the variant
@@ -28,10 +26,10 @@ flag) compiled to a DataFrame plan:
 4. ``negated`` steps become co-partitioned LEFT ANTI range joins
    against the variant's matched chain: kill iff an absent-event falls
    STRICTLY between the surrounding matched timestamps (trailing
-   negation: strictly after the last match and strictly before
-   ``first + within``) — flink-cep's ``notFollowedBy`` under
-   skip-till-next, where a killed partial match does NOT backtrack to
-   a later chain.  Negation windows compare at full event-time double
+   negation: ``last_ts < absent_ts < step1_ts + within``, the same
+   comparison the streaming NFA makes) — flink-cep's ``notFollowedBy``
+   under skip-till-next, where a killed partial match does NOT
+   backtrack to a later chain.  Negation windows compare at full event-time double
    precision (``emit_double``) — the final output floors to
    epoch-second longs only after every constraint is applied.
 
@@ -40,7 +38,8 @@ Property-tested against a naive per-key Python NFA evaluator
 registry queries (pattern_view_then_purchase, login_fail_detect,
 pattern_funnel_3step, pattern_clean_conversion,
 pattern_view_no_purchase, pattern_optional_funnel,
-pattern_guarded_optional_funnel).
+pattern_guarded_optional_funnel, pattern_unresolved_error_burst,
+pattern_view_burst_purchase).
 
 Scale shape: per variant one shuffle+sort on the key (the sequence
 kernel's single pass) plus one pre-filtered anti-join per negation —

@@ -145,122 +145,6 @@ def pattern_sequence(
     )
 
 
-def pattern_not_followed_by(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    first_pred: Column,
-    absent_pred: Column,
-    within_seconds: float,
-) -> DataFrame:
-    """CEP NEGATION — flink-cep ``Pattern#notFollowedBy(...).within(t)``
-    (the reference's CEP library supports it though its jobs don't use
-    it): per key, every event matching *first_pred* with NO
-    *absent_pred* event strictly later and inside the end-exclusive
-    bound — "viewed then did NOT purchase within 15 min" as a pattern,
-    not a hand-rolled anti-join scattered through a query.
-
-    Semantics are VALUE-ORDERED and tie-safe: a killer must satisfy
-    ``first_ts < absent_ts < first_ts + within`` — an absent event at
-    exactly the same timestamp does not kill (no tiebreak column can
-    change the outcome), and one at exactly the deadline doesn't either
-    (end-exclusive, matching ``pattern_sequence``' ``< within``).
-
-    Execution: LEFT ANTI equi-join on the key with the range predicate —
-    one shuffle per side (both pre-filtered to their predicate), the
-    same co-partitioned shape as the interval join, no window pass at
-    all.  Multiplicity is preserved: duplicate qualifying first-events
-    each emit a row.  Returns (key_col, first_ts) as epoch-second longs.
-    """
-    firsts = df.filter(first_pred).select(
-        F.col(key_col), F.col(ts_col).cast("double").alias("__ft")
-    )
-    absents = df.filter(absent_pred).select(
-        F.col(key_col).alias("__ak"), F.col(ts_col).cast("double").alias("__at")
-    )
-    survived = firsts.join(
-        absents,
-        (firsts[key_col] == absents["__ak"])
-        & (F.col("__at") > F.col("__ft"))
-        & (F.col("__at") - F.col("__ft") < F.lit(float(within_seconds))),
-        "left_anti",
-    )
-    return survived.select(
-        F.col(key_col), floor_long(F.col("__ft")).alias("first_ts")
-    )
-
-
-def pattern_sequence_optional(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    steps: list[Column],
-    within_seconds: float,
-    optional: Sequence[bool],
-    contiguity: str = "relaxed",
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """CEP ``optional()`` steps — flink-cep's
-    ``begin.where(A).followedBy(B).optional().followedBy(C)`` emits BOTH
-    the A,B,C and the A,C match for a satisfiable anchor.  Reproduced by
-    EXPANSION: one ``pattern_sequence`` run per subset of skipped
-    optional steps (mandatory steps always kept), results unioned with
-    NULL timestamps in the skipped steps' columns.  Expansions with
-    fewer than 2 surviving steps are not emitted (a 1-step pattern is a
-    plain filter, not a sequence).
-
-    *contiguity* must be a single uniform policy: dropping a step
-    merges its two gaps, which is only well-defined when both sides
-    share the policy ('strict' composes to "immediately next across the
-    skipped step", exactly CEP ``next`` over the shortened pattern).
-
-    Cost: ≤ 2^(#optional) sequence passes, each one shuffle+sort on
-    *key_col* — optional steps are expected to be few (1-2); the
-    expansions share nothing but could share the shuffle via a single
-    multi-pattern pass if that ever matters.  Returns
-    (key_col, step1_ts … stepN_ts) with NULLs at skipped positions."""
-    from itertools import combinations
-
-    if not isinstance(contiguity, str):
-        raise ValueError(
-            "pattern_sequence_optional requires a uniform contiguity policy "
-            "(dropping an optional step merges adjacent gaps)"
-        )
-    n = len(steps)
-    if len(optional) != n:
-        raise ValueError(f"optional flags ({len(optional)}) must match steps ({n})")
-    opt_idx = [i for i, o in enumerate(optional) if o]
-    outs: list[DataFrame] = []
-    for r in range(len(opt_idx) + 1):
-        for drop in combinations(opt_idx, r):
-            keep = [i for i in range(n) if i not in drop]
-            if len(keep) < 2:
-                continue
-            sub = pattern_sequence(
-                df,
-                key_col=key_col,
-                ts_col=ts_col,
-                steps=[steps[i] for i in keep],
-                within_seconds=within_seconds,
-                contiguity=contiguity,
-                tiebreak_col=tiebreak_col,
-            )
-            by_pos = {orig: pos for pos, orig in enumerate(keep)}
-            sel = [F.col(key_col)] + [
-                F.col(f"step{by_pos[i] + 1}_ts").alias(f"step{i + 1}_ts")
-                if i in by_pos
-                else F.lit(None).cast("long").alias(f"step{i + 1}_ts")
-                for i in range(n)
-            ]
-            outs.append(sub.select(*sel))
-    if not outs:
-        raise ValueError("no expansion keeps >= 2 steps")
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
 def consecutive_fail_alerts(
     df: DataFrame,
     user_col: str = "user_id",

@@ -10187,34 +10187,34 @@ FROM __nk n JOIN __fire g USING (user_id) CROSS JOIN __wm
 WHERE g.min_dl < wm_ms
   AND n.tse + 1800.0 <= CAST(wm_ms AS DOUBLE) / 1000.0
 """,
-    "Extension (the dedicated CEP-negation kernel, driver-hashable — distinct from the "
-    "NFA's trailing-negation path): clicks with NO error within 30 min through "
-    "streaming/stateful.streaming_not_followed_by — undecided firsts park in keyed "
-    "state, killers prune online, survivors flush on the EventTimeTimeout timer.  The "
-    "oracle encodes the kernel's exact two-part flush rule on a bounded replay: the "
-    "key's timer (min unkilled deadline, ms-floored) must fire STRICTLY below the "
-    "closing watermark, and each survivor needs tse + within <= wm (float64, the "
-    "kernel's own comparison) — the ms-exact-boundary anchor in a group whose earlier "
-    "pending fired is the one case the per-anchor strict rule alone would miss.",
+    "Extension (CEP negation decided by watermarked keyed state — the stored-killer "
+    "companion of streaming_cep_negation_replay): clicks with NO error "
+    "within 30 min through streaming/cep.match_pattern_stream([click, ~error]) — "
+    "completed anchors park in keyed state, errors kill them online and, stored while "
+    "above the watermark, kill later-arriving anchors on insert; survivors flush on the "
+    "EventTimeTimeout timer.  The oracle encodes the kernel's exact two-part flush rule "
+    "on a bounded replay: the key's timer (min unkilled deadline, ms-floored) must fire "
+    "STRICTLY below the closing watermark, and each survivor needs tse + within <= wm "
+    "(float64, the kernel's own comparison) — the ms-exact-boundary anchor in a group "
+    "whose earlier pending fired is the one case the per-anchor strict rule alone would "
+    "miss.",
 )
 def streaming_not_followed_by_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.cep import PatternStep
+    from ..streaming.cep import match_pattern_stream
     from ..streaming.jobs import read_events_stream, run_bounded_df
-    from ..streaming.stateful import streaming_not_followed_by
 
     stream = (
         read_events_stream(spark, sf_dir)
         .where(F.col("user_id").isNotNull() & _replay_ts_ok())
         .select("user_id", "ts", "event_type")
     )
-    out = streaming_not_followed_by(
-        stream,
-        key_col="user_id",
-        ts_col="ts",
-        first_pred=F.col("event_type") == "click",
-        absent_pred=F.col("event_type") == "error",
-        within_seconds=1800.0,
-    )
-    return run_bounded_df(out)
+    steps = [
+        PatternStep(F.col("event_type") == "click"),
+        PatternStep(F.col("event_type") == "error", negated=True),
+    ]
+    out = match_pattern_stream(stream, "user_id", "ts", steps, 1800.0)
+    return run_bounded_df(out).select("key", F.col("step1_ts").alias("first_ts"))
 
 
 # =====================================================================

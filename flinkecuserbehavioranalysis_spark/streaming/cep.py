@@ -27,25 +27,38 @@ Semantics per expansion variant (shared `variant_specs`):
   batch compiler's double-precision window — an absent sharing either
   endpoint's timestamp does not kill);
 - TRAILING negation: a completed chain parks with deadline
-  ``first_ts + within``; a later absent with ``ts > last_ts`` (and
-  ``< deadline``) kills it, and survivors emit only once the WATERMARK
-  passes the deadline (negation decided by time, like
-  ``streaming_not_followed_by``), flushed by the key's timer (its
-  earliest parked deadline) so quiet keys drain on watermark advance.
-  Without any trailing negation completions emit immediately and the
-  query runs without timers.
+  ``first_ts + within``.  It dies when an absent-event with
+  ``last_ts < absent_ts < first_ts + within`` is seen, whichever comes
+  first: a later absent kills the parked chain, and an absent already
+  stored (one that arrived in an earlier micro-batch with a later
+  event time) kills the chain on insert.  Survivors emit only once the
+  WATERMARK passes the deadline (negation decided by watermarked keyed
+  state), flushed by the key's timer (its earliest parked deadline) so
+  quiet keys drain on watermark advance.  Without any trailing
+  negation completions emit immediately and the query runs without
+  timers.
 
-State per key is two ``array<array<double>>`` lists: active chains as
-``[variant, kill ts or NaN, t1, t2, ...]`` and parked completions as
-``[variant, t1, ...]``.  It is bounded: active chains by the step-1
+State per key is ``array<array<double>>`` lists: active chains as
+``[variant, kill ts or NaN, t1, t2, ...]``, parked completions as
+``[variant, t1, ...]`` and, with trailing negation, the absent-events
+of each trailing-negation tag still above the watermark as
+``[tag, ts]`` (an event at or below the watermark is dropped as late,
+so no chain completing later can end before such an absent; they are
+pruned on every call).  It is bounded: active chains by the step-1
 arrival rate × within (pruned every event), parked completions by the
-completion rate × within; a key with neither holds no state at all.  A
-checkpoint written before the bucketed runtime must restart.  Ordering
-contract: order-correct within a micro-batch (events sorted) and across
-batches on an ordered replay, verified against the batch compilers
-(``match_pattern``, ``pattern_sequence``,
-``pattern_sequence_optional``) on bounded replays
-(tests/test_streaming.py).
+completion rate × within, stored absents by the absent rate × the
+watermark delay.  A key with none holds no state, and a key with
+stored absents but no parked completion gets the self-clean deadline
+``max(absent) + 1 s``.  The layout is part of the checkpoint: a
+checkpoint written before the bucketed runtime must restart, and so
+must a trailing-negation checkpoint written with two lists instead of
+three.  Ordering contract: order-correct within a micro-batch (events
+sorted); across micro-batches positive chains and mid-gap kills need
+an ordered replay, while a trailing-negation killer counts in
+whichever micro-batch it arrives, as long as it is above the
+watermark.  Verified against the batch compiler (``match_pattern``,
+``pattern_sequence``) on bounded replays (tests/test_streaming.py,
+tests/test_bucketed_state.py).
 """
 
 from __future__ import annotations
@@ -127,7 +140,8 @@ def match_pattern_stream(
                 gaps.setdefault(li, []).append(j)
         compiled.append({"keep": keep, "gaps": gaps, "trail": trail})
     n_negs = len(neg_tags)
-    any_trailing = any(v["trail"] for v in compiled)
+    trail_tags = [j for v in compiled for j in v["trail"]]
+    any_trailing = bool(trail_tags)
 
     out_schema = StructType(
         [StructField("key", LongType())]
@@ -146,20 +160,28 @@ def match_pattern_stream(
     nv = len(compiled)
 
     def step(b, k, s: int, e: int, st: tuple | None):
-        # state: active chains [variant, kill (NaN: none), t1, ...] and
-        # parked completions [variant, t1, ...], one list per key
+        # state: active chains [variant, kill (NaN: none), t1, ...],
+        # parked completions [variant, t1, ...] and, with trailing
+        # negation, stored absents [tag, ts], one list each per key
         active: list[list[tuple[list[float], float | None]]] = [[] for _ in range(nv)]
         done: list[list[list[float]]] = [[] for _ in range(nv)]
         for c in st[0] if st else []:
             active[int(c[0])].append((list(c[2:]), None if math.isnan(c[1]) else c[1]))
         for c in st[1] if st else []:
             done[int(c[0])].append(list(c[1:]))
+        absents = [(int(a[0]), a[1]) for a in st[2]] if st and any_trailing else []
         out: list[tuple] = []
+
+        def park(vi: int, trail: list[int], chain: list[float]) -> None:
+            # a stored absent later than the chain's end kills it on insert
+            if not any(j in trail and chain[-1] < at < chain[0] + within_seconds for j, at in absents):
+                done[vi].append(chain)
 
         tss = b.ts[s:e].tolist()
         m = {gi: b.col[f"__m{gi}"][s:e].astype(bool).tolist() for gi in tagged_atoms}
         g = [b.col[f"__g{j}"][s:e].astype(bool).tolist() for j in range(n_negs)]
         for i, ts in enumerate(tss):
+            absents += [(j, ts) for j in trail_tags if g[j][i]]
             for vi, v in enumerate(compiled):
                 keep, gaps, trail = v["keep"], v["gaps"], v["trail"]
                 n_pos = len(keep)
@@ -181,7 +203,7 @@ def match_pattern_stream(
                         c2 = chain + [ts]
                         if len(c2) == n_pos:
                             if trail:
-                                done[vi].append(c2)
+                                park(vi, trail, c2)
                             else:
                                 out.append(_row(k, keep, c2))
                         else:
@@ -199,7 +221,7 @@ def match_pattern_stream(
                 if m[keep[0]][i]:
                     if n_pos == 1:
                         if trail:
-                            done[vi].append([ts])
+                            park(vi, trail, [ts])
                         else:
                             out.append(_row(k, keep, [ts]))
                     else:
@@ -213,6 +235,7 @@ def match_pattern_stream(
                 done[vi] = [c for c in done[vi] if c[0] + within_seconds > wm]
                 for c in sorted(ready):
                     out.append(_row(k, v["keep"], c))
+            absents = [(j, at) for j, at in absents if at > wm]
 
         st_active = [
             [float(vi), math.nan if kill is None else kill, *chain]
@@ -220,12 +243,16 @@ def match_pattern_stream(
             for chain, kill in active[vi]
         ]
         st_done = [[float(vi), *c] for vi in range(nv) for c in done[vi]]
-        if not st_active and not st_done:
+        if not st_active and not st_done and not absents:
             return out, None, _NO_DEADLINE
-        deadline = (
-            int(min(c[1] + within_seconds for c in st_done) * 1000) if st_done else _NO_DEADLINE
-        )
-        return out, (st_active, st_done), deadline
+        if st_done:
+            deadline = int(min(c[1] + within_seconds for c in st_done) * 1000)
+        elif absents:
+            deadline = int((max(at for _, at in absents) + 1.0) * 1000)
+        else:
+            deadline = _NO_DEADLINE
+        st_absents = ([[float(j), at] for j, at in absents],) if any_trailing else ()
+        return out, (st_active, st_done, *st_absents), deadline
 
     return _keyed_state(
         tagged,
@@ -233,7 +260,10 @@ def match_pattern_stream(
         ts_col,
         [tiebreak_col] if tiebreak_col else [],
         [f"__m{gi}" for gi in sorted(tagged_atoms)] + [f"__g{j}" for j in range(n_negs)],
-        {"active": ArrayType(ArrayType(DoubleType())), "done": ArrayType(ArrayType(DoubleType()))},
+        dict.fromkeys(
+            ["active", "done"] + (["absents"] if any_trailing else []),
+            ArrayType(ArrayType(DoubleType())),
+        ),
         _per_key(step, out_schema.names),
         out_schema,
         watermark,

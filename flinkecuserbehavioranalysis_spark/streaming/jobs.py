@@ -42,7 +42,6 @@ def read_events_stream(
     """File-replay stream over a testdata parquet table (the streaming
     analog of the reference's readTextFile replays, S1)."""
     apply_runtime_confs(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{table}.parquet")
     static = spark.read.parquet(path)
     if os.path.isdir(path):

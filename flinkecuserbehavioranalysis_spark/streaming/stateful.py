@@ -40,10 +40,10 @@ a versioned store with watermark-driven timeouts:
 A transition is either vectorized over the whole bucket (``_one_slot``:
 login-fail, value-spike, last-touch, as-of enrich; order timeout) or a
 per-key step the runtime loops over key segments (``_per_key``:
-blacklist's day runs aside, fail-burst, not-followed-by, funnel,
-one-or-more and the CEP NFA).  Each micro-batch rewrites every touched
-bucket's arrays, which is cheap while a bucket holds thousands of keys,
-not millions.
+blacklist's day runs aside, fail-burst, funnel, one-or-more and the
+CEP NFA, which also serves CEP negation).  Each micro-batch rewrites
+every touched bucket's arrays, which is cheap while a bucket holds
+thousands of keys, not millions.
 
 The state layout is part of the checkpoint.  Login-fail, value-spike and
 last-touch keep the layout they had (``keys`` plus one array per slot,
@@ -736,82 +736,6 @@ def streaming_fail_burst(
         events, ["user_id"], "ts", ["event_id"], ["event_type"],
         {"anchor": DoubleType(), "fails": ArrayType(DoubleType()), "done": LongType()},
         _per_key(step, FAIL_BURST_SCHEMA.names), FAIL_BURST_SCHEMA, watermark, timers=True,
-    )
-
-
-NFB_SCHEMA = StructType(
-    [StructField("key", LongType()), StructField("first_ts", LongType())]
-)
-
-
-def streaming_not_followed_by(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    first_pred,
-    absent_pred,
-    within_seconds: float,
-    tiebreak_col: str | None = None,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Streaming twin of ``operators.patterns.pattern_not_followed_by``
-    — CEP negation (``notFollowedBy...within``) as keyed state.
-
-    Negation is decided by TIME, not by data: a first-event survives
-    only once the watermark proves no killer can still arrive.  State
-    per key, both ``array<double>`` lists PRUNED every call:
-
-    - ``pending`` — undecided first-event timestamps.  A new one is
-      admitted only if no stored absent already kills it (stored
-      absents may be LATER than an out-of-order first event).  Emitted
-      (and dropped) once ``first_ts + within <= watermark`` — every
-      event at or below the watermark has been delivered, so no killer
-      with ``absent_ts < first_ts + within`` can still appear; killed
-      entries drop immediately.  Bounded by first-rate × (within +
-      watermark delay).
-    - ``absents`` — killer timestamps still above the watermark (a
-      future first event must have ts > watermark, so only those can
-      kill it).  Bounded by absent-rate × watermark delay.
-
-    Survival emission rides the key's timer: the earliest pending
-    deadline (or, absent-only, the last absent + 1 s, to self-clean)
-    fires on watermark advance (the trailing no-data micro-batch)
-    exactly like a Flink event-time timer; a key with neither list
-    non-empty holds no state.  The kill window is the batch operator's
-    value-ordered end-exclusive ``first_ts < absent_ts < first_ts +
-    within`` — equal-ts killers don't kill, so in-batch sort order never
-    changes the outcome.  A checkpoint written before the bucketed
-    runtime must restart."""
-    tagged = events.withColumn("__a", _tag(first_pred)).withColumn(
-        "__b", _tag(absent_pred)
-    )
-
-    def step(b: _Bucket, k: Any, s: int, e: int, st: tuple | None):
-        pending, absents = (list(st[0]), list(st[1])) if st else ([], [])
-        a_arr = b.col["__a"][s:e].astype(bool).tolist()
-        b_arr = b.col["__b"][s:e].astype(bool).tolist()
-        for ts, is_a, is_b in zip(b.ts[s:e].tolist(), a_arr, b_arr):
-            if is_b:
-                pending = [v for v in pending if not (v < ts < v + within_seconds)]
-                absents.append(ts)
-            if is_a and not any(ts < at < ts + within_seconds for at in absents):
-                pending.append(ts)
-        wm_s = b.wm / 1000.0
-        out = [(k, _floor_s(v)) for v in sorted(v for v in pending if v + within_seconds <= wm_s)]
-        pending = [v for v in pending if v + within_seconds > wm_s]
-        absents = [at for at in absents if at > wm_s]
-        if pending:
-            deadline = int(min(v + within_seconds for v in pending) * 1000)
-        elif absents:
-            deadline = int((max(absents) + 1.0) * 1000)
-        else:
-            return out, None, _NO_DEADLINE
-        return out, (pending, absents), deadline
-
-    return _keyed_state(
-        tagged, [key_col], ts_col, [tiebreak_col] if tiebreak_col else [], ["__a", "__b"],
-        {"pending": ArrayType(DoubleType()), "absents": ArrayType(DoubleType())},
-        _per_key(step, NFB_SCHEMA.names), NFB_SCHEMA, watermark, timers=True,
     )
 
 

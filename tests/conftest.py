@@ -29,6 +29,9 @@ _SOAK_REPRESENTATIVES = (
     "test_queries_oracle.py::test_query_matches_oracle[weekly_revenue_wow]",
     "test_streaming.py::test_streaming_windowed_count_matches_batch",
     "test_streaming.py::test_foreach_batch_store_sinks_survive_epoch_replay",
+    # the CEP NFA's trailing-negation kill by a killer stored one
+    # micro-batch before its out-of-order anchor
+    "test_streaming.py::test_streaming_not_followed_by_boundaries_and_pruning",
     "test_properties.py::test_sessionize_matches_naive",
     "test_degenerate_inputs.py::test_null_injected_matches_oracle[top_urls]",
     "test_state_soak.py::test_order_timeout_state_evicted_by_watermark",

@@ -45,7 +45,6 @@ from flinkecuserbehavioranalysis_spark.operators.patterns import (
     blacklist_filter,
     consecutive_fail_alerts,
     fail_burst_alerts,
-    pattern_not_followed_by,
     pattern_one_or_more,
 )
 from flinkecuserbehavioranalysis_spark.operators.timeout import (
@@ -63,7 +62,6 @@ from flinkecuserbehavioranalysis_spark.streaming.stateful import (
     streaming_funnel,
     streaming_last_touch,
     streaming_login_fail,
-    streaming_not_followed_by,
     streaming_one_or_more,
     streaming_order_timeout,
     streaming_value_spike,
@@ -452,25 +450,6 @@ def test_fail_burst_matches_batch(spark, replay):
     assert _not_null_key(r for r in got if r[1] < closed) == _not_null_key(r for r in want if r[1] < closed)
     assert set(_not_null_key(got)) <= set(want)
     assert any(r[0] is None for r in got) and any(r[0] == 0 for r in got)
-
-
-@pytest.mark.soak
-def test_not_followed_by_matches_batch(spark, replay):
-    run, _, pdf = replay
-    batch = _on_time(spark, pdf)
-    within = 59.5  # deadlines never coincide with a whole-second watermark
-    kw = dict(
-        key_col="user_id",
-        ts_col="ts",
-        first_pred=F.col("event_type") == "view",
-        absent_pred=F.col("event_type") == "purchase",
-        within_seconds=within,
-    )
-    got = run("nfb", lambda s: streaming_not_followed_by(s, tiebreak_col="event_id", **kw))
-    closed = _max_ts(pdf) - within
-    want = [tuple(r) for r in pattern_not_followed_by(batch, **kw).collect() if r[1] < closed]
-    assert _not_null_key(got) == _not_null_key(want)
-    assert any(r[0] is None for r in got)
 
 
 @pytest.mark.soak

@@ -42,8 +42,6 @@ KEEP = {
     "windowed_quantiles": "SURVEY §2.10: ProcessWindowFunction surface, "
     "test reference twin of windowed_value_quantiles",
     "salted_join": "SURVEY §4 skew handling: skew-resistant join",
-    "pattern_not_followed_by": "test reference twin of streaming_not_followed_by",
-    "pattern_sequence_optional": "test reference twin of match_pattern_stream",
     "apply_merges": "test reference twin of bpe_train_curve's segmentation",
     "log2_q12_py": "test reference twin of the log2 fold",
     "run_bounded": "harness: runs a streaming twin to completion",

@@ -430,12 +430,10 @@ def test_pattern_pairs_matches_naive_cep(spark, events, contiguity):
 @given(EVENTS)
 @settings(max_examples=15, deadline=None)
 def test_pattern_not_followed_by_matches_naive(spark, events):
-    """pattern_not_followed_by vs the naive negation: an 'a' survives
+    """match_pattern([a, ~b]) vs the naive negation: an 'a' survives
     iff NO 'b' for the key has t_a < t_b < t_a + within — value-ordered
     (an equal-ts b does not kill), end-exclusive, multiplicity kept."""
-    from flinkecuserbehavioranalysis_spark.operators.patterns import (
-        pattern_not_followed_by,
-    )
+    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep, match_pattern
 
     rows = [(k, t, e, i) for i, (k, t, e) in enumerate(events)]
     if not rows:
@@ -445,16 +443,13 @@ def test_pattern_not_followed_by_matches_naive(spark, events):
     df = spark.createDataFrame(
         rows, "user_id long, tsd long, event_type string, event_id long"
     ).selectExpr("user_id", "timestamp_seconds(tsd) as ts", "event_type", "event_id")
+    steps = [
+        PatternStep(F.col("event_type") == "a"),
+        PatternStep(F.col("event_type") == "b", negated=True),
+    ]
     got = sorted(
-        (r.user_id, r.first_ts)
-        for r in pattern_not_followed_by(
-            df,
-            key_col="user_id",
-            ts_col="ts",
-            first_pred=F.col("event_type") == "a",
-            absent_pred=F.col("event_type") == "b",
-            within_seconds=10.0,
-        ).collect()
+        (r.user_id, r.step1_ts)
+        for r in match_pattern(df, "user_id", "ts", steps, 10.0).collect()
     )
     expect = []
     for k, ta, ea, _ in rows:
@@ -472,12 +467,10 @@ def test_pattern_not_followed_by_matches_naive(spark, events):
 @given(SEQ_EVENTS)
 @settings(max_examples=15, deadline=None)
 def test_pattern_sequence_optional_matches_naive(spark, events):
-    """pattern_sequence_optional (a, b optional, c — relaxed) vs the
-    naive expansion: lex-min chains of [a,b,c] plus lex-min chains of
-    [a,c] with a NULL middle step, both end-exclusive within."""
-    from flinkecuserbehavioranalysis_spark.operators.patterns import (
-        pattern_sequence_optional,
-    )
+    """match_pattern([a, b?, c]) (relaxed) vs the naive expansion:
+    lex-min chains of [a,b,c] plus lex-min chains of [a,c] with a NULL
+    middle step, both end-exclusive within."""
+    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep, match_pattern
 
     rows = [(k, t, e, i) for i, (k, t, e) in enumerate(events)]
     if not rows:
@@ -491,14 +484,16 @@ def test_pattern_sequence_optional_matches_naive(spark, events):
     got = sorted(
         (
             (r.user_id, r.step1_ts, r.step2_ts, r.step3_ts)
-            for r in pattern_sequence_optional(
+            for r in match_pattern(
                 df,
-                key_col="user_id",
-                ts_col="ts",
-                steps=[F.col("event_type") == s for s in ("a", "b", "c")],
-                within_seconds=within,
-                optional=[False, True, False],
-                contiguity="relaxed",
+                "user_id",
+                "ts",
+                [
+                    PatternStep(F.col("event_type") == "a"),
+                    PatternStep(F.col("event_type") == "b", optional=True),
+                    PatternStep(F.col("event_type") == "c"),
+                ],
+                within,
                 tiebreak_col="event_id",
             ).collect()
         ),

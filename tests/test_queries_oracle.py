@@ -127,3 +127,45 @@ def test_rotation_orders_never_checked_first():
     reg_pos = {n: i for i, n in enumerate(QUERIES)}
     keys = [(last.get(n, -1), QUERIES[n].oracle is None, reg_pos[n]) for n in order]
     assert keys == sorted(keys)
+
+
+#: The batch CEP registry queries: every one compiles through
+#: ``operators/cep.match_pattern`` or ``patterns.pattern_sequence``.
+BATCH_CEP_QUERIES = [
+    "login_fail_detect",
+    "pattern_view_then_purchase",
+    "pattern_funnel_3step",
+    "pattern_clean_conversion",
+    "pattern_view_no_purchase",
+    "pattern_optional_funnel",
+    "pattern_guarded_optional_funnel",
+    "pattern_unresolved_error_burst",
+    "pattern_view_burst_purchase",
+]
+
+
+def test_batch_cep_queries_invariant_under_shuffle_partitions(spark):
+    """The CEP compilers' window passes and anti-joins partition on the
+    key, so the rows (sorted, hashed) must not depend on the shuffle
+    partition count: 1 and 61 give the default run's hash at sf0.01."""
+    import hashlib
+    import os
+
+    from conftest import SF_DIR
+
+    def digest(name: str) -> str:
+        rows = sorted(repr(tuple(r)) for r in QUERIES[name].fn(spark, sf).collect())
+        assert rows, name
+        return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    key = "spark.sql.shuffle.partitions"
+    want = {n: digest(n) for n in BATCH_CEP_QUERIES}
+    before = spark.conf.get(key)
+    try:
+        for parts in ("1", "61"):
+            spark.conf.set(key, parts)
+            got = {n: digest(n) for n in BATCH_CEP_QUERIES}
+            assert got == want, f"shuffle.partitions={parts}"
+    finally:
+        spark.conf.set(key, before)

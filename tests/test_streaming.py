@@ -1007,49 +1007,44 @@ def test_streaming_funnel_matches_batch(spark):
 
 
 def test_streaming_not_followed_by_matches_batch(spark):
-    """CEP negation twin on a bounded replay: survivors whose deadline
-    the final watermark passes must equal the batch anti-join's, with
-    undecided tail views (deadline beyond the watermark) withheld."""
-    from flinkecuserbehavioranalysis_spark.operators.patterns import (
-        pattern_not_followed_by,
-    )
-    from flinkecuserbehavioranalysis_spark.streaming.stateful import (
-        streaming_not_followed_by,
-    )
+    """CEP negation twin on a bounded replay: the NFA's survivors whose
+    deadline the final watermark passes must equal the batch compiler's
+    anti-join, with undecided tail views (deadline beyond the
+    watermark) withheld."""
+    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep, match_pattern
+    from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
 
-    kw = dict(
-        key_col="user_id",
-        ts_col="ts",
-        first_pred=F.col("event_type") == "view",
-        absent_pred=F.col("event_type") == "purchase",
-        within_seconds=900.0,
-    )
+    steps = [
+        PatternStep(F.col("event_type") == "view"),
+        PatternStep(F.col("event_type") == "purchase", negated=True),
+    ]
     stream = read_events_stream(spark, SF_DIR).select("user_id", "event_type", "ts", "event_id")
     got = sorted(
-        (r.key, r.first_ts)
-        for r in run_bounded(streaming_not_followed_by(stream, tiebreak_col="event_id", **kw))
+        (r.key, r.step1_ts)
+        for r in run_bounded(
+            match_pattern_stream(stream, "user_id", "ts", steps, 900.0, tiebreak_col="event_id")
+        )
     )
     wm = _max_ts(spark)
     batch = sorted(
-        (r.user_id, r.first_ts)
-        for r in pattern_not_followed_by(load_table(spark, SF_DIR, "events"), **kw).collect()
-        if r.first_ts + 900.0 <= wm
+        (r.user_id, r.step1_ts)
+        for r in match_pattern(load_table(spark, SF_DIR, "events"), "user_id", "ts", steps, 900.0).collect()
+        if r.step1_ts + 900.0 <= wm
     )
     assert got == batch
     assert len(got) > 0
 
 
 def test_streaming_not_followed_by_boundaries_and_pruning(spark, tmp_path):
-    """Micro-batch edge semantics: an equal-deadline killer does NOT
-    kill (end-exclusive), a killer at the same ts does NOT kill
-    (strictly-later), a stored absent kills an out-of-order later view
-    on insert, and survivors flush via the event-time timer on the
-    watermark-advancing batch."""
+    """Micro-batch edge semantics of the NFA's trailing negation: an
+    equal-deadline killer does NOT kill (end-exclusive), a killer at the
+    same ts does NOT kill (strictly-later), a stored absent kills an
+    out-of-order later view on insert, and survivors flush via the
+    event-time timer on the watermark-advancing batch."""
     import time
 
-    from flinkecuserbehavioranalysis_spark.streaming.stateful import (
-        streaming_not_followed_by,
-    )
+    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep
+    from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
 
     in_dir = tmp_path / "nfb_stream"
 
@@ -1079,28 +1074,21 @@ def test_streaming_not_followed_by_boundaries_and_pruning(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(in_dir))
     )
-    out = streaming_not_followed_by(
-        stream,
-        key_col="user_id",
-        ts_col="ts",
-        first_pred=F.col("event_type") == "view",
-        absent_pred=F.col("event_type") == "purchase",
-        within_seconds=10.0,
-        watermark="50 seconds",
-    )
-    got = sorted((r.key, r.first_ts) for r in run_bounded(out))
+    steps = [
+        PatternStep(F.col("event_type") == "view"),
+        PatternStep(F.col("event_type") == "purchase", negated=True),
+    ]
+    out = match_pattern_stream(stream, "user_id", "ts", steps, 10.0, watermark="50 seconds")
+    got = sorted((r.key, r.step1_ts) for r in run_bounded(out))
     assert got == [(1, 100), (2, 150)]
 
 
 def test_streaming_pattern_sequence_optional_matches_batch(spark):
     """An optional-step match_pattern_stream spec (view, click optional,
     purchase — the registered pattern_optional_funnel parameterization)
-    must reproduce the batch pattern_sequence_optional on a bounded
-    replay, NULL middle step included."""
-    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep
-    from flinkecuserbehavioranalysis_spark.operators.patterns import (
-        pattern_sequence_optional,
-    )
+    must reproduce the batch match_pattern on a bounded replay, NULL
+    middle step included."""
+    from flinkecuserbehavioranalysis_spark.operators.cep import PatternStep, match_pattern
     from flinkecuserbehavioranalysis_spark.streaming.cep import match_pattern_stream
 
     view, click, purchase = (
@@ -1126,14 +1114,12 @@ def test_streaming_pattern_sequence_optional_matches_batch(spark):
     batch = sorted(
         (
             tuple(r)
-            for r in pattern_sequence_optional(
+            for r in match_pattern(
                 load_table(spark, SF_DIR, "events"),
-                key_col="user_id",
-                ts_col="ts",
-                steps=[view, click, purchase],
-                within_seconds=3600.0,
-                optional=[False, True, False],
-                contiguity="relaxed",
+                "user_id",
+                "ts",
+                steps,
+                3600.0,
                 tiebreak_col="event_id",
             ).collect()
         ),
