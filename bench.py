@@ -57,7 +57,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from flinkecuserbehavioranalysis_spark.plans.queries import QUERIES, clear_cache
+from flinkecuserbehavioranalysis_spark.cache import clear_cache
+from flinkecuserbehavioranalysis_spark.plans.queries import QUERIES
 from flinkecuserbehavioranalysis_spark.session import get_spark
 
 #: The 50 queries the driver hashed in rounds 1–5 (CORRECTNESS_r05.json),

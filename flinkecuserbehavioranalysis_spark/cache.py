@@ -1,22 +1,30 @@
-"""Session-scoped memo registry for DataFrames that several queries share.
+"""The package's one memo registry: every session-scoped memo lives here.
 
-Some query families share one expensive intermediate (the LSH pair
-set, the canonical-id map, the PQ codebook, the lang-ID scored frame,
-the covariance cells).  It is built once per (applicationId, sf_dir,
-family) and every family member reuses the materialized blocks.  A
-frame earns a memo only when two or more registry queries read it;
-``tests/test_package_surface.py`` checks that for every ``pin`` site.
-A frame that one call reads several times takes a bare lazy
-``localCheckpoint`` instead: its blocks live as long as the call's
-plan references them, and no registry entry outlives the call.
+It holds two kinds of entries, both keyed by tuples whose first element
+is the Spark applicationId:
 
-This module is that registry: an LRU capped at ``max_entries``, with
-an explicit ``clear_cache()``.  Eviction ``unpersist()``s a frame built
-with ``persist()`` and only drops the reference to a checkpointed one:
-``localCheckpoint`` blocks are not in Spark's CacheManager, so Spark's
-ContextCleaner frees them asynchronously once the frame is
-unreferenced.  A later request for an evicted key rebuilds (builds are
-deterministic), so eviction affects cost, never correctness.
+- table reader plans, ``(app, "table", path, mtime_ns, size)``, one per
+  table file that ``io.load_table`` has opened.  They are plan handles
+  only: no data is cached, and every action still scans the file;
+- shared family frames.  Some query families share one expensive
+  intermediate (the LSH pair set, the canonical-id map, the PQ codebook,
+  the lang-ID scored frame, the covariance cells).  It is built once per
+  (applicationId, sf_dir, family) and every family member reuses the
+  materialized blocks.  A frame earns a memo only when two or more
+  registry queries read it; ``tests/test_package_surface.py`` checks
+  that for every ``pin`` site.  A frame that one call reads several
+  times takes a bare lazy ``localCheckpoint`` instead: its blocks live
+  as long as the call's plan references them, and no registry entry
+  outlives the call.
+
+The registry is an LRU capped at ``max_entries``, with an explicit
+``clear_cache(spark)`` that releases every entry of that application.
+Eviction ``unpersist()``s a frame built with ``persist()`` and only
+drops the reference to a checkpointed one: ``localCheckpoint`` blocks
+are not in Spark's CacheManager, so Spark's ContextCleaner frees them
+asynchronously once the frame is unreferenced.  A later request for an
+evicted key rebuilds (builds are deterministic), so eviction affects
+cost, never correctness.
 
 The largest memoized frames are corpus-pair-set sized (far below fact
 scale), so the cap bounds executor storage to a small multiple of the
@@ -32,16 +40,13 @@ from typing import Callable, Hashable
 
 from pyspark.sql import DataFrame
 
-#: Raised 12 → 24 → 40 in round 11: the optimization pass pinned more
-#: shared family frames (source-word counts, simhash pair set, kmeans
-#: codebooks per parameter set, and — second pass — the ANN index
-#: relations: IVF postings, PQ codes, int8 codes, the A-priori pair
-#: stats, repeated-gram shares, fuzzy-token components), and at the
-#: old cap a full-registry sweep evicted and rebuilt family frames
-#: mid-family.  Every pinned frame is model-/pair-set-/codebook-/
-#: index-sized (≪ fact scale), so the cap's 100 TB memory argument is
-#: unchanged — it bounds the count of small frames, not corpus bytes.
-DEFAULT_MAX_ENTRIES = 40
+#: Room for a full-registry sweep of one sf dir without rebuilding a
+#: family frame mid-family: 40 slots for the shared family frames
+#: (codebooks, pair sets, index relations and the like) plus 10 for the
+#: reader plans of the tables one sf dir holds.  Every entry is a plan
+#: handle or a model-, pair-set- or index-sized frame, so the cap bounds
+#: a count of small frames, not corpus bytes.
+DEFAULT_MAX_ENTRIES = 50
 
 max_entries: int = DEFAULT_MAX_ENTRIES
 
@@ -109,12 +114,11 @@ def pin(key: Hashable, build: Callable[[], DataFrame]) -> DataFrame:
 
 
 def clear_cache(spark=None) -> int:
-    """Unpersist and drop every registered frame; with *spark* given,
-    only frames whose key belongs to that application (keys are tuples
-    whose first element is the applicationId).  Returns the number of
-    entries released."""
+    """Release and drop every registry entry, table plans included;
+    with *spark* given, only the entries whose key belongs to that
+    application (keys are tuples whose first element is the
+    applicationId).  Returns the number of entries released."""
     app = spark.sparkContext.applicationId if spark is not None else None
-    released = 0
     with _lock:
         doomed = [
             k
@@ -124,8 +128,7 @@ def clear_cache(spark=None) -> int:
         frames = [_entries.pop(k) for k in doomed]
     for f in frames:
         _release(f)
-        released += 1
-    return released
+    return len(frames)
 
 
 def stats() -> dict:

@@ -19,44 +19,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .cache import pin
 from .session import apply_runtime_confs
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: testdata columns stored as parquet INT64 TIMESTAMP(NANOS) — Spark 4
-#: rejects nano timestamps unless read as raw longs
-#: (``spark.sql.legacy.parquet.nanosAsLong``); we convert to micros
-#: TimestampType at scan time with floor division, matching DuckDB's
-#: nanos→micros truncation so both engines see identical instants.
+#: Event-time columns a table may store as parquet INT64
+#: TIMESTAMP(NANOS).  The local testdata stores every timestamp as
+#: ``timestamp[us]``, but nanos files are still read: Spark 4 loads them
+#: only as raw longs (``spark.sql.legacy.parquet.nanosAsLong``), and
+#: ``_normalize_table`` converts them to micros TimestampType with floor
+#: division, matching DuckDB's nanos→micros truncation so both engines
+#: see identical instants.
 _NANO_TS_COLS = {
     "events": ("ts",),
     "orders": ("o_orderdate",),
     "lineitem": ("l_shipdate",),
 }
-
-
-#: Reader-PLAN memo: (applicationId, path, mtime_ns, size) → DataFrame.
-#: ``spark.read.parquet`` re-lists the file and re-reads the footer
-#: schema on every call (~80 ms measured) and the registry calls
-#: load_table 1–5× per query — ~45 s of pure driver-side re-listing per
-#: full bench sweep (round-11 optimization).  This memoizes the LOGICAL
-#: PLAN only — DataFrames are immutable plan handles, no data is cached
-#: and every action still scans the parquet; the mtime/size key makes a
-#: rewritten file a fresh entry, and the applicationId key makes a
-#: fresh driver process start clean.  FIFO-capped: entries are plan
-#: references, the cap only guards a pathological many-sf_dir session.
-_TABLE_PLAN_MEMO: dict[tuple, DataFrame] = {}
-_TABLE_PLAN_MEMO_CAP = 256
-
-
-#: applicationIds whose session confs are already pinned — every
-#: conf.set is a py4j round-trip, and load_table runs 1–5x per query
-#: (r12 driver-floor shave: ~7 round-trips per call → once per session).
-#: The engine never changes a conf back, but its host may: a session
-#: timezone found other than UTC costs one read per call and re-pins
-#: (non-UTC day and week buckets would otherwise be silent); a new
-#: session (new applicationId) re-pins.
-_CONFS_PINNED: set[str] = set()
 
 
 def _footer_schema(path: str) -> StructType:
@@ -80,41 +59,50 @@ def _footer_schema(path: str) -> StructType:
     return StructType(fields)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar scan of one driver testdata table (S1 analog)."""
-    app = spark.sparkContext.applicationId
-    if app not in _CONFS_PINNED or spark.conf.get("spark.sql.session.timeZone") != "UTC":
-        apply_runtime_confs(spark)
-        _CONFS_PINNED.add(app)
-        if len(_CONFS_PINNED) > 64:  # pathological many-session guard
-            _CONFS_PINNED.clear()
-            _CONFS_PINNED.add(app)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key: tuple | None
-    try:
-        st = os.stat(path)
-        key = (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None  # globs / non-local paths: fall through, no memo
-    if key is not None and key in _TABLE_PLAN_MEMO:
-        return _TABLE_PLAN_MEMO[key]
+def _table_schema(spark: SparkSession, path: str) -> StructType:
+    """Raw schema of a table: a single file's footer, read without a
+    Spark job; Spark's inference for a directory of part files."""
     if os.path.isfile(path):
-        df = spark.read.schema(_footer_schema(path)).parquet(path)
-    else:  # a directory of part files: Spark infers the schema
-        df = spark.read.parquet(path)
+        return _footer_schema(path)
+    return spark.read.parquet(path).schema
+
+
+def _normalize_table(df: DataFrame, name: str) -> DataFrame:
+    """The one column fix-up of a batch or streaming table scan: nanos
+    event times become micros TimestampType, and naive timestamps are
+    UTC instants (the session timezone is pinned to UTC), cast to
+    TimestampType so epoch math (cast to long/double) is legal."""
     for c, t in df.dtypes:
         if c in _NANO_TS_COLS.get(name, ()) and t == "bigint":
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
         elif t == "timestamp_ntz":
-            # naive parquet timestamps == UTC instants (session tz is pinned
-            # to UTC); normalize to TimestampType so downstream epoch math
-            # (cast to long/double) is legal and engine-consistent
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if key is not None:
-        while len(_TABLE_PLAN_MEMO) >= _TABLE_PLAN_MEMO_CAP:
-            _TABLE_PLAN_MEMO.pop(next(iter(_TABLE_PLAN_MEMO)))
-        _TABLE_PLAN_MEMO[key] = df
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Columnar scan of one driver testdata table (S1 analog).
+
+    The reader plan is a memo entry keyed by (applicationId, "table",
+    path, mtime_ns, size): ``spark.read.parquet`` re-lists the file and
+    re-reads its footer on every call, and a query calls this 1–5
+    times.  Only the plan is memoized; every action still scans the
+    file, and a rewritten file gets a fresh key.  The session confs are
+    pinned when a plan is built; a host that later moves the session
+    timezone off UTC costs one read per call and a re-pin."""
+    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
+        apply_runtime_confs(spark)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+
+    def build() -> DataFrame:
+        apply_runtime_confs(spark)
+        return _normalize_table(spark.read.schema(_table_schema(spark, path)).parquet(path), name)
+
+    try:
+        st = os.stat(path)
+    except OSError:
+        return build()  # globs / non-local paths: no memo
+    return pin((spark.sparkContext.applicationId, "table", path, st.st_mtime_ns, st.st_size), build)
 
 
 def read_csv_events(

@@ -1901,26 +1901,12 @@ def _doc_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from ..operators.dedup import canonicalize_duplicates  # noqa: E402
-
-#: Session-scoped memo for DataFrames shared across registry queries.
-#: Two uses: (a) canonical-id mappings, whose construction is EAGER BY
-#: CONTRACT — ``duplicate_components`` runs an iterative label-
-#: propagation loop whose per-round convergence probe and localCheckpoint
-#: are Spark actions, so the LSH + propagation work executes inside the
-#: query-builder ``fn(spark, sf_dir)`` rather than at the caller's first
-#: action; (b) lazily-checkpointed intermediates (the lang-ID scored
-#: frame) where handing every dependent query the SAME DataFrame lets the
-#: first action materialize the blocks and the rest reuse them.  Either
-#: way the memo converts a per-dependent-query cost into once per
-#: (session, sf_dir, family); keys include the Spark applicationId so a
-#: fresh driver process never sees stale frames.
 from .. import cache as _frame_cache  # noqa: E402
-
-#: Re-exported for callers/tests: release every memoized frame.
-clear_cache = _frame_cache.clear_cache
 
 
 def _cached_canon(spark: SparkSession, sf_dir: str, family: str, build) -> DataFrame:
+    """The registry memo of a family frame that two or more queries
+    share, built once per (session, sf_dir, family)."""
     key = (spark.sparkContext.applicationId, sf_dir, family)
     return _frame_cache.pin(key, build)
 

@@ -30,8 +30,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # pushFilters(); Spark 4.1 refuses a pushdown-capable reader unless
     # this is on
     "spark.sql.python.filterPushdown.enabled": "true",
-    # testdata stores event times as parquet TIMESTAMP(NANOS), which
-    # Spark 4 reads only as raw longs (io.py converts them to micros)
+    # Spark 4 reads a parquet TIMESTAMP(NANOS) column only as raw longs
+    # (io.py converts them to micros); the local testdata stores micros,
+    # but nanos files are still read
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 

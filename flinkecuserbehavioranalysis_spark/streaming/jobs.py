@@ -30,6 +30,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import _normalize_table, _table_schema
 from ..session import apply_runtime_confs
 
 
@@ -40,10 +41,12 @@ def read_events_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-replay stream over a testdata parquet table (the streaming
-    analog of the reference's readTextFile replays, S1)."""
+    analog of the reference's readTextFile replays, S1).  It reads the
+    table the way ``io.load_table`` does: the same raw schema, given to
+    the file source up front, and the same column fix-up."""
     apply_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{table}.parquet")
-    static = spark.read.parquet(path)
+    schema = _table_schema(spark, path)
     if os.path.isdir(path):
         # Spark-written dataset directory (the scratch scale-up SFs):
         # already a directory of part files — stream it directly.  The
@@ -71,16 +74,10 @@ def read_events_stream(
                 os.symlink(path, link)
         else:
             os.symlink(path, link)
-    reader = spark.readStream.schema(static.schema)
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(view_dir)
-    for c, t in df.dtypes:
-        if c == "ts" and t == "bigint":
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-        elif t == "timestamp_ntz":
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    return _normalize_table(reader.parquet(view_dir), table)
 
 
 def streaming_windowed_count(

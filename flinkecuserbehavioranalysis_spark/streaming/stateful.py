@@ -37,13 +37,19 @@ a versioned store with watermark-driven timeouts:
   value below it), so a quiet bucket is called on the first watermark
   advance that makes one of its keys due.
 
-A transition is either vectorized over the whole bucket (``_one_slot``:
-login-fail, value-spike, last-touch, as-of enrich; order timeout) or a
-per-key step the runtime loops over key segments (``_per_key``:
-blacklist's day runs aside, fail-burst, funnel, one-or-more and the
-CEP NFA, which also serves CEP negation).  Each micro-batch rewrites
-every touched bucket's arrays, which is cheap while a bucket holds
-thousands of keys, not millions.
+A transition comes in one of three styles:
+
+- ``_one_slot``, vectorized over the bucket with one slot per key that
+  each row reads from its predecessor: login-fail, value-spike,
+  last-touch and as-of enrich;
+- a whole-bucket transition written directly against ``_Bucket``, also
+  vectorized: order timeout and blacklist (which counts day runs);
+- ``_per_key``, a scalar step the runtime loops over key segments:
+  fail-burst, funnel, one-or-more and the CEP NFA, which also serves
+  CEP negation.
+
+Each micro-batch rewrites every touched bucket's arrays, which is cheap
+while a bucket holds thousands of keys, not millions.
 
 The state layout is part of the checkpoint.  Login-fail, value-spike and
 last-touch keep the layout they had (``keys`` plus one array per slot,

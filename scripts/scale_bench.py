@@ -98,7 +98,8 @@ def main() -> None:
     ap.add_argument("--repeat", type=int, default=1)
     args = ap.parse_args()
 
-    from flinkecuserbehavioranalysis_spark.plans.queries import QUERIES, clear_cache
+    from flinkecuserbehavioranalysis_spark.cache import clear_cache
+    from flinkecuserbehavioranalysis_spark.plans.queries import QUERIES
     from flinkecuserbehavioranalysis_spark.session import get_spark
 
     names = args.queries.split(",") if args.queries else SUITE

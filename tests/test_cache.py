@@ -1,7 +1,8 @@
 """Persist-lifecycle registry (flinkecuserbehavioranalysis_spark/cache.py):
 LRU cap bounds live persisted frames, clear_cache() releases them, and a
 second sf_dir doesn't grow executor storage without bound (round-4
-verdict "What's wrong" #1)."""
+verdict "What's wrong" #1).  The table reader plans of io.load_table are
+entries of the same registry."""
 
 from __future__ import annotations
 
@@ -10,8 +11,9 @@ import time
 import pytest
 
 from flinkecuserbehavioranalysis_spark import cache
+from flinkecuserbehavioranalysis_spark.cache import clear_cache
 from flinkecuserbehavioranalysis_spark.io import load_table
-from flinkecuserbehavioranalysis_spark.plans.queries import _cached_canon, clear_cache
+from flinkecuserbehavioranalysis_spark.plans.queries import _cached_canon
 
 from conftest import SF_DIR
 
@@ -149,22 +151,27 @@ def _perceptron_curve(spark):
     return perceptron_curve(ev, ["x"], "y", rounds=2)
 
 
+def _is_table_plan(key) -> bool:
+    return isinstance(key, tuple) and len(key) > 1 and key[1] == "table"
+
+
 @pytest.mark.parametrize(
-    "run, memos",
+    "run, memos, tables",
     [
-        (_pagerank, 0),
-        (_prefix_filter_pairs, 0),
-        (_global_rank, 0),
-        (_kmeans_fit, 1),  # the trained codebook, shared by seven queries
-        (_perceptron_curve, 0),
+        (_pagerank, 0, 0),
+        (_prefix_filter_pairs, 0, 1),
+        (_global_rank, 0, 1),
+        (_kmeans_fit, 1, 1),  # the trained codebook, shared by seven queries
+        (_perceptron_curve, 0, 1),
     ],
     ids=["pagerank", "prefix_filter_pairs", "global_rank", "kmeans_fit", "perceptron_curve"],
 )
-def test_in_call_reuse_leaves_no_cached_plan(spark, run, memos):
+def test_in_call_reuse_leaves_no_cached_plan(spark, run, memos, tables):
     """A frame read several times within one call is materialized for
     that call only: two calls return equal rows, the memo registry grows
-    by the operator's shared memos alone, and Spark's CacheManager holds
-    nothing afterwards, with no clear_cache() in between."""
+    by the operator's shared memos and the reader plans of the tables it
+    loads alone, and Spark's CacheManager holds nothing afterwards, with
+    no clear_cache() in between."""
     clear_cache()
     spark.catalog.clearCache()
     before = cache.stats()["entries"]
@@ -176,7 +183,9 @@ def test_in_call_reuse_leaves_no_cached_plan(spark, run, memos):
     first = rows()
     assert first
     assert rows() == first
-    assert cache.stats()["entries"] == before + memos
+    n_tables = sum(map(_is_table_plan, cache._entries))
+    assert n_tables == tables
+    assert cache.stats()["entries"] - n_tables == before + memos
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     clear_cache()
 
@@ -294,6 +303,12 @@ def test_load_table_plan_memo_and_invalidation(spark, tmp_path):
     c2 = load_table(spark, str(tmp_path), "nation")
     assert c2 is not c1  # mtime/size changed → fresh reader plan
     assert (n1, c2.count()) == (3, 5)
+    # the plans are registry entries: clear_cache(spark) releases them
+    app = spark.sparkContext.applicationId
+    assert any(_is_table_plan(k) and k[0] == app for k in cache._entries)
+    clear_cache(spark)
+    assert not [k for k in cache._entries if isinstance(k, tuple) and k[0] == app]
+    assert load_table(spark, SF_DIR, "nation") is not a
 
 
 def test_load_table_footer_schema_matches_spark_inference(spark, tmp_path):
@@ -364,3 +379,66 @@ def test_kmeans_codebook_pinned_per_params(spark):
     assert s3 is not s1
     assert s1.count() <= 4 and s3.count() <= 8
     clear_cache()
+
+
+def test_stream_reader_shares_the_table_reader(spark, tmp_path):
+    """read_events_stream reads a single-file table the way load_table
+    does: the schema comes from the footer without a Spark job, and the
+    same fix-up turns a nanos ``o_orderdate`` into a timestamp."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flinkecuserbehavioranalysis_spark.streaming.jobs import read_events_stream, run_bounded
+
+    pq.write_table(
+        pa.table({
+            "o_orderkey": pa.array([1, 2], pa.int64()),
+            "o_orderdate": pa.array([1_700_000_000_123_456_789, 1_700_000_100_000_000_999], pa.timestamp("ns")),
+        }),
+        str(tmp_path / "orders.parquet"),
+    )
+    sc = spark.sparkContext
+    group = f"stream_reader_{tmp_path.name}"
+    sc.setJobGroup(group, "read_events_stream schema")
+    try:
+        stream = read_events_stream(spark, str(tmp_path), "orders")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert dict(stream.dtypes)["o_orderdate"] == "timestamp"
+    batch = load_table(spark, str(tmp_path), "orders")
+    assert stream.dtypes == batch.dtypes
+    assert sorted(map(tuple, run_bounded(stream))) == sorted(map(tuple, batch.collect()))
+
+
+def test_memo_eviction_leaves_results_unchanged(spark):
+    """Table plans and family frames share one LRU.  With room for a
+    single entry every pin evicts its predecessor, and the dedup and IVF
+    families must still return the default cap's rows (sorted, hashed)
+    at sf0.01."""
+    import hashlib
+    import os
+
+    from flinkecuserbehavioranalysis_spark.plans.queries import QUERIES
+
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    names = ("dedup_components", "dedup_cluster_size_histogram", "ann_ivf_topk", "ann_ivf_quantized_topk")
+
+    def digests() -> dict[str, str]:
+        clear_cache(spark)
+        out = {}
+        for n in names:
+            rows = sorted(repr(tuple(r)) for r in QUERIES[n].fn(spark, sf).collect())
+            assert rows, n
+            out[n] = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+        return out
+
+    want = digests()
+    old_cap = cache.max_entries
+    cache.max_entries = 1
+    try:
+        assert digests() == want
+    finally:
+        cache.max_entries = old_cap
+        clear_cache(spark)
