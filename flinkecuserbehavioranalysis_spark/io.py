@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .cache import pin
 from .session import apply_runtime_confs
@@ -47,7 +47,6 @@ def _footer_schema(path: str) -> StructType:
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_type
-    from pyspark.sql.types import LongType, StructField
 
     fields = []
     for f in pq.read_schema(path):
@@ -122,17 +121,11 @@ def read_csv_events(
     to ms at watermark assignment instead — HotItems.scala:49).
     """
     raw_schema = StructType(
-        [f if f.name != ts_col else type(f)(f.name, _long(), True) for f in schema.fields]  # type: ignore[arg-type]
+        [f if f.name != ts_col else StructField(f.name, LongType(), True) for f in schema.fields]
     )
     df = spark.read.csv(path, schema=raw_schema, sep=sep, mode="PERMISSIVE")
     factor = {"s": 1, "ms": 1000}[epoch_unit]
     return df.withColumn(ts_col, F.timestamp_seconds(F.col(ts_col) / factor))
-
-
-def _long():
-    from pyspark.sql.types import LongType
-
-    return LongType()
 
 
 def read_apache_log(spark: SparkSession, path: str) -> DataFrame:

@@ -26,10 +26,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # custom Python data sources (sources/pydatasource.py) implement
-    # pushFilters(); Spark 4.1 refuses a pushdown-capable reader unless
-    # this is on
-    "spark.sql.python.filterPushdown.enabled": "true",
     # Spark 4 reads a parquet TIMESTAMP(NANOS) column only as raw longs
     # (io.py converts them to micros); the local testdata stores micros,
     # but nanos files are still read

@@ -1,16 +1,20 @@
-"""Every public package function has a caller outside the tests.
+"""Every public package function and class has a caller outside the
+tests.
 
-A function is live when a registry query, ``__spark_entry__.py``,
+A function or class is live when a registry query, ``__spark_entry__.py``,
 ``bench.py``, ``perfbench/`` or ``scripts/`` reaches it through name
 references (AST ``Name`` and ``Attribute`` nodes, imports excluded),
-directly or through other live functions.  Module-level code and
-decorated functions (the ``@_q`` registry entries) are live roots.
+directly or through other live functions and classes.  Module-level
+code, decorated functions (the ``@_q`` registry entries) and decorated
+classes are live roots; the body of an undecorated class counts only
+when the class is live.
 Names are matched without their module, so a name defined twice is
 live when either definition is referenced.
 
-Functions that only tests call are allowed only on ``KEEP``, each with
-its reason.  A ``KEEP`` entry must name an existing function that
-nothing else reaches, so the list cannot go stale.
+Functions and classes that only tests call are allowed only on
+``KEEP``, each with its reason.  A ``KEEP`` entry must name an existing
+function or class that nothing else reaches, so the list cannot go
+stale.
 
 No package module imports a name it never uses.
 
@@ -37,14 +41,12 @@ KEEP = {
     "read_csv_events": "SURVEY S2: CSV line parser",
     "read_apache_log": "SURVEY S2: apache.log parser",
     "marketing_behavior_stream": "SURVEY S3: generator source",
-    "read_kafka_stream": "SURVEY S4: Kafka source",
-    "encode_json_value": "SURVEY S4: Kafka sink value encoding",
     "windowed_quantiles": "SURVEY §2.10: ProcessWindowFunction surface, "
     "test reference twin of windowed_value_quantiles",
-    "salted_join": "SURVEY §4 skew handling: skew-resistant join",
     "apply_merges": "test reference twin of bpe_train_curve's segmentation",
     "log2_q12_py": "test reference twin of the log2 fold",
     "run_bounded": "harness: runs a streaming twin to completion",
+    "ChunkDocument": "SURVEY §2.10: UDTF surface, cross-checked against chunk_documents",
 }
 
 
@@ -69,15 +71,15 @@ def _py_files(rel: str):
 
 
 def scan(keep=KEEP) -> tuple[dict[str, list[str]], set[str]]:
-    """(defs, live): every undecorated top-level package function as
-    name -> ["path:line", ...], and the names reachable from the
-    non-test roots plus *keep*."""
+    """(defs, live): every undecorated top-level package function and
+    class as name -> ["path:line", ...], and the names reachable from
+    the non-test roots plus *keep*."""
     bodies: dict[str, list[ast.AST]] = {}
     defs: dict[str, list[str]] = {}
     roots: set[str] = set(keep)
     for f in _py_files(PACKAGE):
         for node in ast.parse(f.read_text()).body:
-            plain = isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            plain = isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
             if plain and not node.decorator_list:
                 bodies.setdefault(node.name, []).append(node)
                 defs.setdefault(node.name, []).append(f"{f.relative_to(ROOT)}:{node.lineno}")
@@ -110,16 +112,16 @@ def test_every_public_function_has_a_non_test_caller():
         if not name.startswith("_") and name not in live
         for loc in locs
     )
-    assert not dead, "public functions with no caller outside the tests:\n" + "\n".join(dead)
+    assert not dead, "public functions and classes with no caller outside the tests:\n" + "\n".join(dead)
 
 
 def test_keep_list_names_only_otherwise_dead_functions():
     defs, _ = scan()
     missing = sorted(set(KEEP) - set(defs))
-    assert not missing, f"KEEP names functions that no longer exist: {missing}"
+    assert not missing, f"KEEP names definitions that no longer exist: {missing}"
     _, live = scan(keep=())
     stale = sorted(set(KEEP) & live)
-    assert not stale, f"KEEP names functions that non-test code already calls: {stale}"
+    assert not stale, f"KEEP names definitions that non-test code already reaches: {stale}"
 
 
 def test_no_unused_imports():

@@ -104,79 +104,3 @@ def test_centered_rows_agg_empty_input(spark):
     df = _df(spark, []).limit(0)
     out = centered_rows_agg(df, [F.col("v")], {"s": F.sum("v")}, 3, 3, shards=4)
     assert out.count() == 0
-
-
-def test_salted_join_matches_plain_join(spark):
-    """operators/skew.py salted_join — same multiset of rows as the
-    plain join under a pathologically hot key, all join types."""
-    from flinkecuserbehavioranalysis_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame(
-        [(1, i) for i in range(500)] + [(k, k * 10) for k in range(2, 40)],
-        "k long, payload long",
-    )
-    small = spark.createDataFrame(
-        [(1, "hot"), (2, "a"), (3, "b"), (99, "never")], "k long, tag string"
-    )
-    for how in ("inner", "left"):
-        got = sorted(
-            (r.k, r.payload, r.tag)
-            for r in salted_join(big, small, "k", salt=4, how=how).collect()
-        )
-        want = sorted(
-            (r.k, r.payload, r.tag) for r in big.join(small, "k", how).collect()
-        )
-        assert got == want, how
-
-
-def test_salted_join_rejects_small_side_preserving_types(spark):
-    from flinkecuserbehavioranalysis_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([(1, 2)], "k long, payload long")
-    small = spark.createDataFrame([(1, "a")], "k long, tag string")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="replicated per salt"):
-        salted_join(big, small, "k", how="full")
-
-
-def test_salted_join_spreads_full_duplicate_rows(spark):
-    """A hot key made of IDENTICAL rows must still spread across salts
-    (the per-row monotonically_increasing_id term; a pure column hash
-    would give every duplicate the same salt)."""
-    from flinkecuserbehavioranalysis_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame(
-        [(1, 7)] * 400, "k long, payload long"
-    ).repartition(8)
-    small = spark.createDataFrame([(1, "hot")], "k long, tag string")
-    n_salts = 4
-    salted = big.withColumn(
-        "__salt",
-        F.pmod(
-            F.xxhash64("k", "payload") + F.monotonically_increasing_id(),
-            F.lit(n_salts),
-        ),
-    )
-    used = salted.select("__salt").distinct().count()
-    assert used > 1, "identical rows all landed on one salt"
-    # and the join output is still exactly the plain join
-    got = sorted(
-        (r.k, r.payload, r.tag)
-        for r in salted_join(big, small, "k", salt=n_salts).collect()
-    )
-    want = sorted((r.k, r.payload, r.tag) for r in big.join(small, "k").collect())
-    assert got == want
-
-
-def test_salted_join_rejects_preexisting_salt_column(spark):
-    from flinkecuserbehavioranalysis_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([(1, 0)], "k long, __salt long")
-    small = spark.createDataFrame([(1, "a")], "k long, tag string")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="__salt"):
-        salted_join(big, small, "k")
-    with _pytest.raises(ValueError, match="__salt"):
-        salted_join(small, big, "k")

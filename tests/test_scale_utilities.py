@@ -1455,70 +1455,6 @@ def test_weekly_sketch_uv_within_tolerance(spark):
         assert abs(e - exact[wk]) <= max(2, 0.05 * exact[wk]), (wk, e, exact[wk])
 
 
-def test_python_datasource_batch_partitions_pushdown(spark):
-    """Custom Python Data Source (Spark 4 API): deterministic synthetic
-    LoginLog rows, read across 4 planned partitions; an event_type
-    equality filter is PUSHED INTO the Python reader (absorbed by the
-    generator, visible as PushedFilters on the scan) and the result
-    matches the unpushed recomputation."""
-    import contextlib
-    import io as _io
-
-    from flinkecuserbehavioranalysis_spark.session import apply_runtime_confs
-    from flinkecuserbehavioranalysis_spark.sources.pydatasource import (
-        LoginLogDataSource,
-        _row,
-    )
-
-    apply_runtime_confs(spark)
-    spark.dataSource.register(LoginLogDataSource)
-    df = spark.read.format("loginlog_synth").option("n_rows", 500).option("seed", 7).load()
-    assert dict(df.dtypes) == {
-        "user_id": "bigint", "ip": "string", "event_type": "string", "ts": "bigint"
-    }
-    assert df.count() == 500 and df.rdd.getNumPartitions() == 4
-    expect = [_row(i, 7, 100) for i in range(500)]
-    assert sorted(tuple(r) for r in df.collect()) == sorted(expect)
-
-    fails = df.filter(F.col("event_type") == "fail")
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        fails.explain("formatted")
-    assert "PushedFilters: [EqualTo(event_type,fail)]" in buf.getvalue()
-    assert sorted(tuple(r) for r in fails.collect()) == sorted(
-        r for r in expect if r[2] == "fail"
-    )
-
-
-def test_python_datasource_stream_offsets(spark):
-    """The stream reader's offset contract: an availableNow run takes
-    one offset range [0, rows_per_batch) and replays it exactly —
-    contiguous, deterministic rows from offset 0 (no polling, immune
-    to scheduler load)."""
-    from flinkecuserbehavioranalysis_spark.sources.pydatasource import (
-        LoginLogDataSource,
-        _row,
-    )
-
-    spark.dataSource.register(LoginLogDataSource)
-    stream = (
-        spark.readStream.format("loginlog_synth")
-        .option("rows_per_batch", 50)
-        .option("seed", 3)
-        .load()
-    )
-    sink: list = []
-    q = (
-        stream.writeStream.foreachBatch(lambda df, eid: sink.extend(df.collect()))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert len(sink) >= 50
-    got = sorted(tuple(r) for r in sink)[:50]
-    assert got == sorted(_row(i, 3, 100) for i in range(50))
-
-
 def test_udtf_chunking_matches_generator_operator(spark):
     """§2.10 UDTF surface: the Python UDTF chunker emits EXACTLY the
     rows of the Catalyst-generator chunk_documents on the documents
@@ -1673,15 +1609,10 @@ def test_weekly_uv_sketch_within_tolerance_of_exact_twin(spark):
 
 @pytest.mark.soak
 def test_aqe_skew_join_split_triggers_and_its_limits(spark):
-    """The 100 TB skew insurance policy, pinned at bench scale:
-
-    (a) AQE splits a genuinely skewed sort-merge join when both join
-        children are plain shuffle reads (thresholds scaled to this
-        container's data — defaults are 256 MB, sized for clusters);
-    (b) the SAME skew with an aggregation under one join child is NOT
-        split (OptimizeSkewedJoin pattern-matches direct shuffle reads
-        only) — the case operators/skew.salted_join exists for.
-    """
+    """The 100 TB skew insurance policy, pinned at bench scale: AQE
+    splits a genuinely skewed sort-merge join when both join children
+    are plain shuffle reads (thresholds scaled to this container's
+    data — defaults are 256 MB, sized for clusters)."""
     import pyspark.sql.functions as F
 
     confs = {
@@ -1698,30 +1629,13 @@ def test_aqe_skew_join_split_triggers_and_its_limits(spark):
             F.when(F.col("id") % 10 < 6, F.lit(7)).otherwise(F.col("id")).alias("k"),
             F.md5(F.col("id").cast("string")).alias("pay"),
         )
-        small_plain = spark.range(0, 50_000).select(
+        small = spark.range(0, 50_000).select(
             F.col("id").alias("k"), F.md5(F.col("id").cast("string")).alias("tag")
         )
-
-        def final_plan(df):
-            df.collect()
-            return (
-                df._jdf.queryExecution().executedPlan().finalPhysicalPlan().toString()
-            )
-
-        plan_a = final_plan(big.join(small_plain, "k").select("k", "pay"))
-        assert "skew=true" in plan_a, "AQE did not split the skewed join"
-
-        small_agged = (
-            spark.range(0, 50_000)
-            .select((F.col("id") % 25_000).alias("k"))
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("tag"))
-        )
-        plan_b = final_plan(big.join(small_agged, "k").select("k", "pay"))
-        assert "skew=true" not in plan_b, (
-            "AQE now splits joins over aggregated children — revisit whether "
-            "salted_join is still needed for this shape"
-        )
+        joined = big.join(small, "k").select("k", "pay")
+        joined.collect()
+        plan = joined._jdf.queryExecution().executedPlan().finalPhysicalPlan().toString()
+        assert "skew=true" in plan, "AQE did not split the skewed join"
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)

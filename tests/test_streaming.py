@@ -749,56 +749,6 @@ def test_rate_generator_windowed_count_end_to_end(spark):
         q.stop()
 
 
-# --- S4: Kafka wiring contract (no broker in the container) ----------------
-
-
-def test_kafka_reader_options_contract():
-    from flinkecuserbehavioranalysis_spark.sources.kafka import kafka_reader_options
-
-    opts = kafka_reader_options("broker1:9092,broker2:9092", "user-behavior", "earliest")
-    assert opts == {
-        "kafka.bootstrap.servers": "broker1:9092,broker2:9092",
-        "subscribe": "user-behavior",
-        "startingOffsets": "earliest",
-    }
-    # default offset posture is latest (streaming tail, the reference's
-    # would-be consumer behavior)
-    assert kafka_reader_options("b:9092", "t")["startingOffsets"] == "latest"
-
-
-def test_kafka_csv_parse_on_source_shaped_frame(spark):
-    """parse_csv_records must turn Kafka's fixed source schema (binary
-    value + metadata) into the typed record, casting the event-time
-    column for watermark use."""
-    from pyspark.sql.types import StructType
-
-    from flinkecuserbehavioranalysis_spark.sources.kafka import parse_csv_records
-
-    raw = spark.createDataFrame(
-        [
-            (None, b"543462,1715,pv,1511658000", "t", 0, 0),
-            (None, b"662867,2244074,buy,1511658060", "t", 0, 1),
-        ],
-        "key binary, value binary, topic string, partition int, offset long",
-    )
-    schema = StructType.fromDDL("user_id long, item_id long, behavior string, ts long")
-    got = parse_csv_records(raw, schema, ts_col="ts").collect()
-    assert [(r.user_id, r.item_id, r.behavior) for r in got] == [
-        (543462, 1715, "pv"),
-        (662867, 2244074, "buy"),
-    ]
-    # ts came out as a real timestamp (castable to the epoch it encoded)
-    assert [r.ts.timestamp() for r in got] == [1511658000.0, 1511658060.0]
-
-
-def test_kafka_sink_value_encoding(spark):
-    from flinkecuserbehavioranalysis_spark.sources.kafka import encode_json_value
-
-    df = spark.createDataFrame([(1, "x")], "a long, b string")
-    out = df.select(encode_json_value(df.columns)).collect()
-    assert out[0]["value"] == '{"a":1,"b":"x"}'
-
-
 def test_streaming_pattern_pairs_matches_batch(spark):
     """A two-step match_pattern_stream spec (the CEP pair) must
     reproduce the batch 2-step pattern_sequence on a time-ordered
