@@ -66,10 +66,11 @@ def _write_slice_files(src_dir: str, pdf: pd.DataFrame, lo: int, hi: int) -> Non
     for i in range(lo, hi):
         sl = pdf.iloc[bounds[i] : bounds[i + 1]].copy()
         sl["ts"] = sl["ts"].astype("datetime64[us]")
-        pq.write_table(
-            pa.Table.from_pandas(sl, preserve_index=False),
-            os.path.join(src_dir, f"slice_{i:03d}.parquet"),
-        )
+        path = os.path.join(src_dir, f"slice_{i:03d}.parquet")
+        pq.write_table(pa.Table.from_pandas(sl, preserve_index=False), path)
+        # the file source takes files in modification-time order, and
+        # files written in one burst often share a millisecond
+        os.utime(path, (1_700_000_000 + i,) * 2)
 
 
 def _state_rows(q) -> list[int]:
@@ -127,7 +128,7 @@ def _soak(spark, tmp_path, pdf, schema_ddl, kernel) -> list[int]:
 
 
 @pytest.mark.parametrize(
-    "kernel_name", ["login_fail", "pattern_sequence", "last_touch", "funnel"]
+    "kernel_name", ["login_fail", "pattern_sequence", "last_touch", "funnel", "blacklist"]
 )
 def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
     spark, tmp_path, kernel_name
@@ -144,7 +145,10 @@ def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
     (pattern_sequence) keeps only keys with live chains, so its plateau
     is the number of chain-starting keys.  The funnel keeps the
     (user, day) keys of open days only: its day timers drop a day's keys
-    once the watermark passes that midnight."""
+    once the watermark passes that midnight.  The blacklist keys on
+    (user, ad) and drops a key once the watermark passes the midnight
+    ending its stored day, so its series falls back to the keys seen on
+    the last, still open, day."""
     n_keys, n_events = 40, 1920
     i = np.arange(n_events)
     types = np.array(["view", "click", "purchase", "error"])[i % 4]
@@ -173,6 +177,23 @@ def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
         days = pdf["ts"].dt.strftime("%Y-%m-%d")
         expected_keys = len(set(zip(pdf["user_id"], days)))
         assert expected_keys > n_keys  # the midnight crossing is real
+    elif kernel_name == "blacklist":
+        from flinkecuserbehavioranalysis_spark.streaming.stateful import (
+            streaming_blacklist,
+        )
+
+        # three ads per user on the first day, one on the second: only
+        # the day timers can take the key series back down
+        midnight = (T0 // 86400 + 1) * 86400
+        day1 = F.col("ts") < F.lit(midnight).cast("timestamp")
+        ad = F.when(day1, F.floor(F.col("event_id") / n_keys) % 3).otherwise(0)
+        kernel = lambda s: streaming_blacklist(  # noqa: E731
+            s.select("user_id", ad.cast("long").alias("ad_id"), "ts")
+        )
+        days = pdf["ts"].dt.strftime("%Y-%m-%d")
+        ads = np.where(days == days.min(), (i // n_keys) % 3, 0)
+        expected_keys = len(set(zip(pdf["user_id"], ads)))
+        assert expected_keys > n_keys and days.nunique() == 2
     else:
         steps = [
             PatternStep(F.col("event_type") == step)
@@ -194,10 +215,16 @@ def test_keyed_nontimeout_state_plateaus_at_key_cardinality(
         kernel,
     )
     assert len(series) >= 20, f"soak too short: {len(series)} state batches"
-    if kernel_name in ("funnel", "pattern_sequence"):
+    if kernel_name in ("funnel", "pattern_sequence", "blacklist"):
         series = _state_keys(spark, str(tmp_path / "ckpt"))
         assert len(series) >= 20, f"soak too short: {len(series)} committed batches"
-    if kernel_name == "funnel":
+    if kernel_name == "blacklist":
+        # every (user, ad) key of the first day is live until the
+        # watermark passes midnight; then only the second day's are
+        open_keys = len(set(zip(pdf["user_id"][days == days.max()], ads[days == days.max()])))
+        assert max(series) == expected_keys, series
+        assert series[-1] == open_keys < expected_keys, series
+    elif kernel_name == "funnel":
         # day-2 (user, day) keys only exist after the midnight crossing
         # (slice 16, the batch before the watermark passes midnight): the
         # series peaks at the exact (user, day) cardinality there, then

@@ -1742,3 +1742,86 @@ def test_streaming_last_touch_matches_batch(spark):
         assert n == batch[k][0], k
         assert abs(v - batch[k][1]) < 1e-6 * max(1.0, abs(v)), k
     assert sum(n for n, _ in got.values()) > 0
+
+
+#: The registry replays whose state lives in the JVM state store, with
+#: the table each streams and the column its rows are time-ordered by.
+JVM_STATE_REPLAYS = {
+    "streaming_dedup_replay": ("events", "ts"),
+    "streaming_url_dedup_replay": ("documents", "doc_id"),
+    "streaming_winnow_dedup_replay": ("documents", "doc_id"),
+    "streaming_pv_count_replay": ("events", "ts"),
+    "streaming_session_replay": ("events", "ts"),
+    "streaming_sessionized_stats_replay": ("events", "ts"),
+}
+DRILL_FILES, DRILL_STOP_AFTER = 4, 2
+
+
+@pytest.mark.parametrize("name", list(JVM_STATE_REPLAYS))
+def test_jvm_state_replay_restart_matches_uninterrupted(spark, tmp_path, monkeypatch, name):
+    """Restart drill: the registry replay runs one file per micro-batch
+    over its table cut into time-ordered files.  Stopped after
+    ``DRILL_STOP_AFTER`` batches and restarted from its checkpoint, it
+    must emit the same rows as one uninterrupted run — the state store's
+    committed versions, written through the configured checkpoint file
+    manager, are all the restarted query has."""
+    import hashlib
+    import os
+
+    import pyarrow.parquet as pq
+
+    from flinkecuserbehavioranalysis_spark.plans.queries import QUERIES
+    from flinkecuserbehavioranalysis_spark.streaming import jobs
+
+    table, order = JVM_STATE_REPLAYS[name]
+    data = pq.read_table(f"{SF_DIR}/{table}.parquet").sort_by(order)
+    cuts = [round(i * data.num_rows / DRILL_FILES) for i in range(DRILL_FILES + 1)]
+    parts = [data.slice(lo, hi - lo) for lo, hi in zip(cuts, cuts[1:])]
+    read = jobs.read_events_stream
+    monkeypatch.setattr(
+        jobs,
+        "read_events_stream",
+        lambda spark, sf_dir, table="events": read(spark, sf_dir, table, max_files_per_trigger=1),
+    )
+
+    def run(segments: list[int]) -> tuple[str, list[int]]:
+        root = tmp_path / f"run_{len(segments)}"
+        src = root / "sf" / f"{table}.parquet"
+        src.mkdir(parents=True)
+        rows, data_batches = [], []
+
+        def land(segment: int) -> None:
+            for i in range(sum(segments[:segment]), sum(segments[: segment + 1])):
+                path = str(src / f"part_{i}.parquet")
+                pq.write_table(parts[i], path)
+                # the file source orders files by modification time
+                os.utime(path, (1_700_000_000 + i,) * 2)
+
+        def bounded(out, output_mode="append", timeout=300):
+            for segment in range(len(segments)):
+                if segment:
+                    land(segment)
+                q = (
+                    out.writeStream.outputMode(output_mode)
+                    .foreachBatch(lambda df, _epoch: rows.extend(tuple(r) for r in df.collect()))
+                    .option("checkpointLocation", str(root / "ckpt"))
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                assert q.awaitTermination(timeout), f"{name} did not finish"
+                data_batches.append(len([p for p in q.recentProgress if p["numInputRows"]]))
+            return spark.createDataFrame(rows, out.schema)
+
+        monkeypatch.setattr(jobs, "run_bounded_df", bounded)
+        # the stream's schema is read from the files present when the
+        # query plans it
+        land(0)
+        got = sorted((tuple(r) for r in QUERIES[name].fn(spark, str(root / "sf")).collect()), key=repr)
+        assert got, f"{name} emitted no rows"
+        return hashlib.sha256(repr(got).encode()).hexdigest(), data_batches
+
+    whole, whole_batches = run([DRILL_FILES])
+    restarted, restarted_batches = run([DRILL_STOP_AFTER, DRILL_FILES - DRILL_STOP_AFTER])
+    assert whole_batches == [DRILL_FILES]
+    assert restarted_batches == [DRILL_STOP_AFTER, DRILL_FILES - DRILL_STOP_AFTER]
+    assert restarted == whole
